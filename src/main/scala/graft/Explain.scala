@@ -1,63 +1,31 @@
 package graft
 
-/** Dev-only: dump formatted physical plans for plan auditing.
+/** Dev-only: dump formatted physical plans for plan auditing — the
+  * inspection loop behind PlanQualitySpec's pins
+  * (`runMain graft.Explain <dir> [name…]`).
   *
   * Plain names resolve through `SparkEntry.queries`. Names prefixed
-  * `sub:` dump SUBSTRATE plans — the un-memoized builder functions
-  * behind session-memoized frames (round-16 verdict item 9: a
+  * `sub:` resolve through [[Substrate.all]] and dump the declared
+  * substrate's un-memoized builder at its default parameters — a
   * registered query that reads a memo explains as `Scan ExistingRDD`,
-  * so plan evidence for memoized families must come from the builders
-  * themselves). */
+  * so plan evidence for memoized families must come from the builders.
+  * Upstream substrates a builder reads are read as memos, exactly as
+  * the memo itself builds. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.benchQueries
     val spark = GraftSession.local(8)
-    def docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val substrates: Map[String, () => org.apache.spark.sql.DataFrame] = Map(
-      // the lexical near-dup pair builder (what the `lshpairs` memo runs)
-      "lshpairs" -> (() => operators.MinHashLSH.nearDupPairsOf(docs)),
-      // the windowed candidate generator alone
-      "lshcand" -> (() => operators.MinHashLSH.lshCandidates(docs)),
-      // the UNFILTERED candidate-Jaccard substrate (lshcj memo) — what
-      // the τ-verified lists and the threshold/quality/score consumers
-      // all derive from since round 17
-      "lshcj" -> (() => operators.MinHashLSH.candidateJaccard(docs)),
-      // the unfiltered sorted-neighborhood candidate substrate (sncand
-      // memo)
-      "sncand" -> (() => operators.Blocking.snCandidatesOf(docs)),
-      // the unfiltered exact shingle-overlap substrate (xovl memo) —
-      // the Jaccard and containment tiers are post-filters over it
-      "xovl" -> (() =>
-        operators.DocDedup.exactOverlapOf(operators.DocDedup.docShinglesOf(docs))),
-      // the per-doc exact scored4 substrate (lexs4 memo) behind the
-      // quality lexicon score/eval/reliability panels
-      "lexs4" -> (() => operators.QualityModels.lexiconScored4Of(docs,
-        operators.QualityModels.lexiconTrain(spark, dir).localCheckpoint())),
-      // the market-basket pair substrate (basket memo)
-      "basket" -> (() => operators.Analytics6.basketPairsUncached(spark, dir)),
-      // the text-tier SimHash signature substrate (shsig memo)
-      "shsig" -> (() =>
-        operators.SimHash.signatures(operators.DocDedup.docShinglesOf(docs))),
-      // the winnowing pair substrate (winpairs memo)
-      "winpairs" -> (() => operators.DocDedup.winnowingPairsOf(docs,
-        operators.DocDedup.WinnowK, operators.DocDedup.WinnowW,
-        operators.DocDedup.MaxFpDf, operators.DocDedup.MinSharedFp)),
-      // the byte-SimHash signature substrate (phash memo)
-      "phashsig" -> (() => {
-        import org.apache.spark.sql.functions._
-        operators.Multimodal.withPayload(spark, dir)
-          .select(col("doc_id"),
-            graft.functions.ByteSimHash.byteSimHash(col("payload"),
-              operators.Multimodal.ShingleBytes,
-              operators.Multimodal.SampleMod).as("simhash"))
-          .filter(col("simhash") =!=
-            graft.functions.ByteSimHash.NoSignature)
-      }))
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      if (n.startsWith("sub:")) substrates(n.stripPrefix("sub:"))().explain("formatted")
-      else SparkEntry.queries(n)(spark, dir).explain("formatted")
+      val df =
+        if (n.startsWith("sub:")) {
+          val name = n.stripPrefix("sub:")
+          Substrate.all.find(_.name == name).getOrElse(sys.error(
+            s"unknown substrate $name; declared: ${Substrate.all.map(_.name).mkString(" ")}"))
+            .build(spark, dir)
+        } else SparkEntry.queries(n)(spark, dir)
+      df.explain("formatted")
     }
     spark.stop()
   }

@@ -41,7 +41,7 @@ object SparkEntry {
     "dedup_embedding_summary" -> ((s, d) => Similarity.nearDupSummary(s, d)),
     // LLM-pipeline: similarity search
     "ann_brute_topk" -> ((s, d) =>
-      Similarity.bruteTopKShared(s, d).orderBy("q_id", "rank")),
+      Substrate.brute(s, d).orderBy("q_id", "rank")),
     "ann_lsh_topk" -> ((s, d) => Similarity.lshTopK(s, d)),
     "ann_whitened_topk" -> ((s, d) => Similarity.whitenedLshTopK(s, d)),
     "ann_lsh_multiprobe" -> ((s, d) => Similarity.lshMultiProbeTopK(s, d)),
@@ -7685,7 +7685,7 @@ object SparkEntry {
   /** The reliability-diagram decile substrate `g(decile, n_docs,
     * n_pos, ss4)` — shared by the raw calibration curve and the
     * isotonic fit so the two oracles can never disagree about the
-    * binning. Mirrors QualityModels.decileLabelCounts. */
+    * binning. Mirrors Substrate.lexdec. */
   private def CAL_DECILE_CTES: String =
     s"""$LEX_CTES,
        |prior AS (SELECT ${halfUpSql("(CAST(sum(c_cur) AS BIGINT) + count(*)) * 10000",

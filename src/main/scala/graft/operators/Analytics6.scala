@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Partitioning._
+import graft.Substrate
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -225,32 +225,7 @@ object Analytics6 {
     // session-memoized: the support-filtered pair frame is both a
     // registered query and `orders_assoc_rules`' whole input — the
     // lineitem self-join pipeline runs once per session for the two
-    Similarity.memoized(spark,
-      s"basket|${Similarity.artifactVersion(spark, dir, "lineitem.parquet")}|$dir|$minSupport")(
-      basketPairsUncached(spark, dir, minSupport))
-
-  /** The memo substrate of [[basketPairs]] (un-memoized builder — plan
-    * evidence does not truncate at the memo boundary). */
-  private[graft] def basketPairsUncached(spark: SparkSession, dir: String,
-                  minSupport: Long = BasketMinSupport): DataFrame = {
-    import graft.functions.Hashing.ratio4
-    val items = graft.Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-      .distinct().checkpointSer
-    val nOrders = items.agg(countDistinct("o").as("n_orders"))
-    val supp = items.groupBy("p").agg(count(lit(1)).as("s"))
-    val a = items.select(col("o"), col("p").as("p1"))
-    val b = items.select(col("o"), col("p").as("p2"))
-    a.join(b, Seq("o")).filter(col("p1") < col("p2"))
-      .groupBy("p1", "p2").agg(count(lit(1)).as("supp"))
-      .filter(col("supp") >= minSupport)
-      .join(supp.select(col("p").as("p1"), col("s").as("s1")), "p1")
-      .join(supp.select(col("p").as("p2"), col("s").as("s2")), "p2")
-      .crossJoin(broadcast(nOrders))
-      .select(col("p1"), col("p2"), col("supp"), col("s1"), col("s2"),
-        ratio4(col("supp") * col("n_orders"), col("s1") * col("s2")).as("lift4"))
-      .orderBy("p1", "p2")
-  }
+    Substrate.basket(spark, dir, minSupport)
 
   /** `orders_assoc_rules`: directional association rules over the
     * basket pair frame — every surviving pair in BOTH directions

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Partitioning._
-import graft.Tables
+import graft.{Substrate, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -55,7 +55,7 @@ object Blocking {
       // `linkage_entity_clusters`, `dedup_blocking_agreement`,
       // `linkage_pattern_precision`, `linkage_score_pairs` and
       // `dedup_sn_funnel` together
-      snCandidatesShared(spark, dir)
+      Substrate.sncand(spark, dir)
         .filter(col("jacc4") >= tau)
         .select("d1", "d2", "gap", "jacc4")
         .orderBy("d1", "d2")
@@ -92,19 +92,6 @@ object Blocking {
     * decision rule is calibrated against. */
   def snCandidatesOf(docs: DataFrame, window: Int = SnWindow): DataFrame =
     snCandidatesKeyed(docs, snKeyPrefix(col("text")), window)
-
-  /** Session-memoized corpus-keyed [[snCandidatesOf]] at the default
-    * window — the UNFILTERED prefix-key adjacency frame six registered
-    * paths derive from (verified SN pairs, entity clusters, blocking
-    * agreement, pattern precision, FS scoring, the SN funnel). One
-    * global-rank sort + token verify per session instead of one per
-    * family; within-run only (the Similarity memo discipline). */
-  def snCandidatesShared(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Similarity.memoized(spark,
-      s"sncand|${graft.operators.Similarity.artifactVersion(spark, dir, "documents.parquet")}|$dir")(
-      snCandidatesOf(Tables.documents(spark, dir)
-        .select("doc_id", "text")
-        .spread))
 
   /** [[snCandidatesOf]] under an ARBITRARY blocking key — what a
     * multi-pass SN deployment varies between passes (prefix, suffix,
@@ -190,7 +177,7 @@ object Blocking {
         snKeySuffix(col("text")).as("ksuf"),
         array_distinct(TextAnalysis.tokens(col("text"))).as("ts"))
       .checkpointSer
-    val pre = canon(snCandidatesShared(spark, dir)).checkpointSer
+    val pre = canon(Substrate.sncand(spark, dir)).checkpointSer
     val suf = canon(snCandidatesKeyedWith(
         base.select(col("doc_id"), col("ksuf").as("bkey")),
         base.select("doc_id", "ts")))
@@ -226,7 +213,7 @@ object Blocking {
     val docs = Tables.documents(spark, dir).select("doc_id", "text").spread
     // default window reads the session-shared candidate frame (already
     // checkpointed by the memo); non-default falls back to its own pass
-    val cand = if (window == SnWindow) snCandidatesShared(spark, dir)
+    val cand = if (window == SnWindow) Substrate.sncand(spark, dir)
                else snCandidatesOf(docs, window).checkpointSer
     val dc = docs.agg(count(lit(1)).as("n_docs"))
     val cc = cand.agg(count(lit(1)).as("n_candidates"),

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Partitioning._
-import graft.Tables
+import graft.{Substrate, Tables}
 import graft.functions.Hashing.h64
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -73,7 +73,7 @@ object Curation {
     contaminationCore(newDocs, evalSh).orderBy("doc_id")
 
   /** Unordered report core (intermediate consumers skip the sort). */
-  private def contaminationCore(newDocs: DataFrame, evalSh: DataFrame): DataFrame =
+  private[graft] def contaminationCore(newDocs: DataFrame, evalSh: DataFrame): DataFrame =
     shingleHashesOf(newDocs)
       .join(evalSh.withColumn("hit", lit(1)), Seq("sh"), "left")
       .groupBy("doc_id")
@@ -97,24 +97,8 @@ object Curation {
     // session-shared (round-17 verdict item 4): the decontaminated
     // train split feeds pipeline_decontaminated, the training-mix
     // chain AND the gate-ablation panel — one eval-shingle overlap
-    // pass per session instead of one per consumer. Pure function of
-    // (documents version, maxRatio); within-session only.
-    Similarity.memoized(spark,
-      s"decon|${Similarity.artifactVersion(spark, dir, "documents.parquet")}|$dir|$maxRatio")(
-      decontaminatedUncached(spark, dir, maxRatio))
-
-  private def decontaminatedUncached(spark: SparkSession, dir: String,
-                                     maxRatio: Double): DataFrame = {
-    val docs = Tables.documents(spark, dir).select("doc_id", "text", "source").spread
-    val evalSh = shingleHashesOf(docs.filter(col("doc_id") % EvalMod === 0))
-      .select("sh").distinct()
-    val train = docs.filter(col("doc_id") % EvalMod =!= 0)
-    val bad = contaminationCore(train.select("doc_id", "text"), evalSh)
-      .filter(col("ratio") > maxRatio).select("doc_id")
-    train.join(bad, Seq("doc_id"), "left_anti")
-      .select("doc_id", "source")
-      .orderBy("doc_id")
-  }
+    // pass per session instead of one per consumer
+    Substrate.decon(spark, dir, maxRatio)
 
   /** Cross-corpus near-dup audit: MinHash/LSH near-dup pairs whose two
     * documents come from DIFFERENT sources — the "did corpus A leak
@@ -395,40 +379,13 @@ object Curation {
     * string asc) is total and binary-collated on both engines. */
   def bpeTrainMerges(spark: SparkSession, dir: String,
                      rounds: Int = BpeRounds): DataFrame =
-    bpeMergesShared(spark, dir, rounds)
-
-  /** Session-memoized corpus word vocabulary (w, n) — the training
-    * input every BPE panel derives (`bpe_train_merges`,
-    * `bpe_encode_fertility`'s trainer, `pipeline_pack_bpe`'s trainer):
-    * one tokenize+aggregate per session. */
-  def bpeWordVocabShared(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Similarity.memoized(spark,
-      s"bpevocab|${graft.operators.Similarity.artifactVersion(spark, dir, "documents.parquet")}|$dir")(
-      Tables.documents(spark, dir)
-        .select("text").spread
-        .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
-        .filter(col("w").rlike("^[a-z0-9]+$"))
-        .groupBy("w").agg(count(lit(1)).as("n")))
-
-  /** Session-memoized trained merge table over the shared vocabulary —
-    * the `rounds` greedy-merge driver loop runs once per session; the
-    * three consumers read the table (or its driver form,
-    * [[bpeMergesLocalShared]]). */
-  def bpeMergesShared(spark: SparkSession, dir: String,
-                      rounds: Int = BpeRounds): DataFrame = {
-    // vocabulary resolved EAGERLY (its own memo; computeIfAbsent must
-    // not nest)
-    val vocab = bpeWordVocabShared(spark, dir)
-    graft.operators.Similarity.memoized(spark,
-      s"bpemerges|${graft.operators.Similarity.artifactVersion(spark, dir, "documents.parquet")}|$dir|$rounds")(
-      bpeTrainMergesOf(spark, vocab, rounds))
-  }
+    Substrate.bpemerges(spark, dir, rounds)
 
   /** The shared merge table collected to the encoder's driver form —
     * O(rounds) rows. */
   def bpeMergesLocalShared(spark: SparkSession, dir: String,
                            rounds: Int = BpeRounds): Seq[(Long, String, String, String, Long)] =
-    bpeMergesShared(spark, dir, rounds)
+    Substrate.bpemerges(spark, dir, rounds)
       .orderBy("merge_rank").collect().toSeq
       .map(r => (r.getLong(0), r.getString(1), r.getString(2),
         r.getString(3), r.getLong(4)))
@@ -516,7 +473,7 @@ object Curation {
     // train side reads the SESSION-SHARED vocab + merge table (same
     // (w, n) values as the bySourceWord rollup — one global filter +
     // count either way); only the per-source grain is this query's own
-    val nsyms = bpeEncodedSymbols(bpeWordVocabShared(spark, dir),
+    val nsyms = bpeEncodedSymbols(Substrate.bpevocab(spark, dir),
       bpeMergesLocalShared(spark, dir, rounds))
     bySourceWord.join(nsyms, "w")
       .groupBy("source")

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Partitioning._
-import graft.Tables
+import graft.{Substrate, Tables}
 import graft.functions.Hashing.h64
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -143,12 +143,7 @@ object DocDedup {
     // `dedup_winnowing_agreement`, `dedup_savings_report`). Same memo
     // discipline as the lexical pair list — within-session only,
     // DISK_ONLY; every bench/oracle invocation computes from parquet.
-    graft.operators.Similarity.memoized(spark,
-      s"winpairs|${graft.operators.Similarity.artifactVersion(spark, dir,
-        "documents.parquet")}|$dir|$k|$w|$maxDf|$minShared")(
-      winnowingPairsOf(
-        Tables.documents(spark, dir).select("doc_id", "text").spread,
-        k, w, maxDf, minShared))
+    Substrate.winpairs(spark, dir, (k, w, maxDf, minShared))
 
   /** The selected winnowing fingerprint set — distinct (doc_id, h) of
     * per-window k-gram hash minima. Shared by [[winnowingPairsOf]] and
@@ -230,7 +225,7 @@ object DocDedup {
     // same (shared, n1, n2) counts as the exact Jaccard tier — the
     // self-join is the session-shared frame; containment is a
     // different post-filter over it
-    exactOverlapShared(spark, dir)
+    Substrate.xovl(spark, dir)
       .withColumn("c1", col("shared") / col("n1"))
       .withColumn("c2", col("shared") / col("n2"))
       .filter(greatest(col("c1"), col("c2")) >= tau)
@@ -468,7 +463,7 @@ object DocDedup {
                         maxPct: Int = MaxEditPct): DataFrame = {
     val docs = Tables.documents(spark, dir).select("doc_id", "text").spread
     val norm = docs.select(col("doc_id"), normalized(col("text")).as("nt"))
-    MinHashLSH.lshCandidatesShared(spark, dir)
+    Substrate.lshcand(spark, dir)
       .join(norm.select(col("doc_id").as("d1"), col("nt").as("t1")), "d1")
       .join(norm.select(col("doc_id").as("d2"), col("nt").as("t2")), "d2")
       .select(col("d1"), col("d2"),
@@ -566,7 +561,7 @@ object DocDedup {
     * MinHash/LSH operator (MinHashLSH.scala) remains the preferred
     * scale path, this one the exact verifier. */
   def ngramJaccard(spark: SparkSession, dir: String, tau: Double = 0.5): DataFrame =
-    exactOverlapShared(spark, dir)
+    Substrate.xovl(spark, dir)
       .withColumn("jaccard", col("shared") / (col("n1") + col("n2") - col("shared")))
       .filter(col("jaccard") >= tau)
       .select("d1", "d2", "shared", "jaccard")
@@ -587,7 +582,7 @@ object DocDedup {
     * Jaccard (`dedup_ngram_jaccard`/`_summary`) and containment
     * (`dedup_containment`, and `pipeline_dedup_cascade`'s third tier)
     * are different POST-FILTERS over the same counts, so the
-    * session-memoized corpus form ([[exactOverlapShared]]) lets all of
+    * session-memoized corpus form ([[Substrate.xovl]]) lets all of
     * them pay the self-join once per session. */
   def exactOverlapOf(shAll: DataFrame, maxDf: Int = MaxShingleDf): DataFrame = {
     val sh = cappedShingles(shAll, maxDf)
@@ -601,14 +596,6 @@ object DocDedup {
       .join(counts.withColumnRenamed("doc_id", "d1").withColumnRenamed("n", "n1"), "d1")
       .join(counts.withColumnRenamed("doc_id", "d2").withColumnRenamed("n", "n2"), "d2")
   }
-
-  /** Session-memoized corpus-keyed [[exactOverlapOf]] at the default
-    * df cap (the Similarity memo discipline: within-run only, DISK_ONLY,
-    * computed from parquet on every invocation). */
-  def exactOverlapShared(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Similarity.memoized(spark,
-      s"xovl|${graft.operators.Similarity.artifactVersion(spark, dir, "documents.parquet")}|$dir")(
-      exactOverlapOf(docShingles(spark, dir)))
 
   /** Jaccard threshold of [[prefixJoin]] in ppm — integer so the ceil
     * arithmetic in the prefix length is exact cross-engine. */
@@ -637,7 +624,7 @@ object DocDedup {
     * df cap, no bucket cap — exactness is the contract, and the spec
     * pins it against a brute-force ground truth. */
   def prefixJoin(spark: SparkSession, dir: String): DataFrame =
-    ssjPairs(spark, dir).orderBy("d1", "d2")
+    Substrate.ssjpairs(spark, dir).orderBy("d1", "d2")
 
   /** [[prefixJoin]] over an arbitrary distinct (doc_id, shingle)
     * frame — the generic EXACT set-similarity self-join: any
@@ -656,7 +643,7 @@ object DocDedup {
   /** Rarity-ordered prefix of each doc's set (AllPairs): keep the
     * first (n − ⌈τ·n⌉ + 1) elements in (df asc, element asc) order —
     * a qualifying pair must collide inside both prefixes. */
-  private def ssjPrefixOf(sh: DataFrame, tauPpm: Long): DataFrame = {
+  private[graft] def ssjPrefixOf(sh: DataFrame, tauPpm: Long): DataFrame = {
     import graft.functions.Hashing.intDiv
     val wSh = org.apache.spark.sql.expressions.Window.partitionBy("shingle")
     val wDoc = org.apache.spark.sql.expressions.Window
@@ -684,7 +671,7 @@ object DocDedup {
     * table. The doc-grain spelling shuffled ~10⁹ collision rows and
     * ~300 GB of verify intermediates at sf10 — the ENOSPC that failed
     * six registered queries in the full sf10 sweep. */
-  private[operators] def ssjClassMapOf(sh: DataFrame): DataFrame = {
+  private[graft] def ssjClassMapOf(sh: DataFrame): DataFrame = {
     val wSet = org.apache.spark.sql.expressions.Window.partitionBy("sset")
     sh.groupBy("doc_id")
       .agg(sort_array(collect_list(col("shingle"))).as("sset"),
@@ -699,8 +686,8 @@ object DocDedup {
     * replicated family. Doc-grain candidate rows are never
     * materialized — consumers expand ([[ssjExpandPairs]]) or count
     * algebraically (the funnel). */
-  private def ssjCandClassesOf(pref: DataFrame, cmap: DataFrame,
-                               tauPpm: Long): DataFrame = {
+  private[graft] def ssjCandClassesOf(pref: DataFrame, cmap: DataFrame,
+                                      tauPpm: Long): DataFrame = {
     val reps = cmap.filter(col("doc_id") === col("cls")).select("doc_id")
     val prefS = pref.join(reps, Seq("doc_id"), "left_semi")
     prefS.as("a").join(prefS.as("b"),
@@ -719,8 +706,8 @@ object DocDedup {
     * pairs need no join at all (identical sets: shared = n,
     * jaccard = 1 — computed through the same Divide so the double is
     * bit-identical to the doc-grain spelling). */
-  private def ssjVerifiedClassesOf(candC: DataFrame, sh: DataFrame,
-                                   cmap: DataFrame, tauPpm: Long): DataFrame = {
+  private[graft] def ssjVerifiedClassesOf(candC: DataFrame, sh: DataFrame,
+                                          cmap: DataFrame, tauPpm: Long): DataFrame = {
     val reps = cmap.filter(col("doc_id") === col("cls")).select("doc_id")
     val shSet = sh.join(reps, Seq("doc_id"), "left_semi")
     val cross = candC.filter(col("c1") =!= col("c2"))
@@ -745,59 +732,13 @@ object DocDedup {
     * members(c1) × members(c2) (one orientation inside a class), the
     * symmetric stats ride along unchanged. Each doc belongs to exactly
     * one class, so no distinct is needed. */
-  private def ssjExpandPairs(vc: DataFrame, cmap: DataFrame): DataFrame =
+  private[graft] def ssjExpandPairs(vc: DataFrame, cmap: DataFrame): DataFrame =
     vc.join(cmap.select(col("cls").as("c1"), col("doc_id").as("x1")), "c1")
       .join(cmap.select(col("cls").as("c2"), col("doc_id").as("x2")), "c2")
       .filter(col("c1") =!= col("c2") || col("x1") < col("x2"))
       .select(least(col("x1"), col("x2")).as("d1"),
         greatest(col("x1"), col("x2")).as("d2"),
         col("shared"), col("n_union"), col("jaccard"))
-
-  /** Session-memoized stage `which` of the corpus prefix join — ONE
-    * computation of each stage feeds #359 (the pair release), #360
-    * (recall vs ground truth), #362 (the S-curve) and #361 (the
-    * funnel); the memo localCheckpoints, so the funnel's stage counts
-    * are counted aggregates over frames the pair consumers already
-    * materialized instead of a second end-to-end join. */
-  private def ssjStage(spark: SparkSession, dir: String, which: String)
-                      (build: => DataFrame): DataFrame =
-    Similarity.memoized(spark,
-      s"ssj$which|${Similarity.artifactVersion(spark, dir, "documents.parquet")}|$dir")(
-      build)
-
-  private[operators] def ssjShingles(spark: SparkSession, dir: String): DataFrame =
-    ssjStage(spark, dir, "sh")(docShingles(spark, dir))
-
-  // each accessor resolves its upstream stage BEFORE entering the
-  // memo (computeIfAbsent must not nest on the same map)
-  private[operators] def ssjPrefix(spark: SparkSession, dir: String): DataFrame = {
-    val sh = ssjShingles(spark, dir)
-    ssjStage(spark, dir, "pref")(ssjPrefixOf(sh, PrefixTauPpm))
-  }
-
-  private[operators] def ssjClassMap(spark: SparkSession, dir: String): DataFrame = {
-    val sh = ssjShingles(spark, dir)
-    ssjStage(spark, dir, "cls")(ssjClassMapOf(sh))
-  }
-
-  /** Class-grain candidate pairs (memoized) — doc-grain candidates are
-    * never materialized; the funnel counts them algebraically. */
-  private[operators] def ssjCandClasses(spark: SparkSession, dir: String): DataFrame = {
-    val pref = ssjPrefix(spark, dir)
-    val cmap = ssjClassMap(spark, dir)
-    ssjStage(spark, dir, "candc")(ssjCandClassesOf(pref, cmap, PrefixTauPpm))
-  }
-
-  /** The memoized verified pair list (UNORDERED) with its exact
-    * integer counts — the shared exact-ground-truth substrate for the
-    * MinHash recall family. */
-  private[operators] def ssjPairs(spark: SparkSession, dir: String): DataFrame = {
-    val candC = ssjCandClasses(spark, dir)
-    val sh = ssjShingles(spark, dir)
-    val cmap = ssjClassMap(spark, dir)
-    ssjStage(spark, dir, "pairs")(
-      ssjExpandPairs(ssjVerifiedClassesOf(candC, sh, cmap, PrefixTauPpm), cmap))
-  }
 
   /** `dedup_ssjoin_funnel`: the cost-observability funnel of the exact
     * prefix join — docs, shingle rows, prefix rows (the share the
@@ -812,28 +753,28 @@ object DocDedup {
     * operator, shared plumbing so they can't drift.
     *
     * Shape: every stage count is an aggregate over the session-
-    * memoized staged frames ([[ssjShingles]]…[[ssjPairs]]) the pair
+    * memoized staged frames ([[Substrate.ssjsh]]…[[Substrate.ssjpairs]]) the pair
     * consumers already materialized — the funnel adds four counted
     * scans of checkpointed frames, never a second join. */
   def prefixJoinFunnel(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.Hashing.ratio4
-    val counts = ssjShingles(spark, dir).agg(
+    val counts = Substrate.ssjsh(spark, dir).agg(
       countDistinct("doc_id").as("n_docs"),
       count(lit(1)).as("n_shingle_rows"))
-    val pc = ssjPrefix(spark, dir).agg(count(lit(1)).as("n_prefix_rows"))
+    val pc = Substrate.ssjpref(spark, dir).agg(count(lit(1)).as("n_prefix_rows"))
     // doc-grain candidate count by exact algebra over the class-grain
     // frame: a cross-class pair expands to g1·g2 doc pairs, a class
     // self-pair to C(g, 2) — identical to counting the doc-grain
     // distinct list, which is never materialized (it is quadratic in
     // exact replication: ~10⁹ rows on the sf10 stress replica)
-    val g = ssjClassMap(spark, dir).groupBy("cls").agg(count(lit(1)).as("g"))
-    val cc = ssjCandClasses(spark, dir)
+    val g = Substrate.ssjcls(spark, dir).groupBy("cls").agg(count(lit(1)).as("g"))
+    val cc = Substrate.ssjcandc(spark, dir)
       .join(g.select(col("cls").as("c1"), col("g").as("g1")), "c1")
       .join(g.select(col("cls").as("c2"), col("g").as("g2")), "c2")
       .agg(coalesce(sum(when(col("c1") === col("c2"),
           expr("g1 * (g1 - 1) div 2")).otherwise(col("g1") * col("g2"))),
         lit(0L)).as("n_candidates"))
-    val vc = ssjPairs(spark, dir).agg(count(lit(1)).as("n_pairs"))
+    val vc = Substrate.ssjpairs(spark, dir).agg(count(lit(1)).as("n_pairs"))
     counts.crossJoin(pc).crossJoin(cc).crossJoin(vc)
       .select(col("n_docs"), col("n_shingle_rows"), col("n_prefix_rows"),
         col("n_candidates"), col("n_pairs"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Partitioning._
-import graft.Tables
+import graft.{Substrate, Tables}
 
 /** Fellegi–Sunter record-linkage calibration over the document corpus.
   *
@@ -118,7 +118,7 @@ object Linkage {
         intDivCol(col("n_chars"), LenBandChars).as("len_band"),
         lower(substring(trim(col("text")), 1, PrefixChars)).as("prefix"))
       .localCheckpoint()
-    val cand = Blocking.snCandidatesShared(spark, dir)
+    val cand = Substrate.sncand(spark, dir)
     def a(c: String) = col(s"a.$c")
     def b(c: String) = col(s"b.$c")
     def bit(cond: org.apache.spark.sql.Column) = when(cond, "1").otherwise("0")
@@ -183,7 +183,7 @@ object Linkage {
     // with the τ-verified family); it feeds BOTH the provenance merge
     // (lsh_ok) and the fsWeights match class (its τ-accepted subset ≡
     // nearDupPairs by construction)
-    val cj = MinHashLSH.candidateJaccardShared(spark, dir)
+    val cj = Substrate.lshcj(spark, dir)
       .select("d1", "d2", "jaccard")
     // the 4-row calibration pivoted to one broadcastable row of exact
     // int64 weights (weight4's pre-divide fixed-point numerator)
@@ -199,7 +199,7 @@ object Linkage {
         col("same_len_band").as("w_len"), col("same_prefix").as("w_prefix"))
     val lshC = cj
       .select(col("d1"), col("d2"), (col("jaccard") >= 0.5).as("lsh_ok"))
-    val snC = Blocking.snCandidatesShared(spark, dir)
+    val snC = Substrate.sncand(spark, dir)
       .select(least(col("d1"), col("d2")).as("d1"),
         greatest(col("d1"), col("d2")).as("d2"),
         (col("jacc4") >= Blocking.SnTau).as("sn_ok"))
@@ -299,11 +299,6 @@ object Linkage {
     * per document, so fp-set similarity concentrates on real near-dups
     * and the pair list stays edge-sized at every SF. */
   def fpSetJoin(spark: SparkSession, dir: String): DataFrame =
-    Similarity.memoized(spark,
-      s"ssjfp|${Similarity.artifactVersion(spark, dir, "documents.parquet")}|$dir")(
-      DocDedup.prefixJoinOf(
-        DocDedup.winnowFingerprintsOf(
-            Tables.documents(spark, dir).select("doc_id", "text").spread)
-          .select(col("doc_id"), col("h").as("shingle"))))
+    Substrate.ssjfp(spark, dir)
       .orderBy("d1", "d2")
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Partitioning._
+import graft.Substrate
 import graft.functions.Hashing.h64
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -316,7 +317,7 @@ object MinHashLSH {
     // query's own — one fused signature pass, checkpointed for the
     // two estimate joins
     val sigs = sigTable(docs).checkpointSer
-    candidateJaccardShared(spark, dir)
+    Substrate.lshcj(spark, dir)
       .join(sigs.as("sa"), col("sa.doc_id") === col("d1"))
       .join(sigs.as("sb"), col("sb.doc_id") === col("d2"))
       .select(col("d1"), col("d2"),
@@ -398,7 +399,7 @@ object MinHashLSH {
     * off a cliff — above it is near-dup mass, below it is noise. */
   def thresholdCurve(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.Hashing.intDiv
-    val pairs = candidateJaccardShared(spark, dir)
+    val pairs = Substrate.lshcj(spark, dir)
       .select(col("d1"), col("d2"),
         intDiv(col("shared") * 20L, col("n1") + col("n2") - col("shared"))
           .as("band"))
@@ -432,8 +433,8 @@ object MinHashLSH {
     jaccardPairs(lshCandidates(docs), DocDedup.docShinglesOf(docs), cmap)
       .select("d1", "d2", "jaccard")
 
-  private def jaccardPairs(cand0: DataFrame, shAll: DataFrame,
-                           cmap0: Option[DataFrame] = None): DataFrame = {
+  private[graft] def jaccardPairs(cand0: DataFrame, shAll: DataFrame,
+                                  cmap0: Option[DataFrame] = None): DataFrame = {
     // IDENTICAL-SET CLASS CONTRACTION of the verify join (the round-16
     // ssjoin recipe, ported to the LSH tier for round-17 item 1): the
     // (pair × shared-shingle) overlap join is quadratic in exact
@@ -497,61 +498,19 @@ object MinHashLSH {
   /** #9: candidate pairs from band collisions, verified with true
     * Jaccard ≥ τ on the shingle sets.
     *
-    * Session-memoized (the bruteTopKShared discipline): the verified
+    * Session-memoized ([[Substrate.lshpairs]]): the verified
     * pair list is edge-sized but costs a full shingle+LSH+verify
     * corpus pass, and a Verify/Bench session consumes it from ~10
     * panels (components, rank, triangles, cluster sizes, cross-lang,
     * best-quality, blocking agreement, multi-signal, clean-docs,
-    * cascade) — without the memo each re-ran the pipeline end-to-end.
-    * Keyed by the documents artifact version + exact tau; the
-    * arbitrary-frame form [[nearDupPairsOf]] stays uncached.
-    *
-    * Round-17: derived by FILTERING the session-shared unfiltered
-    * candidate-Jaccard frame ([[candidateJaccardShared]]) at τ — the
-    * shingle/candidate/verify corpus pass runs once per session for
-    * this, `dedup_threshold_curve`, `dedup_minhash_quality` and
-    * `linkage_score_pairs` together, instead of once per family. The
-    * τ-filtered frame keeps its own (small) memo so every consumer
-    * still reads the ordered verified list as one checkpoint scan. */
-  def nearDupPairs(spark: SparkSession, dir: String, tau: Double = 0.5): DataFrame = {
-    // shared unfiltered frame resolved EAGERLY (its own memo;
-    // computeIfAbsent must not nest)
-    val cj = candidateJaccardShared(spark, dir)
-    Similarity.memoized(spark,
-      s"lshpairs|${Similarity.artifactVersion(spark, dir, "documents.parquet")}|$dir|$tau")(
-      cj.filter(col("jaccard") >= tau)
-        .select("d1", "d2", "jaccard")
-        .orderBy("d1", "d2"))
-  }
-
-  /** Session-memoized corpus-keyed banded-LSH candidate pairs — the
-    * ONE capped candidate source every corpus-keyed verifier reads
-    * (Jaccard, edit distance). Arbitrary-frame callers keep
-    * [[lshCandidates]]. */
-  def lshCandidatesShared(spark: SparkSession, dir: String): DataFrame =
-    Similarity.memoized(spark,
-      s"lshcand|${Similarity.artifactVersion(spark, dir, "documents.parquet")}|$dir")(
-      lshCandidates(graft.Tables.documents(spark, dir)
-        .select("doc_id", "text")
-        .spread))
-
-  /** Session-memoized UNFILTERED candidate-Jaccard frame over the
-    * corpus — every banded-LSH candidate pair sharing ≥ 1 shingle with
-    * its exact (shared, n1, n2, jaccard). The τ-verified pair lists
-    * ([[nearDupPairs]], any τ) are filters over THIS frame, and the
-    * unfiltered consumers (`dedup_threshold_curve`'s band histogram,
-    * `dedup_minhash_quality`'s estimate join, `linkage_score_pairs`'
-    * negative class) read it whole — one corpus candidate+verify pass
-    * per session where round 16 paid one per family. */
-  def candidateJaccardShared(spark: SparkSession, dir: String): DataFrame = {
-    // dependencies resolved EAGERLY (their own memos; computeIfAbsent
-    // must not nest): the shared class map and the shared candidates
-    val cmap = DocDedup.ssjClassMap(spark, dir)
-    val cand = lshCandidatesShared(spark, dir)
-    Similarity.memoized(spark,
-      s"lshcj|${Similarity.artifactVersion(spark, dir, "documents.parquet")}|$dir")(
-      jaccardPairs(cand, DocDedup.docShingles(spark, dir), Some(cmap)))
-  }
+    * cascade). It is a τ-filter over the unfiltered candidate-Jaccard
+    * frame ([[Substrate.lshcj]]), so the shingle/candidate/verify
+    * corpus pass runs once per session for this,
+    * `dedup_threshold_curve`, `dedup_minhash_quality` and
+    * `linkage_score_pairs` together. The arbitrary-frame form
+    * [[nearDupPairsOf]] stays uncached. */
+  def nearDupPairs(spark: SparkSession, dir: String, tau: Double = 0.5): DataFrame =
+    Substrate.lshpairs(spark, dir, tau)
 
   /** #9 over an arbitrary (doc_id, text) frame. */
   def nearDupPairsOf(docs: DataFrame, tau: Double = 0.5): DataFrame =
@@ -571,13 +530,13 @@ object MinHashLSH {
     *
     * Shape: both inputs are the session-memoized pair lists the rest
     * of the registry already shares (the exact side is
-    * [[DocDedup.ssjPairs]] — the SAME staged frame #359/#361/#362
+    * [[Substrate.ssjpairs]] — the SAME staged frame #359/#361/#362
     * consume, so a session running any combination pays the prefix
     * join once); one semi-join + three 1-row aggregates. */
   def minhashRecall(spark: SparkSession, dir: String,
                     tau: Double = 0.5): DataFrame = {
     import graft.functions.Hashing.ratio4
-    val exact = DocDedup.ssjPairs(spark, dir).select("d1", "d2")
+    val exact = Substrate.ssjpairs(spark, dir).select("d1", "d2")
     val mh = nearDupPairs(spark, dir, tau).select("d1", "d2")
     val ne = exact.agg(count(lit(1)).as("n_exact"))
     val nl = mh.agg(count(lit(1)).as("n_lsh"))
@@ -604,14 +563,14 @@ object MinHashLSH {
     * doing what it promises, now evidenced). Banding uses the exact
     * integer jaccard4 (halfUp of shared·10⁴/union — no float bands).
     *
-    * Shape: both inputs are the memoized pair lists ([[DocDedup
-    * .ssjPairs]] again — minhashRecall and this panel project d1/d2
+    * Shape: both inputs are the memoized pair lists
+    * ([[Substrate.ssjpairs]] again — minhashRecall and this panel project d1/d2
     * and j4 from ONE shared frame, so running both costs one exact
     * join); one left-semi flag join + an O(bands) rollup. */
   def recallByBand(spark: SparkSession, dir: String,
                    tau: Double = 0.5): DataFrame = {
     import graft.functions.Hashing.{halfUpDiv, intDiv, ratio4}
-    val exact = DocDedup.ssjPairs(spark, dir)
+    val exact = Substrate.ssjpairs(spark, dir)
       .select(col("d1"), col("d2"),
         // exact integer jaccard4 from the released integer counts —
         // banding never touches the double jaccard
@@ -644,7 +603,7 @@ object MinHashLSH {
   /** `dedup_minhash_tuning`: the (k, bands) OPERATING-POINT SWEEP
     * against exact ground truth — for each grid config, the banded
     * pipeline (same fused signatures, same hot-bucket cap) runs end to
-    * end and is graded on the [[DocDedup.ssjPairs]] truth: candidate
+    * end and is graded on the [[Substrate.ssjpairs]] truth: candidate
     * volume (the cost axis), overall recall, and near-τ recall (the
     * quality axis the shipped config is weakest on). This panel is HOW
     * the default (k, r) is chosen: the committed defaults are the grid
@@ -658,14 +617,14 @@ object MinHashLSH {
   def minhashTuning(spark: SparkSession, dir: String,
                     tau: Double = 0.5): DataFrame = {
     import graft.functions.Hashing.{halfUpDiv, ratio4}
-    val sh = DocDedup.ssjShingles(spark, dir)
+    val sh = Substrate.ssjsh(spark, dir)
     val docs = graft.Tables.documents(spark, dir)
       .select("doc_id", "text")
       .spread
-    val exact = DocDedup.ssjPairs(spark, dir)
+    val exact = Substrate.ssjpairs(spark, dir)
       .select(col("d1"), col("d2"),
         halfUpDiv(col("shared") * 10000L, col("n_union")).as("j4"))
-    val cmap = DocDedup.ssjClassMap(spark, dir)
+    val cmap = Substrate.ssjcls(spark, dir)
     // ONE signature pass serves every grid point: seed i's per-shingle
     // hash is md5(i || ':' || shingle) — independent of numSeeds — so
     // the k-seed signature is exactly the first k entries of the

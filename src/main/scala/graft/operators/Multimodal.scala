@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Partitioning._
-import graft.Tables
+import graft.{Substrate, Tables}
 import graft.functions.Hashing.h64
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
@@ -111,26 +111,7 @@ object Multimodal {
     * shuffle until the per-doc signature groupBy); the signature is
     * one int64/doc; blocking is the capped byte-band join. */
   def nearDupPairs(spark: SparkSession, dir: String): DataFrame =
-    SimHash.nearDupPairsOfSignatures(sigShared(spark, dir))
-
-  /** Session-shared byte-SimHash signature table — the CDC-sampled
-    * phash substrate (round-17 verdict item 6). The signature pass is
-    * the O(total payload bytes) cost of the binary near-dup tier, and
-    * BOTH declared consumers (`multimodal_phash_dedup`,
-    * `multimodal_phash_funnel`) re-derived it per query. Same memo
-    * discipline as the lexical pair list (within-session only, keyed
-    * on the documents artifact version — the payload column derives
-    * from documents.parquet). */
-  def sigShared(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.ByteSimHash
-    Similarity.memoized(spark,
-      s"phashsig|${Similarity.artifactVersion(spark, dir, "documents.parquet")}|$dir")(
-      withPayload(spark, dir).select("doc_id", "payload")
-        .select(col("doc_id"),
-          ByteSimHash.byteSimHash(col("payload"), ShingleBytes, SampleMod)
-            .as("simhash"))
-        .filter(col("simhash") =!= ByteSimHash.NoSignature))
-  }
+    SimHash.nearDupPairsOfSignatures(Substrate.phashsig(spark, dir))
 
   /** [[nearDupPairs]] over any (doc_id, payload) frame. The signature
     * stage is the fused one-pass [[graft.functions.ByteSimHash]] kernel
@@ -166,7 +147,7 @@ object Multimodal {
     import graft.functions.Hashing.ratio4
     // the signature substrate is the session-shared memo (the dedup
     // pair query reads the same frame — one payload pass per session)
-    val sig = sigShared(spark, dir)
+    val sig = Substrate.phashsig(spark, dir)
     val bands = SimHash.cappedBands(sig, MinHashLSH.MaxBucketSize)
       .checkpointSer
     val cand = SimHash.candidateHammingOfBands(bands)

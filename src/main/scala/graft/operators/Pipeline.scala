@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Partitioning._
-import graft.Tables
+import graft.{Substrate, Tables}
 import graft.functions.Hashing.h64
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -386,7 +386,7 @@ object Pipeline {
     * main passes — no re-execution of the gate chain). */
   def trainingMix(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.Hashing.intDiv
-    Ranking.globalPrefixSum(mixSurvivors(spark, dir),
+    Ranking.globalPrefixSum(Substrate.mixsurv(spark, dir),
         Seq(col("doc_id")), "n_toks", out = "start_tok")
       .withColumn("pack_id", intDiv(col("start_tok"), lit(PackSeqLen)))
       .select("doc_id", "source", "n_toks", "score", "importance",
@@ -416,41 +416,13 @@ object Pipeline {
     // (w, n) values to the former perDocWord rollup); the doc-grain
     // frame stays this query's own
     val nsyms = Curation.bpeEncodedSymbols(
-      Curation.bpeWordVocabShared(spark, dir),
+      Substrate.bpevocab(spark, dir),
       Curation.bpeMergesLocalShared(spark, dir))
     packOf(
       perDocWord.join(nsyms, "w")
         .groupBy("doc_id")
         .agg(sum(col("cnt") * col("n_syms")).as("n_toks")),
       seqLen)
-  }
-
-  /** The gate-stack survivors feeding [[trainingMix]] and
-    * [[mixRetention]]: (doc_id, source, n_toks, score, importance).
-    * Session-shared (round-17 verdict item 4): the two consumers run
-    * back to back in a Verify/Bench session and the assembled frame is
-    * a pure function of the documents artifact — one gate-chain pass
-    * per session. The three gate components are resolved EAGERLY
-    * before the memo closure (each is itself session-shared;
-    * computeIfAbsent must not nest). */
-  private def mixSurvivors(spark: SparkSession, dir: String): DataFrame = {
-    val decon = Curation.decontaminated(spark, dir)
-    val lex = QualityModels.lexiconScore(spark, dir)
-    val dsir = QualityModels.dsirWeights(spark, dir)
-    Similarity.memoized(spark,
-      s"mixsurv|${Similarity.artifactVersion(spark, dir, "documents.parquet")}|$dir")({
-      val docs = Tables.documents(spark, dir).select("doc_id", "text").spread
-      val keepers = docs
-        .withColumn("digest", h64(DocDedup.normalized(col("text"))))
-        .groupBy("digest").agg(min("doc_id").as("doc_id"))
-        .select("doc_id")
-      decon
-        .join(keepers, "doc_id")
-        .join(lex.filter(col("pred") === 1)
-          .select("doc_id", "n_toks", "score"), "doc_id")
-        .join(dsir.select("doc_id", "importance"), "doc_id")
-        .select("doc_id", "source", "n_toks", "score", "importance")
-    })
   }
 
   /** #162 `mix_retention_report`: what the gate stack did to the source
@@ -467,7 +439,7 @@ object Pipeline {
         size(TextAnalysis.tokens(col("text"))).cast("long").as("n")).spread
       .groupBy("source")
       .agg(count(lit(1)).as("docs_in"), sum("n").as("toks_in"))
-    val kept = mixSurvivors(spark, dir)
+    val kept = Substrate.mixsurv(spark, dir)
       .groupBy("source")
       .agg(count(lit(1)).as("docs_kept"), sum("n_toks").as("toks_kept"))
     raw.join(broadcast(kept), Seq("source"), "left")

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Partitioning._
-import graft.Tables
+import graft.{Substrate, Tables}
 import graft.functions.Hashing.{h64, halfUpDiv, ratio4}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -53,7 +53,7 @@ object QualityModels {
   /** Rows exported by the quality_lexicon head query. */
   val LexiconHead = 50
 
-  private def isCurated(source: Column): Column =
+  private[graft] def isCurated(source: Column): Column =
     source.isInCollection(CuratedSources)
 
   private def clip4(c: Column): Column =
@@ -100,35 +100,11 @@ object QualityModels {
       .withColumn("aff4",
         clip4(halfUpDiv((col("c_cur") + 1L) * 10000L, col("c_rest") + 1L)))
 
-  /** Session-memoized [[lexiconTrain]] — the vocab-sized trained
-    * lexicon feeds the head panel and every scoring pass (score,
-    * model-eval, both reliability panels); one training tokenization
-    * per session (the Similarity memo discipline: within-run only,
-    * computed from parquet on every invocation). */
-  def lexiconTrainShared(spark: SparkSession, dir: String): DataFrame =
-    Similarity.memoized(spark,
-      s"lextrain|${Similarity.artifactVersion(spark, dir, "documents.parquet")}|$dir")(
-      lexiconTrain(spark, dir))
-
-  /** Session-memoized per-doc EXACT scored4 frame (doc_id, n_toks,
-    * score4, pred) — the one scoring pass `quality_lexicon_score`,
-    * `quality_model_eval`, `quality_calibration_curve` and
-    * `quality_isotonic_fit` all derive from. */
-  def lexiconScored4Shared(spark: SparkSession, dir: String): DataFrame = {
-    // trained lexicon resolved EAGERLY (its own memo; computeIfAbsent
-    // must not nest)
-    val lex = lexiconTrainShared(spark, dir)
-    Similarity.memoized(spark,
-      s"lexs4|${Similarity.artifactVersion(spark, dir, "documents.parquet")}|$dir")(
-      lexiconScored4Of(
-        Tables.documents(spark, dir).select("doc_id", "text").spread, lex))
-  }
-
   /** #155 `quality_lexicon`: the [[LexiconHead]] most curated-leaning
     * terms (affinity desc, term asc — total order). TakeOrdered head,
     * never a global sort of the vocabulary. */
   def lexiconHead(spark: SparkSession, dir: String): DataFrame =
-    lexiconTrainShared(spark, dir)
+    Substrate.lextrain(spark, dir)
       .select(col("term"), col("c_cur"), col("c_rest"),
         (col("aff4") / lit(10000.0)).as("affinity"))
       .orderBy(col("affinity").desc, col("term"))
@@ -162,36 +138,13 @@ object QualityModels {
     * single-partition window), a uniform doc-key label join, O(10)
     * rollup. All arithmetic exact int64. */
   def calibrationCurve(spark: SparkSession, dir: String): DataFrame =
-    decileLabelCounts(spark, dir)
+    // the per-decile substrate is shared with isotonicFit, so the two
+    // panels never disagree about the binning
+    Substrate.lexdec(spark, dir)
       .select(col("decile"), col("n_docs"), col("n_pos"),
         ratio4(col("n_pos"), col("n_docs")).as("pos_rate4"),
         halfUpDiv(col("ss4"), col("n_docs")).as("mean_score4"))
       .orderBy("decile")
-
-  /** The per-decile (n_docs, n_pos, ss4) substrate of the reliability
-    * diagram — shared by [[calibrationCurve]] (the raw curve) and
-    * [[isotonicFit]] (the PAV fit on top of it) so the two panels can
-    * never disagree about the binning. */
-  private def decileLabelCounts(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Hashing.intDiv
-    // the scored frame is the session-shared scored4 memo; the O(10)
-    // decile rollup is itself memoized so the calibration curve and
-    // the isotonic fit pay the global rank pass once per session
-    val s4 = lexiconScored4Shared(spark, dir)
-    Similarity.memoized(spark,
-      s"lexdec|${Similarity.artifactVersion(spark, dir, "documents.parquet")}|$dir")({
-      val scored = s4.select("doc_id", "score4")
-      val n = scored.count()
-      Ranking.globalRowNumber(scored, Seq(col("score4"), col("doc_id")), "rn")
-        .select(col("doc_id"), col("score4"),
-          (intDiv((col("rn") - 1L) * 10L, lit(n)) + 1L).as("decile"))
-        .join(Tables.documents(spark, dir).select(col("doc_id"),
-          isCurated(col("source")).cast("long").as("label")), "doc_id")
-        .groupBy("decile")
-        .agg(count(lit(1)).as("n_docs"), sum("label").as("n_pos"),
-          sum("score4").as("ss4"))
-    })
-  }
 
   /** `quality_isotonic_fit`: PAV isotonic calibration of the
     * reliability diagram — the FIT step on top of the raw curve
@@ -217,7 +170,7 @@ object QualityModels {
     * free at any corpus size. */
   def isotonicFit(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.Hashing.{intDiv, ratio4}
-    val g = decileLabelCounts(spark, dir).localCheckpoint(true)
+    val g = Substrate.lexdec(spark, dir).localCheckpoint(true)
     val wCum = Window.orderBy("decile")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // prefix sums + the zero origin row: interval [j, k] reads
@@ -252,34 +205,7 @@ object QualityModels {
     // Session-shared (round-17 verdict item 4): the trained-gate score
     // frame feeds quality_lexicon_score, the training-mix chain and
     // the gate-ablation panel — one train+score pass per session.
-    // The trained lexicon inside feeds three consumers (prior
-    // numerator, prior denominator, scoring join); checkpointing the
-    // vocab-sized aggregate keeps the corpus tokenization at ONE
-    // training scan instead of one per consumer.
-    {
-      // one scoring pass per session: the memo projects the shared
-      // scored4 frame (same score4 ints, same /10000.0 expression as
-      // the uncached spelling — value-identical); resolved eagerly
-      val s4 = lexiconScored4Shared(spark, dir)
-      Similarity.memoized(spark,
-        s"lexscore|${Similarity.artifactVersion(spark, dir, "documents.parquet")}|$dir")(
-        s4.select(
-            col("doc_id"),
-            col("n_toks"),
-            (col("score4") / lit(10000.0)).as("score"),
-            col("pred"))
-          .orderBy("doc_id"))
-    }
-
-  /** The memo substrate of [[lexiconScore]] — PlanQualitySpec pins its
-    * plan shape here (the registered query explains as the memo's
-    * `Scan ExistingRDD`). */
-  private[graft] def lexiconScoreUncached(spark: SparkSession,
-                                          dir: String): DataFrame =
-    lexiconScoreOf(
-      Tables.documents(spark, dir).select("doc_id", "text").spread,
-      lexiconTrain(spark, dir).localCheckpoint())
-      .orderBy("doc_id")
+    Substrate.lexscore(spark, dir)
 
   /** Scores any (doc_id, text) frame against a trained lexicon
     * ([[lexiconTrain]] output — train once, gate many corpora). The
@@ -336,7 +262,7 @@ object QualityModels {
   def modelEval(spark: SparkSession, dir: String): DataFrame = {
     // scored4 is the session-shared memo — only the narrow label join
     // is this panel's own
-    val cells = lexiconScored4Shared(spark, dir)
+    val cells = Substrate.lexs4(spark, dir)
       .join(Tables.documents(spark, dir).select(col("doc_id"),
         isCurated(col("source")).cast("int").as("label")), "doc_id")
       .groupBy("label", "pred")
@@ -487,20 +413,7 @@ object QualityModels {
   def dsirWeights(spark: SparkSession, dir: String): DataFrame =
     // session-shared (round-17 verdict item 4): dsir_weights + the
     // training-mix chain read the same importance frame
-    Similarity.memoized(spark,
-      s"dsirw|${Similarity.artifactVersion(spark, dir, "documents.parquet")}|$dir")(
-      dsirWeightsUncached(spark, dir))
-
-  /** The memo substrate of [[dsirWeights]] — PlanQualitySpec pins its
-    * plan shape here. */
-  private[graft] def dsirWeightsUncached(spark: SparkSession,
-                                         dir: String): DataFrame =
-    dsirScoreOf(
-      Tables.documents(spark, dir).select("doc_id", "text").spread,
-      // O(DsirBuckets) rows — checkpointing pins the trained model so
-      // the broadcast (and any retry) never re-runs the training scan
-      dsirBucketTable(spark, dir).localCheckpoint())
-      .orderBy("doc_id")
+    Substrate.dsirw(spark, dir)
 
   /** The hashed-bigram bucket column for a (w1, w2) pair. */
   def dsirBucket(w1: Column, w2: Column): Column =

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Partitioning._
+import graft.Substrate
 import graft.functions.Hashing.h64
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -44,27 +45,13 @@ object SimHash {
           .reduce(_ + _).cast("long").as("simhash"))
   }
 
-  /** Session-shared text-tier signature table. The shingle→vote pass
-    * is the tier's dominant cost, and THREE declared consumers
-    * re-derived it per query (`dedup_simhash`, `dedup_simhash_profile`,
-    * `dedup_savings_report`'s simhash method). Same memo discipline as
-    * the lexical pair list: within-session only, DISK_ONLY
-    * localCheckpoint, keyed on the documents artifact version — every
-    * bench/oracle invocation still computes it from parquet. Banding +
-    * Hamming stay per-query (they depend on maxBucket and are
-    * join-cheap over one int64 per doc). */
-  def signaturesShared(spark: SparkSession, dir: String): DataFrame =
-    Similarity.memoized(spark,
-      s"shsig|${Similarity.artifactVersion(spark, dir, "documents.parquet")}|$dir")(
-      signatures(DocDedup.docShingles(spark, dir)))
-
   /** #10: near-dup pairs at Hamming distance ≤ `HammingMax`. Byte
     * buckets get the same hot-bucket cap as the MinHash bands — simhash
     * bytes are NOT uniform (boilerplate corpora share bytes), so one
     * hot byte would fan the self-join out quadratically. */
   def nearDupPairs(spark: SparkSession, dir: String,
                    maxBucket: Int = MinHashLSH.MaxBucketSize): DataFrame =
-    nearDupPairsOfSignatures(signaturesShared(spark, dir), maxBucket)
+    nearDupPairsOfSignatures(Substrate.shsig(spark, dir), maxBucket)
 
   /** #10 over an arbitrary (doc_id, shingle) frame. */
   def nearDupPairsOfShingles(sh: DataFrame,
@@ -132,7 +119,7 @@ object SimHash {
     val w = org.apache.spark.sql.expressions.Window.orderBy("hd")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
-    val cand = candidateHamming(signaturesShared(spark, dir), maxBucket)
+    val cand = candidateHamming(Substrate.shsig(spark, dir), maxBucket)
       .select("d1", "d2", "hd")
       .checkpointSer // feeds both histograms; one candidate pass
     val hist = cand.groupBy("hd").agg(count(lit(1)).as("n_pairs"))

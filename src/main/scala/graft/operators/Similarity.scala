@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Partitioning._
-import graft.Tables
+import graft.{Substrate, Tables}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -101,7 +101,7 @@ object Similarity {
        |  ((cast(conv(substring(md5(concat('pl:', cast(p as string), ':', cast(j as string))), 1, 15), 16, 10) as bigint) % 2) * 2 - 1)),
        |  cast(0 as double), (acc, v) -> acc + v)""".stripMargin
 
-  private def vecs(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def vecs(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding").as("e"))
       .spread
 
@@ -151,37 +151,9 @@ object Similarity {
   def nearDupPairs(spark: SparkSession, dir: String, tau: Double = NearDupTau,
                    numPlanes: Int = 0,
                    planesPerBand: Int = 0): DataFrame =
-    // Shared substrate (same discipline as bruteTopKShared): the
-    // verified pair list is edge-sized but its lineage is a full
-    // corpus pass, and a session (Verify/Bench run ~200 queries in
-    // one) consumes it from the summary, semantic-components,
-    // multi-signal and contamination panels — memoize per exact
-    // parameterization so the LSH+verify pipeline runs once.
-    memoized(spark,
-      s"embpairs|${corpusVersion(spark, dir)}|$dir|$tau|$numPlanes|$planesPerBand")(
-      nearDupPairsUncached(spark, dir, tau, numPlanes, planesPerBand))
-
-  private def nearDupPairsUncached(spark: SparkSession, dir: String,
-                                   tau: Double, numPlanes: Int,
-                                   planesPerBand: Int): DataFrame = {
-    val v = vecs(spark, dir)
-    val ppb =
-      if (planesPerBand > 0) planesPerBand else planesPerBandFor(v.count())
-    val np = if (numPlanes > 0) numPlanes else NumBands * ppb
-    val b = buckets(spark, dir, np, ppb)
-    val cand = b.as("x").join(b.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-        col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("v1"), col("y.vec_id").as("v2"))
-      .distinct()
-    cand
-      .join(v.select(col("vec_id").as("v1"), col("e").as("e1")), "v1")
-      .join(v.select(col("vec_id").as("v2"), col("e").as("e2")), "v2")
-      .withColumn("cos", cosine("e1", "e2"))
-      .filter(col("cos") >= tau)
-      .select("v1", "v2", "cos")
-      .orderBy("v1", "v2")
-  }
+    // session-memoized: the summary, semantic-components, multi-signal
+    // and contamination panels share one LSH+verify pass
+    Substrate.embpairs(spark, dir, (tau, numPlanes, planesPerBand))
 
   /** Aggregated export form of [[nearDupPairs]] — the 100 TB posture:
     * the raw pair list is O(pairs) (itself a dataset on a clustered
@@ -233,48 +205,7 @@ object Similarity {
   def nearDupEdgesCapped(spark: SparkSession, dir: String,
                          tau: Double = NearDupTau,
                          cWin: Int = NeighborWindow): DataFrame =
-    memoized(spark,
-      s"embcapped|${corpusVersion(spark, dir)}|$dir|$tau|$cWin")(
-      nearDupEdgesCappedUncached(spark, dir, tau, cWin))
-
-  private def nearDupEdgesCappedUncached(spark: SparkSession, dir: String,
-                                         tau: Double, cWin: Int): DataFrame = {
-    val v = vecs(spark, dir)
-    val ppb = planesPerBandFor(v.count())
-    val b = buckets(spark, dir, NumBands * ppb, ppb)
-    // rank members within (band, bucket) by vec_id — id-grain rows
-    // only (24 B), the vectors join in AFTER the candidate set is
-    // bounded and deduplicated; bucket size rides the same window
-    // shuffle (zero extra exchange)
-    val wB = Window.partitionBy("band", "bucket").orderBy("vec_id")
-    val wC = Window.partitionBy("band", "bucket")
-    val r = b.withColumn("rn", row_number().over(wB))
-      .withColumn("bsz", count(lit(1)).over(wC))
-    // exact equi-join on (band, bucket, rn + j): each member emits
-    // target ranks rn+1..hi, hi = bucket end for normal buckets,
-    // rn + C for oversized ones — emit is bounded per member per band
-    // by construction (never the |bucket|² hash-join blowup a
-    // rank-range predicate would plan); v1 < v2 falls out of the rank
-    // order. The CASE guards sequence() against hi < rn+1 (Spark
-    // sequence DESCENDS on inverted bounds — it must be empty here).
-    val hi = when(col("bsz") <= lit(TargetBucket), col("bsz").cast("int"))
-      .otherwise(least(col("rn") + cWin, col("bsz").cast("int")))
-    val x = r.select(col("band"), col("bucket"),
-        explode(when(hi >= col("rn") + 1, sequence(col("rn") + 1, hi))
-          .otherwise(array().cast("array<int>"))).as("rn"),
-        col("vec_id").as("v1"))
-    val cand = x.join(
-        r.select(col("band"), col("bucket"), col("rn"),
-          col("vec_id").as("v2")),
-        Seq("band", "bucket", "rn"))
-      .select("v1", "v2").distinct()
-    cand
-      .join(v.select(col("vec_id").as("v1"), col("e").as("e1")), "v1")
-      .join(v.select(col("vec_id").as("v2"), col("e").as("e2")), "v2")
-      .withColumn("cos", cosine("e1", "e2"))
-      .filter(col("cos") >= tau)
-      .select("v1", "v2", "cos")
-  }
+    Substrate.embcapped(spark, dir, (tau, cWin))
 
   /** Transitive SEMANTIC dedup groups: connected components over the
     * embedding near-dup graph (cosine ≥ τ edges) — the meaning-level
@@ -326,189 +257,14 @@ object Similarity {
       .orderBy("q_id", "rank")
   }
 
-  /** Session-scoped memo for the expensive, pure, localCheckpointed
-    * build artifacts ([[bruteTopKShared]], [[graphEdgesShared]]).
-    *
-    * Keyed by the session's UUID (identity — a fresh session can never
-    * inherit a dead session's checkpointed frames), with the owning
-    * SparkContext held for LIVENESS: every call prunes memos whose
-    * context is stopped, dropping the last strong reference so the
-    * session object itself can be collected. (The previous WeakHashMap
-    * keying never collected anything: each memoized Dataset strongly
-    * references its SparkSession, so the weak key was always reachable
-    * through its own value — a driver-side leak in long-lived JVMs
-    * cycling many sessions.) Each key also carries a corpus-version
-    * token ([[corpusVersion]]) so data regenerated under the SAME dir
-    * within one session recomputes instead of serving stale results.
-    *
-    * Bounded: past [[MemoCap]] entries the OLDEST entries are dropped
-    * from the map — WITHOUT unpersisting. An evicted frame may be in
-    * flight in a concurrent consumer (recallReport builds via Futures),
-    * and localCheckpoint truncates lineage, so an eager unpersist would
-    * fail that consumer instead of recomputing; dropping the reference
-    * instead lets the ContextCleaner reclaim the blocks when the last
-    * consumer lets go. The cap is generous versus the distinct keys a
-    * full Verify/Bench session uses per corpus (≤6 ANN substrates, the
-    * lexical/semantic pair frames, and recallReport's ~16 per-corpus
-    * index artifacts + per-variant top-ks — all edge-, N-row- or
-    * k-sized). */
-  private val MemoCap = 64
-  private case class SessionMemo(
-      ctx: org.apache.spark.SparkContext,
-      entries: java.util.concurrent.ConcurrentHashMap[String, DataFrame],
-      order: java.util.concurrent.ConcurrentLinkedQueue[String])
-  private val sessionMemos =
-    new java.util.concurrent.ConcurrentHashMap[String, SessionMemo]
-
-  /** Identity key for a session: the classic session's UUID (stable,
-    * never reused — via Bridge; identityHashCode only as a fallback for
-    * exotic SparkSession implementations). */
-  private def sessionKey(spark: SparkSession): String =
-    org.apache.spark.sql.graft.Bridge.sessionUUID(spark)
-
   /** The persisted RDD behind a localCheckpointed frame — what a
     * SELF-OWNED eviction (the graph frontier loop, which is the sole
     * consumer of its own frames) unpersists to release blocks eagerly.
-    * The shared memo deliberately does NOT use this (see above). */
+    * The session memo deliberately does NOT (see [[Substrate]]). */
   private def blocksOf(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }
-
-  /** Cheap corpus-version token for `dir`: names + lengths + mtimes of
-    * the embeddings artifact, one driver-side FS listing. */
-  private def corpusVersion(spark: SparkSession, dir: String): String =
-    artifactVersion(spark, dir, "embeddings.parquet")
-
-  /** [[corpusVersion]] generalized to any table artifact under `dir` —
-    * doc-grain memo keys version against `documents.parquet`, so a
-    * regenerated document corpus invalidates the lexical pair memo
-    * even when the embeddings file is untouched. */
-  private[operators] def artifactVersion(spark: SparkSession, dir: String,
-                                         artifact: String): String =
-    try {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$artifact")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val st = fs.getFileStatus(p)
-      if (st.isDirectory)
-        fs.listStatus(p).map(s =>
-            s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-          .sorted.mkString(",").hashCode.toString
-      else s"${st.getLen}:${st.getModificationTime}"
-    } catch { case _: Exception => "na" }
-
-  private[operators] def memoized(spark: SparkSession, key: String)
-                                 (build: => DataFrame): DataFrame = {
-    // liveness prune: a stopped context's frames are unusable anyway
-    sessionMemos.entrySet().removeIf(e => e.getValue.ctx.isStopped)
-    val sm = sessionMemos.computeIfAbsent(sessionKey(spark), _ =>
-      SessionMemo(spark.sparkContext,
-        new java.util.concurrent.ConcurrentHashMap[String, DataFrame],
-        new java.util.concurrent.ConcurrentLinkedQueue[String]))
-    val df = sm.entries.computeIfAbsent(key, k => {
-      sm.order.add(k)
-      // DISK_ONLY storage (round-17 verdict item 2): memoized frames
-      // can be edge-sized (138M-row pair list at native sf10) and they
-      // LIVE FOR THE SESSION — a 289-query sweep accumulates dozens of
-      // them. The round-16 posture (MEMORY_AND_DISK_SER — itself the
-      // fix for the deserialized default OOMing a 100 g heap) parked
-      // those serialized byte arrays in the OLD GEN, and the measured
-      // cost was 2–5× inflation of late-alphabet queries in full sf10
-      // sweeps (dedup_ttl_curve 99 s in-sweep vs 17.1 s standalone,
-      // same tree — BENCH_sf10.json r16). DISK_ONLY keeps the session
-      // heap flat: blocks go to spark.local.dir, the OS page cache
-      // serves hot re-reads at memory speed, and readers pay the same
-      // decode they paid for the SER level. Per-QUERY checkpoints
-      // (checkpointSer) keep the in-memory SER level — their lifetime
-      // is one query, not the session.
-      build.localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    })
-    // bound: drop oldest-inserted entries only; never the one just
-    // returned, never with an unpersist (see the memo doc above). The
-    // iteration bound makes concurrent-evict races terminate.
-    var spins = sm.entries.size + 1
-    while (sm.entries.size > MemoCap && spins > 0) {
-      spins -= 1
-      val oldest = sm.order.poll()
-      if (oldest == null) spins = 0 // queue drained by a concurrent evict
-      else if (oldest == key) sm.order.add(oldest) // keep the live key
-      else sm.entries.remove(oldest)
-    }
-    df
-  }
-
-  /** Memoized, localCheckpointed [[bruteTopK]] per (session, corpus
-    * version, dir, k, nQueries) — THE shared evaluation substrate:
-    * `ann_brute_topk`, `ann_recall_report` and `ann_appended_recall`
-    * all grade against the identical exact baseline, and Verify/Bench
-    * run them in one session, so without the memo the
-    * O(nQueries × corpus) scan runs three times per session for
-    * bit-identical output (the frame is a pure deterministic function
-    * of its key). */
-  def bruteTopKShared(spark: SparkSession, dir: String,
-                      k: Int = TopK, nQueries: Int = NumQueries): DataFrame =
-    memoized(spark, s"brute|${corpusVersion(spark, dir)}|$dir|$k|$nQueries")(
-      bruteTopK(spark, dir, k, nQueries))
-
-  // ---- Session-shared ANN build artifacts (round-17 verdict item 3) ----
-  //
-  // The 8 ANN families each re-derived the coarse centroids / PQ
-  // codebooks / assignment + code tables / SQ stats PER QUERY (each a
-  // chain of full corpus passes), even though every derivation is a
-  // pure deterministic function of (corpus version, dir, params) and a
-  // Verify/Bench session runs all families back to back. These
-  // builders extend the bruteTopKShared discipline to the training/
-  // encode artifacts: ONE build per session per key, shared by the
-  // standalone queries, ivfProbeCurve and recallReport alike (the
-  // report's former private `rr|…` keys are unified here, so a session
-  // running any mix pays each corpus pass once). Within-run only —
-  // nothing persists across bench/oracle invocations (the memo dies
-  // with the SparkContext), so every run still computes from parquet.
-  //
-  // Dependencies are resolved EAGERLY before entering memoized():
-  // computeIfAbsent on the same map must not nest (recursive-update).
-
-  /** Session-shared Lloyd-trained coarse centroids. */
-  def centShared(spark: SparkSession, dir: String, nCentroids: Int = 8,
-                 iters: Int = 2): DataFrame =
-    memoized(spark,
-      s"cent|${corpusVersion(spark, dir)}|$dir|$nCentroids|$iters")(
-      kmeansCentroids(vecs(spark, dir), nCentroids, iters))
-
-  /** Session-shared PQ codebooks (with reconstruction norms). */
-  def cbShared(spark: SparkSession, dir: String): DataFrame = {
-    memoized(spark, s"cb|${corpusVersion(spark, dir)}|$dir")(
-      pqCodebooksWithNorm(vecs(spark, dir)))
-  }
-
-  /** Session-shared coarse assignment table (argmaxCellOf). */
-  def membersShared(spark: SparkSession, dir: String, nCentroids: Int = 8,
-                    iters: Int = 2): DataFrame = {
-    val cent = centShared(spark, dir, nCentroids, iters)
-    memoized(spark,
-      s"members|${corpusVersion(spark, dir)}|$dir|$nCentroids|$iters")(
-      argmaxCellOf(vecs(spark, dir), cent))
-  }
-
-  /** Session-shared PQ code table (pqEncode). */
-  def codesShared(spark: SparkSession, dir: String): DataFrame = {
-    val cb = cbShared(spark, dir)
-    memoized(spark, s"codes|${corpusVersion(spark, dir)}|$dir")(
-      pqEncode(vecs(spark, dir), cb))
-  }
-
-  /** Session-shared SQ8 per-dimension [min, max] stats row. */
-  def sqStatsShared(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, s"sqst|${corpusVersion(spark, dir)}|$dir")(
-      sqStats(vecs(spark, dir)))
-
-  /** Session-shared SQ8 code table. */
-  def sqCodesShared(spark: SparkSession, dir: String): DataFrame = {
-    val st = sqStatsShared(spark, dir)
-    memoized(spark, s"sqcodes|${corpusVersion(spark, dir)}|$dir")(
-      sqEncode(vecs(spark, dir), st))
-  }
 
   /** IVF-style ANN: vectors are assigned to their nearest of
     * `nCentroids` coarse centroids (deterministically the first K
@@ -596,7 +352,7 @@ object Similarity {
     * Assignment cosine is the fused native MixedCosine expression
     * (float vector × double centroid) — one codegen'd loop per pair,
     * same fold order as the oracle's HOF formulation, bit-identical. */
-  private def argmaxCellOf(v: DataFrame, cent: DataFrame): DataFrame =
+  private[graft] def argmaxCellOf(v: DataFrame, cent: DataFrame): DataFrame =
     v.crossJoin(broadcast(cent))
       .withColumn("cs",
         graft.plans.VectorExpressions.mixedCosine(col("e"), col("ce")))
@@ -654,7 +410,7 @@ object Similarity {
   def clusterKmeans(spark: SparkSession, dir: String, nCentroids: Int = 8,
                     iters: Int = 2): DataFrame = {
     val v = vecs(spark, dir)
-    val cent = centShared(spark, dir, nCentroids, iters)
+    val cent = Substrate.cent(spark, dir, (nCentroids, iters))
     v.crossJoin(broadcast(cent))
       .withColumn("cs",
         graft.plans.VectorExpressions.mixedCosine(col("e"), col("ce")))
@@ -691,7 +447,7 @@ object Similarity {
                      iters: Int = 2): DataFrame = {
     import graft.functions.Hashing.{halfUpDiv, ratio4}
     val v = vecs(spark, dir)
-    val cent = centShared(spark, dir, nCentroids, iters)
+    val cent = Substrate.cent(spark, dir, (nCentroids, iters))
     val assigned = v.crossJoin(broadcast(cent))
       .withColumn("cs",
         graft.plans.VectorExpressions.mixedCosine(col("e"), col("ce")))
@@ -733,7 +489,7 @@ object Similarity {
                iters: Int = 2, tau: Double = NearDupTau): DataFrame = {
     // the assignment frame is the session-shared coarse index artifact
     // (already checkpointed inside the memo)
-    val assign = membersShared(spark, dir, nCentroids, iters)
+    val assign = Substrate.members(spark, dir, (nCentroids, iters))
     val dups = assign.select(col("vec_id").as("v1"), col("cell"), col("e").as("e1"))
       .join(assign.select(col("vec_id").as("v2"), col("cell"), col("e").as("e2")),
         "cell")
@@ -751,8 +507,8 @@ object Similarity {
                     nQueries: Int = NumQueries, nCentroids: Int = 8,
                     iters: Int = 2, nprobe: Int = 2): DataFrame =
     ivfKmeansSearch(vecs(spark, dir),
-      centShared(spark, dir, nCentroids, iters),
-      membersShared(spark, dir, nCentroids, iters), k, nQueries, nprobe)
+      Substrate.cent(spark, dir, (nCentroids, iters)),
+      Substrate.members(spark, dir, (nCentroids, iters)), k, nQueries, nprobe)
 
   /** Probe grid for [[ivfProbeCurve]] — 1 (pure cell-local) up to the
     * full 8-cell sweep (≡ brute force over the probe set). */
@@ -776,9 +532,9 @@ object Similarity {
                     iters: Int = 2): DataFrame = {
     import graft.functions.Hashing.ratio4
     val v = vecs(spark, dir)
-    val cent = centShared(spark, dir, nCentroids, iters)
-    val members = membersShared(spark, dir, nCentroids, iters)
-    val brute = bruteTopKShared(spark, dir, k, nQueries)
+    val cent = Substrate.cent(spark, dir, (nCentroids, iters))
+    val members = Substrate.members(spark, dir, (nCentroids, iters))
+    val brute = Substrate.brute(spark, dir, (k, nQueries))
       .select("q_id", "vec_id")
     ProbeGrid.map { np =>
         ivfKmeansSearch(v, cent, members, k, nQueries, np)
@@ -794,19 +550,12 @@ object Similarity {
       .orderBy("nprobe")
   }
 
-  /** Search against ALREADY-TRAINED centroids (a materialized local
-    * relation) — lets recallReport train once and grade every consumer
-    * of the same coarse quantizer without re-running Lloyd. */
-  private def ivfKmeansTopKWith(v: DataFrame, cent: DataFrame, k: Int,
-                                nQueries: Int, nprobe: Int): DataFrame =
-    ivfKmeansSearch(v, cent, argmaxCellOf(v, cent), k, nQueries, nprobe)
-
   /** Search against an ALREADY-BUILT coarse assignment table
     * (`members` = argmaxCellOf output) — lets recallReport build the
     * assignment once and share it with the IVF+PQ row. */
-  private def ivfKmeansSearch(v: DataFrame, cent: DataFrame,
-                              members: DataFrame, k: Int,
-                              nQueries: Int, nprobe: Int): DataFrame = {
+  private[graft] def ivfKmeansSearch(v: DataFrame, cent: DataFrame,
+                                     members: DataFrame, k: Int,
+                                     nQueries: Int, nprobe: Int): DataFrame = {
     // probe ranking needs top-`nprobe` cells — a window, but only over
     // the nQueries × nCentroids candidate rows, never the corpus
     val wq = Window.partitionBy("vec_id").orderBy(col("cs").desc, col("c_id"))
@@ -856,7 +605,7 @@ object Similarity {
                         nQueries: Int = NumQueries, nCentroids: Int = 8,
                         iters: Int = 2, eps: Double = ReplicaEps): DataFrame = {
     val v = vecs(spark, dir)
-    val cent = centShared(spark, dir, nCentroids, iters)
+    val cent = Substrate.cent(spark, dir, (nCentroids, iters))
     val top2 = v.crossJoin(broadcast(cent))
       .withColumn("cs",
         graft.plans.VectorExpressions.mixedCosine(col("e"), col("ce")))
@@ -953,14 +702,14 @@ object Similarity {
   }
 
   /** Codebooks + per-centroid self-dot (reconstruction norm²). */
-  private def pqCodebooksWithNorm(v: DataFrame): DataFrame =
+  private[graft] def pqCodebooksWithNorm(v: DataFrame): DataFrame =
     pqCodebooks(v)
       .withColumn("nn", expr("aggregate(ce, cast(0 as double), (acc, x) -> acc + x * x)"))
 
   /** Encode: one corpus scan, all subspaces at once; the chosen code
     * carries its centroid norm in the argmax struct (no lookup join
     * later). Output: (vec_id, c0..c_{m-1}, nn0..nn_{m-1}, xn). */
-  private def pqEncode(v: DataFrame, cb: DataFrame): DataFrame = {
+  private[graft] def pqEncode(v: DataFrame, cb: DataFrame): DataFrame = {
     val assigned = v.crossJoin(broadcast(cb))
       .withColumn("cs", graft.plans.VectorExpressions.mixedCosine(
         slice(col("e"), col("sub") * lit(PqSubDim) + lit(1), lit(PqSubDim)), col("ce")))
@@ -1018,13 +767,8 @@ object Similarity {
   def pqTopK(spark: SparkSession, dir: String, k: Int = TopK,
              nQueries: Int = NumQueries): DataFrame = {
     val v = vecs(spark, dir)
-    pqSearch(v, cbShared(spark, dir), codesShared(spark, dir), k, nQueries)
+    pqSearch(v, Substrate.cb(spark, dir), Substrate.codes(spark, dir), k, nQueries)
   }
-
-  /** Exhaustive ADC against ALREADY-TRAINED codebooks. */
-  private def pqTopKWith(v: DataFrame, cb: DataFrame, k: Int,
-                         nQueries: Int): DataFrame =
-    pqSearch(v, cb, pqEncode(v, cb), k, nQueries)
 
   /** `embeddings_pq_error`: quantization-health panel for the PQ
     * codebooks — per subspace: vectors, codebook cells actually used,
@@ -1039,13 +783,13 @@ object Similarity {
     * centroid, two partial-aggregable shuffles on (sub[, code]). */
   def pqErrorStats(spark: SparkSession, dir: String): DataFrame = {
     val v = vecs(spark, dir)
-    val cb = cbShared(spark, dir)
+    val cb = Substrate.cb(spark, dir)
     // the per-(vec, sub) chosen code is exactly what the shared code
     // table already holds (pqEncode's min-struct argmax is the same
     // (−cs, code) rule — nn only breaks ties after code, and codes are
     // distinct, so the selections are identical): unpivot the wide
     // codes row instead of re-running the corpus assignment pass
-    val assigned = codesShared(spark, dir)
+    val assigned = Substrate.codes(spark, dir)
       .select(col("vec_id"),
         explode(array((0 until PqSubspaces).map(s =>
           struct(lit(s).as("sub"), col(s"c$s").as("code"))): _*)).as("sc"))
@@ -1094,7 +838,7 @@ object Similarity {
   /** The SQ8 "codebook": per-dimension corpus [min, max] — ONE
     * all-column aggregate row (Dim min/max pairs in a single corpus
     * pass, partial-aggregable), broadcast everywhere it's used. */
-  private[operators] def sqStats(v: DataFrame): DataFrame =
+  private[graft] def sqStats(v: DataFrame): DataFrame =
     v.agg(
       array((0 until Dim).map(j =>
         min(col("e").getItem(j).cast("double"))): _*).as("mn"),
@@ -1108,7 +852,7 @@ object Similarity {
     * surfaces. One narrow corpus pass; the code table is Dim
     * bytes/vector vs 4·Dim float bytes — the 4× index-size cut is the
     * whole point of the family. */
-  private[operators] def sqEncode(v: DataFrame, st: DataFrame): DataFrame =
+  private[graft] def sqEncode(v: DataFrame, st: DataFrame): DataFrame =
     v.crossJoin(broadcast(st))
       .withColumn("code", expr(
         s"""transform(e, (x, j) -> CASE WHEN mx[j] = mn[j] THEN 0
@@ -1138,13 +882,13 @@ object Similarity {
   def sqTopK(spark: SparkSession, dir: String, k: Int = TopK,
              nQueries: Int = NumQueries): DataFrame = {
     val v = vecs(spark, dir)
-    sqSearch(v, sqStatsShared(spark, dir), sqCodesShared(spark, dir),
+    sqSearch(v, Substrate.sqst(spark, dir), Substrate.sqcodes(spark, dir),
       k, nQueries)
   }
 
   /** SQ8 search against an ALREADY-ENCODED code table. */
-  private def sqSearch(v: DataFrame, st: DataFrame, codes: DataFrame,
-                       k: Int, nQueries: Int): DataFrame = {
+  private[graft] def sqSearch(v: DataFrame, st: DataFrame, codes: DataFrame,
+                              k: Int, nQueries: Int): DataFrame = {
     require(nQueries <= 1000,
       s"sqTopK scans all codes per query; got nQueries=$nQueries")
     val xh = sqDecode(codes, st)
@@ -1178,7 +922,7 @@ object Similarity {
                    nQueries: Int = NumQueries,
                    factor: Int = RerankFactor): DataFrame = {
     val v = vecs(spark, dir)
-    sqRerankSearch(v, sqStatsShared(spark, dir), sqCodesShared(spark, dir),
+    sqRerankSearch(v, Substrate.sqst(spark, dir), Substrate.sqcodes(spark, dir),
       k, nQueries, factor)
   }
 
@@ -1219,9 +963,9 @@ object Similarity {
                 nQueries: Int = NumQueries, nCentroids: Int = 8,
                 iters: Int = 2, nprobe: Int = 2): DataFrame = {
     val v = vecs(spark, dir)
-    ivfSqSearch(v, centShared(spark, dir, nCentroids, iters),
-      membersShared(spark, dir, nCentroids, iters),
-      sqStatsShared(spark, dir), sqCodesShared(spark, dir),
+    ivfSqSearch(v, Substrate.cent(spark, dir, (nCentroids, iters)),
+      Substrate.members(spark, dir, (nCentroids, iters)),
+      Substrate.sqst(spark, dir), Substrate.sqcodes(spark, dir),
       k, nQueries, nprobe)
   }
 
@@ -1264,7 +1008,7 @@ object Similarity {
     * (vec, dim) — only the integer micro-lift aggregates. */
   def sqErrorStats(spark: SparkSession, dir: String): DataFrame = {
     val v = vecs(spark, dir)
-    val st = sqStatsShared(spark, dir)
+    val st = Substrate.sqst(spark, dir)
     val err = v.crossJoin(broadcast(st))
       .select(col("vec_id"), col("mn"), col("mx"), posexplode(col("e")))
       .withColumn("c", expr(
@@ -1317,12 +1061,12 @@ object Similarity {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext = buildPool
-    val fCent = Future(centShared(spark, dir, nCentroids, iters))
-    val fCb = Future(cbShared(spark, dir))
+    val fCent = Future(Substrate.cent(spark, dir, (nCentroids, iters)))
+    val fCb = Future(Substrate.cb(spark, dir))
     val cent = Await.result(fCent, Duration.Inf)
     val cb = Await.result(fCb, Duration.Inf)
-    ivfPqSearch(v, cent, cb, membersShared(spark, dir, nCentroids, iters),
-      codesShared(spark, dir), k, nQueries, nprobe)
+    ivfPqSearch(v, cent, cb, Substrate.members(spark, dir, (nCentroids, iters)),
+      Substrate.codes(spark, dir), k, nQueries, nprobe)
   }
 
   /** Cell-pruned ADC against ALREADY-BUILT index artifacts: the coarse
@@ -1426,7 +1170,7 @@ object Similarity {
                    k: Int = TopK, nQueries: Int = NumQueries): DataFrame = {
     // every index artifact AND every variant's (q_id, vec_id) top-k is
     // session-memoized keyed by (corpus version, dir, params) — the
-    // bruteTopKShared discipline extended to the whole report: a
+    // brute-baseline discipline extended to the whole report: a
     // Verify/Bench session runs this panel more than once (best-of-2
     // bench runs; the standalone variant queries share the baseline),
     // and every frame here is a pure deterministic function of its
@@ -1436,9 +1180,8 @@ object Similarity {
     // simulated. Checkpointing (inside the memo) also keeps each
     // variant's full index pipeline out of the union plan and the
     // brute baseline from recomputing per branch.
-    val cv = corpusVersion(spark, dir)
     def artifact(name: String)(build: => DataFrame): DataFrame =
-      memoized(spark, s"rr|$cv|$dir|$name")(build)
+      Substrate.rr(spark, dir, name)(build)
     def topk(df: DataFrame): DataFrame =
       df.select("q_id", "vec_id").localCheckpoint()
     // one training run per model, shared: the coarse k-means centroids
@@ -1456,8 +1199,8 @@ object Similarity {
     // the SAME memo keys the standalone families use, so a session
     // running any mix of report + standalone queries pays each corpus
     // pass exactly once
-    val fCent = Future(centShared(spark, dir))
-    val fCb = Future(cbShared(spark, dir))
+    val fCent = Future(Substrate.cent(spark, dir))
+    val fCb = Future(Substrate.cb(spark, dir))
     val cent = Await.result(fCent, Duration.Inf)
     val cb = Await.result(fCb, Duration.Inf)
     // one BUILD pass per index artifact, shared via localCheckpoint:
@@ -1470,17 +1213,17 @@ object Similarity {
     // disappear. The four builds are independent; the bounded pool
     // overlaps them pairwise without oversubscribing the scheduler.
     val ppb = planesPerBandFor(v.count())
-    val fMembers = Future(membersShared(spark, dir))
-    val fCodes = Future(codesShared(spark, dir))
+    val fMembers = Future(Substrate.members(spark, dir))
+    val fCodes = Future(Substrate.codes(spark, dir))
     val fB0 = Future(artifact(s"b0|$ppb")(
       buckets(spark, dir, NumBands * ppb, ppb).filter(col("band") === 0)))
     val fWb0 = Future(artifact(s"wb0|$ppb")(
       whitenedBuckets(spark, dir, NumBands * ppb, ppb).filter(col("band") === 0)))
-    val fEdges = Future(graphEdgesShared(spark, dir))
-    val fBrute = Future(topk(bruteTopKShared(spark, dir, k, nQueries)))
+    val fEdges = Future(Substrate.edges(spark, dir))
+    val fBrute = Future(topk(Substrate.brute(spark, dir, (k, nQueries))))
     val fSq = Future {
-      val st = sqStatsShared(spark, dir)
-      val c = sqCodesShared(spark, dir)
+      val st = Substrate.sqst(spark, dir)
+      val c = Substrate.sqcodes(spark, dir)
       // ONE widened code scan serves BOTH SQ variants: its rank ≤ k
       // prefix IS the one-stage row (row_number prefix property), and
       // the full pool is the rerank row's candidate set
@@ -1554,7 +1297,7 @@ object Similarity {
                 ks: Seq[Int] = RecallKs): DataFrame = {
     import graft.functions.Hashing.ratio4
     import spark.implicits._
-    val brute = bruteTopKShared(spark, dir)
+    val brute = Substrate.brute(spark, dir)
       .select(col("q_id"), col("vec_id"), col("rank").as("rb"))
     val kdf = broadcast(
       ks.map(_.toLong).toDF("k").repartition(1))
@@ -1564,10 +1307,8 @@ object Similarity {
     // rank-CARRYING variant top-ks, session-memoized like the recall
     // report's rank-less ones — the bench's best-of-2 and repeated
     // panel reads skip the index rebuilds
-    val cv = corpusVersion(spark, dir)
     def memoTk(name: String)(b: => DataFrame): DataFrame =
-      memoized(spark, s"tkr|$cv|$dir|$name")(
-        b.select("q_id", "vec_id", "rank"))
+      Substrate.tkr(spark, dir, name)(b.select("q_id", "vec_id", "rank"))
     val hits = Seq(
       "ann_ivf_kmeans" ->
         memoTk("ivfk")(ivfKmeansTopK(spark, dir)),
@@ -1611,12 +1352,11 @@ object Similarity {
   def recallScaling(spark: SparkSession, dir: String,
                     k: Int = TopK, nQueries: Int = NumQueries): DataFrame = {
     import graft.functions.Hashing.ratio4
-    val cv = corpusVersion(spark, dir)
     val vAll = vecs(spark, dir)
     val n = vAll.count()
     ScaleFracs.map { f =>
         val nf = n / f
-        memoized(spark, s"rs|$cv|$dir|$f|$k|$nQueries") {
+        Substrate.rs(spark, dir, f, k, nQueries) {
           val v = vAll.filter(col("vec_id") < nf)
           val ppb = planesPerBandFor(nf)
           val b0 = bucketsOf(v, NumBands * ppb, ppb)
@@ -1714,7 +1454,7 @@ object Similarity {
     * driver-local java.io.tmpdir. The directory is cleared first:
     * appendToIndex appends, so a stale prior run must not double the
     * per-vector artifact tables. */
-  private def scratchIndexDir(spark: SparkSession, name: String): String = {
+  private[graft] def scratchIndexDir(spark: SparkSession, name: String): String = {
     // Scoped per RUN (applicationId is unique per SparkContext): a
     // user's own artifact saved at the bare panel name under a shared
     // spark.graft.indexDir is never deleted, and two concurrent
@@ -1732,7 +1472,7 @@ object Similarity {
   /** Best-effort removal of a [[scratchIndexDir]] after its panel has
     * MATERIALIZED its O(1)-row result (the searches read the artifacts
     * lazily, so cleanup before materialization would break them). */
-  private def dropScratchDir(spark: SparkSession, dir: String): Unit =
+  private[graft] def dropScratchDir(spark: SparkSession, dir: String): Unit =
     try {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
@@ -1863,7 +1603,7 @@ object Similarity {
     * over ALL columns restores exactly the once-appended artifact and
     * keeps duplicates out of top-k rank slots. One narrow extra shuffle
     * on a table the search would shuffle anyway. */
-  private def loadPerVec(spark: SparkSession, path: String): DataFrame =
+  private[graft] def loadPerVec(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path).dropDuplicates()
 
   /** `ann_appended_recall`: the drift panel for GROWN saved indexes —
@@ -1885,39 +1625,7 @@ object Similarity {
     // 4-row function of the corpus, already localCheckpointed): a
     // best-of-2 bench run would otherwise rebuild, re-append and
     // re-delete the whole scratch index family for bit-identical rows
-    memoized(spark,
-      s"apprecall|${corpusVersion(spark, dir)}|$dir|$k|$nQueries")(
-      appendedRecallUncached(spark, dir, k, nQueries))
-
-  private def appendedRecallUncached(spark: SparkSession, dir: String,
-                                     k: Int, nQueries: Int): DataFrame = {
-    val v = vecs(spark, dir)
-    // scratch index under a hadoop-compatible path (conf-overridable,
-    // warehouse-dir default) — NOT a driver-local temp dir, which
-    // executors on a real cluster could never read the artifacts from
-    val idx = scratchIndexDir(spark, "appended-recall")
-    saveIndexOf(v.filter(col("vec_id") % 2 === 0), idx)
-    appendToIndex(spark, idx, v.filter(col("vec_id") % 2 =!= 0))
-    val brute = bruteTopKShared(spark, dir, k, nQueries)
-      .select("q_id", "vec_id")
-    def row(name: String, tk: DataFrame): DataFrame =
-      tk.select("q_id", "vec_id")
-        .join(brute, Seq("q_id", "vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .select(lit(name).as("variant"), col("n_hits"),
-          graft.functions.Hashing.ratio4(col("n_hits"),
-            lit(k.toLong * nQueries)).as("recall"))
-    val out =
-      row("saved_ivf_kmeans", searchSavedIvfKmeans(spark, dir, idx, k, nQueries))
-        .unionByName(row("saved_lsh", searchSavedLsh(spark, dir, idx, k, nQueries)))
-        .unionByName(row("saved_sq", searchSavedSq(spark, dir, idx, k, nQueries)))
-        .unionByName(
-          row("saved_whitened", searchSavedWhitened(spark, dir, idx, k, nQueries)))
-        .orderBy("variant")
-        .localCheckpoint() // eager 4-row frame — the scratch index is now dead
-    dropScratchDir(spark, idx)
-    out
-  }
+    Substrate.apprecall(spark, dir, (k, nQueries))
 
   /** Deleted-id modulus for [[deleteRecall]]: vec_id % 5 == 0 (20% of
     * the corpus) is tombstoned — deterministic, so the DuckDB oracle
@@ -1944,49 +1652,7 @@ object Similarity {
     * corpus). */
   def deleteRecall(spark: SparkSession, dir: String,
                    k: Int = TopK, nQueries: Int = NumQueries): DataFrame =
-    memoized(spark,
-      s"delrecall|${corpusVersion(spark, dir)}|$dir|$k|$nQueries")(
-      deleteRecallUncached(spark, dir, k, nQueries))
-
-  private def deleteRecallUncached(spark: SparkSession, dir: String,
-                                   k: Int, nQueries: Int): DataFrame = {
-    val v = vecs(spark, dir)
-    val idx = scratchIndexDir(spark, "delete-recall")
-    saveIndexOf(v, idx)
-    def liveOnly(df: DataFrame) =
-      df.filter(col("vec_id") % DeleteMod =!= 0L)
-    val live = liveOnly(v)
-    val brute = bruteTopKOf(live, k, nQueries)
-      .select("q_id", "vec_id").localCheckpoint()
-    val nLiveQ = live.filter(col("vec_id") < nQueries).count()
-    val cent = spark.read.parquet(s"$idx/centroids")
-    val members = liveOnly(loadPerVec(spark, s"$idx/members"))
-    val b0 = liveOnly(loadPerVec(spark, s"$idx/b0"))
-    val sqSt = spark.read.parquet(s"$idx/sqstats")
-    val sqCodes = liveOnly(loadPerVec(spark, s"$idx/sqcodes"))
-    def row(name: String, tk: DataFrame): DataFrame = {
-      val t = tk.select("q_id", "vec_id").localCheckpoint()
-      val hits = t.join(brute, Seq("q_id", "vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-      val del = t.filter(col("vec_id") % DeleteMod === 0L)
-        .agg(count(lit(1)).as("n_deleted_hits"))
-      hits.crossJoin(del)
-        .select(lit(name).as("variant"), col("n_hits"), col("n_deleted_hits"),
-          graft.functions.Hashing.ratio4(col("n_hits"),
-            lit(k.toLong * nLiveQ)).as("recall"))
-    }
-    val out =
-      row("saved_ivf_kmeans",
-          ivfKmeansSearch(live, cent, members, k, nQueries, nprobe = 2))
-        .unionByName(row("saved_lsh",
-          lshSearch(live, b0, b0.join(live, "vec_id"), k, nQueries)))
-        .unionByName(row("saved_sq",
-          sqSearch(live, sqSt, sqCodes, k, nQueries)))
-        .orderBy("variant")
-        .localCheckpoint() // eager 3-row frame — the scratch index is now dead
-    dropScratchDir(spark, idx)
-    out
-  }
+    Substrate.delrecall(spark, dir, (k, nQueries))
 
   /** k-means-IVF search against a SAVED index — no training, no
     * assignment pass; the corpus scan is only the nQueries probe rows. */
@@ -2038,7 +1704,7 @@ object Similarity {
     * gives. */
   def saveGraphIndex(spark: SparkSession, dir: String,
                      indexDir: String): Unit =
-    graphEdgesShared(spark, dir)
+    Substrate.edges(spark, dir)
       .write.mode("overwrite").parquet(s"$indexDir/graph_edges")
 
   // Generation protocol for graph rebuilds (the TxnParquet marker
@@ -2066,7 +1732,7 @@ object Similarity {
   def saveGraphIndexGen(spark: SparkSession, dir: String,
                         indexDir: String): Long = {
     val g = latestGraphGen(spark, indexDir).map(_ + 1).getOrElse(0L)
-    graphEdgesShared(spark, dir)
+    Substrate.edges(spark, dir)
       .write.mode("overwrite").parquet(s"$indexDir/graph_edges_gen=$g")
     val f = graphCommits(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2194,22 +1860,13 @@ object Similarity {
       .distinct()
   }
 
-  /** Memoized, localCheckpointed [[graphEdgesOf]] per (session, corpus
-    * version, dir) — the graph index artifact `ann_graph_topk`,
-    * `ann_recall_report` and the degree-stats panel all consume; same
-    * rationale and lifetime as [[bruteTopKShared]] (pure deterministic
-    * function of the corpus, one build per session). */
-  def graphEdgesShared(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, s"edges|${corpusVersion(spark, dir)}|$dir")(
-      graphEdgesOf(vecs(spark, dir)))
-
   /** `ann_graph_topk`: greedy beam search over the small-world graph —
     * every query advances one hop per relational pass (frontier ⋈
     * edges, re-score, keep beam), so hop count bounds the whole search
     * at O(hops) joins regardless of query count. */
   def graphTopK(spark: SparkSession, dir: String, k: Int = TopK,
                 nQueries: Int = NumQueries): DataFrame =
-    graphTopKOf(vecs(spark, dir), graphEdgesShared(spark, dir), k, nQueries)
+    graphTopKOf(vecs(spark, dir), Substrate.edges(spark, dir), k, nQueries)
 
   /** [[graphTopK]] over prebuilt edges — the recall-report entry point
     * (build once, search many). */
@@ -2274,7 +1931,7 @@ object Similarity {
     * the walk will drop first — the re-build trigger, measured. */
   def graphDegreeStats(spark: SparkSession, dir: String): DataFrame = {
     val v = vecs(spark, dir)
-    val scored = graphEdgesShared(spark, dir)
+    val scored = Substrate.edges(spark, dir)
       .join(v.select(col("vec_id").as("src"), col("e").as("se")), "src")
       .join(v.select(col("vec_id").as("dst"), col("e").as("de")), "dst")
       .withColumn("cu", round(cosine("se", "de") * 1000000d).cast("long"))
@@ -2602,7 +2259,7 @@ object Similarity {
                       iters: Int = 2): DataFrame = {
     import graft.functions.Hashing.halfUpDiv
     val v = vecs(spark, dir)
-    val cent = centShared(spark, dir, nCentroids, iters)
+    val cent = Substrate.cent(spark, dir, (nCentroids, iters))
     val assigned = v.crossJoin(broadcast(cent))
       .withColumn("cs",
         graft.plans.VectorExpressions.mixedCosine(col("e"), col("ce")))
@@ -2661,7 +2318,7 @@ object Similarity {
     require(nSample <= 1000, "silhouette sample must stay bounded")
     // the assignment frame IS the session-shared coarse index artifact
     // (same argmax rule, (vec_id, cell, e) grain) — rename and go
-    val assigned = membersShared(spark, dir, nCentroids, iters)
+    val assigned = Substrate.members(spark, dir, (nCentroids, iters))
       .select(col("vec_id"), col("cell").as("cluster"), col("e"))
     val q = assigned.filter(col("vec_id") < nSample)
       .select(col("vec_id").as("q_id"), col("cluster").as("q_cluster"),
@@ -2697,8 +2354,8 @@ object Similarity {
 
   /** Single-bucket search against ALREADY-BUILT band-0 buckets and
     * candidates — shared with the multi-probe variant in recallReport. */
-  private def lshSearch(v: DataFrame, b0: DataFrame, candidates: DataFrame,
-                        k: Int, nQueries: Int): DataFrame = {
+  private[graft] def lshSearch(v: DataFrame, b0: DataFrame, candidates: DataFrame,
+                               k: Int, nQueries: Int): DataFrame = {
     val q = b0.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("bucket"))
       .join(v.select(col("vec_id").as("q_id"), col("e").as("qe")), "q_id")

@@ -201,14 +201,6 @@ object Skew {
     if (shouldSalt(mapSideCombinable = false, skewX4)) saltedDistinctOf(ev, salts)
     else directDistinctOf(ev)
 
-  /** [[shouldSalt]] dispatched for combinable count/sum shapes: always
-    * the direct plan — the race proved map-side combine absorbs the
-    * skew, and the spec pins that this helper never salts. */
-  def eventAggAuto(ev: DataFrame, skewX4: Double): DataFrame = {
-    require(!shouldSalt(mapSideCombinable = true, skewX4))
-    directAggOf(ev)
-  }
-
   /** `events_users_by_type_auto`: the decision table wired END TO END —
     * reads its own #280 panel (an O(types) frame, collected driver-side
     * like a k-means centroid pull), takes the hottest key's measured

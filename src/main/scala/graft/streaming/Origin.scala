@@ -44,14 +44,16 @@ object Origin {
 
   /** Digests recovered from one origin value, with the reference's
     * malformed tolerance: unparseable JSON / non-array / any non-digest
-    * element → empty array (skip), never an error. `try_cast` (not
+    * element → empty array (skip), never an error. A digest is a
+    * signed int64 (xxhash64 digests are negative about half the time),
+    * so an optional leading `-` is accepted. `try_cast` (not
     * `cast`) so an all-digit string beyond Long range is also a SKIP —
     * under ANSI mode a plain cast would throw and fail the warm-up,
     * exactly the failure `getDigests` tolerance exists to prevent. */
   def originDigests(origin: Column): Column = {
     val parsed = from_json(origin, ArrayType(StringType))
     val allValid = parsed.isNotNull && forall(parsed,
-      e => e.rlike("^[0-9]{1,19}$") &&
+      e => e.rlike("^-?[0-9]{1,19}$") &&
         e.try_cast(org.apache.spark.sql.types.LongType).isNotNull)
     when(allValid,
         transform(parsed, e => e.try_cast(org.apache.spark.sql.types.LongType)))

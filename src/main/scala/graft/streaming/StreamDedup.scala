@@ -19,8 +19,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * state store — at 1000 executors state is sharded uniformly because
   * digests are uniform hashes. Use the RocksDB state store provider in
   * production for state larger than executor heap.
+  *
+  * Serializable because the state functions call the shared keep rule
+  * ([[scan]]) on this object from executors.
   */
-object StreamDedup {
+object StreamDedup extends Serializable {
 
   /** Canonical message envelope of the deduplicated stream. */
   case class Msg(event_id: Long, ts_us: Long, user_id: Long,
@@ -55,6 +58,22 @@ object StreamDedup {
     withEventTime(df).withWatermark("ts", window)
       .dropDuplicatesWithinWatermark("digest")
 
+  /** The keep rule of one digest's rows, shared by [[chain]] and
+    * [[chainTagged]]: rows sorted by (ts_us, event_id), each kept iff it
+    * lands at least `windowUs` after the last kept row (`last`, from
+    * state). Returns every row with its keep flag, and the new last-kept
+    * time. */
+  private def scan(rows: Iterator[Msg], last: Option[Long],
+                   windowUs: Long): (Seq[(Msg, Boolean)], Option[Long]) = {
+    var l = last
+    val tagged = rows.toSeq.sortBy(m => (m.ts_us, m.event_id)).map { m =>
+      val keep = l.forall(t => m.ts_us >= t + windowUs)
+      if (keep) l = Some(m.ts_us)
+      m -> keep
+    }
+    (tagged, l)
+  }
+
   /** #28: exact ObliviousSet chain semantics with warm-up bootstrap —
     * `flatMapGroupsWithState` keyed by digest, carrying one timestamp of
     * state per key; `initialState` is the digest→lastKept map recovered
@@ -87,12 +106,7 @@ object StreamDedup {
         state.remove()
         Iterator.empty
       } else {
-        var last = state.getOption.map(_.lastKeptUs)
-        val kept = rows.toSeq.sortBy(m => (m.ts_us, m.event_id)).filter { m =>
-          val keep = last.forall(l => m.ts_us >= l + windowUs)
-          if (keep) last = Some(m.ts_us)
-          keep
-        }
+        val (tagged, last) = scan(rows, state.getOption.map(_.lastKeptUs), windowUs)
         last.foreach { l =>
           state.update(DigestState(l))
           if (streaming) {
@@ -103,7 +117,7 @@ object StreamDedup {
             state.setTimeoutTimestamp(math.max(target, wm + 1))
           }
         }
-        kept.iterator
+        tagged.iterator.collect { case (m, true) => m }
       }
     }
 
@@ -155,15 +169,12 @@ object StreamDedup {
       df.select("event_id", "ts_us", "user_id", "event_type", "value", "props", "digest"))
       .as[Msg]
     def fn(digest: Long, rows: Iterator[Msg], state: GroupState[DigestState]): Iterator[TaggedMsg] = {
-      var last = state.getOption.map(_.lastKeptUs)
-      val tagged = rows.toSeq.sortBy(m => (m.ts_us, m.event_id)).map { m =>
-        val keep = last.forall(l => m.ts_us >= l + windowUs)
-        if (keep) last = Some(m.ts_us)
+      val (tagged, last) = scan(rows, state.getOption.map(_.lastKeptUs), windowUs)
+      last.foreach(l => state.update(DigestState(l)))
+      tagged.iterator.map { case (m, keep) =>
         TaggedMsg(m.event_id, m.ts_us, m.user_id, m.event_type, m.value,
           m.props, m.digest, keep)
       }
-      last.foreach(l => state.update(DigestState(l)))
-      tagged.iterator
     }
     val grouped = ds.groupByKey(_.digest)
     initialState match {

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.functions._
 
 /** Streaming first-order transition extraction: per user, each arriving
   * event pairs with the PREVIOUS event's type — the online form of the
@@ -40,13 +39,4 @@ object StreamMarkov {
           out.result().iterator
       }
   }
-
-  /** Running (type_from, type_to) counts — the streaming twin of the
-    * batch events_markov `n` column (complete mode; the probability
-    * column is a ratio over the running totals, computed by the
-    * consumer or a downstream batch read). */
-  def transitionCounts(ev: Dataset[Ev]) =
-    transitions(ev)
-      .groupBy("type_from", "type_to")
-      .agg(count(lit(1)).as("n"))
 }

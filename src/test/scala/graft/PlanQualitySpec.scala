@@ -468,12 +468,12 @@ class PlanQualitySpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
   }
 
-  // The dsir/lexicon pins run against the memo SUBSTRATE since round
-  // 17: the registered queries are session-memoized (their final plan
-  // is the memo's Scan ExistingRDD), so the scoring plan shape is only
-  // visible on the un-memoized builders.
+  // The dsir/lexicon pins run against the declared substrates'
+  // builders: the registered queries are session-memoized (their final
+  // plan is the memo's Scan ExistingRDD), so the scoring plan shape is
+  // only visible on the un-memoized builders.
   test("dsir: scoring is one broadcast join + one shuffle (model checkpointed)") {
-    val p = graft.operators.QualityModels.dsirWeightsUncached(spark, sf)
+    val p = Substrate.dsirw.build(spark, sf)
       .queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"))
     assert(!p.contains("SortMergeJoin"), s"bucket scoring must not shuffle-join:\n$p")
@@ -482,7 +482,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("lexicon score: one scoring scan (trained lexicon checkpointed), prior broadcast") {
-    val p = graft.operators.QualityModels.lexiconScoreUncached(spark, sf)
+    val p = Substrate.lexs4.build(spark, sf)
       .queryExecution.executedPlan.toString
     assert(scanCount(p, "documents") == 1,
       s"training consumers must reuse the checkpointed lexicon:\n$p")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class Round9PanelsSpec extends SparkSpec {
 
   test("graphDegreeStats reconciles with the shared edge list; degree ≤ 2M") {
-    val edges = Similarity.graphEdgesShared(spark, sf)
+    val edges = graft.Substrate.edges(spark, sf)
     val stats = Similarity.graphDegreeStats(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // Σ degree·n_nodes == |edges|, Σ n_nodes == |nodes with out-edges|

@@ -158,7 +158,7 @@ class SimilaritySpec extends SparkSpec {
     assert(ivfsq._3 >= 0.5, s"IVF+SQ recall ${ivfsq._3} below floor")
     // two-stage rerank: exact rerank of the SQ candidate pool can only
     // help — recall ≥ the one-stage SQ scan, and clears the same floor
-    val brute = Similarity.bruteTopKShared(spark, sf)
+    val brute = graft.Substrate.brute(spark, sf)
       .select("q_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def recallOf(df: org.apache.spark.sql.DataFrame): Double =
       df.select("q_id", "vec_id").collect()
@@ -172,7 +172,7 @@ class SimilaritySpec extends SparkSpec {
     // BOTH scales so an edge-build change can't silently degrade the
     // walk at one scale while passing at the other (measured 0.93)
     val dir01 = "/root/testdata/sf0.01"
-    val brute01 = Similarity.bruteTopKShared(spark, dir01)
+    val brute01 = graft.Substrate.brute(spark, dir01)
       .select("q_id", "vec_id")
     val hits01 = Similarity.graphTopK(spark, dir01)
       .select("q_id", "vec_id").intersect(brute01).count()
@@ -493,7 +493,7 @@ class SimilaritySpec extends SparkSpec {
     def tk(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Long] =
       df.select("q_id", "vec_id", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val brute = tk(Similarity.bruteTopKShared(spark, sf))
+    val brute = tk(graft.Substrate.brute(spark, sf))
     val expected = Seq(
       "ann_ivf_kmeans" -> tk(Similarity.ivfKmeansTopK(spark, sf)),
       "ann_lsh_multiprobe" -> tk(Similarity.lshMultiProbeTopK(spark, sf)))

@@ -34,7 +34,7 @@ class WhitenedLshSpec extends SparkSpec {
 
   test("whitened recall stays within 5 hits of plain LSH at two scales") {
     scales.foreach { dir =>
-      val brute = Similarity.bruteTopKShared(spark, dir)
+      val brute = graft.Substrate.brute(spark, dir)
         .select("q_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       def hits(df: org.apache.spark.sql.DataFrame): Int =

@@ -107,13 +107,14 @@ class ObservabilitySpec extends SparkSpec {
       (4L, """["12","x3"]"""),  // non-digest element → whole row skipped
       (5L, null),               // origin property absent → skip
       (6L, "[456]"),            // JSON number accepted (documented leniency)
-      (7L, """["99999999999999999999"]""") // beyond Long range → skip, not ANSI crash
+      (7L, """["99999999999999999999"]"""), // beyond Long range → skip, not ANSI crash
+      (8L, """["-42"]""")       // negative digest (xxhash64) round-trips
     ).toDF("ts_us", "origin")
     val env = rows.select(col("ts_us"),
       when(col("origin").isNotNull, map(lit("origin"), col("origin")))
         .otherwise(map().cast("map<string,string>")).as("properties"))
     val got = Origin.warmDigestsFromOutput(env, Long.MaxValue / 2, nowUs = 100L)
       .collect().map(_.getLong(0)).toSet
-    assert(got === Set(123L, 456L))
+    assert(got === Set(123L, 456L, -42L))
   }
 }
