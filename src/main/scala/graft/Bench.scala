@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
@@ -17,8 +16,7 @@ object Bench {
     // Default to every core on the box: the driver contract is local[32]
     // and the driver does NOT set SPARK_GRAFT_CPUS (round-2 bench
     // silently ran local[4] → ~6× inflated timings).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
+    val cpus = GraftSession.cpus
     // Shuffle parallelism defaults to the core count (the driver's
     // sf0.1 contract) but scales independently for larger-SF spot
     // runs: per-task aggregation memory is (heap share ÷ concurrent
@@ -28,12 +26,9 @@ object Bench {
     // split a too-coarse non-skewed aggregation). Measured: sf10's
     // token-grain aggregations throw AGGREGATE_OUT_OF_MEMORY at
     // 32 partitions / 16 g and run clean at 256.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = GraftSession.withDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     // Warm-up, untimed: one representative query per TABLE FAMILY, so the
     // first measured queries (alphabetically the ANN family) aren't charged
     // for cold page cache on their parquet, cold parquet footers, or cold

@@ -190,8 +190,9 @@ object GraftConfig {
       optionalBoolean(spark, BlockIfQueueFullKey, default = true))
 
   /** The configured batch dedup pipeline in one call: digest with the
-    * configured ignored properties, chain-dedup with the configured TTL
-    * window, bootstrap-gated by the configured cache window. */
+    * configured ignored properties, then `Dedup.chainNative` at the
+    * configured TTL window. The cache window and the warm-up toggle are
+    * not read here. */
   def configuredDedup(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val dc = deduplication(spark)
     operators.Dedup.chainNative(

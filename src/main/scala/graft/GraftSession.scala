@@ -11,8 +11,8 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Apply graft defaults to an existing builder (used by Verify/Bench
-    * which control master/memory themselves). */
+  /** Apply graft defaults to an existing builder (used by callers that
+    * control master/memory themselves). */
   def withDefaults(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
     .config("spark.sql.session.timeZone", "UTC")
@@ -46,7 +46,12 @@ object GraftSession {
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
-  /** Standalone local session for tests / exploration. */
+  /** Core count of the local session the mains run: SPARK_GRAFT_CPUS,
+    * else every core on the box. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Standalone local session for tests, exploration and the mains. */
   def local(cores: Int = 4): SparkSession = {
     val s = withDefaults(
       SparkSession.builder()

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev-only: single-node THROUGHPUT of the core reference semantic —
@@ -26,13 +25,8 @@ import java.nio.file.{Files, Paths}
 object Throughput {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = GraftSession.withDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     import spark.implicits._
 
     val nRows = Dedup.hashedStream(spark, sfDir).count() // also warms cache
@@ -87,16 +81,9 @@ object Throughput {
     }
     def runStream(build: org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.Dataset[_]): Unit = runStreamN(nBatches)(build)
-    // breakdown ladder (same harness, same rows, same batch count):
-    //  stream_noop           = micro-batch machinery only (stateless select)
-    //  stream_fmgws_passthru = + digest shuffle + typed encode/decode +
-    //                          state-store write (dedup decision removed)
-    //  stream_chain          = + the chain logic itself
+    // stream_noop = the micro-batch machinery alone (stateless select)
     results("stream_noop") =
       (bestOf2(() => runStream(df => df.select("event_id", "ts_us", "digest"))), nRows)
-    results("stream_fmgws_passthru") =
-      (bestOf2(() => runStream(df =>
-        graft.streaming.StreamDedup.chainPassthrough(spark, df))), nRows)
     results("stream_chain") = (bestOf2(() => runStream(df =>
       graft.streaming.StreamDedup.chain(spark, df, 3600L * 1000000L))), nRows)
 

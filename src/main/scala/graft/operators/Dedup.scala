@@ -122,24 +122,39 @@ object Dedup {
     * streaming run-scan with O(1) state per key — no per-group
     * materialization, so a degenerate hot digest cannot OOM an executor.
     */
-  def chain(df: DataFrame, windowUs: Long = WindowUs): DataFrame = {
-    val projected = df.select((evCols :+ "digest").map(col): _*)
-    val schema = projected.schema
+  def chain(df: DataFrame, windowUs: Long = WindowUs): DataFrame =
+    chainScan(df.select((evCols :+ "digest").map(col): _*), windowUs)
+      .orderBy("event_id")
+
+  /** The greedy keep rule as a row scan, shared by [[chain]] and
+    * [[IncrementalDedup.processBatch]]: repartition on digest, sort by
+    * (digest, ts_us, event_id), then keep each row at or after the
+    * group's last kept time + `windowUs`. `floor` names an optional
+    * column carrying the digest's last kept time from earlier batches:
+    * when non-null it seeds the group's last kept time, otherwise the
+    * group's first row is kept. Returns the kept rows of `df`. */
+  private[operators] def chainScan(df: DataFrame, windowUs: Long,
+                                   floor: Option[String] = None): DataFrame = {
+    val schema = df.schema
     val iDigest = schema.fieldIndex("digest")
     val iTs = schema.fieldIndex("ts_us")
-    val sorted = projected
-      .repartition(col("digest"))
+    val iFloor = floor.fold(-1)(schema.fieldIndex)
+    df.repartition(col("digest"))
       .sortWithinPartitions("digest", "ts_us", "event_id")
-    val kept = sorted.mapPartitions { it =>
-      var cur = Long.MinValue; var last = Long.MinValue; var init = false
-      it.filter { r =>
-        val d = r.getLong(iDigest); val t = r.getLong(iTs)
-        if (!init || d != cur) { init = true; cur = d; last = t; true }
-        else if (t >= last + windowUs) { last = t; true }
-        else false
-      }
-    }(Encoders.row(schema))
-    kept.orderBy("event_id")
+      .mapPartitions { it =>
+        var cur = 0L; var last = 0L; var init = false; var hasLast = false
+        it.filter { r =>
+          val d = r.getLong(iDigest); val t = r.getLong(iTs)
+          if (!init || d != cur) {
+            init = true; cur = d
+            hasLast = iFloor >= 0 && !r.isNullAt(iFloor)
+            if (hasLast) last = r.getLong(iFloor)
+          }
+          val keep = !hasLast || t >= last + windowUs
+          if (keep) { last = t; hasLast = true }
+          keep
+        }
+      }(Encoders.row(schema))
   }
 
   /** #4 (native): the same chain semantics as a first-class Catalyst

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Batch-incremental chain dedup with a persistent digest-state table —
@@ -33,30 +33,7 @@ object IncrementalDedup {
     val withFloor = batch.select(cols.map(col): _*)
       .join(state.select(col("digest"), col("last_kept_us").as("__floor")),
         Seq("digest"), "left")
-    val schema = withFloor.schema
-    val iDigest = schema.fieldIndex("digest")
-    val iTs = schema.fieldIndex("ts_us")
-    val iFloor = schema.fieldIndex("__floor")
-    val win = windowUs
-    // same greedy scan as Dedup.chain, with `last` seeded from the
-    // state floor carried on every row of the digest group
-    val kept = withFloor
-      .repartition(col("digest"))
-      .sortWithinPartitions("digest", "ts_us", "event_id")
-      .mapPartitions { it =>
-        var cur = 0L; var last = 0L; var init = false; var hasLast = false
-        it.filter { r =>
-          val d = r.getLong(iDigest); val t = r.getLong(iTs)
-          if (!init || d != cur) {
-            init = true; cur = d
-            hasLast = !r.isNullAt(iFloor)
-            if (hasLast) last = r.getLong(iFloor)
-          }
-          val keep = !hasLast || t >= last + win
-          if (keep) { last = t; hasLast = true }
-          keep
-        }
-      }(Encoders.row(schema))
+    val kept = Dedup.chainScan(withFloor, windowUs, floor = Some("__floor"))
       .drop("__floor")
     val newState = state
       .unionByName(kept.groupBy("digest").agg(max("ts_us").as("last_kept_us")))

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.{GraftSession, Tables}
@@ -22,13 +21,7 @@ import graft.Partitioning._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = GraftSession.withDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     val docs = Tables.documents(spark, dir).select("doc_id", "text").spread
     val nDocs = docs.count()
     // SN family: unfiltered window adjacencies + accepted pairs, per key

@@ -58,11 +58,10 @@ object StreamDedup extends Serializable {
     withEventTime(df).withWatermark("ts", window)
       .dropDuplicatesWithinWatermark("digest")
 
-  /** The keep rule of one digest's rows, shared by [[chain]] and
-    * [[chainTagged]]: rows sorted by (ts_us, event_id), each kept iff it
-    * lands at least `windowUs` after the last kept row (`last`, from
-    * state). Returns every row with its keep flag, and the new last-kept
-    * time. */
+  /** The keep rule of one digest's rows: rows sorted by (ts_us,
+    * event_id), each kept iff it lands at least `windowUs` after the
+    * last kept row (`last`, from state). Returns every row with its keep
+    * flag, and the new last-kept time. */
   private def scan(rows: Iterator[Msg], last: Option[Long],
                    windowUs: Long): (Seq[(Msg, Boolean)], Option[Long]) = {
     var l = last
@@ -74,14 +73,14 @@ object StreamDedup extends Serializable {
     (tagged, l)
   }
 
-  /** #28: exact ObliviousSet chain semantics with warm-up bootstrap —
-    * `flatMapGroupsWithState` keyed by digest, carrying one timestamp of
-    * state per key; `initialState` is the digest→lastKept map recovered
-    * from prior output (the cacheBuilding.ts warm-up). Rows within a
-    * trigger are sorted by event time before the greedy scan. */
-  def chain(spark: SparkSession, df: DataFrame, windowUs: Long,
-            initialState: Option[Dataset[(Long, DigestState)]] = None,
-            stateExpiry: Option[String] = None): Dataset[Msg] = {
+  /** The one stateful operator behind [[chain]] and [[chainTagged]]:
+    * grouped by digest, carrying one timestamp of state per key,
+    * emitting every row tagged by [[scan]]. `initialState` is the
+    * digest→lastKept map recovered from prior output (the
+    * cacheBuilding.ts warm-up); without it the state starts empty. */
+  private def taggedChain(spark: SparkSession, df: DataFrame, windowUs: Long,
+                          initialState: Option[Dataset[(Long, DigestState)]],
+                          stateExpiry: Option[String]): Dataset[TaggedMsg] = {
     import spark.implicits._
     val withTs = withEventTime(
       df.select("event_id", "ts_us", "user_id", "event_type", "value", "props", "digest"))
@@ -101,7 +100,7 @@ object StreamDedup extends Serializable {
     val grouped = ds.groupByKey(_.digest)
     val streaming = ds.isStreaming && stateExpiry.isDefined
 
-    def fn(digest: Long, rows: Iterator[Msg], state: GroupState[DigestState]): Iterator[Msg] = {
+    def fn(digest: Long, rows: Iterator[Msg], state: GroupState[DigestState]): Iterator[TaggedMsg] = {
       if (!rows.hasNext && state.hasTimedOut) {
         state.remove()
         Iterator.empty
@@ -117,43 +116,30 @@ object StreamDedup extends Serializable {
             state.setTimeoutTimestamp(math.max(target, wm + 1))
           }
         }
-        tagged.iterator.collect { case (m, true) => m }
+        tagged.iterator.map { case (m, keep) =>
+          TaggedMsg(m.event_id, m.ts_us, m.user_id, m.event_type, m.value,
+            m.props, m.digest, keep)
+        }
       }
     }
 
     val timeout =
       if (streaming) GroupStateTimeout.EventTimeTimeout
       else GroupStateTimeout.NoTimeout
-    initialState match {
-      case Some(init) =>
-        grouped.flatMapGroupsWithState(
-          OutputMode.Append, timeout,
-          init.groupByKey(_._1).mapValues(_._2))(fn)
-      case None =>
-        grouped.flatMapGroupsWithState(OutputMode.Append, timeout)(fn)
-    }
+    val init = initialState.getOrElse(spark.emptyDataset[(Long, DigestState)])
+    grouped.flatMapGroupsWithState(
+      OutputMode.Append, timeout, init.groupByKey(_._1).mapValues(_._2))(fn)
   }
 
-  /** Dev-only (Throughput breakdown): `chain`'s exact grouping + state
-    * machinery with the dedup DECISION removed — every row is emitted
-    * and the per-digest state write still happens. The ladder
-    * (stateless noop → this → chain) decomposes the streaming tax:
-    * noop = micro-batch machinery; (this − noop) = the digest shuffle
-    * + typed encode/decode + state-store write; (chain − this) = the
-    * chain logic itself (sort + greedy scan), which batch measurements
-    * show is nearly free. */
-  def chainPassthrough(spark: SparkSession, df: DataFrame): Dataset[Msg] = {
+  /** #28: exact ObliviousSet chain semantics with warm-up bootstrap —
+    * the forwarded rows of [[chainTagged]]. Rows within a trigger are
+    * sorted by event time before the greedy scan. */
+  def chain(spark: SparkSession, df: DataFrame, windowUs: Long,
+            initialState: Option[Dataset[(Long, DigestState)]] = None,
+            stateExpiry: Option[String] = None): Dataset[Msg] = {
     import spark.implicits._
-    val ds = withEventTime(
-      df.select("event_id", "ts_us", "user_id", "event_type", "value", "props", "digest"))
-      .as[Msg]
-    ds.groupByKey(_.digest)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, rows: Iterator[Msg], state: GroupState[DigestState]) =>
-          val seq = rows.toSeq
-          seq.lastOption.foreach(m => state.update(DigestState(m.ts_us)))
-          seq.iterator
-      }
+    taggedChain(spark, df, windowUs, initialState, stateExpiry)
+      .where(col("kept")).drop("kept").as[Msg]
   }
 
   /** `chain`, but emitting EVERY row tagged kept/dropped instead of
@@ -163,29 +149,8 @@ object StreamDedup extends Serializable {
     * stateful operator. Same O(1)-per-digest state as `chain`. */
   def chainTagged(spark: SparkSession, df: DataFrame, windowUs: Long,
                   initialState: Option[Dataset[(Long, DigestState)]] = None)
-      : Dataset[TaggedMsg] = {
-    import spark.implicits._
-    val ds = withEventTime(
-      df.select("event_id", "ts_us", "user_id", "event_type", "value", "props", "digest"))
-      .as[Msg]
-    def fn(digest: Long, rows: Iterator[Msg], state: GroupState[DigestState]): Iterator[TaggedMsg] = {
-      val (tagged, last) = scan(rows, state.getOption.map(_.lastKeptUs), windowUs)
-      last.foreach(l => state.update(DigestState(l)))
-      tagged.iterator.map { case (m, keep) =>
-        TaggedMsg(m.event_id, m.ts_us, m.user_id, m.event_type, m.value,
-          m.props, m.digest, keep)
-      }
-    }
-    val grouped = ds.groupByKey(_.digest)
-    initialState match {
-      case Some(init) =>
-        grouped.flatMapGroupsWithState(
-          OutputMode.Append, GroupStateTimeout.NoTimeout,
-          init.groupByKey(_._1).mapValues(_._2))(fn)
-      case None =>
-        grouped.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
-    }
-  }
+      : Dataset[TaggedMsg] =
+    taggedChain(spark, df, windowUs, initialState, stateExpiry = None)
 
   /** The reference's per-minute forwarded/dropped counters IN the
     * stream (deduplication.ts:82-94): a watermarked 1-minute windowed

@@ -3,9 +3,10 @@ package graft.streaming
 import graft.SparkSpec
 import graft.operators.Dedup
 import graft.streaming.StreamDedup.{DigestState, Msg}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryProgress}
 
 /** Streaming operators must agree with their batch counterparts on the
   * same data — the batch plans are the oracle here. */
@@ -18,10 +19,10 @@ class StreamDedupSpec extends SparkSpec {
       .as[Msg].collect().sortBy(m => (m.ts_us, m.event_id))
   }
 
-  /** Feed msgs through a streaming transform in n time-ordered batches
-    * and collect the append output. */
-  private def runStream(msgs: Array[Msg], nBatches: Int)
-                       (f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Array[Msg] = {
+  /** Feed msgs through a streaming transform in n time-ordered batches;
+    * returns the append output table and the query's progress reports. */
+  private def runStreamQuery(msgs: Array[Msg], nBatches: Int)(f: DataFrame => DataFrame)
+      : (DataFrame, Array[StreamingQueryProgress]) = {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[Msg]
@@ -35,7 +36,13 @@ class StreamDedupSpec extends SparkSpec {
         q.processAllAvailable()
       }
     } finally q.stop()
-    spark.table(name)
+    (spark.table(name), q.recentProgress)
+  }
+
+  /** [[runStreamQuery]]'s output rows as messages. */
+  private def runStream(msgs: Array[Msg], nBatches: Int)(f: DataFrame => DataFrame): Array[Msg] = {
+    import spark.implicits._
+    runStreamQuery(msgs, nBatches)(f)._1
       .select("event_id", "ts_us", "user_id", "event_type", "value", "props", "digest")
       .as[Msg].collect()
   }
@@ -57,17 +64,28 @@ class StreamDedupSpec extends SparkSpec {
     val want = Dedup.chain(Dedup.hashedStream(spark, sf))
       .select("event_id").collect().map(_.getLong(0)).toSet
     assert(got === want)
+    // the tagged form at the same finite TTL: kept = the chain, every
+    // other input row tagged dropped, one output row per input row
+    val tagged = runStreamQuery(msgs, 4)(df =>
+      StreamDedup.chainTagged(spark, df, Dedup.WindowUs).toDF())._1
+      .select("event_id", "kept").collect().map(r => (r.getLong(0), r.getBoolean(1)))
+    assert(tagged.length === msgs.length)
+    assert(tagged.collect { case (id, true) => id }.toSet === want)
+    assert(tagged.collect { case (id, false) => id }.toSet === msgs.map(_.event_id).toSet -- want)
   }
 
   test("stream chain with bounded state (event-time expiry) equals batch chain on an in-order feed") {
+    import spark.implicits._
     val msgs = hashedMsgs
-    val got = runStream(msgs, 4)(df =>
+    val (out, progress) = runStreamQuery(msgs, 4)(df =>
       StreamDedup.chain(spark, df, Dedup.WindowUs,
         stateExpiry = Some("2 hours")).toDF())
-      .map(_.event_id).toSet
+    val got = out.select("event_id").as[Long].collect().toSet
     val want = Dedup.chain(Dedup.hashedStream(spark, sf))
       .select("event_id").collect().map(_.getLong(0)).toSet
     assert(got === want)
+    // the feed spans weeks, so expired digests must leave the state
+    assert(progress.flatMap(_.stateOperators).map(_.numRowsRemoved).sum > 0)
   }
 
   test("stream chain with bootstrap state drops warmed digests") {
