@@ -24,7 +24,8 @@ object SparkEntry {
     // formulation; hash-equal absent 60/64-bit collisions, which the
     // reference itself deems sufficient, deduplication.ts:66-72).
     "dedup_first_fast" -> ((s, d) =>
-      Dedup.firstOccurrence(Dedup.hashedStreamFast(s, d)).drop("digest")),
+      Dedup.firstOccurrence(
+        Dedup.hashedStream(s, d, hasher = graft.functions.Hashing.fast64)).drop("digest")),
     "dedup_chain" -> ((s, d) => Dedup.chainNative(Dedup.hashedStream(s, d))),
     "dedup_bootstrap" -> ((s, d) => Dedup.bootstrap(Dedup.hashedStream(s, d))),
     "dedup_counters" -> ((s, d) => Dedup.counters(Dedup.hashedStream(s, d))),

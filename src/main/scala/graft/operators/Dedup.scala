@@ -70,27 +70,20 @@ object Dedup {
   /** Replicated stream + canonical digest column. `spread` rebalances
     * digest computation across cores ONLY when the scan under-splits
     * (the local single-row-group test parquet); a multi-split scan at
-    * real scale passes through with no extra exchange (Partitioning). */
+    * real scale passes through with no extra exchange (Partitioning).
+    * `hasher = Hashing.fast64` is the throughput variant: identical
+    * canonicalization, xxhash64 digest (stays inside whole-stage
+    * codegen; no md5); its kept-row set is identical to the md5 path's
+    * absent hash collisions among distinct identities. */
   def hashedStream(spark: SparkSession, dir: String,
-                   ignored: Seq[String] = Nil): DataFrame =
-    withReplicas(eventsUs(spark, dir))
-      .spread
-      .withColumn(
-        "digest",
-        eventDigest(col("user_id"), col("event_type"), col("value"), col("props"), ignored))
-
-  /** Throughput variant: identical canonicalization, xxhash64 digest
-    * (stays inside whole-stage codegen; no md5). The kept-row set is
-    * identical to the md5 path absent hash collisions among distinct
-    * identities — the driver records a rows-only check for it. */
-  def hashedStreamFast(spark: SparkSession, dir: String,
-                       ignored: Seq[String] = Nil): DataFrame =
+                   ignored: Seq[String] = Nil,
+                   hasher: Column => Column = h64): DataFrame =
     withReplicas(eventsUs(spark, dir))
       .spread
       .withColumn(
         "digest",
         eventDigest(col("user_id"), col("event_type"), col("value"), col("props"),
-          ignored, hasher = graft.functions.Hashing.fast64))
+          ignored, hasher))
 
   private def orderedOut(df: DataFrame): DataFrame =
     df.select((evCols :+ "digest").map(col): _*).orderBy("event_id")

@@ -2,42 +2,53 @@ package graft.sinks
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Idempotent batch-append parquet sink — the general form of the
-  * commit-marker protocol the streaming index maintenance uses
-  * (StreamIndex): plain parquet plus a tiny commit log, readable by any
-  * engine, safe to append to from retried jobs.
+/** Idempotent batch-append parquet sink: plain parquet plus a tiny
+  * commit log, readable by any engine, safe to append to from retried
+  * jobs.
   *
   * Layout under `dir`:
   * {{{
-  *   batch=<id>/part-*.parquet   -- one directory per appended batch
-  *   _commits/<id>               -- empty marker, created AFTER the data
+  *   batch=<id>/part-*.parquet    -- data batch ([[append]], [[appendWithStats]])
+  *   deletes=<id>/part-*.parquet  -- delete batch: key rows ([[appendDeletes]])
+  *   merge=<id>/part-*.parquet    -- upsert batch: data AND tombstone ([[merge]])
+  *   _commits/<id>                -- empty marker, created AFTER the data
   * }}}
   *
-  * Protocol:
-  *  - `append(df, dir, id)` is IDEMPOTENT per id: a committed id is
-  *    skipped outright; an uncommitted id (first attempt, or a crash
-  *    that tore the data write before its marker landed) OVERWRITES the
-  *    batch directory and then commits — so any number of retries of
-  *    the same (id, data) leaves exactly one copy.
-  *  - `read` unions COMMITTED batches only: a torn write without its
-  *    marker is invisible, never half-read.
+  * Commit protocol — one body, `commit`, behind every batch kind; the
+  * kinds share one id space:
+  *  - a committed id is skipped outright, so any number of retries of
+  *    the same (id, data) leaves exactly one copy;
+  *  - an uncommitted id (first attempt, or a crash that tore the write
+  *    before its marker landed) first removes a torn `<k>=<id>` of
+  *    every OTHER kind, then OVERWRITES `<kind>=<id>`, then creates
+  *    the marker. A committed id's kind is read from its directory
+  *    name, so the removal is what keeps the kind unambiguous (a torn
+  *    `deletes=<id>` left next to a committed `batch=<id>` would turn
+  *    the data into a tombstone). Tables where an id still has more
+  *    than one kind directory resolve by precedence
+  *    deletes > merge > batch;
+  *  - readers see committed ids only: a torn write without its marker
+  *    is invisible, never half-read.
+  *
+  * Resolution: plain [[read]] is the RAW view (data and merge rows,
+  * tombstones unapplied). [[readWithDeletes]] hides every key-matching
+  * row committed BEFORE a delete or merge batch (a later re-append of
+  * the key is visible again); [[compactWithDeletes]] applies the
+  * tombstones physically.
   *
   * This is deliberately the minimal transactional contract a 100 TB
   * append-only corpus needs (exactly-once per retried batch, atomic
   * visibility) without a table-format dependency: the marker directory
   * is O(batches) empty files, the data path is untouched parquet, and
-  * readers list one small directory before planning the scan. Additive
-  * column evolution is supported (`read(mergeSchema = true)`; `compact`
-  * always merges, so a compaction bakes the union schema into one
-  * generation). Row-level deletes are supported merge-on-read: a
-  * delete batch (`deletes=<id>` under the same marker namespace)
-  * carries KEY rows, [[readWithDeletes]] resolves them at read time
-  * (a delete hides every matching row committed BEFORE it; a later
-  * re-append of the key is visible again), and [[compactWithDeletes]]
-  * applies them physically. What it does NOT give — concurrent writers
-  * to the SAME batch id, column removal/retype (migrate those through
-  * a compaction rewrite) — is documented out of scope.
+  * readers make one listing each of `_commits` and `dir` before
+  * planning the scan.
+  * Additive column evolution is supported (`read(mergeSchema = true)`;
+  * `compact` always merges, so a compaction bakes the union schema
+  * into one generation). What it does NOT give — concurrent writers to
+  * the SAME batch id, column removal/retype (migrate those through a
+  * compaction rewrite) — is documented out of scope.
   */
 object TxnParquet {
 
@@ -47,62 +58,64 @@ object TxnParquet {
   private def marker(dir: String, batchId: Long) =
     new Path(s"$dir/_commits/$batchId")
 
-  /** Append `df` as batch `batchId`; returns true when this call wrote
-    * (false = the id was already committed and the call was a no-op). */
-  def append(df: DataFrame, dir: String, batchId: Long): Boolean = {
-    val spark = df.sparkSession
-    val f = fs(spark, dir)
+  /** Batch kinds, highest resolution precedence first. */
+  private val Kinds = Seq("deletes", "merge", "batch")
+
+  private val KindDir = """(deletes|merge|batch)=(\d+)""".r
+
+  /** The commit protocol (see the object doc). `beforeMarker` runs
+    * after the data landed and before the marker, so the marker's
+    * atomicity covers whatever it writes. Returns true when this call
+    * wrote, false when the id was already committed. */
+  private def commit(df: DataFrame, dir: String, batchId: Long, kind: String,
+                     beforeMarker: org.apache.hadoop.fs.FileSystem => Unit = _ => ()
+                    ): Boolean = {
+    val f = fs(df.sparkSession, dir)
     if (f.exists(marker(dir, batchId))) false
     else {
-      // batch KIND is classified by directory name (batch= vs deletes=),
-      // so a torn opposite-kind attempt at the same id (deletes=<id>
-      // written, crash before its marker) must be removed BEFORE this
-      // id commits as data — otherwise both directories exist under one
-      // marker and every read misclassifies the committed data batch as
-      // a delete batch and silently drops it
-      val orphan = new Path(s"$dir/deletes=$batchId")
-      if (f.exists(orphan)) f.delete(orphan, true)
-      df.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+      // delete on a missing path is a no-op returning false: no exists
+      // probe, and no listing of `dir` on the write path
+      Kinds.filterNot(_ == kind)
+        .foreach(k => f.delete(new Path(s"$dir/$k=$batchId"), true))
+      df.write.mode("overwrite").parquet(s"$dir/$kind=$batchId")
+      beforeMarker(f)
       f.create(marker(dir, batchId), true).close()
       true
     }
   }
 
-  /** Append a DELETE batch: `keys` rows (the delete's key columns)
-    * land under `deletes=<id>` in the SAME marker namespace as data
-    * batches — ids are never reused across kinds, retries are
-    * idempotent exactly like [[append]]. Semantics (merge-on-read): a
-    * delete hides every key-matching row committed BEFORE it; a later
-    * re-append of the key is visible again. Plain [[read]] ignores
-    * delete batches (raw union); [[readWithDeletes]] resolves them;
-    * [[compactWithDeletes]] applies them physically. */
-  def appendDeletes(keys: DataFrame, dir: String, batchId: Long): Boolean = {
-    val spark = keys.sparkSession
-    val f = fs(spark, dir)
-    if (f.exists(marker(dir, batchId))) false
-    else {
-      // mirror of append: a torn DATA attempt at this id must not
-      // survive next to the committed delete directory (kind is
-      // classified by directory name — see append)
-      val orphan = new Path(s"$dir/batch=$batchId")
-      if (f.exists(orphan)) f.delete(orphan, true)
-      keys.write.mode("overwrite").parquet(s"$dir/deletes=$batchId")
-      f.create(marker(dir, batchId), true).close()
-      true
-    }
-  }
+  /** Each batch id's kind from ONE listing of `dir`, by precedence when
+    * an id has several kind directories. An id with none reads as
+    * `batch` (its scan then fails loudly on the missing path, as a
+    * vacuumed snapshot must). */
+  private def batchKinds(spark: SparkSession, dir: String): Map[Long, String] =
+    fs(spark, dir).listStatus(new Path(dir)).toSeq
+      .map(_.getPath.getName)
+      .collect { case KindDir(k, id) => (id.toLong, k) }
+      .groupMap(_._1)(_._2)
+      .map { case (id, ks) => id -> Kinds.find(ks.contains).get }
+      .withDefaultValue("batch")
 
-  private def isDeleteBatch(f: org.apache.hadoop.fs.FileSystem,
-                            dir: String, id: Long): Boolean =
-    f.exists(new Path(s"$dir/deletes=$id"))
+  /** Append `df` as data batch `batchId`; returns true when this call
+    * wrote (false = the id was already committed and the call was a
+    * no-op). */
+  def append(df: DataFrame, dir: String, batchId: Long): Boolean =
+    commit(df, dir, batchId, "batch")
+
+  /** Append a DELETE batch: `keys` rows (the delete's key columns).
+    * Merge-on-read semantics: a delete hides every key-matching row
+    * committed BEFORE it; a later re-append of the key is visible
+    * again. Plain [[read]] ignores delete batches (raw union);
+    * [[readWithDeletes]] resolves them; [[compactWithDeletes]] applies
+    * them physically. */
+  def appendDeletes(keys: DataFrame, dir: String, batchId: Long): Boolean =
+    commit(keys, dir, batchId, "deletes")
 
   /** MERGE (upsert) a batch: rows land like an append, AND any earlier
     * row sharing a merge row's key is superseded — last-writer-wins by
-    * batch id, the lakehouse MERGE INTO. One atomic batch kind
-    * (`merge=<id>` + the shared marker protocol) instead of a
-    * delete-batch + data-batch pair, so a crash can never leave the
-    * delete applied without its replacement rows. Same idempotence
-    * contract as [[append]]: a retry of a committed id is a no-op.
+    * batch id, the lakehouse MERGE INTO. One atomic batch kind instead
+    * of a delete-batch + data-batch pair, so a crash can never leave
+    * the delete applied without its replacement rows.
     *
     * Resolution happens in [[readWithDeletes]] (which despite the name
     * resolves ALL tombstone-carrying kinds): a merge batch is data AND
@@ -111,80 +124,77 @@ object TxnParquet {
     * (merge rows included, supersede unapplied — same posture as
     * unresolved deletes). Raw compaction fails fast on live merge
     * batches exactly as on live deletes. */
-  def merge(rows: DataFrame, dir: String, batchId: Long): Boolean = {
-    val spark = rows.sparkSession
-    val f = fs(spark, dir)
-    if (f.exists(marker(dir, batchId))) false
-    else {
-      // mirror of append/appendDeletes: torn attempts at this id under
-      // OTHER kinds must not survive next to the committed merge
-      Seq(s"$dir/batch=$batchId", s"$dir/deletes=$batchId").foreach { d =>
-        val orphan = new Path(d)
-        if (f.exists(orphan)) f.delete(orphan, true)
+  def merge(rows: DataFrame, dir: String, batchId: Long): Boolean =
+    commit(rows, dir, batchId, "merge")
+
+  /** Attach a streaming frame: each NON-EMPTY micro-batch `b` lands as
+    * `append(toBatch(b), dir, batchId)` with the micro-batch id as the
+    * transactional id, so a restart that replays an epoch is a
+    * committed no-op and a torn epoch is overwritten by its replay.
+    * The checkpoint defaults to `dir/_checkpoint`. */
+  def appendStream(df: DataFrame, dir: String,
+                   checkpointDir: Option[String] = None)
+                  (toBatch: DataFrame => DataFrame): StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation",
+        checkpointDir.getOrElse(s"$dir/_checkpoint"))
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) append(toBatch(batch), dir, batchId)
+        ()
       }
-      rows.write.mode("overwrite").parquet(s"$dir/merge=$batchId")
-      f.create(marker(dir, batchId), true).close()
-      true
-    }
-  }
+      .start()
 
-  private def isMergeBatch(f: org.apache.hadoop.fs.FileSystem,
-                           dir: String, id: Long): Boolean =
-    f.exists(new Path(s"$dir/merge=$id"))
-
-  /** The tombstone-resolved committed view: rows from data batches,
-    * MERGE batches and the latest generation, minus rows whose key
-    * appears in a LATER delete or merge batch (a generation's rows
-    * carry the max covered id, so tombstones it already applied never
-    * re-apply and later ones still do; a merge batch supersedes older
-    * rows with its keys — last-writer-wins upsert). Key columns must
-    * be non-null (null keys never match — use a sentinel). The
-    * tombstone side is O(deleted+merged keys) and broadcast. */
-  def readWithDeletes(spark: SparkSession, dir: String,
-                      keyCols: Seq[String],
-                      mergeSchema: Boolean = false): DataFrame =
-    resolvedView(spark, dir, keyCols, mergeSchema,
-      committedBatches(spark, dir), latestCompaction(spark, dir))
-
-  private def resolvedView(spark: SparkSession, dir: String,
-                           keyCols: Seq[String], mergeSchema: Boolean,
-                           ids: Seq[Long],
-                           prior: Option[(Long, Set[Long])]): DataFrame = {
+  /** The committed view over `ids`, with the generation `prior` (if
+    * any) standing in for the ids it covers. With no key columns, or
+    * no live delete/merge batch, it is ONE scan over the explicit data
+    * paths (delete batches are not data; a torn directory costs
+    * nothing even at plan time). Otherwise each data path is scanned
+    * tagged with its batch id (a generation's rows carry its max
+    * covered id, so tombstones it already applied never re-apply), and
+    * rows whose key appears in a LATER delete or merge batch are
+    * dropped by a broadcast anti-join against the O(tombstoned keys)
+    * side. Key columns must be non-null (null keys never match). */
+  private def committedView(spark: SparkSession, dir: String,
+                            ids: Seq[Long], prior: Option[(Long, Set[Long])],
+                            keyCols: Seq[String],
+                            mergeSchema: Boolean): DataFrame = {
     import org.apache.spark.sql.functions._
-    val f = fs(spark, dir)
-    val covered = prior.map(_._2).getOrElse(Set.empty[Long])
-    val live = ids.filterNot(covered)
-    def rd(p: String) =
-      spark.read.option("mergeSchema", mergeSchema.toString).parquet(p)
-    val dataParts =
+    lazy val kind = batchKinds(spark, dir)
+    def path(id: Long) = s"$dir/${kind(id)}=$id"
+    val live = ids.filterNot(prior.map(_._2).getOrElse(Set.empty[Long]))
+    val data =
       prior.map { case (gen, cov) => (s"$dir/compact=$gen", cov.max) }.toSeq ++
-        live.filterNot(isDeleteBatch(f, dir, _)).map { id =>
-          // a merge batch's rows ARE data (their keys also tombstone —
-          // see delParts); last-writer-wins falls out of the shared
-          // "tombstone id must exceed row id" rule
-          val p = if (isMergeBatch(f, dir, id)) s"$dir/merge=$id"
-                  else s"$dir/batch=$id"
-          (p, id)
-        }
-    require(dataParts.nonEmpty, s"no committed data batches under $dir")
-    val rows = dataParts
-      .map { case (p, bid) => rd(p).withColumn("__bid", lit(bid)) }
-      .reduce((a, b) => a.unionByName(b, allowMissingColumns = mergeSchema))
-    val delParts = live.filter(id =>
-      isDeleteBatch(f, dir, id) || isMergeBatch(f, dir, id)).map { id =>
-      val p = if (isDeleteBatch(f, dir, id)) s"$dir/deletes=$id"
-              else s"$dir/merge=$id"
-      rd(p).select(keyCols.map(col): _*)
-        .withColumn("__did", lit(id))
-    }
-    if (delParts.isEmpty) rows.drop("__bid")
+        live.filter(kind(_) != "deletes").map(id => (path(id), id))
+    require(data.nonEmpty, s"no committed data batches under $dir")
+    val tombstones =
+      if (keyCols.isEmpty) Nil else live.filter(kind(_) != "batch")
+    def rd(paths: String*) =
+      spark.read.option("mergeSchema", mergeSchema.toString).parquet(paths: _*)
+    if (tombstones.isEmpty) rd(data.map(_._1): _*)
     else {
-      val dels = delParts.reduce(_ unionByName _)
+      val rows = data
+        .map { case (p, bid) => rd(p).withColumn("__bid", lit(bid)) }
+        .reduce((a, b) => a.unionByName(b, allowMissingColumns = mergeSchema))
+      val dels = tombstones
+        .map(id => rd(path(id)).select(keyCols.map(col): _*)
+          .withColumn("__did", lit(id)))
+        .reduce(_ unionByName _)
       val cond = keyCols.map(k => rows(k) === dels(k)).reduce(_ && _) &&
         dels("__did") > rows("__bid")
       rows.join(broadcast(dels), cond, "left_anti").drop("__bid")
     }
   }
+
+  /** The tombstone-resolved committed view: rows from data batches,
+    * MERGE batches and the latest generation, minus rows whose key
+    * appears in a LATER delete or merge batch (last-writer-wins
+    * upsert for merges). Key columns must be non-null (null keys never
+    * match — use a sentinel). */
+  def readWithDeletes(spark: SparkSession, dir: String,
+                      keyCols: Seq[String],
+                      mergeSchema: Boolean = false): DataFrame =
+    committedView(spark, dir, committedBatches(spark, dir),
+      latestCompaction(spark, dir), keyCols, mergeSchema)
 
   /** Compact with deletes APPLIED PHYSICALLY: the generation is the
     * delete-resolved view, its manifest covers data AND delete batches
@@ -194,7 +204,7 @@ object TxnParquet {
                          keyCols: Seq[String], numFiles: Int = 1,
                          leaseTtlMs: Long = 15 * 60 * 1000L): Long =
     compactCore(spark, dir, leaseTtlMs) { (ids, prior) =>
-      resolvedView(spark, dir, keyCols, mergeSchema = true, ids, prior)
+      committedView(spark, dir, ids, prior, keyCols, mergeSchema = true)
         .coalesce(numFiles)
     }
 
@@ -223,11 +233,9 @@ object TxnParquet {
     * those through a compaction generation (rewrite with the target
     * schema, then vacuum). */
   def read(spark: SparkSession, dir: String,
-           mergeSchema: Boolean = false): DataFrame = {
-    val paths = committedPaths(spark, dir)
-    require(paths.nonEmpty, s"no committed batches under $dir")
-    spark.read.option("mergeSchema", mergeSchema.toString).parquet(paths: _*)
-  }
+           mergeSchema: Boolean = false): DataFrame =
+    committedView(spark, dir, committedBatches(spark, dir),
+      latestCompaction(spark, dir), Nil, mergeSchema)
 
   /** Time travel: the committed view AS OF batch id `asOf` — exactly
     * the rows a reader saw when `asOf` was the newest committed batch.
@@ -247,16 +255,8 @@ object TxnParquet {
     * [[readWithDeletes]] would have seen at `asOf`, use
     * [[readAsOfWithDeletes]]. */
   def readAsOf(spark: SparkSession, dir: String, asOf: Long,
-               mergeSchema: Boolean = false): DataFrame = {
-    val ids = committedBatches(spark, dir).filter(_ <= asOf)
-    require(ids.nonEmpty, s"no batches committed at or before $asOf under $dir")
-    // newest generation that leaks no post-asOf rows; older generations
-    // remain usable until vacuum reclaims them
-    val usable = compactions(spark, dir)
-      .find { case (_, covered) => covered.forall(_ <= asOf) }
-    val paths = pathsFor(fs(spark, dir), dir, ids, usable)
-    spark.read.option("mergeSchema", mergeSchema.toString).parquet(paths: _*)
-  }
+               mergeSchema: Boolean = false): DataFrame =
+    readAsOfWithDeletes(spark, dir, asOf, keyCols = Nil, mergeSchema)
 
   /** Delete-resolved time travel: exactly the rows [[readWithDeletes]]
     * returned when `asOf` was the newest committed batch — data batches
@@ -264,42 +264,18 @@ object TxnParquet {
     * NEWER than the row's batch. The reproducibility handle for a
     * MUTABLE table (a raw [[readAsOf]] of a CDC-fed corpus replays
     * rows that were already deleted at snapshot time). Same retention
-    * caveat as [[readAsOf]]: vacuumed batch directories fail loudly. */
+    * caveat as [[readAsOf]]: vacuumed batch directories fail loudly.
+    * Empty `keyCols` gives the raw snapshot, [[readAsOf]]. */
   def readAsOfWithDeletes(spark: SparkSession, dir: String, asOf: Long,
                           keyCols: Seq[String],
                           mergeSchema: Boolean = false): DataFrame = {
     val ids = committedBatches(spark, dir).filter(_ <= asOf)
     require(ids.nonEmpty, s"no batches committed at or before $asOf under $dir")
+    // newest generation that leaks no post-asOf rows; older generations
+    // remain usable until vacuum reclaims them
     val usable = compactions(spark, dir)
       .find { case (_, covered) => covered.forall(_ <= asOf) }
-    resolvedView(spark, dir, keyCols, mergeSchema, ids, usable)
-  }
-
-  /** The exact path set a read of the current committed view plans:
-    * latest committed compaction (if any) + committed batches it does
-    * not cover. Factored out so `compact` can snapshot ONE listing and
-    * rewrite exactly those paths — calling `read` there would re-list
-    * and could pick up a concurrently committed batch absent from the
-    * manifest (double rows on every later read). */
-  private def committedPaths(spark: SparkSession, dir: String): Seq[String] =
-    pathsFor(fs(spark, dir), dir, committedBatches(spark, dir),
-      latestCompaction(spark, dir))
-
-  /** Data paths only — committed DELETE batches are not data and are
-    * resolved exclusively by [[readWithDeletes]]; the raw union skips
-    * them (documented: plain `read` ignores tombstones). */
-  private def pathsFor(f: org.apache.hadoop.fs.FileSystem, dir: String,
-                       ids: Seq[Long],
-                       compaction: Option[(Long, Set[Long])]): Seq[String] = {
-    def dataIds(xs: Seq[Long]) = xs.filterNot(isDeleteBatch(f, dir, _))
-    def dataPath(id: Long) =
-      if (isMergeBatch(f, dir, id)) s"$dir/merge=$id" else s"$dir/batch=$id"
-    compaction match {
-      case Some((gen, covered)) =>
-        s"$dir/compact=$gen" +:
-          dataIds(ids.filterNot(covered)).map(dataPath)
-      case None => dataIds(ids).map(dataPath)
-    }
+    committedView(spark, dir, ids, usable, keyCols, mergeSchema)
   }
 
   // ---- compaction -------------------------------------------------------
@@ -491,7 +467,7 @@ object TxnParquet {
                                  leaseTtlMs: Long = 15 * 60 * 1000L): Long =
     compactCore(spark, dir, leaseTtlMs) { (ids, prior) =>
       zorderRewrite(dim1, dim2, numFiles)(
-        resolvedView(spark, dir, keyCols, mergeSchema = true, ids, prior))
+        committedView(spark, dir, ids, prior, keyCols, mergeSchema = true))
     }
 
   /** The z-order rewrite applied by both clustered compactions: bucket
@@ -516,7 +492,6 @@ object TxnParquet {
                                leaseTtlMs: Long)
                               (rewrite: DataFrame => DataFrame): Long =
     compactCore(spark, dir, leaseTtlMs) { (ids, prior) =>
-      val f = fs(spark, dir)
       // FAIL FAST on unapplied tombstones: the raw rewrite has no key
       // columns, so it cannot apply them — but the manifest would mark
       // them covered, after which readWithDeletes stops applying them
@@ -526,18 +501,16 @@ object TxnParquet {
       // the manifest's max id, so a pre-existing tombstone (__did <
       // generation __bid) would never match the rewritten rows it must
       // hide. The only safe raw compaction is one with no live deletes.
+      val kind = batchKinds(spark, dir)
       val covered = prior.map(_._2).getOrElse(Set.empty[Long])
-      val liveDeletes = ids.filterNot(covered).filter(id =>
-        isDeleteBatch(f, dir, id) || isMergeBatch(f, dir, id))
+      val liveDeletes = ids.filterNot(covered).filter(kind(_) != "batch")
       if (liveDeletes.nonEmpty) throw new IllegalStateException(
         s"raw compaction would drop ${liveDeletes.size} unapplied delete/" +
           s"merge batch(es) ${liveDeletes.mkString("[", ",", "]")} under $dir " +
           "— a merge's superseded rows would resurrect in the generation; " +
           "use compactWithDeletes/compactZOrderedWithDeletes (they apply " +
           "tombstones physically) or vacuum after a WithDeletes pass")
-      val paths = pathsFor(f, dir, ids, prior)
-      require(paths.nonEmpty, s"no committed batches under $dir")
-      rewrite(spark.read.option("mergeSchema", "true").parquet(paths: _*))
+      rewrite(committedView(spark, dir, ids, prior, Nil, mergeSchema = true))
     }
 
   private def compactCore(spark: SparkSession, dir: String,
@@ -626,13 +599,8 @@ object TxnParquet {
   def vacuum(spark: SparkSession, dir: String): Unit =
     latestCompaction(spark, dir).foreach { case (gen, covered) =>
       val f = fs(spark, dir)
-      covered.foreach { id =>
-        Seq(s"$dir/batch=$id", s"$dir/deletes=$id", s"$dir/merge=$id")
-          .foreach { d =>
-            val p = new Path(d)
-            if (f.exists(p)) f.delete(p, true)
-          }
-      }
+      covered.foreach(id =>
+        Kinds.foreach(k => f.delete(new Path(s"$dir/$k=$id"), true)))
       (0L until gen).foreach { g =>
         val p = new Path(s"$dir/compact=$g")
         if (f.exists(p)) f.delete(p, true)
@@ -665,21 +633,15 @@ object TxnParquet {
     * partitioning keys); same idempotency contract as [[append]]. */
   def appendWithStats(df: DataFrame, dir: String, batchId: Long,
                       keyCol: String): Boolean = {
-    val spark = df.sparkSession
-    val f = fs(spark, dir)
-    if (f.exists(marker(dir, batchId))) false
-    else {
-      val orphan = new Path(s"$dir/deletes=$batchId")
-      if (f.exists(orphan)) f.delete(orphan, true)
-      require(df.schema(keyCol).dataType match {
-        case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType => true
-        case _ => false
-      }, s"appendWithStats: $keyCol must be an integral column " +
-        s"(got ${df.schema(keyCol).dataType.simpleString})")
-      df.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+    require(df.schema(keyCol).dataType match {
+      case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
+           org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType => true
+      case _ => false
+    }, s"appendWithStats: $keyCol must be an integral column " +
+      s"(got ${df.schema(keyCol).dataType.simpleString})")
+    commit(df, dir, batchId, "batch", beforeMarker = { f =>
       import org.apache.spark.sql.functions.{max, min, col}
-      val row = spark.read.parquet(s"$dir/batch=$batchId")
+      val row = df.sparkSession.read.parquet(s"$dir/batch=$batchId")
         .agg(min(col(keyCol)).cast("long"), max(col(keyCol)).cast("long"))
         .head()
       val body =
@@ -688,9 +650,7 @@ object TxnParquet {
       val out = f.create(statsPath(dir, batchId), true)
       out.write(body.getBytes("UTF-8"))
       out.close()
-      f.create(marker(dir, batchId), true).close()
-      true
-    }
+    })
   }
 
   /** Recorded key range of a committed batch: None = no usable sidecar
@@ -722,8 +682,8 @@ object TxnParquet {
   def pruneIds(spark: SparkSession, dir: String, keyCol: String,
                lo: Long, hi: Long): (Seq[Long], Seq[Long]) = {
     val f = fs(spark, dir)
-    val dataIds = committedBatches(spark, dir)
-      .filterNot(isDeleteBatch(f, dir, _))
+    lazy val kind = batchKinds(spark, dir)
+    val dataIds = committedBatches(spark, dir).filter(kind(_) != "deletes")
     dataIds.partition { id =>
       statsFor(f, dir, id, keyCol) match {
         case Some(Some((mn, mx))) => mx >= lo && mn <= hi
@@ -743,13 +703,12 @@ object TxnParquet {
   def readPruned(spark: SparkSession, dir: String, keyCol: String,
                  lo: Long, hi: Long, mergeSchema: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val f = fs(spark, dir)
     val (kept, _) = pruneIds(spark, dir, keyCol, lo, hi)
-    val paths = pathsFor(f, dir, kept, latestCompaction(spark, dir))
+    val prior = latestCompaction(spark, dir)
     val base =
-      if (paths.nonEmpty)
-        spark.read.option("mergeSchema", mergeSchema.toString).parquet(paths: _*)
-      else read(spark, dir, mergeSchema) // schema-only: filter below is false
+      if (kept.isEmpty && prior.isEmpty)
+        read(spark, dir, mergeSchema) // schema-only: filter below is false
+      else committedView(spark, dir, kept, prior, Nil, mergeSchema)
     base.filter(col(keyCol) >= lo && col(keyCol) <= hi)
   }
 }

@@ -198,11 +198,8 @@ object Envelope {
   /** First-occurrence dedup of an envelope batch, in event-time order —
     * keepDeduplicating with an infinite window over any envelope
     * source. One shuffle on the digest. */
-  def firstOccurrence(env: DataFrame, ignored: Seq[String] = Nil): DataFrame = {
-    val hashed = env.withColumn("digest", digest(ignored))
-    val w = Window.partitionBy("digest").orderBy("event_ts")
-    hashed.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-  }
+  def firstOccurrence(env: DataFrame, ignored: Seq[String] = Nil): DataFrame =
+    firstByDigest(env, digest(ignored))
 
   /** Same dedup with the digest selected by `spark.graft.digest` — a
     * migration from the reference service flips the conf to `blake2b`
@@ -211,8 +208,11 @@ object Envelope {
     * collision-free digest, so the kept set does not change
     * (spec-pinned against the h64 path). */
   def firstOccurrenceConfigured(spark: SparkSession, env: DataFrame,
-                                ignored: Seq[String] = Nil): DataFrame = {
-    val hashed = env.withColumn("digest", digestFor(spark, ignored))
+                                ignored: Seq[String] = Nil): DataFrame =
+    firstByDigest(env, digestFor(spark, ignored))
+
+  private def firstByDigest(env: DataFrame, digestCol: Column): DataFrame = {
+    val hashed = env.withColumn("digest", digestCol)
     val w = Window.partitionBy("digest").orderBy("event_ts")
     hashed.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
   }

@@ -11,29 +11,23 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * change events (upserts + deletes, ordered by a per-key sequence) is
   * first resolved WITHIN the batch (only a key's last op survives —
   * delete-then-reinsert inside one epoch nets to the reinsert), then
-  * lands as one tombstone batch + one data batch under DETERMINISTIC
-  * ids (tombstones at 2·epoch, data at 2·epoch+1). The tombstones
-  * cover EVERY key the epoch touched — an upsert REPLACES earlier
-  * versions of its key, so it implies a delete of them — and the
-  * lower tombstone id means they hide exactly the rows of earlier
-  * epochs, never the epoch's own inserts. Consequences:
+  * lands under DETERMINISTIC ids: the true deletes as one tombstone
+  * batch at 2·epoch, the upsert survivors as one MERGE batch at
+  * 2·epoch+1 (data AND tombstone in a single commit — an upsert
+  * replaces earlier versions of its key). Consequences:
   *  - a restart that replays an epoch is a committed no-op (both ids
-  *    idempotent — exactly-once end to end). Exactly-once covers the
-  *    SETTLED view, not the instant between the epoch's two commits: a
-  *    readWithDeletes racing between the tombstone commit (2e) and the
-  *    data commit (2e+1) — or after a crash between them, until the
-  *    epoch replays — sees the epoch's deletes applied without its
-  *    upserts, so upserted keys transiently DISAPPEAR rather than show
-  *    a stale version. The id-ordering semantics force this order
-  *    (inserts-first would need tombstones to outrank same-epoch
-  *    inserts they must not hide); readers needing a consistent
-  *    snapshot during live ingest should read as-of the last settled
-  *    epoch (readAsOfWithDeletes at id 2e−1) instead of the head;
+  *    idempotent — exactly-once end to end);
+  *  - an upserted key is never transiently absent: a reader racing
+  *    between the epoch's two commits, or reading after a crash
+  *    between them, sees the key's OLD version until the merge
+  *    commits, because its tombstone and its replacement row are the
+  *    same commit;
   *  - TxnParquet.readWithDeletes resolves cross-epoch order by id:
-  *    epoch e's tombstones (2e) hide every earlier epoch's versions,
-  *    its inserts (2e+1) stand until a LATER epoch touches the key —
-  *    batch-grain ordering matches event-grain ordering because
-  *    within-batch conflicts were already resolved by sequence;
+  *    epoch e's deletes (2e) and merge keys (2e+1) hide every earlier
+  *    epoch's versions, its merged rows stand until a LATER epoch
+  *    touches the key — batch-grain ordering matches event-grain
+  *    ordering because within-batch conflicts were already resolved
+  *    by sequence;
   *  - compactWithDeletes periodically folds the tombstones in
   *    physically, and vacuum reclaims them.
   *
@@ -60,14 +54,13 @@ object StreamDeletes {
   def applyBatch(batch: DataFrame, dir: String, keyCols: Seq[String],
                  epochId: Long): Unit = {
     val last = lastOpPerKey(batch, keyCols).localCheckpoint()
-    // tombstone every TOUCHED key (an upsert replaces its earlier
-    // versions), then insert the upsert survivors above the tombstones
-    val touched = last.select(keyCols.map(col): _*)
-    val inserts = last.filter(col("op") === "upsert").drop("op", "seq")
+    val delKeys = last.filter(col("op") === "delete")
+      .select(keyCols.map(col): _*)
+    val upserts = last.filter(col("op") === "upsert").drop("op", "seq")
     // ALWAYS write both ids, even empty: the id sequence stays dense
     // and a replay is a no-op regardless of the epoch's op mix
-    TxnParquet.appendDeletes(touched, dir, 2 * epochId)
-    TxnParquet.append(inserts, dir, 2 * epochId + 1)
+    TxnParquet.appendDeletes(delKeys, dir, 2 * epochId)
+    TxnParquet.merge(upserts, dir, 2 * epochId + 1)
   }
 
   /** Start applying a streaming CDC frame into `dir`. Read the result
@@ -79,37 +72,6 @@ object StreamDeletes {
         checkpointDir.getOrElse(s"$dir/_checkpoint"))
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         applyBatch(batch, dir, keyCols, epochId)
-      }
-      .start()
-
-  /** [[applyBatch]] with the upsert half landing as ONE atomic MERGE
-    * batch (TxnParquet.merge — data AND tombstone in a single commit):
-    * true deletes tombstone at 2·epoch, upsert survivors merge at
-    * 2·epoch + 1. This CLOSES applyBatch's documented
-    * transient-disappear window for upserted keys: a reader racing
-    * between the epoch's two commits (or after a crash between them)
-    * sees their OLD version until the merge commits — never an absence
-    * — because the key's tombstone and its replacement row are the
-    * same commit. Deleted keys keep the 2e semantics. Same dense-id /
-    * idempotent-replay contract as [[applyBatch]]. */
-  def applyBatchMerged(batch: DataFrame, dir: String, keyCols: Seq[String],
-                       epochId: Long): Unit = {
-    val last = lastOpPerKey(batch, keyCols).localCheckpoint()
-    val delKeys = last.filter(col("op") === "delete")
-      .select(keyCols.map(col): _*)
-    val upserts = last.filter(col("op") === "upsert").drop("op", "seq")
-    TxnParquet.appendDeletes(delKeys, dir, 2 * epochId)
-    TxnParquet.merge(upserts, dir, 2 * epochId + 1)
-  }
-
-  /** [[applyCdc]] on the merge path — the recommended online writer. */
-  def applyCdcMerged(ops: DataFrame, dir: String, keyCols: Seq[String],
-                     checkpointDir: Option[String] = None): StreamingQuery =
-    ops.writeStream
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$dir/_checkpoint"))
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        applyBatchMerged(batch, dir, keyCols, epochId)
       }
       .start()
 }

@@ -37,15 +37,7 @@ object StreamDrift {
     * idempotent per-batch delta appends under `stateDir`. */
   def monitor(ev: DataFrame, stateDir: String,
               checkpointDir: Option[String] = None): StreamingQuery =
-    ev.writeStream
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$stateDir/_checkpoint"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          TxnParquet.append(hourlyDeltas(batch), stateDir, batchId)
-        ()
-      }
-      .start()
+    TxnParquet.appendStream(ev, stateDir, checkpointDir)(hourlyDeltas)
 
   /** The ℤ-group fold of every committed delta batch. */
   def foldedCounts(spark: SparkSession, stateDir: String): DataFrame =
@@ -75,15 +67,7 @@ object StreamDrift {
     * [[monitor]]). */
   def monitorComposition(ev: DataFrame, stateDir: String,
                          checkpointDir: Option[String] = None): StreamingQuery =
-    ev.writeStream
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$stateDir/_checkpoint"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          TxnParquet.append(weeklyDeltas(batch), stateDir, batchId)
-        ()
-      }
-      .start()
+    TxnParquet.appendStream(ev, stateDir, checkpointDir)(weeklyDeltas)
 
   /** The folded weekly composition counts ingested so far. */
   def weeklyTypeCounts(spark: SparkSession, stateDir: String): DataFrame =

@@ -31,16 +31,7 @@ object StreamLayout {
                      checkpointDir: Option[String] = None): StreamingQuery = {
     val m = manifest.localCheckpoint() // O(files): pin once, reuse per epoch
     val d = dom.localCheckpoint()      // 1 row
-    rows.writeStream
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          TxnParquet.append(
-            Layout.assignToManifest(batch, m, d), outDir, epochId)
-          ()
-        }
-      }
-      .start()
+    TxnParquet.appendStream(rows, outDir, checkpointDir)(
+      Layout.assignToManifest(_, m, d))
   }
 }

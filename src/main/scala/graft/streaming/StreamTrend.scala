@@ -38,15 +38,7 @@ object StreamTrend {
     * frame: idempotent per-batch delta appends under `stateDir`. */
   def monitor(ev: DataFrame, stateDir: String,
               checkpointDir: Option[String] = None): StreamingQuery =
-    ev.writeStream
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$stateDir/_checkpoint"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          TxnParquet.append(dailyDeltas(batch), stateDir, batchId)
-        ()
-      }
-      .start()
+    TxnParquet.appendStream(ev, stateDir, checkpointDir)(dailyDeltas)
 
   /** The ℤ-group fold of every committed delta batch. */
   def foldedDaily(spark: SparkSession, stateDir: String): DataFrame =

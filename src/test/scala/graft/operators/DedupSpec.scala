@@ -111,7 +111,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("xxhash64 fast path keeps the same row set as the md5 path") {
-    val fast = Dedup.firstOccurrence(Dedup.hashedStreamFast(spark, sf))
+    val fast = Dedup.firstOccurrence(
+      Dedup.hashedStream(spark, sf, hasher = graft.functions.Hashing.fast64))
       .select("event_id").collect().map(_.getLong(0)).toSet
     val slow = Dedup.firstOccurrence(hashed)
       .select("event_id").collect().map(_.getLong(0)).toSet

@@ -430,6 +430,27 @@ class TxnParquetSpec extends SparkSpec {
     assert(!f.exists(new org.apache.hadoop.fs.Path(s"$dir/batch=1")))
     assert(TxnParquet.readWithDeletes(spark, dir, Seq("id"))
       .select("id").collect().map(_.getLong(0)).toSeq === Seq(7L))
+    // a torn MERGE attempt must go too, whichever kind then commits
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").collect().map(_.getLong(0)).sorted.toSeq
+    val writers = Seq[(String, (org.apache.spark.sql.DataFrame, String, Long) => Boolean)](
+      "append" -> TxnParquet.append,
+      "appendWithStats" -> ((df, d, id) => TxnParquet.appendWithStats(df, d, id, "id")))
+    writers.foreach { case (name, write) =>
+      val d = freshDir()
+      Seq((9L, "torn")).toDF("id", "v").write.parquet(s"$d/merge=0")
+      assert(write(Seq((7L, "a"), (8L, "b")).toDF("id", "v"), d, 0L), name)
+      assert(ids(TxnParquet.read(spark, d)) === Seq(7L, 8L), name)
+      assert(ids(TxnParquet.readWithDeletes(spark, d, Seq("id"))) === Seq(7L, 8L), name)
+      assert(!f.exists(new org.apache.hadoop.fs.Path(s"$d/merge=0")), name)
+    }
+    val d = freshDir()
+    TxnParquet.append(Seq((7L, "a"), (8L, "b")).toDF("id", "v"), d, 0L)
+    Seq((9L, "torn")).toDF("id", "v").write.parquet(s"$d/merge=1")
+    assert(TxnParquet.appendDeletes(Seq(Tuple1(8L)).toDF("id"), d, 1L))
+    assert(!f.exists(new org.apache.hadoop.fs.Path(s"$d/merge=1")))
+    assert(ids(TxnParquet.read(spark, d)) === Seq(7L, 8L))
+    assert(ids(TxnParquet.readWithDeletes(spark, d, Seq("id"))) === Seq(7L))
   }
 
   test("readAsOfWithDeletes pins the delete-resolved snapshot") {

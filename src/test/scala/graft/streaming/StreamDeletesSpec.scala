@@ -90,7 +90,7 @@ class StreamDeletesSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("scdcm").toString
     val mem = MemoryStream[(Long, String, Long, String)]
-    val q = StreamDeletes.applyCdcMerged(
+    val q = StreamDeletes.applyCdc(
       mem.toDF().toDF("seq", "op", "id", "v"), dir, Seq("id"))
     try {
       mem.addData((1L, "upsert", 1L, "a"), (2L, "upsert", 2L, "b"))
@@ -105,16 +105,15 @@ class StreamDeletesSpec extends SparkSpec {
       assert(view(dir) === Seq(1L -> "a2", 2L -> "b3"))
     } finally q.stop()
     // replay idempotence on the merge path
-    StreamDeletes.applyBatchMerged(
+    StreamDeletes.applyBatch(
       Seq((5L, "upsert", 2L, "b2"),
         (3L, "delete", 1L, null.asInstanceOf[String]))
         .toDF("seq", "op", "id", "v"), dir, Seq("id"), epochId = 1L)
     assert(view(dir) === Seq(1L -> "a2", 2L -> "b3"))
-    // the race applyBatch documents and the merge path CLOSES: simulate
-    // a crash between epoch 3's two commits (delete batch committed,
-    // merge not yet) — the upserted key shows its OLD version, never an
-    // absence (the delete-path writer shows it deleted here)
-    StreamDeletes.applyBatchMerged(
+    // simulate a crash between an epoch's two commits (delete batch
+    // committed, merge not yet) — the upserted key shows its OLD
+    // version, never an absence
+    StreamDeletes.applyBatch(
       Seq((8L, "delete", 1L, null.asInstanceOf[String]))
         .toDF("seq", "op", "id", "v"), dir, Seq("id"), epochId = 3L)
     // epoch 3 half-applied: tombstone for key 1 at id 6 landed; now
