@@ -20,11 +20,11 @@ import java.nio.file.{Files, Paths}
   * Modes (best-of-two each, the Bench discipline):
   *  - agg_direct_{uniform,skewed}:  one-stage groupBy(event_type)
   *  - agg_salted_{uniform,skewed}:  Skew.saltedAggOf's two-stage plan
-  *  - win_sessionize_{uniform,skewed}: the gap-sessionize window chain
-  *    (partitionBy user_id — the family salting CANNOT fix, because
-  *    window semantics need the whole key in one partition; the bench
-  *    measures the hot-partition price so the limit is a number, not
-  *    a claim)
+  *  - win_sessionize_{uniform,skewed}: the one-window gap sessionize
+  *    (Analytics.sessionizeOf, partitionBy user_id — the family salting
+  *    CANNOT fix, because window semantics need the whole key in one
+  *    partition; the bench measures the hot-partition price so the
+  *    limit is a number, not a claim)
   *
   * Also emitted: the fixture's measured hot-key shares (top type share,
   * top user share) so the JSON is self-describing. One JSON line to
@@ -74,22 +74,6 @@ object SkewBench {
         val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
       }.min
 
-    // the gap-sessionize window chain over an arbitrary frame — the
-    // same shape as Analytics.sessionize (flag window + running sum +
-    // per-session rollup), all partitioned by user_id
-    def sessionizeOf(ev: DataFrame): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy("ts_us", "event_id")
-      ev.withColumn("new_sess",
-          when(col("ts_us") - lag("ts_us", 1).over(w) > 1800L * 1000000L ||
-            lag("ts_us", 1).over(w).isNull, 1L).otherwise(0L))
-        .withColumn("session_idx", sum("new_sess").over(
-          w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-        .groupBy("user_id", "session_idx")
-        .agg(count(lit(1)).as("n_events"), min("ts_us").as("start_us"),
-          max("ts_us").as("end_us"))
-    }
-
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     def run(name: String, f: () => Unit): Unit = {
       results(name) = bestOf2(f); System.gc()
@@ -99,7 +83,8 @@ object SkewBench {
         () => { graft.operators.Skew.directAggOf(ev).count(); () })
       run(s"agg_salted_$tag",
         () => { graft.operators.Skew.saltedAggOf(ev).count(); () })
-      run(s"win_sessionize_$tag", () => { sessionizeOf(ev).count(); () })
+      run(s"win_sessionize_$tag",
+        () => { graft.operators.Analytics.sessionizeOf(ev).count(); () })
       // the round-15 mitigation: time-segmented local sessions + a
       // session-grain merge — bit-identical output, hot user spread
       // over its active segments instead of one task

@@ -448,8 +448,9 @@ object Substrate {
   val apprecall = decl("apprecall", Embeddings,
       (Similarity.TopK, Similarity.NumQueries)) {
     case (spark, dir, (k, nQueries)) =>
-      import Similarity.{appendToIndex, dropScratchDir, saveIndexOf, scratchIndexDir,
-        searchSavedIvfKmeans, searchSavedLsh, searchSavedSq, searchSavedWhitened}
+      import Similarity.{appendToIndex, dropScratchDir, recallRow, saveIndexOf,
+        scratchIndexDir, searchSavedIvfKmeans, searchSavedLsh, searchSavedSq,
+        searchSavedWhitened}
       val v = vecs(spark, dir)
       // scratch index under a hadoop-compatible path (conf-overridable,
       // warehouse-dir default) — NOT a driver-local temp dir, which
@@ -458,21 +459,15 @@ object Substrate {
       saveIndexOf(v.filter(col("vec_id") % 2 === 0), idx)
       appendToIndex(spark, idx, v.filter(col("vec_id") % 2 =!= 0))
       val base = brute(spark, dir, (k, nQueries)).select("q_id", "vec_id")
-      def row(name: String, tk: DataFrame): DataFrame =
-        tk.select("q_id", "vec_id")
-          .join(base, Seq("q_id", "vec_id"), "left_semi")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(name).as("variant"), col("n_hits"),
-            graft.functions.Hashing.ratio4(col("n_hits"),
-              lit(k.toLong * nQueries)).as("recall"))
-      val out =
-        row("saved_ivf_kmeans", searchSavedIvfKmeans(spark, dir, idx, k, nQueries))
-          .unionByName(row("saved_lsh", searchSavedLsh(spark, dir, idx, k, nQueries)))
-          .unionByName(row("saved_sq", searchSavedSq(spark, dir, idx, k, nQueries)))
-          .unionByName(
-            row("saved_whitened", searchSavedWhitened(spark, dir, idx, k, nQueries)))
-          .orderBy("variant")
-          .localCheckpoint() // eager 4-row frame — the scratch index is now dead
+      val out = Seq(
+          "saved_ivf_kmeans" -> searchSavedIvfKmeans(spark, dir, idx, k, nQueries),
+          "saved_lsh" -> searchSavedLsh(spark, dir, idx, k, nQueries),
+          "saved_sq" -> searchSavedSq(spark, dir, idx, k, nQueries),
+          "saved_whitened" -> searchSavedWhitened(spark, dir, idx, k, nQueries))
+        .map { case (name, tk) => recallRow(name, tk, base, k, nQueries) }
+        .reduceLeft(_ unionByName _)
+        .orderBy("variant")
+        .localCheckpoint() // eager 4-row frame — the scratch index is now dead
       dropScratchDir(spark, idx)
       out
   }

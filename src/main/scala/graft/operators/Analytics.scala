@@ -207,13 +207,19 @@ object Analytics {
     * sessionize and the co-occurrence query (one window pipeline, one
     * user_id shuffle). */
   def sessionIndexed(spark: SparkSession, dir: String,
-                     gapUs: Long = 1800L * 1000000L): DataFrame = {
+                     gapUs: Long = 1800L * 1000000L): DataFrame =
+    sessionIndexedOf(Dedup.eventsUs(spark, dir), gapUs)
+
+  /** [[sessionIndexed]] over any canonical events frame (user_id,
+    * ts_us, event_id, …): a new session starts at a user's first event
+    * and after every gap > `gapUs`; session_idx is the running count of
+    * starts in (ts_us, event_id) order. */
+  def sessionIndexedOf(ev: DataFrame, gapUs: Long): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
     val newSess = when(
       lag("ts_us", 1).over(byUser).isNull ||
       col("ts_us") - lag("ts_us", 1).over(byUser) > gapUs, 1).otherwise(0)
-    Dedup.eventsUs(spark, dir)
-      .withColumn("new_sess", newSess)
+    ev.withColumn("new_sess", newSess)
       .withColumn("session_idx",
         sum("new_sess").over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
   }
@@ -221,15 +227,19 @@ object Analytics {
   /** #24: gap-based sessionization (30 min) per user, pure window
     * functions — one shuffle on user_id. */
   def sessionize(spark: SparkSession, dir: String,
-                 gapUs: Long = 1800L * 1000000L): DataFrame = {
-    sessionIndexed(spark, dir, gapUs)
+                 gapUs: Long = 1800L * 1000000L): DataFrame =
+    sessionizeOf(Dedup.eventsUs(spark, dir), gapUs)
+
+  /** [[sessionize]] over any canonical events frame — the one-window
+    * plan the skew split ([[Skew.splitSessionizeOf]]) must equal. */
+  def sessionizeOf(ev: DataFrame, gapUs: Long = 1800L * 1000000L): DataFrame =
+    sessionIndexedOf(ev, gapUs)
       .groupBy("user_id", "session_idx")
       .agg(count(lit(1)).as("n_events"),
            min("ts_us").as("start_us"),
            max("ts_us").as("end_us"),
            money2(sum(dec(col("value")))).as("sum_value"))
       .orderBy("user_id", "session_idx")
-  }
 
   /** Running totals + moving window per user — everything is exact
     * integer cents: the moving average is exported as its (sum, count)

@@ -18,6 +18,9 @@ import org.apache.spark.sql.functions._
   * so cost is O(queries × corpus) — embarrassingly parallel over the
   * corpus). Random-hyperplane LSH bucketing is the 100 TB path: one
   * shuffle on (band, bucket), candidates only within buckets.
+  *
+  * Every ranked search ends in [[topK]], which states the ranking
+  * contract the oracle replays and the recall panels rely on.
   */
 object Similarity {
 
@@ -104,6 +107,31 @@ object Similarity {
   private[graft] def vecs(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding").as("e"))
       .spread
+
+  /** Per-query order of a scored (q_id, vec_id, `score`) frame: score
+    * descending, then vec_id ascending. */
+  private def byScore(score: String) =
+    Window.partitionBy("q_id").orderBy(col(score).desc, col("vec_id"))
+
+  /** THE ranking contract of every ANN search: per query the self match
+    * is dropped, candidates are ordered by [[byScore]] (score desc, then
+    * vec_id asc — the oracle's `row_number() OVER (PARTITION BY q_id
+    * ORDER BY <score> DESC, vec_id)`), and `rank ≤ k` is kept. Ranks are
+    * row numbers, so for any k′ ≤ k the `rank ≤ k′` rows of a top-k are
+    * exactly the top-k′ — the prefix property [[recallReport]] (one wide
+    * SQ scan serves the k and k·factor rows) and [[recallAtK]] read.
+    * Output: (q_id, rank, vec_id, `score`) ordered by (q_id, rank). */
+  private[graft] def topK(cand: DataFrame, score: String, k: Int): DataFrame =
+    cand.filter(col("vec_id") =!= col("q_id"))
+      .withColumn("rank", row_number().over(byScore(score)).cast("long"))
+      .filter(col("rank") <= k)
+      .select("q_id", "rank", "vec_id", score)
+      .orderBy("q_id", "rank")
+
+  /** The probe set: the first `nQueries` vectors as (q_id, qe). */
+  private def queryVecs(v: DataFrame, nQueries: Int): DataFrame =
+    v.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("q_id"), col("e").as("qe"))
 
   /** Per-(vec, band) LSH bucket id from `planesPerBand` plane signs —
     * fused native expression with precomputed sign tables (the HOF
@@ -245,16 +273,8 @@ object Similarity {
     require(nQueries <= 1000,
       s"bruteTopK is the exact baseline for small query sets; got nQueries=$nQueries " +
         "(use lshTopK / ivfKmeansTopK for large query sets)")
-    val q = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("e").as("qe"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    q.crossJoin(v)
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosine("qe", "e"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "cos")
-      .orderBy("q_id", "rank")
+    topK(queryVecs(v, nQueries).crossJoin(v)
+      .withColumn("cos", cosine("qe", "e")), "cos", k)
   }
 
   /** The persisted RDD behind a localCheckpointed frame — what a
@@ -285,14 +305,7 @@ object Similarity {
       .select(col("vec_id"), col("m.c_id").as("cell"), col("m.e").as("e"))
     val q = assign.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("cell"), col("e").as("qe"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    q.join(assign, "cell")
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosine("qe", "e"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "cos")
-      .orderBy("q_id", "rank")
+    topK(q.join(assign, "cell").withColumn("cos", cosine("qe", "e")), "cos", k)
   }
 
   /** `ann_ivf_cell_profile`: the IVF twin of the LSH bucket profile
@@ -360,6 +373,19 @@ object Similarity {
       .agg(min(struct((-col("cs")).as("ncs"), col("c_id"), col("e"))).as("m"))
       .select(col("vec_id"), col("m.c_id").as("cell"), col("m.e").as("e"))
 
+  /** Hard assignment for the cluster panels: [[argmaxCellOf]]'s rule
+    * without `e` in the struct (the panels never read the vector, and
+    * carrying it would grow their aggregation buffers). Output
+    * (vec_id, cluster, cs) with the raw assignment cosine cs = -ncs
+    * (negation is exact). */
+  private def nearestCentroid(v: DataFrame, cent: DataFrame): DataFrame =
+    v.crossJoin(broadcast(cent))
+      .withColumn("cs",
+        graft.plans.VectorExpressions.mixedCosine(col("e"), col("ce")))
+      .groupBy("vec_id")
+      .agg(min(struct((-col("cs")).as("ncs"), col("c_id"))).as("m"))
+      .select(col("vec_id"), col("m.c_id").as("cluster"), (-col("m.ncs")).as("cs"))
+
   /** Lloyd-trained centroids over a (vec_id, e) corpus — deterministic
     * and cluster-size independent (see ivfKmeansTopK). Shared by IVF
     * search and corpus clustering. */
@@ -409,20 +435,13 @@ object Similarity {
     * vectors themselves beyond the partial-aggregated argmax. */
   def clusterKmeans(spark: SparkSession, dir: String, nCentroids: Int = 8,
                     iters: Int = 2): DataFrame = {
-    val v = vecs(spark, dir)
-    val cent = Substrate.cent(spark, dir, (nCentroids, iters))
-    v.crossJoin(broadcast(cent))
-      .withColumn("cs",
-        graft.plans.VectorExpressions.mixedCosine(col("e"), col("ce")))
-      .groupBy("vec_id")
-      .agg(min(struct((-col("cs")).as("ncs"), col("c_id"))).as("m"))
+    nearestCentroid(vecs(spark, dir), Substrate.cent(spark, dir, (nCentroids, iters)))
       // c_cos is presentational: the raw double depends on the
       // micro-unit-quantized centroid components (round(x·10⁶) lift),
       // so the export follows the suite's round-4 discipline. The argmax
       // itself uses the raw cosine (assignment ties are structural,
       // not rounding-induced; oracle-pinned via ann_ivf_kmeans).
-      .select(col("vec_id"), col("m.c_id").as("cluster"),
-        round(-col("m.ncs"), 4).as("c_cos"))
+      .select(col("vec_id"), col("cluster"), round(col("cs"), 4).as("c_cos"))
       .orderBy("vec_id")
   }
 
@@ -446,15 +465,9 @@ object Similarity {
   def clusterBalance(spark: SparkSession, dir: String, nCentroids: Int = 8,
                      iters: Int = 2): DataFrame = {
     import graft.functions.Hashing.{halfUpDiv, ratio4}
-    val v = vecs(spark, dir)
-    val cent = Substrate.cent(spark, dir, (nCentroids, iters))
-    val assigned = v.crossJoin(broadcast(cent))
-      .withColumn("cs",
-        graft.plans.VectorExpressions.mixedCosine(col("e"), col("ce")))
-      .groupBy("vec_id")
-      .agg(min(struct((-col("cs")).as("ncs"), col("c_id"))).as("m"))
-      .select(col("m.c_id").as("cluster"),
-        expr("cast(round(-m.ncs * 1000000.0D) as bigint)").as("cos_u6"))
+    val assigned = nearestCentroid(vecs(spark, dir),
+        Substrate.cent(spark, dir, (nCentroids, iters)))
+      .select(col("cluster"), expr("cast(round(cs * 1000000.0D) as bigint)").as("cos_u6"))
     val tot = assigned.agg(count(lit(1)).as("tv"))
     assigned.groupBy("cluster")
       .agg(count(lit(1)).as("n_vecs"),
@@ -556,25 +569,24 @@ object Similarity {
   private[graft] def ivfKmeansSearch(v: DataFrame, cent: DataFrame,
                                      members: DataFrame, k: Int,
                                      nQueries: Int, nprobe: Int): DataFrame = {
-    // probe ranking needs top-`nprobe` cells — a window, but only over
-    // the nQueries × nCentroids candidate rows, never the corpus
+    val q = probeCells(v, cent, nQueries, nprobe)
+      .join(v.select(col("vec_id").as("q_id"), col("e").as("qe")), "q_id")
+    topK(q.join(members, "cell").withColumn("cos", cosine("qe", "e")), "cos", k)
+  }
+
+  /** The `nprobe` cells each probe-set query searches, as (q_id, cell):
+    * its nearest centroids by (cs desc, c_id asc) — a window, but only
+    * over the nQueries × nCentroids candidate rows, never the corpus. */
+  private def probeCells(v: DataFrame, cent: DataFrame,
+                         nQueries: Int, nprobe: Int): DataFrame = {
     val wq = Window.partitionBy("vec_id").orderBy(col("cs").desc, col("c_id"))
-    val q = v.filter(col("vec_id") < nQueries)
+    v.filter(col("vec_id") < nQueries)
       .crossJoin(broadcast(cent))
       .withColumn("cs",
         graft.plans.VectorExpressions.mixedCosine(col("e"), col("ce")))
       .withColumn("rn", row_number().over(wq))
       .filter(col("rn") <= nprobe)
       .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
-      .join(v.select(col("vec_id").as("q_id"), col("e").as("qe")), "q_id")
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    q.join(members, "cell")
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosine("qe", "e"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "cos")
-      .orderBy("q_id", "rank")
   }
 
   /** Boundary-closeness gate for [[ivfReplicatedTopK]]: a vector is
@@ -627,14 +639,7 @@ object Similarity {
     val q = broadcast(
       argmaxCellOf(v.filter(col("vec_id") < nQueries), cent)
         .select(col("vec_id").as("q_id"), col("cell"), col("e").as("qe")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    q.join(members, "cell")
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosine("qe", "e"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "cos")
-      .orderBy("q_id", "rank")
+    topK(q.join(members, "cell").withColumn("cos", cosine("qe", "e")), "cos", k)
   }
 
   // ---- Product quantization (ann_pq_topk) ------------------------------
@@ -725,8 +730,7 @@ object Similarity {
 
   /** Query side: exact norm per query vector. */
   private def pqQueries(v: DataFrame, nQueries: Int): DataFrame =
-    v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("e").as("qe"))
+    queryVecs(v, nQueries)
       .withColumn("qn", sqrt(expr(
         "aggregate(zip_with(qe, qe, (x, y) -> cast(x as double) * cast(y as double)), cast(0 as double), (acc, v) -> acc + v)")))
 
@@ -751,17 +755,11 @@ object Similarity {
         broadcast(lut.filter(col("sub") === s)
           .select(col("q_id"), col("code").as(s"c$s"), col("d").as(s"d$s"))),
         if (s == 0 && !hasQid) Seq("c0") else Seq("q_id", s"c$s"))
-    val w = Window.partitionBy("q_id").orderBy(col("approx_cos").desc, col("vec_id"))
-    scored
+    topK(scored
       .join(broadcast(qs.select("q_id", "qn")), "q_id")
-      .filter(col("vec_id") =!= col("q_id"))
       .withColumn("approx_cos",
         (0 until PqSubspaces).map(s => col(s"d$s")).reduceLeft(_ + _) /
-          (col("qn") * col("xn")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "approx_cos")
-      .orderBy("q_id", "rank")
+          (col("qn") * col("xn"))), "approx_cos", k)
   }
 
   def pqTopK(spark: SparkSession, dir: String, k: Int = TopK,
@@ -891,18 +889,10 @@ object Similarity {
                               k: Int, nQueries: Int): DataFrame = {
     require(nQueries <= 1000,
       s"sqTopK scans all codes per query; got nQueries=$nQueries")
-    val xh = sqDecode(codes, st)
-    val q = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("e").as("qe"))
-    val w = Window.partitionBy("q_id").orderBy(col("approx_cos").desc, col("vec_id"))
-    q.crossJoin(xh)
-      .filter(col("vec_id") =!= col("q_id"))
+    topK(queryVecs(v, nQueries).crossJoin(sqDecode(codes, st))
       .withColumn("approx_cos",
-        graft.plans.VectorExpressions.mixedCosine(col("qe"), col("xh")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "approx_cos")
-      .orderBy("q_id", "rank")
+        graft.plans.VectorExpressions.mixedCosine(col("qe"), col("xh"))),
+      "approx_cos", k)
   }
 
   /** Candidate multiplier for the two-stage SQ rerank search. */
@@ -936,20 +926,12 @@ object Similarity {
 
   /** Exact-cosine rerank of any (q_id, vec_id) candidate pool — the
     * stage-2 kernel, factored out so the recall report can feed it the
-    * SAME widened code scan whose rank ≤ k prefix is the one-stage SQ
-    * row (one scan serving two variants). */
+    * SAME widened code scan that serves the one-stage SQ row. */
   private def rerankCandidates(v: DataFrame, cand: DataFrame,
-                               k: Int, nQueries: Int): DataFrame = {
-    val q = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("e").as("qe"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    cand.select("q_id", "vec_id").join(v, "vec_id").join(broadcast(q), "q_id")
-      .withColumn("cos", cosine("qe", "e"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "cos")
-      .orderBy("q_id", "rank")
-  }
+                               k: Int, nQueries: Int): DataFrame =
+    topK(cand.select("q_id", "vec_id").join(v, "vec_id")
+      .join(broadcast(queryVecs(v, nQueries)), "q_id")
+      .withColumn("cos", cosine("qe", "e")), "cos", k)
 
   /** `ann_ivfsq_topk` — IVF×SQ composition, the missing-cell of the
     * pruning/compression matrix (IVF+PQ is its codebook twin): the
@@ -976,26 +958,11 @@ object Similarity {
                           nprobe: Int): DataFrame = {
     val members = membersFull.select("vec_id", "cell")
     val xh = sqDecode(codes, st).join(members, "vec_id")
-    val wq = Window.partitionBy("vec_id").orderBy(col("cs").desc, col("c_id"))
-    val probes = v.filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(cent))
-      .withColumn("cs",
-        graft.plans.VectorExpressions.mixedCosine(col("e"), col("ce")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
-    val q = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("e").as("qe"))
-    val w = Window.partitionBy("q_id").orderBy(col("approx_cos").desc, col("vec_id"))
-    broadcast(probes).join(xh, "cell")
-      .join(broadcast(q), "q_id")
-      .filter(col("vec_id") =!= col("q_id"))
+    topK(broadcast(probeCells(v, cent, nQueries, nprobe)).join(xh, "cell")
+      .join(broadcast(queryVecs(v, nQueries)), "q_id")
       .withColumn("approx_cos",
-        graft.plans.VectorExpressions.mixedCosine(col("qe"), col("xh")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "approx_cos")
-      .orderBy("q_id", "rank")
+        graft.plans.VectorExpressions.mixedCosine(col("qe"), col("xh"))),
+      "approx_cos", k)
   }
 
   /** `embeddings_sq_error`: quantization-health panel for SQ8 — per
@@ -1078,20 +1045,11 @@ object Similarity {
                           k: Int, nQueries: Int, nprobe: Int): DataFrame = {
     val members = membersFull.select("vec_id", "cell")
     val codes = rawCodes.join(members, "vec_id")
-    // top-nprobe cells per query — a window over nQueries × nCentroids
-    // rows only, never the corpus
-    val wq = Window.partitionBy("vec_id").orderBy(col("cs").desc, col("c_id"))
-    val probes = v.filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(cent))
-      .withColumn("cs",
-        graft.plans.VectorExpressions.mixedCosine(col("e"), col("ce")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
     val qs = pqQueries(v, nQueries)
     // cell prune: each query sees only its probed cells' code rows
     // (cells are disjoint, so no (q_id, vec_id) duplicates can arise)
-    val probed = broadcast(probes).join(codes, "cell").drop("cell")
+    val probed = broadcast(probeCells(v, cent, nQueries, nprobe))
+      .join(codes, "cell").drop("cell")
     adcScore(probed, pqLut(qs, cb), qs, k)
   }
 
@@ -1117,22 +1075,15 @@ object Similarity {
     * count, so probe coverage stays one bit-flip deep at any scale). */
   private def lshMultiProbeSearch(v: DataFrame, b0: DataFrame,
                                   candidates: DataFrame,
-                                  k: Int, nQueries: Int,
-                                  ppb: Int = PlanesPerBand): DataFrame = {
+                                  k: Int, nQueries: Int, ppb: Int): DataFrame = {
     val probeCols = col("bucket") +:
       (0 until ppb).map(i => col("bucket").bitwiseXOR(lit(1L << i)))
     val probes = b0.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"),
         explode(array(probeCols: _*)).as("probe"))
       .join(v.select(col("vec_id").as("q_id"), col("e").as("qe")), "q_id")
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    probes.join(candidates, col("probe") === col("bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosine("qe", "e"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "cos")
-      .orderBy("q_id", "rank")
+    topK(probes.join(candidates, col("probe") === col("bucket"))
+      .withColumn("cos", cosine("qe", "e")), "cos", k)
   }
 
   /** Filtered vector search: exact top-k among vectors sharing the
@@ -1149,11 +1100,10 @@ object Similarity {
       .spread
     val q = v.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("e").as("qe"), col("label"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
     q.join(v, "label")
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos", cosine("qe", "e"))
-      .withColumn("rank", row_number().over(w).cast("long"))
+      .withColumn("rank", row_number().over(byScore("cos")).cast("long"))
       .filter(col("rank") <= k)
       .select("q_id", "label", "rank", "vec_id", "cos")
       .orderBy("q_id", "rank")
@@ -1224,9 +1174,9 @@ object Similarity {
     val fSq = Future {
       val st = Substrate.sqst(spark, dir)
       val c = Substrate.sqcodes(spark, dir)
-      // ONE widened code scan serves BOTH SQ variants: its rank ≤ k
-      // prefix IS the one-stage row (row_number prefix property), and
-      // the full pool is the rerank row's candidate set
+      // ONE widened code scan serves BOTH SQ variants (topK's
+      // prefix property gives the one-stage row), and the full pool is
+      // the rerank row's candidate set
       (st, c, artifact(s"sqwide|$k|$nQueries")(
         sqSearch(v, st, c, k * RerankFactor, nQueries)))
     }
@@ -1263,20 +1213,25 @@ object Similarity {
         Future(name -> artifact(s"topk|$k|$nQueries|$name")(
           f().select("q_id", "vec_id")))
       }), Duration.Inf)
-    def row(name: String, tk: DataFrame): DataFrame =
-      tk.join(brute, Seq("q_id", "vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .select(lit(name).as("variant"), col("n_hits"),
-          graft.functions.Hashing.ratio4(col("n_hits"), lit(k.toLong * nQueries))
-            .as("recall"))
-    rows.map { case (n, tk) => row(n, tk) }
+    rows.map { case (n, tk) => recallRow(n, tk, brute, k, nQueries) }
       .reduceLeft(_ unionByName _)
       .orderBy("variant")
   }
 
-  /** The k grid for [[recallAtK]] — prefixes of the shipped top-k
-    * (rank ≤ k is exactly top-k by the row_number prefix property), so
-    * the whole curve reads the already-memoized frames. */
+  /** One recall row (variant, n_hits, recall): the hits of a top-k
+    * frame `tk` in the exact (q_id, vec_id) pairs `base`, over the
+    * k·nQueries slots of a full probe set. */
+  private[graft] def recallRow(name: String, tk: DataFrame, base: DataFrame,
+                               k: Int, nQueries: Int): DataFrame =
+    tk.select("q_id", "vec_id")
+      .join(base, Seq("q_id", "vec_id"), "left_semi")
+      .agg(count(lit(1)).as("n_hits"))
+      .select(lit(name).as("variant"), col("n_hits"),
+        graft.functions.Hashing.ratio4(col("n_hits"), lit(k.toLong * nQueries))
+          .as("recall"))
+
+  /** The k grid for [[recallAtK]] — prefixes of the shipped top-k (see
+    * [[topK]]), so the whole curve reads the already-memoized frames. */
   val RecallKs: Seq[Int] = Seq(1, 3, 5)
 
   /** `ann_recall_at_k`: recall@k curve — the k-axis member of the ANN
@@ -1872,10 +1827,8 @@ object Similarity {
     * (build once, search many). */
   def graphTopKOf(v: DataFrame, edges: DataFrame,
                   k: Int = TopK, nQueries: Int = NumQueries): DataFrame = {
-    val q = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("e").as("qe"))
+    val q = queryVecs(v, nQueries)
     val entries = v.orderBy("vec_id").limit(GraphEntries).select("vec_id", "e")
-    val wq = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
     // Each hop's frontier is localCheckpointed so the iterated plan never
     // grows superlinearly; the PREVIOUS hop's checkpoint blocks are
     // unpersisted as soon as the next hop's checkpoint replaces them
@@ -1905,18 +1858,13 @@ object Similarity {
         .select("q_id", "vec_id", "cos")
       replaceFrontier(frontier.unionByName(nbrs)
         .dropDuplicates("q_id", "vec_id")
-        .withColumn("rnk", row_number().over(wq))
+        .withColumn("rnk", row_number().over(byScore("cos")))
         .filter(col("rnk") <= GraphBeam)
         .select("q_id", "vec_id", "cos"))
     }
     // Materialize the O(k × queries) result eagerly so the final
     // frontier's blocks can be released before returning.
-    val out = frontier.filter(col("vec_id") =!= col("q_id"))
-      .withColumn("rank", row_number().over(wq).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "cos")
-      .orderBy("q_id", "rank")
-      .localCheckpoint()
+    val out = topK(frontier, "cos", k).localCheckpoint()
     frontierBlocks.foreach(r => try r.unpersist(false)
                                 catch { case _: Exception => () })
     out
@@ -2258,15 +2206,10 @@ object Similarity {
   def prototypicality(spark: SparkSession, dir: String, nCentroids: Int = 8,
                       iters: Int = 2): DataFrame = {
     import graft.functions.Hashing.halfUpDiv
-    val v = vecs(spark, dir)
-    val cent = Substrate.cent(spark, dir, (nCentroids, iters))
-    val assigned = v.crossJoin(broadcast(cent))
-      .withColumn("cs",
-        graft.plans.VectorExpressions.mixedCosine(col("e"), col("ce")))
-      .groupBy("vec_id")
-      .agg(min(struct((-col("cs")).as("ncs"), col("c_id"))).as("m"))
-      .select(col("vec_id"), col("m.c_id").as("cluster"),
-        expr("cast(round(-m.ncs * 1000000.0D) as bigint)").as("cos_u6"))
+    val assigned = nearestCentroid(vecs(spark, dir),
+        Substrate.cent(spark, dir, (nCentroids, iters)))
+      .select(col("vec_id"), col("cluster"),
+        expr("cast(round(cs * 1000000.0D) as bigint)").as("cos_u6"))
       .checkpointSer
     // per-cluster mean in exact micro-units (the clusterBalance
     // arithmetic: +1e6 shift keeps halfUpDiv's num ≥ 0 contract)
@@ -2359,13 +2302,6 @@ object Similarity {
     val q = b0.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("bucket"))
       .join(v.select(col("vec_id").as("q_id"), col("e").as("qe")), "q_id")
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    q.join(candidates, "bucket")
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosine("qe", "e"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "cos")
-      .orderBy("q_id", "rank")
+    topK(q.join(candidates, "bucket").withColumn("cos", cosine("qe", "e")), "cos", k)
   }
 }

@@ -246,25 +246,6 @@ object Skew {
   def shouldSplitWindow(skewX4: Double): Boolean =
     skewX4 >= SaltSkewX4Threshold
 
-  /** Direct one-window gap sessionize over any canonical events frame
-    * (the Analytics.sessionize plan, frame-parameterized so the auto
-    * dispatch and the stress spec run both plans on the same input). */
-  def directSessionizeOf(ev: DataFrame,
-                         gapUs: Long = 1800L * 1000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byUser = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    ev.withColumn("new_sess",
-        when(lag("ts_us", 1).over(byUser).isNull ||
-          col("ts_us") - lag("ts_us", 1).over(byUser) > gapUs, 1).otherwise(0))
-      .withColumn("session_idx",
-        sum("new_sess").over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy("user_id", "session_idx")
-      .agg(count(lit(1)).as("n_events"), min("ts_us").as("start_us"),
-        max("ts_us").as("end_us"),
-        money2(sum(dec(col("value")))).as("sum_value"))
-      .orderBy("user_id", "session_idx")
-  }
-
   /** [[shouldSplitWindow]] dispatched for a measured hotness: callers
     * pass the [[userHotness]] panel's skew_x4 and get the plan the
     * decision table prescribes — both plans are bit-identical
@@ -272,7 +253,7 @@ object Skew {
   def sessionizeAutoOf(ev: DataFrame, skewX4: Double,
                        gapUs: Long = 1800L * 1000000L): DataFrame =
     if (shouldSplitWindow(skewX4)) splitSessionizeOf(ev, gapUs)
-    else directSessionizeOf(ev, gapUs)
+    else Analytics.sessionizeOf(ev, gapUs)
 
   /** `events_sessionize_auto`: the window decision wired END TO END —
     * reads its own per-user hotness panel (a 1-row frame, collected

@@ -307,6 +307,18 @@ class SimilaritySpec extends SparkSpec {
       val cs = sorted.map(_.getAs[Double]("cos"))
       assert(cs.zip(cs.tail).forall { case (a, b) => a >= b })
     }
+    // exact score ties break by ascending vec_id: ids 3 and 1 copy the
+    // query (cos 1, tied with the dropped self match), ids 5 and 2 share
+    // the next score, id 4 points away
+    import spark.implicits._
+    def vec(x: Float, y: Float) =
+      Array.tabulate(Similarity.Dim)(i => if (i == 0) x else if (i == 1) y else 0f)
+    val tied = Seq(0L -> vec(1f, 1f), 3L -> vec(1f, 1f), 1L -> vec(1f, 1f),
+        5L -> vec(1f, 0f), 2L -> vec(1f, 0f), 4L -> vec(-1f, 0f))
+      .toDF("vec_id", "e")
+    val tk = Similarity.bruteTopKOf(tied, k = 3, nQueries = 1).collect()
+    assert(tk.map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("rank"),
+      r.getAs[Long]("vec_id"))).toSeq === Seq((0L, 1L, 1L), (0L, 2L, 3L), (0L, 3L, 2L)))
   }
 
   test("lshTopK neighbors share the query's band-0 bucket") {
