@@ -5,8 +5,8 @@ import java.net.URI
 import java.nio.file.{FileSystemException, FileSystems, Files, LinkOption}
 import java.nio.file.attribute.{FileTime, GroupPrincipal, UserPrincipal}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSLinkResolver, FileStatus,
-  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FSLinkResolver,
+  FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -108,8 +108,17 @@ class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem) {
   * Spark's checkpoint WAL and HDFS-backed state store write through.
   * Hadoop's `LocalFs`, over [[NioRawLocalFileSystem]] instead of
   * `RawLocalFileSystem`; like `LocalFs` it ignores `uri` and serves
-  * `file:///`. */
-class NioLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new NioRawLocalFs(conf))
+  * `file:///`.
+  *
+  * One change from `LocalFs`: `open(f)` verifies the `.crc` like
+  * `open(f, bufferSize)`. `ChecksumFs` inherits the one-argument form
+  * from `FilterFs`, which opens the raw file unchecked, and that is
+  * the form Spark reads offset logs, commit logs and state-store files
+  * with. */
+class NioLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new NioRawLocalFs(conf)) {
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 /** Hadoop's `RawLocalFs` (whose constructors are package-private), with
   * its four overrides, delegating to [[NioRawLocalFileSystem]]. */

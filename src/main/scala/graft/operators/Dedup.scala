@@ -3,7 +3,7 @@ package graft.operators
 import graft.Partitioning._
 import graft.Tables
 import graft.functions.Hashing._
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,7 +19,13 @@ import org.apache.spark.sql.functions._
   *    do not refresh the TTL (deduplication.ts:77,117-121) → greedy
   *    chain per digest;
   *  - on startup, state is warmed from recent prior output
-  *    (/root/reference/src/cacheBuilding.ts) → anti-join vs history.
+  *    (the reference's cacheBuilding.ts) → [[bootstrap]], one
+  *    aggregate over history and fresh rows (streams warm through
+  *    streaming.Origin.warmDigestsFromOutput instead).
+  *
+  * The batch TTL chain has one implementation, the Catalyst operator
+  * behind [[chainNative]]; [[IncrementalDedup]] runs the same operator
+  * against a state table.
   *
   * Scale: every operator here shuffles exactly once, on the digest —
   * digests are uniform hashes, so hash partitioning is skew-free by
@@ -111,60 +117,31 @@ object Dedup {
     * NOT refresh the TTL — deduplication.ts only calls cache.add on the
     * not-seen branch).
     *
-    * Plan: one hash shuffle on digest + in-partition sort, then a
-    * streaming run-scan with O(1) state per key — no per-group
-    * materialization, so a degenerate hot digest cannot OOM an executor.
-    */
-  def chain(df: DataFrame, windowUs: Long = WindowUs): DataFrame =
-    chainScan(df.select((evCols :+ "digest").map(col): _*), windowUs)
+    * Plan: the keep rule is a first-class Catalyst operator
+    * (plans.ChainDedupPlan/Exec) — one hash shuffle on digest +
+    * in-partition sort, inserted by Catalyst from the operator's
+    * required distribution/ordering, then a streaming run-scan with
+    * O(1) state per key inside whole-stage codegen: no per-group
+    * materialization (a degenerate hot digest cannot OOM an executor)
+    * and no object ser/de boundary. Needs GraftExtensions registered
+    * (GraftSession does this). */
+  def chainNative(df: DataFrame, windowUs: Long = WindowUs): DataFrame =
+    keptRows(df.select((evCols :+ "digest").map(col): _*), windowUs, floor = None)
       .orderBy("event_id")
 
-  /** The greedy keep rule as a row scan, shared by [[chain]] and
-    * [[IncrementalDedup.processBatch]]: repartition on digest, sort by
-    * (digest, ts_us, event_id), then keep each row at or after the
-    * group's last kept time + `windowUs`. `floor` names an optional
-    * column carrying the digest's last kept time from earlier batches:
-    * when non-null it seeds the group's last kept time, otherwise the
-    * group's first row is kept. Returns the kept rows of `df`. */
-  private[operators] def chainScan(df: DataFrame, windowUs: Long,
-                                   floor: Option[String] = None): DataFrame = {
-    val schema = df.schema
-    val iDigest = schema.fieldIndex("digest")
-    val iTs = schema.fieldIndex("ts_us")
-    val iFloor = floor.fold(-1)(schema.fieldIndex)
-    df.repartition(col("digest"))
-      .sortWithinPartitions("digest", "ts_us", "event_id")
-      .mapPartitions { it =>
-        var cur = 0L; var last = 0L; var init = false; var hasLast = false
-        it.filter { r =>
-          val d = r.getLong(iDigest); val t = r.getLong(iTs)
-          if (!init || d != cur) {
-            init = true; cur = d
-            hasLast = iFloor >= 0 && !r.isNullAt(iFloor)
-            if (hasLast) last = r.getLong(iFloor)
-          }
-          val keep = !hasLast || t >= last + windowUs
-          if (keep) { last = t; hasLast = true }
-          keep
-        }
-      }(Encoders.row(schema))
-  }
-
-  /** #4 (native): the same chain semantics as a first-class Catalyst
-    * operator (plans.ChainDedupPlan/Exec) — no object ser/de boundary;
-    * Catalyst inserts the digest exchange + sort from the operator's
-    * required distribution/ordering. Needs GraftExtensions registered
-    * (GraftSession does this). */
-  def chainNative(df: DataFrame, windowUs: Long = WindowUs): DataFrame = {
+  /** The kept rows of `df` under the chain keep rule, unordered, shared
+    * by [[chainNative]] and [[IncrementalDedup.processBatch]]. `floor`
+    * names an optional column carrying the digest's last kept time from
+    * earlier batches: when non-null it seeds the digest's run, otherwise
+    * the run's first row is kept. */
+  private[operators] def keptRows(df: DataFrame, windowUs: Long,
+                                  floor: Option[String]): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
-    val projected = df.select((evCols :+ "digest").map(col): _*)
-    val plan = Bridge.logicalPlan(projected)
-    val out = plan.output
-    def attr(n: String) = out.find(_.name == n).get
+    val plan = Bridge.logicalPlan(df)
+    def attr(n: String) = plan.output.find(_.name == n).get
     Bridge.ofRows(df.sparkSession,
       graft.plans.ChainDedupPlan(attr("digest"), attr("ts_us"),
-        Seq(attr("event_id")), windowUs, plan))
-      .orderBy("event_id")
+        Seq(attr("event_id")), windowUs, floor.map(attr), plan))
   }
 
   /** #5: warm-up bootstrap (cacheBuilding.ts buildUpCache): the dedup
@@ -200,56 +177,6 @@ object Dedup {
         (col("first_pre_ts").isNull ||
          col("first_pre_ts") < lit(cutoffUs - cacheWindowUs)))
       .select(evCols.map(c => col(s"ff.$c").as(c)) :+ col("digest"): _*)
-      .orderBy("event_id")
-  }
-
-  /** Bootstrap with a broadcast Bloom prefilter — the warm-up shape for
-    * the deployment where history (the output topic read-back) and the
-    * fresh stream are SEPARATE tables and the anti-join would shuffle
-    * the whole fresh stream.
-    *
-    * A Bloom filter over the history digests is built once (one
-    * aggregation — the filter is a few MB for billions of digests at
-    * 1% fpp) and broadcast; fresh first-occurrences whose digest the
-    * filter rules out (the overwhelming majority in steady state) are
-    * forwarded WITHOUT touching the join, and only the "maybe" fraction
-    * (true replays + fpp false positives) pays the exact anti-join.
-    * Output is bit-identical to `bootstrap` — Bloom "no" is
-    * definitive, and every "maybe" is re-checked exactly.
-    *
-    * The membership probe is a driver-built filter behind a UDF: the
-    * public-API analog of Spark's own runtime bloom pruning, which is
-    * not exposed for cross-table reuse. The UDF sits on the
-    * already-aggregated first-occurrence rows, not the raw stream. */
-  def bootstrapBloom(df: DataFrame, cutoffUs: Long = BootstrapCutoffUs,
-                     cacheWindowUs: Long = CacheWindowUs,
-                     fpp: Double = 0.01): DataFrame = {
-    val raw = df.filter(col("ts_us") >= cutoffUs)
-    if (cacheWindowUs <= 0) return firstOccurrence(raw)
-    // history = digests first forwarded within the cache window, i.e.
-    // first occurrence overall landing in [cutoff - W, cutoff).
-    // localCheckpoint: the digest list is consumed three times (count,
-    // bloom build, anti-join) — materialize the aggregation once
-    // instead of replanning it per consumer.
-    val hist = df.filter(col("ts_us") < cutoffUs)
-      .groupBy("digest").agg(min("ts_us").as("first_ts"))
-      .filter(col("first_ts") >= lit(cutoffUs - cacheWindowUs))
-      .select("digest")
-      .checkpointSer
-    val n = math.max(1L, hist.count())
-    val bloom = hist.stat.bloomFilter("digest", n, fpp)
-    val mightContain = udf((d: Long) => bloom.mightContainLong(d))
-    // Bloom membership is a pure function of the digest, so classifying
-    // BEFORE the first-occurrence window partitions the fresh stream
-    // into disjoint digest sets — per-digest dedup commutes with the
-    // split, each row crosses exactly one window shuffle, and only the
-    // maybe fraction (true replays + fpp) ever reaches the anti-join.
-    // The definitely-new branch needs no join at all: Bloom "no" is
-    // definitive. (unionByName: the USING-join reorders columns.)
-    firstOccurrence(raw.filter(!mightContain(col("digest"))))
-      .unionByName(
-        firstOccurrence(raw.filter(mightContain(col("digest"))))
-          .join(hist, Seq("digest"), "left_anti"))
       .orderBy("event_id")
   }
 

@@ -11,6 +11,10 @@ import org.apache.spark.sql.functions._
   * plus the updated state table. Restart/warm-up is free — the state
   * table IS the cache the reference rebuilds from its output topic.
   *
+  * The keep rule is [[Dedup.chainNative]]'s operator, seeded per digest
+  * by the state table's last kept time (its `floor`): a digest absent
+  * from the state keeps its first row, as in a single pass.
+  *
   * Scale: one shuffle on the digest joins batch ⋈ state; state updates
   * are a groupBy-max merge. State size = distinct digests, prunable by
   * retention (drop entries older than the TTL window — they can never
@@ -33,7 +37,7 @@ object IncrementalDedup {
     val withFloor = batch.select(cols.map(col): _*)
       .join(state.select(col("digest"), col("last_kept_us").as("__floor")),
         Seq("digest"), "left")
-    val kept = Dedup.chainScan(withFloor, windowUs, floor = Some("__floor"))
+    val kept = Dedup.keptRows(withFloor, windowUs, floor = Some("__floor"))
       .drop("__floor")
     val newState = state
       .unionByName(kept.groupBy("digest").agg(max("ts_us").as("last_kept_us")))

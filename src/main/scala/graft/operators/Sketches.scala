@@ -372,9 +372,9 @@ object Sketches {
 
   /** `dedup_bloom_accuracy`: the Bloom-filter member of the
     * sketch-accuracy family (theta #257 / KMV #301 / Count-Min #329 —
-    * now the dedup prefilter gets the same measured-not-asserted
+    * now a dedup prefilter gets the same measured-not-asserted
     * grading). Build side: the distinct digests of the pre-cutoff
-    * history (the [[Dedup.bootstrapBloom]] substrate, digest definition
+    * history (the history side of [[Dedup.bootstrap]], digest definition
     * shared via [[Dedup.hashedStream]]); probe side: every distinct
     * post-cutoff digest. Per (m, k) the panel releases the observed
     * false-positive rate in ppm, the fill ratio, AND the

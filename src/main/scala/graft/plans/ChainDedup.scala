@@ -16,15 +16,23 @@ import org.apache.spark.sql.SparkSessionExtensions
   * (ts, tiebreak) order, then greedily every row ≥ lastKept + window;
   * duplicates do not refresh the TTL.
   *
-  * Compared to the Dataset `mapPartitions` formulation this avoids the
-  * DeserializeToObject/SerializeFromObject boundary entirely: the exec
-  * node filters raw `InternalRow`s in a streaming pass with O(1) state.
-  * Catalyst inserts the required hash exchange + in-partition sort via
-  * requiredChildDistribution/Ordering — at cluster scale that is one
-  * shuffle on the uniform digest key, identical to any groupBy.
+  * `floor`, when given, names a column carrying the digest's last kept
+  * time from earlier batches (a state table joined on the digest, see
+  * operators.IncrementalDedup): a non-null floor seeds the run, so its
+  * first row is kept only at or after floor + window; a null floor
+  * keeps the run's first row as without one.
+  *
+  * This is graft's one batch form of the keep rule (the streaming form
+  * is StreamDedup's state function). The exec node filters raw
+  * `InternalRow`s in a streaming pass with O(1) state, with no object
+  * ser/de boundary. Catalyst inserts the required hash exchange +
+  * in-partition sort via requiredChildDistribution/Ordering — at
+  * cluster scale that is one shuffle on the uniform digest key,
+  * identical to any groupBy.
   */
 case class ChainDedupPlan(digest: Attribute, ts: Attribute,
                           tiebreak: Seq[Attribute], windowUs: Long,
+                          floor: Option[Attribute],
                           child: LogicalPlan) extends UnaryNode {
   override def output: Seq[Attribute] = child.output
   override protected def withNewChildInternal(c: LogicalPlan): ChainDedupPlan =
@@ -33,6 +41,7 @@ case class ChainDedupPlan(digest: Attribute, ts: Attribute,
 
 case class ChainDedupExec(digest: Attribute, ts: Attribute,
                           tiebreak: Seq[Attribute], windowUs: Long,
+                          floor: Option[Attribute],
                           child: SparkPlan) extends UnaryExecNode with CodegenSupport {
   override def output: Seq[Attribute] = child.output
   override def outputPartitioning: Partitioning = child.outputPartitioning
@@ -43,6 +52,8 @@ case class ChainDedupExec(digest: Attribute, ts: Attribute,
 
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
     Seq((digest +: ts +: tiebreak).map(a => SortOrder(a, Ascending)))
+
+  private def index(a: Attribute): Int = child.output.indexWhere(_.exprId == a.exprId)
 
   // ---- whole-stage codegen: the greedy-chain filter fuses into the
   // ---- sorted child's consume loop; state is three generated-class
@@ -55,20 +66,28 @@ case class ChainDedupExec(digest: Attribute, ts: Attribute,
     child.asInstanceOf[CodegenSupport].produce(ctx, this)
 
   override def doConsume(ctx: CodegenContext, input: Seq[ExprCode], row: ExprCode): String = {
-    val digestIdx = child.output.indexWhere(_.exprId == digest.exprId)
-    val tsIdx = child.output.indexWhere(_.exprId == ts.exprId)
     val cur = ctx.addMutableState(CodeGenerator.JAVA_LONG, "chainCur")
     val last = ctx.addMutableState(CodeGenerator.JAVA_LONG, "chainLast")
     val init = ctx.addMutableState(CodeGenerator.JAVA_BOOLEAN, "chainInit")
     val keep = ctx.freshName("chainKeep")
     val evalAll = evaluateVariables(input)
-    val d = input(digestIdx).value
-    val t = input(tsIdx).value
+    val d = input(index(digest)).value
+    val t = input(index(ts)).value
+    // a run's first row: kept, unless a non-null floor says otherwise
+    val first = floor.map(a => input(index(a))) match {
+      case None => s"$last = $t; $keep = true;"
+      case Some(f) =>
+        s"""if (${f.isNull} || $t >= ${f.value} + ${windowUs}L) {
+           |    $last = $t; $keep = true;
+           |  } else {
+           |    $last = ${f.value};
+           |  }""".stripMargin
+    }
     s"""
        |$evalAll
        |boolean $keep = false;
        |if (!$init || $d != $cur) {
-       |  $init = true; $cur = $d; $last = $t; $keep = true;
+       |  $init = true; $cur = $d; $first
        |} else if ($t >= $last + ${windowUs}L) {
        |  $last = $t; $keep = true;
        |}
@@ -79,8 +98,9 @@ case class ChainDedupExec(digest: Attribute, ts: Attribute,
   }
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val digestIdx = child.output.indexWhere(_.exprId == digest.exprId)
-    val tsIdx = child.output.indexWhere(_.exprId == ts.exprId)
+    val digestIdx = index(digest)
+    val tsIdx = index(ts)
+    val floorIdx = floor.fold(-1)(index)
     val win = windowUs
     child.execute().mapPartitions({ it =>
       // rows arrive clustered by digest and sorted by (digest, ts, ...):
@@ -89,7 +109,12 @@ case class ChainDedupExec(digest: Attribute, ts: Attribute,
       it.filter { row =>
         val d = row.getLong(digestIdx)
         val t = row.getLong(tsIdx)
-        if (!init || d != cur) { init = true; cur = d; last = t; true }
+        if (!init || d != cur) {
+          init = true; cur = d
+          if (floorIdx < 0 || row.isNullAt(floorIdx) || t >= row.getLong(floorIdx) + win) {
+            last = t; true
+          } else { last = row.getLong(floorIdx); false }
+        }
         else if (t >= last + win) { last = t; true }
         else false
       }
@@ -102,8 +127,8 @@ case class ChainDedupExec(digest: Attribute, ts: Attribute,
 
 object ChainDedupStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case ChainDedupPlan(d, t, tb, w, child) =>
-      ChainDedupExec(d, t, tb, w, planLater(child)) :: Nil
+    case ChainDedupPlan(d, t, tb, w, f, child) =>
+      ChainDedupExec(d, t, tb, w, f, planLater(child)) :: Nil
     case _ => Nil
   }
 }

@@ -60,17 +60,21 @@ object Origin {
       .otherwise(array().cast("array<long>"))
   }
 
-  /** The cacheBuilding.ts warm-up over prior OUTPUT in envelope shape:
-    * digests parsed from each output row's origin property within the
-    * trailing cache window, with the per-row skip tolerance. Returns
-    * (digest, last_kept_us) — feed to StreamDedup.chain initialState
-    * or use the digest set for a batch anti-join. */
-  def warmDigestsFromOutput(output: DataFrame, cacheWindowUs: Long,
-                            nowUs: Long): DataFrame =
+  /** The cacheBuilding.ts warm-up over prior OUTPUT: digests parsed
+    * from each output row's origin property within the trailing cache
+    * window, with the per-row skip tolerance. `origin` is where the
+    * property sits: by default the envelope shape's `properties` map
+    * ([[withOrigin]]); for the events shape ([[withOriginProp]]) pass
+    * `get_json_object(col("props"), "$.origin")`. Returns
+    * (digest, last_kept_us) — feed to StreamDedup.warmStateFromTable
+    * for a stream's initial state, or use the digest set for a batch
+    * anti-join. */
+  def warmDigestsFromOutput(output: DataFrame, cacheWindowUs: Long, nowUs: Long,
+                            origin: Column = element_at(col("properties"), "origin"))
+      : DataFrame =
     output
       .filter(col("ts_us") >= nowUs - cacheWindowUs)
-      .select(col("ts_us"),
-        explode(originDigests(element_at(col("properties"), "origin"))).as("digest"))
+      .select(col("ts_us"), explode(originDigests(origin)).as("digest"))
       .groupBy("digest")
       .agg(max("ts_us").as("last_kept_us"))
 }

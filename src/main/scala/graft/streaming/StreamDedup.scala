@@ -177,29 +177,16 @@ object StreamDedup extends Serializable {
       sum(when(col("kept"), 1L).otherwise(0L)).as("n_forwarded"),
       sum(when(!col("kept"), 1L).otherwise(0L)).as("n_dropped"))
 
-  /** Bridge from the batch world: seed streaming chain state from an
-    * IncrementalDedup digest-state TABLE (digest, last_kept_us) — a
-    * daily batch job and a streaming job can hand the same dedup state
-    * back and forth. */
+  /** Seed streaming chain state from a digest-state TABLE (digest,
+    * last_kept_us): an IncrementalDedup state table — a daily batch job
+    * and a streaming job can hand the same dedup state back and forth —
+    * or the digests read back out of prior output's `origin` property
+    * by Origin.warmDigestsFromOutput (the cacheBuilding.ts warm-up, e.g.
+    * after losing the checkpoint). */
   def warmStateFromTable(spark: SparkSession, state: org.apache.spark.sql.DataFrame)
       : Dataset[(Long, DigestState)] = {
     import spark.implicits._
     state.select(col("digest").as[Long], col("last_kept_us").as[Long])
-      .map { case (d, t) => (d, DigestState(t)) }
-  }
-
-  /** The cacheBuilding.ts warm-up, literally: recover per-digest chain
-    * state from the deduplicated output already written by a previous
-    * incarnation (e.g. after losing the checkpoint). Reads only rows in
-    * the trailing cache window and keeps the latest kept timestamp per
-    * digest — feed the result to `chain(initialState = …)`. */
-  def warmStateFromOutput(spark: SparkSession, outputPath: String,
-                          cacheWindowUs: Long, nowUs: Long): Dataset[(Long, DigestState)] = {
-    import spark.implicits._
-    spark.read.parquet(outputPath)
-      .filter(col("ts_us") >= nowUs - cacheWindowUs)
-      .groupBy("digest").agg(max("ts_us").as("last_kept"))
-      .select(col("digest").as[Long], col("last_kept").as[Long])
       .map { case (d, t) => (d, DigestState(t)) }
   }
 

@@ -6,8 +6,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import java.util.EnumSet
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileContext, FileStatus, FileSystem,
-  Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FSDataInputStream, FileContext,
+  FileStatus, FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** The `file:` filesystem graft sessions use: wired for both Hadoop
@@ -99,22 +99,24 @@ class LocalFsSpec extends SparkSpec {
     val out = fs.create(viaFs); out.write(bytes); out.close()
     val out2 = fc.create(viaFc, EnumSet.of(CreateFlag.CREATE))
     out2.write(bytes); out2.close()
-    // Read back through FileContext with a buffer size, the one read that
-    // verifies without side effects: `FileContext.open(f)` skips the
-    // checksum, and on a failure the FileSystem API moves the file to a
-    // `bad_files` directory at the top of its mount.
-    def readBack(f: Path) = {
-      val in = fc.open(f, 4096)
+    // Read back through FileContext, which verifies without side effects
+    // (on a failure the FileSystem API moves the file to a `bad_files`
+    // directory at the top of its mount), with and without a buffer
+    // size: Spark's checkpoint file manager reads with `open(f)`.
+    def readBack(open: => FSDataInputStream) = {
+      val in = open
       try { val buf = new Array[Byte](bytes.length); in.readFully(buf); buf }
       finally in.close()
     }
     for (f <- Seq(viaFs, viaFc)) {
       assert(Files.exists(dir.resolve(s".${f.getName}.crc")), f)
-      assert(readBack(f).sameElements(bytes), f)
+      assert(readBack(fc.open(f, 4096)).sameElements(bytes), f)
+      assert(readBack(fc.open(f)).sameElements(bytes), f)
       val raf = new RandomAccessFile(dir.resolve(f.getName).toFile, "rw")
       try { raf.seek(100); val b = raf.read(); raf.seek(100); raf.write(b ^ 0xff) }
       finally raf.close()
-      intercept[ChecksumException](readBack(f))
+      intercept[ChecksumException](readBack(fc.open(f, 4096)))
+      intercept[ChecksumException](readBack(fc.open(f)))
     }
   }
 }

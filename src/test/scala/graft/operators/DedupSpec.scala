@@ -35,7 +35,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("chain matches the ObliviousSet model on every digest group") {
-    val out = Dedup.chain(hashed).collect().map(_.getAs[Long]("event_id")).toSet
+    val out = Dedup.chainNative(hashed).collect().map(_.getAs[Long]("event_id")).toSet
     val expected = hashed.collect()
       .groupBy(_.getAs[Long]("digest"))
       .values.flatMap { rs =>
@@ -47,7 +47,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("chain: +37s replica dropped, +2h replica kept") {
-    val out = Dedup.chain(hashed)
+    val out = Dedup.chainNative(hashed)
     val ids = out.select("event_id").collect().map(_.getLong(0))
     val orig = ids.count(_ < 10000000L)
     val rep2 = ids.count(id => id >= 10000000L && id < 20000000L)
@@ -90,16 +90,6 @@ class DedupSpec extends SparkSpec {
         hashed.filter(col("ts_us") >= Dedup.BootstrapCutoffUs))
       .select("event_id").collect().map(_.getLong(0)).toSet
     assert(out === plain)
-  }
-
-  test("bloom-prefiltered bootstrap is bit-identical to the plain bootstrap") {
-    val plain = Dedup.bootstrap(hashed).collect().map(_.toSeq).toSeq
-    val bloom = Dedup.bootstrapBloom(hashed).collect().map(_.toSeq).toSeq
-    assert(bloom == plain)
-    // an aggressive fpp (most fresh rows flagged "maybe") must not
-    // change the answer — every maybe is re-checked exactly
-    val coarse = Dedup.bootstrapBloom(hashed, fpp = 0.5).collect().map(_.toSeq).toSeq
-    assert(coarse == plain)
   }
 
   test("counters: forwarded + dropped equals input size") {

@@ -27,11 +27,11 @@ class IncrementalDedupSpec extends SparkSpec {
       state = s.localCheckpoint(true)
       k.select("event_id").collect().map(_.getLong(0)).toSet
     }.reduce(_ ++ _)
-    val want = Dedup.chain(hashed).select("event_id")
+    val want = Dedup.chainNative(hashed).select("event_id")
       .collect().map(_.getLong(0)).toSet
     assert(kept === want)
     // the final state is exactly the last kept timestamp per digest
-    val wantState = Dedup.chain(hashed).groupBy("digest")
+    val wantState = Dedup.chainNative(hashed).groupBy("digest")
       .agg(max("ts_us").as("last_kept_us"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val gotState = state.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -65,7 +65,7 @@ class IncrementalDedupSpec extends SparkSpec {
     } finally q.stop()
     val got = spark.table(name).select("event_id")
       .collect().map(_.getLong(0)).toSet
-    val want = Dedup.chain(hashed).select("event_id")
+    val want = Dedup.chainNative(hashed).select("event_id")
       .collect().map(_.getLong(0)).toSet
       .filter(id => msgs.exists(_.event_id == id))
     assert(got === want)

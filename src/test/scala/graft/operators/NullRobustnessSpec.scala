@@ -147,8 +147,6 @@ class NullRobustnessSpec extends SparkSpec {
     import spark.implicits._
     val schema = Seq((0L, 0L, 0L, "x", 0.0, "{}", 7L))
       .toDF("event_id", "ts_us", "user_id", "event_type", "value", "props", "digest")
-    assert(Dedup.chain(schema.limit(0)).count() === 0)
-    assert(Dedup.chain(schema).count() === 1)
     assert(Dedup.chainNative(schema.limit(0)).count() === 0)
     assert(Dedup.chainNative(schema).count() === 1)
   }

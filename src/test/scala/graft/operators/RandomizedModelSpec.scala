@@ -21,24 +21,37 @@ class RandomizedModelSpec extends SparkSpec {
   test("chain equals the ObliviousSet model on random collision-heavy streams") {
     import spark.implicits._
     val rnd = new scala.util.Random(42)
+    val rndLate = new scala.util.Random(43) // leaves rnd's streams as they were
     for (trial <- 1 to 5) {
       val windowUs = 1L + rnd.nextInt(1000)
       // few digests + tight timestamps → dense duplicate chains
-      val rows = (0 until 400).map { i =>
+      val dense = (0 until 400).map { i =>
         (i.toLong, rnd.nextInt(3000).toLong, 0L, "t", 0.0, "{}",
           rnd.nextInt(8).toLong)
       }
+      // two digests first seen in the last third: a null floor there
+      val late = (400 until 440).map { i =>
+        (i.toLong, 2000L + rndLate.nextInt(1000), 0L, "t", 0.0, "{}", 8L + rndLate.nextInt(2))
+      }
+      val rows = dense ++ late
       val df = rows.toDF("event_id", "ts_us", "user_id", "event_type", "value", "props", "digest")
-      val got = Dedup.chain(df, windowUs).select("event_id")
-        .collect().map(_.getLong(0)).toSet
       val gotNative = Dedup.chainNative(df, windowUs).select("event_id")
         .collect().map(_.getLong(0)).toSet
+      // the incremental fold over a time-ordered 3-way split
+      val cuts = Seq(0L, 1000L, 2000L, Long.MaxValue)
+      var state = Seq.empty[(Long, Long)].toDF("digest", "last_kept_us")
+      val gotFold = cuts.zip(cuts.tail).map { case (lo, hi) =>
+        val (kept, s) = IncrementalDedup.processBatch(state,
+          df.filter(col("ts_us") >= lo && col("ts_us") < hi), windowUs)
+        state = s.localCheckpoint(true)
+        kept.select("event_id").collect().map(_.getLong(0)).toSet
+      }.reduce(_ ++ _)
       val want = rows.groupBy(_._7).values.flatMap { rs =>
         obliviousModel(rs.map(r => (r._1, r._2)).sortBy { case (id, ts) => (ts, id) }
           .map { case (id, ts) => (id, ts) }, windowUs)
       }.toSet
-      assert(got === want, s"trial $trial window $windowUs")
       assert(gotNative === want, s"native, trial $trial window $windowUs")
+      assert(gotFold === want, s"incremental fold, trial $trial window $windowUs")
     }
   }
 

@@ -41,7 +41,7 @@ class CheckpointRecoverySpec extends SparkSpec {
 
     val got = spark.read.parquet(outDir)
       .select("event_id").collect().map(_.getLong(0)).toSet
-    val want = Dedup.chain(Dedup.hashedStream(spark, sf))
+    val want = Dedup.chainNative(Dedup.hashedStream(spark, sf))
       .select("event_id").collect().map(_.getLong(0)).toSet
     assert(got === want)
     // and specifically: replicas within the TTL window were dropped by

@@ -33,7 +33,7 @@ class RocksDBStateSpec extends SparkSpec {
       } finally q.stop()
       val got = spark.table(name).select("event_id")
         .collect().map(_.getLong(0)).toSet
-      val want = Dedup.chain(Dedup.hashedStream(spark, sf))
+      val want = Dedup.chainNative(Dedup.hashedStream(spark, sf))
         .select("event_id").collect().map(_.getLong(0)).toSet
       assert(got === want)
     } finally

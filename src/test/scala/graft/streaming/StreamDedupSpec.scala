@@ -61,7 +61,7 @@ class StreamDedupSpec extends SparkSpec {
     val got = runStream(msgs, 4)(df =>
       StreamDedup.chain(spark, df, Dedup.WindowUs).toDF())
       .map(_.event_id).toSet
-    val want = Dedup.chain(Dedup.hashedStream(spark, sf))
+    val want = Dedup.chainNative(Dedup.hashedStream(spark, sf))
       .select("event_id").collect().map(_.getLong(0)).toSet
     assert(got === want)
     // the tagged form at the same finite TTL: kept = the chain, every
@@ -81,7 +81,7 @@ class StreamDedupSpec extends SparkSpec {
       StreamDedup.chain(spark, df, Dedup.WindowUs,
         stateExpiry = Some("2 hours")).toDF())
     val got = out.select("event_id").as[Long].collect().toSet
-    val want = Dedup.chain(Dedup.hashedStream(spark, sf))
+    val want = Dedup.chainNative(Dedup.hashedStream(spark, sf))
       .select("event_id").collect().map(_.getLong(0)).toSet
     assert(got === want)
     // the feed spans weeks, so expired digests must leave the state
@@ -102,23 +102,27 @@ class StreamDedupSpec extends SparkSpec {
     assert(got.forall(id => !warmedDigests.contains(msgs.find(_.event_id == id).get.digest)))
   }
 
-  test("warmStateFromOutput rebuilds chain state from prior output (cacheBuilding analog)") {
+  test("origin warm-up rebuilds chain state from prior output") {
     val msgs = hashedMsgs
     val (batch1, batch2) = msgs.partition(_.event_id < 10000000L)
-    // prior incarnation: batch chain over batch1, persisted as output
+    // prior incarnation: batch chain over batch1, published with its
+    // origin property inside `props` (the events shape), as output
     val outDir = java.nio.file.Files.createTempDirectory("graft_warm").toString
-    Dedup.chain(Dedup.hashedStream(spark, sf).filter(
-      org.apache.spark.sql.functions.col("event_id") < 10000000L))
+    Origin.withOriginProp(Dedup.chainNative(Dedup.hashedStream(spark, sf).filter(
+      col("event_id") < 10000000L)))
       .write.mode("overwrite").parquet(outDir)
-    // new incarnation: warm state from that output, stream the replicas
-    // cache window covering the whole history (the 48h default would
+    // new incarnation: warm state from the digests in that output's
+    // origin property (cacheBuilding.ts), stream the replicas. Cache
+    // window covering the whole history (the 48h default would
     // legitimately leave digests older than 2 days cold)
-    val warmed = StreamDedup.warmStateFromOutput(
-      spark, outDir, Long.MaxValue / 2, nowUs = msgs.map(_.ts_us).max + 1)
+    val digests = Origin.warmDigestsFromOutput(spark.read.parquet(outDir),
+      Long.MaxValue / 2, nowUs = msgs.map(_.ts_us).max + 1,
+      origin = get_json_object(col("props"), "$.origin"))
+    val warmed = StreamDedup.warmStateFromTable(spark, digests)
     val got = runStream(batch2, 2)(df =>
       StreamDedup.chain(spark, df, Dedup.WindowUs, Some(warmed)).toDF())
       .map(_.event_id).toSet
-    val want = Dedup.chain(Dedup.hashedStream(spark, sf))
+    val want = Dedup.chainNative(Dedup.hashedStream(spark, sf))
       .collect().map(_.getAs[Long]("event_id")).toSet
       .filter(_ >= 10000000L)
     assert(got === want)
