@@ -6,6 +6,9 @@ import java.nio.file.{Files, Paths}
   * default ./bench_out.json), because sbt interleaves its own log lines
   * into stdout and a log-tail parse of the JSON is fragile.
   *
+  * Queries run in name order; `SPARK_GRAFT_ONLY` narrows them to a
+  * dev-only subset, as in Verify (see [[SparkEntry.selected]]).
+  *
   * A query that throws is reported in the `errors` object and carries a
   * -1 time marker — never its elapsed wall time — so a crash is
   * distinguishable from a fast success.
@@ -47,12 +50,8 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // Best of two runs per query: one-shot local timings swing ~2× on
     // JIT/GC noise; the min is the reproducible cost of the plan.
-    // Dev-only subset filter (comma-separated names), mirroring Verify's
-    // SPARK_GRAFT_ONLY; the driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val results = SparkEntry.benchQueries
-      .filter(n => only.forall(_.contains(n)))
+    val results = SparkEntry.queries.keys.toSeq.sorted
+      .filter(SparkEntry.selected)
       .map { name =>
       val fn = SparkEntry.queries(name)
       // Best-of-N, default 2 (the driver's sf0.1 contract). Large-SF

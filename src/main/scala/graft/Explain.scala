@@ -14,7 +14,8 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.benchQueries
+    val names =
+      if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
     val spark = GraftSession.local(GraftSession.cpus)
     names.foreach { n =>
       println(s"\n========== $n ==========")

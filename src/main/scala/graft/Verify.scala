@@ -11,10 +11,6 @@ object Verify {
     // from TESTDATA.md; on violation the query loop is SKIPPED (running it
     // would only bury the root cause under N opaque per-query errors).
     val contractHolds = SchemaGate.report(spark, sfDir)
-    // Dev-only subset filter (comma-separated names); the driver never
-    // sets it, so its runs always dump the full query set.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     if (contractHolds) {
       // Bounded dump concurrency: queries are independent writes, and
       // Spark schedules concurrent jobs fine, so a few threads cut the
@@ -26,7 +22,7 @@ object Verify {
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
       val futures = SparkEntry.queries.toSeq
-        .filter { case (name, _) => only.forall(_.contains(name)) }
+        .filter { case (name, _) => SparkEntry.selected(name) }
         .map { case (name, fn) =>
           scala.concurrent.Future {
             try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

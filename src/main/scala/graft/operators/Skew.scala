@@ -84,9 +84,10 @@ object Skew {
   /** Gap-sessionize with the hot-key partition SPLIT — the mitigation
     * the measured skew race demanded (SkewBench, PLANS round-14): a
     * window `partitionBy(user_id)` puts a 50%-hot user's entire stream
-    * in ONE task (measured 2.0× at 10M rows, growing linearly with the
-    * hot key), and salting cannot fix it because window semantics need
-    * the whole key in one partition.
+    * in ONE task (its one-window sessionize measured 1.9× its uniform
+    * twin at 10M rows on 32 cores, 1.35–1.46× at 3M rows on 4 cores;
+    * growing linearly with the hot key), and salting cannot fix it
+    * because window semantics need the whole key in one partition.
     *
     * This plan splits by TIME instead: events are segmented at
     * `seg = ts_us div segUs`, the gap rule runs locally per
@@ -106,10 +107,14 @@ object Skew {
     * verbatim).
     *
     * segUs defaults to 4× the gap (2 h at the default 30-min gap —
-    * measured: the gap-sized segment pays +20% window-partition
-    * overhead on uniform data, 4× pays +8% while the 50%-hot twin
-    * still spreads over ~360 segments and runs at 1.0× its uniform
-    * twin vs the one-window plan's 1.9×; skew_bench.json). Larger
+    * measured at 10M rows on 32 cores: the gap-sized segment paid +20%
+    * window-partition overhead on uniform data, 4× paid +8% while the
+    * 50%-hot twin still spread over ~360 segments and ran at 1.0× its
+    * uniform twin vs the one-window plan's 1.9×. At 3M rows on 4 cores
+    * (skew_bench.json and a second run) 4× pays +30–64% on uniform
+    * data, and the hot twin runs at 0.75–0.95× its uniform twin vs the
+    * one-window plan's 1.35–1.46×: the split still wins on the hot
+    * twin, by 9–16%). Larger
     * segments mean fewer merge rows, smaller segments mean tighter
     * per-partition bounds — at 100 TB, size segUs so rate × segUs
     * rows fit an executor task. */
@@ -162,8 +167,9 @@ object Skew {
     * map-side partial aggregation already collapses each task's rows
     * to ≤ |keys| partials for COMBINABLE aggregates (count/sum/min/
     * max/avg), so the hot key never concentrates raw rows on one
-    * reducer and salting buys only ~15% even at a 50%-hot key — not
-    * worth the second exchange as a default. Salting pays only when
+    * reducer and salting buys only 2–15% even at a 50%-hot key (2–3%
+    * at 3M rows on 4 cores, skew_bench.json) — not worth the second
+    * exchange as a default. Salting pays only when
     * the aggregate is NOT map-side combinable at key grain (exact
     * distinct counts and other set-sized measures): there the hot
     * key's whole value set lands on one reducer, and value-salting
@@ -239,7 +245,8 @@ object Skew {
     * in one task — salting can't help (window semantics need the whole
     * key together), but the time-segment split plan is bit-identical
     * and bounds every partition at rate × segUs. The split costs +8%
-    * on uniform data (the second merge window), so it dispatches only
+    * (10M rows, 32 cores) to +30–64% (3M rows, 4 cores) on uniform
+    * data (the second merge window), so it dispatches only
     * on MEASURED hotness — same threshold discipline as
     * [[shouldSalt]]: an order of magnitude over uniform is where one
     * task's surplus stops hiding inside task-size variance. */

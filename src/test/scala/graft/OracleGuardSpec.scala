@@ -15,7 +15,8 @@ class OracleGuardSpec extends SparkSpec {
     val exempt = Set.empty[String]
     // the ctx-ful form is what Verify dumps — guard THAT map (the
     // whitened-LSH oracle exists only with a corpus in hand)
-    val oracles = SparkEntry.oracleSqlFor(Some((spark, sf))).keySet
+    val full = SparkEntry.oracleSqlFor(Some((spark, sf)))
+    val oracles = full.keySet
     val missing = SparkEntry.queries.keySet -- oracles
     assert(missing == exempt,
       s"queries without an oracle beyond the documented exemptions: ${missing -- exempt}")
@@ -24,6 +25,11 @@ class OracleGuardSpec extends SparkSpec {
     // the ctx-less contract form differs ONLY by the data-dependent
     // whitened entries
     assert(oracles -- SparkEntry.oracleSql.keySet == Set("ann_whitened_topk"))
+    // and ctx changes the SQL of exactly three declarations: the
+    // whitened top-k, and the two recall reports that add its row
+    val ctxLess = SparkEntry.oracleSql
+    assert(oracles.filter(n => ctxLess.get(n) != full.get(n)) ==
+      Set("ann_whitened_topk", "ann_recall_report", "ann_appended_recall"))
   }
 
   test("events.props matches the {\"k\":N} shape CANON_K assumes") {
