@@ -32,6 +32,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *  - readers see committed ids only: a torn write without its marker
   *    is invisible, never half-read.
   *
+  * The write: every batch directory and every compaction generation is
+  * written by [[LeanParquetWriter]], which leaves the files
+  * `df.write.mode("overwrite").parquet(...)` leaves (`part-*` files
+  * through the session's commit protocol, `_SUCCESS`, one file even for
+  * an empty result) but ships the session's Hadoop configuration to the
+  * executors once, as a broadcast, instead of inside every write task.
+  * A task carries only the few keys its write adds to that copy. Its
+  * per-task row counts tell [[appendStream]] whether a micro-batch's
+  * output was empty without running the plan a second time.
+  *
   * Resolution: plain [[read]] is the RAW view (data and merge rows,
   * tombstones unapplied). [[readWithDeletes]] hides every key-matching
   * row committed BEFORE a delete or merge batch (a later re-append of
@@ -65,9 +75,12 @@ object TxnParquet {
 
   /** The commit protocol (see the object doc). `beforeMarker` runs
     * after the data landed and before the marker, so the marker's
-    * atomicity covers whatever it writes. Returns true when this call
-    * wrote, false when the id was already committed. */
+    * atomicity covers whatever it writes. With `keepEmpty = false` an
+    * output of zero rows is removed again and gets no marker. Returns
+    * true when this call committed, false when the id was already
+    * committed or the empty output was dropped. */
   private def commit(df: DataFrame, dir: String, batchId: Long, kind: String,
+                     keepEmpty: Boolean = true,
                      beforeMarker: org.apache.hadoop.fs.FileSystem => Unit = _ => ()
                     ): Boolean = {
     val f = fs(df.sparkSession, dir)
@@ -77,10 +90,15 @@ object TxnParquet {
       // probe, and no listing of `dir` on the write path
       Kinds.filterNot(_ == kind)
         .foreach(k => f.delete(new Path(s"$dir/$k=$batchId"), true))
-      df.write.mode("overwrite").parquet(s"$dir/$kind=$batchId")
-      beforeMarker(f)
-      f.create(marker(dir, batchId), true).close()
-      true
+      val out = new Path(s"$dir/$kind=$batchId")
+      if (LeanParquetWriter.write(df, out.toString) == 0 && !keepEmpty) {
+        f.delete(out, true)
+        false
+      } else {
+        beforeMarker(f)
+        f.create(marker(dir, batchId), true).close()
+        true
+      }
     }
   }
 
@@ -127,10 +145,13 @@ object TxnParquet {
   def merge(rows: DataFrame, dir: String, batchId: Long): Boolean =
     commit(rows, dir, batchId, "merge")
 
-  /** Attach a streaming frame: each NON-EMPTY micro-batch `b` lands as
+  /** Attach a streaming frame: each micro-batch `b` lands as
     * `append(toBatch(b), dir, batchId)` with the micro-batch id as the
     * transactional id, so a restart that replays an epoch is a
     * committed no-op and a torn epoch is overwritten by its replay.
+    * The micro-batch plan runs once: a `toBatch(b)` of zero rows (an
+    * empty micro-batch, or one `toBatch` filters out) is removed after
+    * the write and its id stays uncommitted.
     * The checkpoint defaults to `dir/_checkpoint`. */
   def appendStream(df: DataFrame, dir: String,
                    checkpointDir: Option[String] = None)
@@ -139,7 +160,7 @@ object TxnParquet {
       .option("checkpointLocation",
         checkpointDir.getOrElse(s"$dir/_checkpoint"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) append(toBatch(batch), dir, batchId)
+        commit(toBatch(batch), dir, batchId, "batch", keepEmpty = false)
         ()
       }
       .start()
@@ -546,7 +567,7 @@ object TxnParquet {
     val staging = new Path(s"$dir/.compact-staging-${java.util.UUID.randomUUID()}")
     val target = new Path(s"$dir/compact=$gen")
     try {
-      view(ids, prior).write.mode("overwrite").parquet(staging.toString)
+      LeanParquetWriter.write(view(ids, prior), staging.toString)
       val installed = !f.exists(target) &&
         (try f.rename(staging, target)
          catch { case _: java.io.IOException => false })

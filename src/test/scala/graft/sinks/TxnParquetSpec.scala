@@ -587,4 +587,36 @@ class TxnParquetSpec extends SparkSpec {
     assert(kept == Seq(0L) && skipped == Seq(1L))
     assert(TxnParquet.readPruned(spark, dir, "id", 0L, 1000L).count() == 1L)
   }
+
+  test("appendStream runs each micro-batch once and commits only non-empty output") {
+    import java.util.concurrent.ConcurrentHashMap
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val dir = freshDir()
+    val jobs = new ConcurrentHashMap[Long, AtomicInteger]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => jobs.computeIfAbsent(b.toLong, _ => new AtomicInteger).incrementAndGet())
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val src = MemoryStream[Long]
+    val q = TxnParquet.appendStream(src.toDF(), dir)(_.filter($"value" >= 0L))
+    try {
+      src.addData(1L, 2L); q.processAllAvailable()
+      src.addData(-1L); q.processAllAvailable() // rows in, none out
+      src.addData(3L); q.processAllAvailable()
+    } finally q.stop()
+    eventually(timeout(30.seconds)) { assert(jobs.keySet.size == 3) }
+    spark.sparkContext.removeSparkListener(listener)
+    // one job per batch: the write is the only execution of the plan
+    assert(jobs.size == 3 && jobs.values.toArray.forall(_.toString == "1"), jobs)
+    assert(TxnParquet.committedBatches(spark, dir) == Seq(0L, 2L))
+    assert(!new java.io.File(s"$dir/batch=1").exists())
+    assert(TxnParquet.read(spark, dir).as[Long].collect().toSet == Set(1L, 2L, 3L))
+  }
 }
