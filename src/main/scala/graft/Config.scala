@@ -4,12 +4,17 @@ import org.apache.spark.sql.SparkSession
 
 /** The reference's configuration surface (config.ts) mapped onto Spark
   * session conf — same keys' semantics, same defaults, same validation
-  * failures.
+  * failures. Each key acts on `streaming.DedupJob.start`:
   *
   *   DEDUPLICATION_WINDOW_IN_SECONDS  → spark.graft.deduplication.windowSeconds
   *   DEDUPLICATION_IGNORED_PROPERTIES → spark.graft.deduplication.ignoredProperties
   *   CACHE_WINDOW_IN_SECONDS          → spark.graft.cache.windowSeconds
   *   CACHE_REBUILD_DISABLE_SEEK       → spark.graft.cache.disableRebuild
+  *   (digest algorithm)               → spark.graft.digest
+  *
+  * `spark.graft.digest` also selects the envelope digest
+  * (`sources.Envelope.digestFor`); the job accepts only its default,
+  * `h64`.
   *
   * Mirrored rules (config.ts:68-111,113-140):
   *   - window values are optional non-negative finite floats (fractional
@@ -20,19 +25,8 @@ import org.apache.spark.sql.SparkSession
   *   - cacheWindow <= 0 disables warm-up (cacheBuilding.ts:72-79), as
   *     does the disable toggle.
   *
-  * Client security/transport keys (config.ts:142-229) are VALIDATED
-  * here with the reference's grammar and surfaced as a typed config —
-  * in a Spark deployment the actual transport is the cluster's (the
-  * broker connector or the platform's TLS/auth applies them), so these
-  * keys exist to fail startup on the same inputs the reference fails
-  * on, not to open sockets:
-  *
-  *   PULSAR_OAUTH2_ISSUER_URL      → spark.graft.client.oauth2.issuerUrl
-  *   PULSAR_OAUTH2_KEY_PATH        → spark.graft.client.oauth2.keyPath
-  *   PULSAR_OAUTH2_AUDIENCE        → spark.graft.client.oauth2.audience
-  *   PULSAR_TLS_VALIDATE_HOSTNAME  → spark.graft.client.tlsValidateHostname
-  *   PULSAR_COMPRESSION_TYPE       → spark.graft.client.compressionType
-  *   PULSAR_BLOCK_IF_QUEUE_FULL    → spark.graft.client.blockIfQueueFull
+  * The reference's Pulsar client keys (OAuth2, TLS, compression,
+  * blocking) have no counterpart: graft opens no socket.
   */
 object GraftConfig {
 
@@ -41,12 +35,6 @@ object GraftConfig {
   val CacheWindowKey = "spark.graft.cache.windowSeconds"
   val DisableRebuildKey = "spark.graft.cache.disableRebuild"
   val DigestKey = "spark.graft.digest"
-  val Oauth2IssuerUrlKey = "spark.graft.client.oauth2.issuerUrl"
-  val Oauth2KeyPathKey = "spark.graft.client.oauth2.keyPath"
-  val Oauth2AudienceKey = "spark.graft.client.oauth2.audience"
-  val TlsValidateHostnameKey = "spark.graft.client.tlsValidateHostname"
-  val CompressionTypeKey = "spark.graft.client.compressionType"
-  val BlockIfQueueFullKey = "spark.graft.client.blockIfQueueFull"
 
   /** Digest algorithm for envelope identity: `h64` (default; BIGINT,
     * DuckDB-oracle-reproducible) or `blake2b` (BINARY(64), reference
@@ -132,71 +120,4 @@ object GraftConfig {
         case other => throw new IllegalArgumentException(
           s"""$DisableRebuildKey must be either "false" or "true". Instead, $other was given.""")
       }.getOrElse(false))
-
-  /** OAuth2 client-credentials config (config.ts:142-168): all three
-    * keys or none. */
-  final case class Oauth2Config(issuerUrl: String, keyPath: String,
-                                audience: String) {
-    /** The reference hard-codes this (config.ts:161-162). */
-    val grantType: String = "client_credentials"
-  }
-
-  /** Client transport config (config.ts:198-229): validated with the
-    * reference's grammar; applied by the deployment's connector. */
-  final case class ClientConfig(oauth2: Option[Oauth2Config],
-                                tlsValidateHostname: Boolean,
-                                compressionType: String,
-                                blockIfQueueFull: Boolean)
-
-  private def optionalBoolean(spark: SparkSession, key: String,
-                              default: Boolean): Boolean =
-    spark.conf.getOption(key).map {
-      case "true"  => true
-      case "false" => false
-      case _ => throw new IllegalArgumentException(
-        s"""$key must be either "false" or "true"""")
-    }.getOrElse(default)
-
-  /** OAuth2 keys follow the reference's all-or-none rule
-    * (config.ts:147-158): any one present makes all three mandatory. */
-  def oauth2(spark: SparkSession): Option[Oauth2Config] = {
-    val issuer = spark.conf.getOption(Oauth2IssuerUrlKey)
-    val keyPath = spark.conf.getOption(Oauth2KeyPathKey)
-    val audience = spark.conf.getOption(Oauth2AudienceKey)
-    if (issuer.isEmpty && keyPath.isEmpty && audience.isEmpty) None
-    else if (issuer.exists(_.nonEmpty) && keyPath.exists(_.nonEmpty) &&
-             audience.exists(_.nonEmpty))
-      Some(Oauth2Config(issuer.get, keyPath.get, audience.get))
-    else throw new IllegalArgumentException(
-      s"If any of $Oauth2IssuerUrlKey, $Oauth2KeyPathKey, " +
-        s"$Oauth2AudienceKey is defined, all must be defined.")
-  }
-
-  /** Compression type grammar (config.ts:198-213): Zlib | LZ4 | ZSTD |
-    * SNAPPY, case-sensitive, default ZSTD. */
-  def compressionType(spark: SparkSession): String =
-    spark.conf.getOption(CompressionTypeKey).getOrElse("ZSTD") match {
-      case v @ ("Zlib" | "LZ4" | "ZSTD" | "SNAPPY") => v
-      case _ => throw new IllegalArgumentException(
-        s"If defined, $CompressionTypeKey must be one of 'Zlib', 'LZ4', " +
-          "'ZSTD' or 'SNAPPY'. Default is 'ZSTD'.")
-    }
-
-  def client(spark: SparkSession): ClientConfig =
-    ClientConfig(
-      oauth2(spark),
-      optionalBoolean(spark, TlsValidateHostnameKey, default = true),
-      compressionType(spark),
-      optionalBoolean(spark, BlockIfQueueFullKey, default = true))
-
-  /** The configured batch dedup pipeline in one call: digest with the
-    * configured ignored properties, then `Dedup.chainNative` at the
-    * configured TTL window. The cache window and the warm-up toggle are
-    * not read here. */
-  def configuredDedup(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val dc = deduplication(spark)
-    operators.Dedup.chainNative(
-      operators.Dedup.hashedStream(spark, dir, dc.ignoredProperties),
-      dc.windowUs)
-  }
 }

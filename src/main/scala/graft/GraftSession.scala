@@ -37,26 +37,6 @@ object GraftSession {
     .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
     .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 
-  /** Production-cluster preset on top of the core defaults — the knobs
-    * a 1000-executor / 100 TB deployment wants set deliberately:
-    *
-    *  - RocksDB state store: streaming dedup state beyond executor heap
-    *    (one timestamp per digest, but 10^11 digests is real memory);
-    *  - 256 MB scan splits: fewer, fuller tasks against columnar files
-    *    whose decoded batches stay well under executor memory;
-    *  - shuffle partitions sized by the caller (cores × executors × 2-3
-    *    is the usual starting point) with AQE coalescing the tail;
-    *  - skew-join thresholds left at AQE defaults (salting is built
-    *    into the operators that need it deterministically).
-    */
-  def clusterDefaults(b: SparkSession.Builder,
-                      shufflePartitions: Int): SparkSession.Builder =
-    withDefaults(b)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.files.maxPartitionBytes", (256L * 1024 * 1024).toString)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
   /** Core count of the local session the mains run: SPARK_GRAFT_CPUS,
     * else every core on the box. */
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)

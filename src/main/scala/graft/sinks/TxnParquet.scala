@@ -146,24 +146,53 @@ object TxnParquet {
     commit(rows, dir, batchId, "merge")
 
   /** Attach a streaming frame: each micro-batch `b` lands as
-    * `append(toBatch(b), dir, batchId)` with the micro-batch id as the
-    * transactional id, so a restart that replays an epoch is a
-    * committed no-op and a torn epoch is overwritten by its replay.
+    * `append(toBatch(b), dir, base + batchId)`, so a restart that
+    * replays an epoch is a committed no-op and a torn epoch is
+    * overwritten by its replay. `base` is [[idBase]]: 0 for a fresh
+    * output, and past every committed id when a fresh checkpoint
+    * attaches to an existing output (a lost checkpoint restarts
+    * micro-batch ids at 0, and reusing a committed id would skip that
+    * batch's rows).
     * The micro-batch plan runs once: a `toBatch(b)` of zero rows (an
     * empty micro-batch, or one `toBatch` filters out) is removed after
     * the write and its id stays uncommitted.
     * The checkpoint defaults to `dir/_checkpoint`. */
   def appendStream(df: DataFrame, dir: String,
                    checkpointDir: Option[String] = None)
-                  (toBatch: DataFrame => DataFrame): StreamingQuery =
+                  (toBatch: DataFrame => DataFrame): StreamingQuery = {
+    val checkpoint = checkpointDir.getOrElse(s"$dir/_checkpoint")
+    val base = idBase(df.sparkSession, dir, checkpoint)
     df.writeStream
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$dir/_checkpoint"))
+      .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commit(toBatch(batch), dir, batchId, "batch", keepEmpty = false)
+        commit(toBatch(batch), dir, base + batchId, "batch", keepEmpty = false)
         ()
       }
       .start()
+  }
+
+  /** The output id of `checkpoint`'s micro-batch 0. While the
+    * checkpoint is fresh (no offsets logged), that is one past the
+    * last committed id of `dir`, recorded in the checkpoint before the
+    * query starts; later starts read the record back. A checkpoint
+    * with offsets but no record reads 0, which keeps the ids of
+    * checkpoints written before the record existed. */
+  private def idBase(spark: SparkSession, dir: String, checkpoint: String): Long = {
+    val f = fs(spark, checkpoint)
+    val record = new Path(s"$checkpoint/txnparquet_id_base")
+    val offsets = new Path(s"$checkpoint/offsets")
+    val fresh = !f.exists(offsets) ||
+      !f.listStatus(offsets).exists(_.getPath.getName.forall(_.isDigit))
+    if (fresh) {
+      val base = committedBatches(spark, dir).lastOption.fold(0L)(_ + 1)
+      val out = f.create(record, true)
+      try out.write(base.toString.getBytes("UTF-8")) finally out.close()
+      base
+    } else if (f.exists(record)) {
+      val in = f.open(record)
+      try new String(in.readAllBytes(), "UTF-8").toLong finally in.close()
+    } else 0L
+  }
 
   /** The committed view over `ids`, with the generation `prior` (if
     * any) standing in for the ids it covers. With no key columns, or

@@ -77,9 +77,6 @@ object Envelope {
     out
   }
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    conform(spark.read.parquet(path))
-
   /** JSONL interchange options — same µs-timestamp ownership as
     * `csvOptions`: Spark's JSON default also writes millisecond
     * fractions, truncating event times on a round trip. Payload bytes
@@ -136,12 +133,6 @@ object Envelope {
           .as("properties"),
         col("event_ts"), col("topic"))
 
-  /** Streaming file source in envelope shape (the production entry
-    * point for continuous dedup: parquet files landing in a directory,
-    * e.g. from a connector). */
-  def streamParquet(spark: SparkSession, path: String): DataFrame =
-    spark.readStream.schema(schema).parquet(path)
-
   /** Kafka wire shape ⇄ envelope — the Spark-native stand-in for the
     * reference's Pulsar client (pulsar.ts: topics pattern, per-message
     * properties, event timestamp). A Kafka source DataFrame
@@ -185,34 +176,15 @@ object Envelope {
     ArrayType(StructType(Seq(
       StructField("key", StringType), StructField("value", BinaryType))))
 
-  /** Synthetic envelope stream from the rate source (for soak tests). */
-  def rateStream(spark: SparkSession, rowsPerSecond: Int): DataFrame =
-    spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond.toString).load()
-      .select(
-        encode(col("value").cast("string"), "UTF-8").as("payload"),
-        map(lit("seq"), col("value").cast("string")).as("properties"),
-        col("timestamp").as("event_ts"),
-        lit("rate").as("topic"))
-
   /** First-occurrence dedup of an envelope batch, in event-time order —
     * keepDeduplicating with an infinite window over any envelope
-    * source. One shuffle on the digest. */
-  def firstOccurrence(env: DataFrame, ignored: Seq[String] = Nil): DataFrame =
-    firstByDigest(env, digest(ignored))
-
-  /** Same dedup with the digest selected by `spark.graft.digest` — a
-    * migration from the reference service flips the conf to `blake2b`
-    * (byte-compatible digests, BINARY column) without touching the
-    * pipeline; grouping and shuffle semantics are identical for any
-    * collision-free digest, so the kept set does not change
+    * source. One shuffle on the digest, which `spark.graft.digest`
+    * selects ([[digestFor]]): a migration from the reference service
+    * flips the conf to `blake2b` without touching the pipeline, and for
+    * any collision-free digest the kept set does not change
     * (spec-pinned against the h64 path). */
-  def firstOccurrenceConfigured(spark: SparkSession, env: DataFrame,
-                                ignored: Seq[String] = Nil): DataFrame =
-    firstByDigest(env, digestFor(spark, ignored))
-
-  private def firstByDigest(env: DataFrame, digestCol: Column): DataFrame = {
-    val hashed = env.withColumn("digest", digestCol)
+  def firstOccurrence(env: DataFrame, ignored: Seq[String] = Nil): DataFrame = {
+    val hashed = env.withColumn("digest", digestFor(env.sparkSession, ignored))
     val w = Window.partitionBy("digest").orderBy("event_ts")
     hashed.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
   }

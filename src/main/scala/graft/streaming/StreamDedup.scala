@@ -73,14 +73,15 @@ object StreamDedup extends Serializable {
     (tagged, l)
   }
 
-  /** The one stateful operator behind [[chain]] and [[chainTagged]]:
+  /** The one stateful operator behind [[chain]], [[chainTagged]] and
+    * [[DedupJob]]:
     * grouped by digest, carrying one timestamp of state per key,
     * emitting every row tagged by [[scan]]. `initialState` is the
     * digest→lastKept map recovered from prior output (the
     * cacheBuilding.ts warm-up); without it the state starts empty. */
-  private def taggedChain(spark: SparkSession, df: DataFrame, windowUs: Long,
-                          initialState: Option[Dataset[(Long, DigestState)]],
-                          stateExpiry: Option[String]): Dataset[TaggedMsg] = {
+  private[streaming] def taggedChain(spark: SparkSession, df: DataFrame, windowUs: Long,
+                                     initialState: Option[Dataset[(Long, DigestState)]],
+                                     stateExpiry: Option[String]): Dataset[TaggedMsg] = {
     import spark.implicits._
     val withTs = withEventTime(
       df.select("event_id", "ts_us", "user_id", "event_type", "value", "props", "digest"))

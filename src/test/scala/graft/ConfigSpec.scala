@@ -1,13 +1,9 @@
 package graft
 
 /** GraftConfig mirrors config.ts: same defaults, same validation
-  * failures, and the parsed values drive the dedup operators. */
+  * failures (DedupJobSpec checks that the parsed values drive the
+  * dedup job). */
 class ConfigSpec extends SparkSpec {
-
-  private def withConf[A](kvs: (String, String)*)(f: => A): A = {
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally kvs.foreach { case (k, _) => spark.conf.unset(k) }
-  }
 
   test("defaults match the reference") {
     val d = GraftConfig.deduplication(spark)
@@ -55,67 +51,6 @@ class ConfigSpec extends SparkSpec {
     }
     withConf(GraftConfig.DisableRebuildKey -> "yes") {
       intercept[IllegalArgumentException](GraftConfig.cacheRebuild(spark))
-    }
-  }
-
-  test("client defaults match the reference (no oauth2, TLS on, ZSTD, block)") {
-    val c = GraftConfig.client(spark)
-    assert(c.oauth2.isEmpty && c.tlsValidateHostname &&
-      c.compressionType == "ZSTD" && c.blockIfQueueFull)
-  }
-
-  test("oauth2 keys are all-or-none, like the reference (config.ts:147-158)") {
-    withConf(GraftConfig.Oauth2IssuerUrlKey -> "https://issuer.example",
-             GraftConfig.Oauth2KeyPathKey -> "/etc/key.json",
-             GraftConfig.Oauth2AudienceKey -> "broker") {
-      val o = GraftConfig.client(spark).oauth2.get
-      assert(o.issuerUrl == "https://issuer.example" &&
-        o.keyPath == "/etc/key.json" && o.audience == "broker" &&
-        o.grantType == "client_credentials")
-    }
-    // any strict subset (or a JS-falsy empty string) fails startup
-    withConf(GraftConfig.Oauth2IssuerUrlKey -> "https://issuer.example") {
-      intercept[IllegalArgumentException](GraftConfig.client(spark))
-    }
-    withConf(GraftConfig.Oauth2IssuerUrlKey -> "https://issuer.example",
-             GraftConfig.Oauth2KeyPathKey -> "",
-             GraftConfig.Oauth2AudienceKey -> "broker") {
-      intercept[IllegalArgumentException](GraftConfig.client(spark))
-    }
-  }
-
-  test("compression type grammar: Zlib|LZ4|ZSTD|SNAPPY, case-sensitive") {
-    for (ok <- Seq("Zlib", "LZ4", "ZSTD", "SNAPPY"))
-      withConf(GraftConfig.CompressionTypeKey -> ok) {
-        assert(GraftConfig.client(spark).compressionType == ok)
-      }
-    for (bad <- Seq("zstd", "GZIP", "none"))
-      withConf(GraftConfig.CompressionTypeKey -> bad) {
-        intercept[IllegalArgumentException](GraftConfig.client(spark))
-      }
-  }
-
-  test("tls/blockIfQueueFull booleans use the reference's strict grammar") {
-    withConf(GraftConfig.TlsValidateHostnameKey -> "false") {
-      assert(!GraftConfig.client(spark).tlsValidateHostname)
-    }
-    withConf(GraftConfig.BlockIfQueueFullKey -> "false") {
-      assert(!GraftConfig.client(spark).blockIfQueueFull)
-    }
-    for (bad <- Seq("True", "1", "yes"))
-      withConf(GraftConfig.TlsValidateHostnameKey -> bad) {
-        intercept[IllegalArgumentException](GraftConfig.client(spark))
-      }
-  }
-
-  test("configured dedup applies the ignored-property set and TTL window") {
-    withConf(GraftConfig.IgnoredPropsKey -> """["k"]""",
-             GraftConfig.DedupWindowKey -> "7200") {
-      val got = GraftConfig.configuredDedup(spark, sf).collect().map(_.getLong(0)).toSeq
-      val want = graft.operators.Dedup.chainNative(
-        graft.operators.Dedup.hashedStream(spark, sf, Seq("k")),
-        7200L * 1000000L).collect().map(_.getLong(0)).toSeq
-      assert(got == want)
     }
   }
 }

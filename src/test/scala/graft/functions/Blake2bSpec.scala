@@ -68,7 +68,7 @@ class Blake2bSpec extends SparkSpec {
     def kept(algo: String): Set[Long] =
       try {
         spark.conf.set(graft.GraftConfig.DigestKey, algo)
-        graft.sources.Envelope.firstOccurrenceConfigured(spark, env)
+        graft.sources.Envelope.firstOccurrence(env)
           .select("event_id").collect().map(_.getLong(0)).toSet
       } finally spark.conf.unset(graft.GraftConfig.DigestKey)
     val h64Kept = kept("h64")

@@ -619,4 +619,26 @@ class TxnParquetSpec extends SparkSpec {
     assert(!new java.io.File(s"$dir/batch=1").exists())
     assert(TxnParquet.read(spark, dir).as[Long].collect().toSet == Set(1L, 2L, 3L))
   }
+
+  test("appendStream ids: a kept checkpoint continues them, a lost one never reuses a committed id") {
+    val dir = freshDir()
+    val ckpt = s"$dir/_checkpoint"
+    // a file source replays from a kept checkpoint, unlike a memory source
+    def run(in: String, values: Long*): Unit = {
+      values.toDF("value").write.mode("append").parquet(in)
+      val q = TxnParquet.appendStream(
+        spark.readStream.schema("value LONG").parquet(in), dir)(identity)
+      try q.processAllAvailable() finally q.stop()
+    }
+    def rows = TxnParquet.read(spark, dir).as[Long].collect().sorted.toSeq
+    run(s"$dir/in1", 1L, 2L)
+    run(s"$dir/in1", 3L) // restart on the kept checkpoint
+    assert(TxnParquet.committedBatches(spark, dir) == Seq(0L, 1L))
+    assert(rows == Seq(1L, 2L, 3L))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
+    run(s"$dir/in2", 10L, 20L) // a fresh checkpoint starts past id 1
+    run(s"$dir/in2", 30L) // and a restart on it keeps that base
+    assert(TxnParquet.committedBatches(spark, dir) == Seq(0L, 1L, 2L, 3L))
+    assert(rows == Seq(1L, 2L, 3L, 10L, 20L, 30L))
+  }
 }
