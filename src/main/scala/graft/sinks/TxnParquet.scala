@@ -76,15 +76,17 @@ object TxnParquet {
   /** The commit protocol (see the object doc). `beforeMarker` runs
     * after the data landed and before the marker, so the marker's
     * atomicity covers whatever it writes. With `keepEmpty = false` an
-    * output of zero rows is removed again and gets no marker. Returns
-    * true when this call committed, false when the id was already
-    * committed or the empty output was dropped. */
+    * output of zero rows is removed again and gets no marker.
+    * `ifCommitted` runs instead of the write when the id is already
+    * committed. Returns true when this call committed, false when the
+    * id was already committed or the empty output was dropped. */
   private def commit(df: DataFrame, dir: String, batchId: Long, kind: String,
                      keepEmpty: Boolean = true,
-                     beforeMarker: org.apache.hadoop.fs.FileSystem => Unit = _ => ()
+                     beforeMarker: org.apache.hadoop.fs.FileSystem => Unit = _ => (),
+                     ifCommitted: DataFrame => Unit = _ => ()
                     ): Boolean = {
     val f = fs(df.sparkSession, dir)
-    if (f.exists(marker(dir, batchId))) false
+    if (f.exists(marker(dir, batchId))) { ifCommitted(df); false }
     else {
       // delete on a missing path is a no-op returning false: no exists
       // probe, and no listing of `dir` on the write path
@@ -149,42 +151,49 @@ object TxnParquet {
     * `append(toBatch(b), dir, base + batchId)`, so a restart that
     * replays an epoch is a committed no-op and a torn epoch is
     * overwritten by its replay. `base` is [[idBase]]: 0 for a fresh
-    * output, and past every committed id when a fresh checkpoint
+    * output, and one past the last committed id when a fresh checkpoint
     * attaches to an existing output (a lost checkpoint restarts
     * micro-batch ids at 0, and reusing a committed id would skip that
     * batch's rows).
     * The micro-batch plan runs once: a `toBatch(b)` of zero rows (an
     * empty micro-batch, or one `toBatch` filters out) is removed after
-    * the write and its id stays uncommitted.
+    * the write and its id stays uncommitted. A replayed epoch whose id
+    * is committed still runs its plan, into Spark's `noop` sink: its
+    * stateful operators must commit their state version again, and
+    * Spark fails the trigger when one does not
+    * (`STATE_STORE_COMMIT_VALIDATION_FAILED`).
     * The checkpoint defaults to `dir/_checkpoint`. */
   def appendStream(df: DataFrame, dir: String,
                    checkpointDir: Option[String] = None)
                   (toBatch: DataFrame => DataFrame): StreamingQuery = {
     val checkpoint = checkpointDir.getOrElse(s"$dir/_checkpoint")
-    val base = idBase(df.sparkSession, dir, checkpoint)
+    val base = idBase(df.sparkSession, checkpoint)(
+      committedBatches(df.sparkSession, dir).lastOption.fold(0L)(_ + 1))
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commit(toBatch(batch), dir, base + batchId, "batch", keepEmpty = false)
+        commit(toBatch(batch), dir, base + batchId, "batch", keepEmpty = false,
+          ifCommitted = _.write.format("noop").mode("overwrite").save())
         ()
       }
       .start()
   }
 
-  /** The output id of `checkpoint`'s micro-batch 0. While the
-    * checkpoint is fresh (no offsets logged), that is one past the
-    * last committed id of `dir`, recorded in the checkpoint before the
-    * query starts; later starts read the record back. A checkpoint
-    * with offsets but no record reads 0, which keeps the ids of
-    * checkpoints written before the record existed. */
-  private def idBase(spark: SparkSession, dir: String, checkpoint: String): Long = {
+  /** The output id of `checkpoint`'s micro-batch 0, for a stream that
+    * keys its writes by micro-batch id. While the checkpoint is fresh
+    * (no offsets logged), that is `next`, the first id the output has
+    * not used, recorded in the checkpoint before the query starts;
+    * later starts read the record back. A checkpoint with offsets but
+    * no record reads 0, which keeps the ids of checkpoints written
+    * before the record existed. */
+  private[graft] def idBase(spark: SparkSession, checkpoint: String)(next: => Long): Long = {
     val f = fs(spark, checkpoint)
     val record = new Path(s"$checkpoint/txnparquet_id_base")
     val offsets = new Path(s"$checkpoint/offsets")
     val fresh = !f.exists(offsets) ||
       !f.listStatus(offsets).exists(_.getPath.getName.forall(_.isDigit))
     if (fresh) {
-      val base = committedBatches(spark, dir).lastOption.fold(0L)(_ + 1)
+      val base = next
       val out = f.create(record, true)
       try out.write(base.toString.getBytes("UTF-8")) finally out.close()
       base

@@ -64,14 +64,22 @@ object StreamDeletes {
   }
 
   /** Start applying a streaming CDC frame into `dir`. Read the result
-    * with `TxnParquet.readWithDeletes(spark, dir, keyCols)`. */
+    * with `TxnParquet.readWithDeletes(spark, dir, keyCols)`. Micro-batch
+    * `b` applies as epoch `base + b`, where `base` (`TxnParquet.idBase`)
+    * is the first epoch whose two ids `dir` has not committed when the
+    * checkpoint is fresh: a lost checkpoint restarts micro-batch ids at
+    * 0, and reusing a committed id would skip that epoch. */
   def applyCdc(ops: DataFrame, dir: String, keyCols: Seq[String],
-               checkpointDir: Option[String] = None): StreamingQuery =
+               checkpointDir: Option[String] = None): StreamingQuery = {
+    val spark = ops.sparkSession
+    val checkpoint = checkpointDir.getOrElse(s"$dir/_checkpoint")
+    val base = TxnParquet.idBase(spark, checkpoint)(
+      TxnParquet.committedBatches(spark, dir).lastOption.fold(0L)(_ / 2 + 1))
     ops.writeStream
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$dir/_checkpoint"))
+      .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        applyBatch(batch, dir, keyCols, epochId)
+        applyBatch(batch, dir, keyCols, base + epochId)
       }
       .start()
+  }
 }

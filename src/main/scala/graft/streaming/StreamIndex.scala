@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Similarity
+import graft.sinks.TxnParquet
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -36,19 +37,26 @@ object StreamIndex {
     *                      restart-safe without extra wiring.
     */
   def appendStream(indexDir: String, newVecs: DataFrame,
-                   checkpointDir: Option[String] = None): StreamingQuery =
+                   checkpointDir: Option[String] = None): StreamingQuery = {
+    val spark = newVecs.sparkSession
+    val checkpoint = checkpointDir.getOrElse(s"$indexDir/_checkpoint")
+    val markers = new Path(s"$indexDir/_batches")
+    val fs = markers.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // past every marker when the checkpoint is fresh: a lost checkpoint
+    // restarts micro-batch ids at 0, and a reused marker skips its batch
+    val base = TxnParquet.idBase(spark, checkpoint)(
+      if (!fs.exists(markers)) 0L
+      else fs.listStatus(markers).map(_.getPath.getName.toLong + 1).maxOption.getOrElse(0L))
     newVecs.writeStream
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$indexDir/_checkpoint"))
+      .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val marker = new Path(s"$indexDir/_batches/$batchId")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val marker = new Path(markers, (base + batchId).toString)
         if (!fs.exists(marker)) {
           if (!batch.isEmpty)
-            Similarity.appendToIndex(spark, indexDir, batch)
+            Similarity.appendToIndex(batch.sparkSession, indexDir, batch)
           fs.create(marker, true).close()
         }
       }
       .start()
+  }
 }

@@ -74,6 +74,23 @@ class StreamDeletesSpec extends SparkSpec {
     assert(TxnParquet.committedBatches(spark, tbl) === Seq(0L, 1L, 2L, 3L))
   }
 
+  test("a lost checkpoint does not reuse the epochs the table has committed") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("scdc_lost").toString
+    val (tbl, ckpt) = (s"$base/tbl", s"$base/ckpt")
+    def runOnce(ops: (Long, String, Long, String)*): Unit = {
+      val mem = MemoryStream[(Long, String, Long, String)]
+      val q = StreamDeletes.applyCdc(mem.toDF().toDF("seq", "op", "id", "v"), tbl,
+        Seq("id"), Some(ckpt))
+      try { mem.addData(ops); q.processAllAvailable() } finally q.stop()
+    }
+    runOnce((1L, "upsert", 1L, "a"))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
+    runOnce((2L, "upsert", 1L, "a2"), (3L, "upsert", 2L, "b"))
+    assert(view(tbl) === Seq(1L -> "a2", 2L -> "b"))
+  }
+
   test("within-batch resolution keeps only each key's last op by seq") {
     import spark.implicits._
     val b = Seq(

@@ -54,6 +54,27 @@ class StreamIndexSpec extends SparkSpec {
       Similarity.searchSavedIvfPq(spark, sf, batchDir).collect().toSeq)
   }
 
+  test("a lost checkpoint does not reuse the batch markers the index has") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val rows = graft.Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding").as("e"))
+      .filter(col("vec_id") < 270).as[(Long, Array[Float])].collect().sortBy(_._1)
+    val dir = Files.createTempDirectory("graft-annidx-lost").toString
+    val ckpt = s"$dir/_checkpoint"
+    Similarity.saveIndexOf(rows.take(250).toSeq.toDF("vec_id", "e"), dir)
+    def runOnce(vs: Seq[(Long, Array[Float])]): Unit = {
+      val mem = MemoryStream[(Long, Array[Float])]
+      val q = StreamIndex.appendStream(dir, mem.toDF().toDF("vec_id", "e"), Some(ckpt))
+      try { mem.addData(vs); q.processAllAvailable() } finally q.stop()
+    }
+    runOnce(rows.slice(250, 260).toSeq)
+    assert(spark.read.parquet(s"$dir/members").count() == 260)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
+    runOnce(rows.slice(260, 270).toSeq)
+    assert(spark.read.parquet(s"$dir/members").count() == 270)
+  }
+
   test("a crash-replayed append batch cannot change any saved-index search") {
     // Worst-case delivery fault: a batch is appended, the commit marker is
     // lost, and the whole batch replays — duplicating its per-vector rows.
