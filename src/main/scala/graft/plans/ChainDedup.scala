@@ -22,10 +22,12 @@ import org.apache.spark.sql.SparkSessionExtensions
   * first row is kept only at or after floor + window; a null floor
   * keeps the run's first row as without one.
   *
-  * This is graft's one batch form of the keep rule (the streaming form
-  * is StreamDedup's state function). The exec node filters raw
-  * `InternalRow`s in a streaming pass with O(1) state, with no object
-  * ser/de boundary. Catalyst inserts the required hash exchange +
+  * This file is graft's one home of the keep rule: [[KeepRun]] for
+  * interpreted passes (this batch operator's `doExecute` and the
+  * streaming [[StreamChainDedupExec]], whose floor is the state store's
+  * last kept time) and, spelled out in Java, this operator's generated
+  * code. The exec node filters raw `InternalRow`s in a streaming pass
+  * with O(1) state, with no object ser/de boundary. Catalyst inserts the required hash exchange +
   * in-partition sort via requiredChildDistribution/Ordering — at
   * cluster scale that is one shuffle on the uniform digest key,
   * identical to any groupBy.
@@ -105,24 +107,44 @@ case class ChainDedupExec(digest: Attribute, ts: Attribute,
     child.execute().mapPartitions({ it =>
       // rows arrive clustered by digest and sorted by (digest, ts, ...):
       // a single pass with one timestamp of state per run suffices.
-      var cur = 0L; var last = 0L; var init = false
+      val run = new KeepRun(win)
+      var cur = 0L; var init = false
       it.filter { row =>
         val d = row.getLong(digestIdx)
         val t = row.getLong(tsIdx)
         if (!init || d != cur) {
           init = true; cur = d
-          if (floorIdx < 0 || row.isNullAt(floorIdx) || t >= row.getLong(floorIdx) + win) {
-            last = t; true
-          } else { last = row.getLong(floorIdx); false }
-        }
-        else if (t >= last + win) { last = t; true }
-        else false
+          if (floorIdx < 0 || row.isNullAt(floorIdx)) run.start(t)
+          else run.start(t, row.getLong(floorIdx))
+        } else run.next(t)
       }
     }, preservesPartitioning = true)
   }
 
   override protected def withNewChildInternal(c: SparkPlan): ChainDedupExec =
     copy(child = c)
+}
+
+/** The keep rule over one digest's run of rows in (ts, tiebreak) order,
+  * interpreted: the run's first row is kept unless the digest's `floor`
+  * (its last kept time before the run) is less than the window behind
+  * it; every later row is kept iff it lands at least the window after
+  * the last kept row. `lastKept` is the run's last kept time, the floor
+  * when it kept none. */
+private[graft] final class KeepRun(windowUs: Long) {
+  private var last = 0L
+
+  /** The first row of a run without a floor: always kept. */
+  def start(t: Long): Boolean = { last = t; true }
+
+  /** The first row of a run whose digest was last kept at `floor`. */
+  def start(t: Long, floor: Long): Boolean =
+    if (t >= floor + windowUs) { last = t; true } else { last = floor; false }
+
+  def next(t: Long): Boolean =
+    if (t >= last + windowUs) { last = t; true } else false
+
+  def lastKept: Long = last
 }
 
 object ChainDedupStrategy extends SparkStrategy {
@@ -135,7 +157,8 @@ object ChainDedupStrategy extends SparkStrategy {
 
 /** Register with `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
   * or `SparkSession.builder().withExtensions(new GraftExtensions)`.
-  * Injects the custom planner strategy and the SQL-facing functions. */
+  * Injects the custom planner strategies, the streaming chain's swap
+  * ([[StreamChainDedupRule]]) and the SQL-facing functions. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
@@ -145,6 +168,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => ChainDedupStrategy)
+    e.injectColumnar(_ => StreamChainDedupRule)
     e.injectPlannerStrategy(_ => GlobalRankStrategy)
     e.injectFunction((FunctionIdentifier("graft_cosine"),
       info("graft_cosine", "graft_cosine(a, b) - cosine similarity of two float arrays"),

@@ -45,7 +45,7 @@ import org.apache.spark.util.SerializableConfiguration
   * the output size without running the plan a second time. Out of
   * scope: partitioned or bucketed output, `maxRecordsPerFile` rolling,
   * and the SQL write metrics (files, bytes) that `df.write` posts. */
-private[sinks] object LeanParquetWriter {
+private[graft] object LeanParquetWriter {
 
   /** Configuration keys in the job conf that differ from the shipped
     * base: Some(value) is set, None is unset. */
@@ -68,8 +68,10 @@ private[sinks] object LeanParquetWriter {
     * (SparkContext, content). A changed configuration replaces the
     * reference and leaves the old copy to `ContextCleaner`, which
     * removes it once unreachable: a job still reading it keeps it
-    * alive, so it is never destroyed under a running task. */
-  private[sinks] def ship(spark: SparkSession): Shipped = synchronized {
+    * alive, so it is never destroyed under a running task. The
+    * streaming chain's state stores open with the same copy
+    * (`graft.plans.StreamChainDedupExec`). */
+  private[graft] def ship(spark: SparkSession): Shipped = synchronized {
     val conf = spark.sessionState.newHadoopConf()
     val now = content(conf)
     val sc = spark.sparkContext

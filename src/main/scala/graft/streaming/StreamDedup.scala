@@ -1,8 +1,11 @@
 package graft.streaming
 
+import graft.plans.StreamChainFn
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** The reference's actual runtime re-expressed as Structured Streaming.
   *
@@ -20,10 +23,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * digests are uniform hashes. Use the RocksDB state store provider in
   * production for state larger than executor heap.
   *
-  * Serializable because the state functions call the shared keep rule
-  * ([[scan]]) on this object from executors.
   */
-object StreamDedup extends Serializable {
+object StreamDedup {
 
   /** Canonical message envelope of the deduplicated stream. */
   case class Msg(event_id: Long, ts_us: Long, user_id: Long,
@@ -58,31 +59,25 @@ object StreamDedup extends Serializable {
     withEventTime(df).withWatermark("ts", window)
       .dropDuplicatesWithinWatermark("digest")
 
-  /** The keep rule of one digest's rows: rows sorted by (ts_us,
-    * event_id), each kept iff it lands at least `windowUs` after the
-    * last kept row (`last`, from state). Returns every row with its keep
-    * flag, and the new last-kept time. */
-  private def scan(rows: Iterator[Msg], last: Option[Long],
-                   windowUs: Long): (Seq[(Msg, Boolean)], Option[Long]) = {
-    var l = last
-    val tagged = rows.toSeq.sortBy(m => (m.ts_us, m.event_id)).map { m =>
-      val keep = l.forall(t => m.ts_us >= t + windowUs)
-      if (keep) l = Some(m.ts_us)
-      m -> keep
-    }
-    (tagged, l)
-  }
-
   /** The one stateful operator behind [[chain]], [[chainTagged]] and
-    * [[DedupJob]]:
-    * grouped by digest, carrying one timestamp of state per key,
-    * emitting every row tagged by [[scan]]. `initialState` is the
-    * digest→lastKept map recovered from prior output (the
-    * cacheBuilding.ts warm-up); without it the state starts empty. */
+    * [[DedupJob]]: grouped by digest, carrying one timestamp of state
+    * per key, emitting every row tagged by the keep rule, which runs as
+    * `plans.StreamChainDedupExec` (the function handed to
+    * `flatMapGroupsWithState` only marks the operator for that swap).
+    * `initialState` is the digest→lastKept map recovered from prior
+    * output (the cacheBuilding.ts warm-up); without it the operator has
+    * no initial-state input at all.
+    *
+    * The grouping key is the `digest` column itself, named `value` and
+    * never null, so the state's key schema stays the `value: bigint` the
+    * typed `groupByKey(_.digest)` wrote before, and checkpoints written
+    * with it restore. The input must be a stream: `Dedup.chainNative`
+    * is the batch form. */
   private[streaming] def taggedChain(spark: SparkSession, df: DataFrame, windowUs: Long,
                                      initialState: Option[Dataset[(Long, DigestState)]],
                                      stateExpiry: Option[String]): Dataset[TaggedMsg] = {
     import spark.implicits._
+    require(df.isStreaming, "the TTL chain is a streaming operator; Dedup.chainNative is its batch form")
     val withTs = withEventTime(
       df.select("event_id", "ts_us", "user_id", "event_type", "value", "props", "digest"))
     // stateExpiry=Some(delay) bounds state with an event-time timeout:
@@ -94,42 +89,22 @@ object StreamDedup extends Serializable {
     // downtime) must use stateExpiry=None (unbounded state, any arrival
     // order — see CheckpointRecoverySpec) or re-bootstrap instead
     // (Dedup.bootstrap / the initialState warm-up).
-    val ds = (stateExpiry match {
-      case Some(delay) if withTs.isStreaming => withTs.withWatermark("ts", delay)
-      case _ => withTs
-    }).as[Msg]
-    val grouped = ds.groupByKey(_.digest)
-    val streaming = ds.isStreaming && stateExpiry.isDefined
-
-    def fn(digest: Long, rows: Iterator[Msg], state: GroupState[DigestState]): Iterator[TaggedMsg] = {
-      if (!rows.hasNext && state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        val (tagged, last) = scan(rows, state.getOption.map(_.lastKeptUs), windowUs)
-        last.foreach { l =>
-          state.update(DigestState(l))
-          if (streaming) {
-            // never set a timeout at/behind the current watermark —
-            // Spark rejects it; expire on the next watermark advance
-            val target = l / 1000 + windowUs / 1000
-            val wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(math.max(target, wm + 1))
-          }
-        }
-        tagged.iterator.map { case (m, keep) =>
-          TaggedMsg(m.event_id, m.ts_us, m.user_id, m.event_type, m.value,
-            m.props, m.digest, keep)
-        }
-      }
-    }
-
+    val ds = stateExpiry.fold(withTs)(withTs.withWatermark("ts", _))
+    val grouped = ds.groupBy(Bridge.column(AssertNotNull(Bridge.expression(col("digest"))))
+      .as("value")).as[Long, Msg]
     val timeout =
-      if (streaming) GroupStateTimeout.EventTimeTimeout
+      if (stateExpiry.isDefined) GroupStateTimeout.EventTimeTimeout
       else GroupStateTimeout.NoTimeout
-    val init = initialState.getOrElse(spark.emptyDataset[(Long, DigestState)])
-    grouped.flatMapGroupsWithState(
-      OutputMode.Append, timeout, init.groupByKey(_._1).mapValues(_._2))(fn)
+    val keep = new StreamChainFn[Long, Msg, DigestState, TaggedMsg](
+      windowUs, ts = "ts_us", tiebreak = Seq("event_id"))
+    initialState match {
+      case None => grouped.flatMapGroupsWithState(OutputMode.Append, timeout)(keep)
+      case Some(init) =>
+        val warm = init.toDF("value", "state")
+          .select(col("value"), col("state.lastKeptUs").as("lastKeptUs"))
+          .groupBy("value").as[Long, DigestState]
+        grouped.flatMapGroupsWithState(OutputMode.Append, timeout, warm)(keep)
+    }
   }
 
   /** #28: exact ObliviousSet chain semantics with warm-up bootstrap —
@@ -187,8 +162,8 @@ object StreamDedup extends Serializable {
   def warmStateFromTable(spark: SparkSession, state: org.apache.spark.sql.DataFrame)
       : Dataset[(Long, DigestState)] = {
     import spark.implicits._
-    state.select(col("digest").as[Long], col("last_kept_us").as[Long])
-      .map { case (d, t) => (d, DigestState(t)) }
+    state.select(col("digest").as("_1"), struct(col("last_kept_us").as("lastKeptUs")).as("_2"))
+      .as[(Long, DigestState)]
   }
 
   /** #29: watermarked tumbling-window counters — the streaming form of

@@ -35,4 +35,9 @@ object Bridge {
   def logicalPlan(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]].queryExecution.analyzed
+
+  /** The session's state store coordinator (private[sql]). */
+  def stateStoreCoordinator(spark: org.apache.spark.sql.SparkSession)
+      : Option[org.apache.spark.sql.execution.streaming.state.StateStoreCoordinatorRef] =
+    Some(spark.asInstanceOf[classic.SparkSession].streams.stateStoreCoordinator)
 }
