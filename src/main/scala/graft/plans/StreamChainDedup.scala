@@ -312,9 +312,13 @@ object StreamChainDedupExec {
       else Some(data(o.name)))
     require(columns.count(_.isEmpty) == 1, "the chain's result needs one boolean `kept`")
     val init = if (fm.hasInitialState) Some(fm.initialState) else None
+    // Spark's version-2 value row (its StateManagerImplV2 schema, built
+    // here: that state manager resolves encoders on every planning)
+    val value = new StructType().add("groupState", fm.stateEncoder.schema, nullable = true)
+    val valueSchema = if (expiring) value.add("timeoutTimestamp", LongType, nullable = false) else value
     new StreamChainDedupExec(key, ts, fn.windowUs, output, columns,
       if (expiring) fm.watermarkExpressionForLateEvents else None, expiring,
-      fm.stateManager.stateSchema, fm.stateInfo, fm.eventTimeWatermarkForEviction,
+      valueSchema, fm.stateInfo, fm.eventTimeWatermarkForEviction,
       init.map(_ => fm.initialStateGroupAttrs.head),
       init.map(_ => fm.initialStateDataAttrs.find(_.name == stateFields.head.name).get),
       fm.skipEmittingInitialStateKeys, sorted, init)

@@ -22,7 +22,6 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   * state store — at 1000 executors state is sharded uniformly because
   * digests are uniform hashes. Use the RocksDB state store provider in
   * production for state larger than executor heap.
-  *
   */
 object StreamDedup {
 

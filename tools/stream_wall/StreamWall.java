@@ -14,7 +14,7 @@ import java.util.concurrent.locks.LockSupport;
  * Spark's jars), as a single-file source program:
  *
  * <pre>
- *   java [perfbench's JVM options] -cp "$CLASSES:/opt/spark/jars/*" \
+ *   java [perfbench's JVM options] -cp "$CLASSES:$SPARK_JARS/*" \
  *     tools/stream_wall/StreamWall.java --query live3 --out samples.txt \
  *     [--interval-us 3300] -- [perfbench.Main arguments]
  * </pre>
