@@ -21,7 +21,7 @@ import java.nio.file.{Files, Paths}
   *  - agg_direct_{uniform,skewed}:  one-stage groupBy(event_type)
   *  - agg_salted_{uniform,skewed}:  Skew.saltedAggOf's two-stage plan
   *  - win_sessionize_{uniform,skewed}: the one-window gap sessionize
-  *    (Analytics.sessionizeOf, partitionBy user_id — the family salting
+  *    (EventUsers.sessionizeOf, partitionBy user_id — the family salting
   *    CANNOT fix, because window semantics need the whole key in one
   *    partition; the bench measures the hot-partition price so the
   *    limit is a number, not a claim)
@@ -84,7 +84,7 @@ object SkewBench {
       run(s"agg_salted_$tag",
         () => { graft.operators.Skew.saltedAggOf(ev).count(); () })
       run(s"win_sessionize_$tag",
-        () => { graft.operators.Analytics.sessionizeOf(ev).count(); () })
+        () => { graft.operators.EventUsers.sessionizeOf(ev).count(); () })
       // the round-15 mitigation: time-segmented local sessions + a
       // session-grain merge — bit-identical output, hot user spread
       // over its active segments instead of one task

@@ -8,7 +8,7 @@ object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Analytics.q1(spark, "/root/testdata/sf0.001")
+    Commerce.q1(spark, "/root/testdata/sf0.001")
 
   /** One registered query: its Spark plan and its DuckDB oracle SQL.
     * The oracle may read the corpus in `ctx` (a session and an sf
@@ -337,7 +337,7 @@ object SparkEntry {
   }
 
   /** Gap-session index over `ev` (30-min default) — mirrors
-    * Analytics.sessionIndexed; shared by every session-consuming
+    * EventUsers.sessionIndexed; shared by every session-consuming
     * oracle (sessionize, session_lookup, cooccurrence). */
   private def sessCte(gapUs: Long): String =
     s"""s AS (
@@ -760,7 +760,7 @@ object SparkEntry {
     * `ev` CTE in scope. */
   private def TCLOSE_CTES: String = {
     val P = graft.operators.Privacy
-    s"""cells AS (SELECT event_type, ts_us // ${P.UsPerDay} AS day,
+    s"""cells AS (SELECT event_type, ts_us // ${EventSeries.DayUs} AS day,
        |            CAST(ROUND(value*100) AS BIGINT) // ${P.SpendBandCents} AS band,
        |            CAST(count(*) AS BIGINT) AS c
        |          FROM ev GROUP BY 1, 2, 3),
@@ -798,7 +798,7 @@ object SparkEntry {
     val P = graft.operators.Privacy
     s"""WITH ev AS ($EV),
        |$TCLOSE_CTES,
-       |ll AS (SELECT event_type, ts_us // ${P.UsPerDay} AS day,
+       |ll AS (SELECT event_type, ts_us // ${EventSeries.DayUs} AS day,
        |         CAST(count(DISTINCT user_id) AS BIGINT) AS l
        |       FROM ev GROUP BY 1, 2)
        |SELECT tfin.event_type AS event_type, tfin.day AS day, k, l, t_ppm,
@@ -824,7 +824,7 @@ object SparkEntry {
        |  SELECT a.p AS p1, b.p AS p2, CAST(count(*) AS BIGINT) AS supp
        |  FROM items a JOIN items b ON a.o = b.o AND a.p < b.p GROUP BY 1, 2),
        |f AS (SELECT * FROM pairs
-       |      WHERE supp >= ${graft.operators.Analytics6.BasketMinSupport}),
+       |      WHERE supp >= ${graft.operators.Commerce.BasketMinSupport}),
        |e AS (
        |  SELECT p1, p2, supp, sa.s AS s1, sb.s AS s2,
        |    ${ratio4Sql("supp * n.n_orders", "sa.s * sb.s")} AS lift4
@@ -3442,7 +3442,7 @@ object SparkEntry {
          |FROM td GROUP BY term
          |ORDER BY df DESC, term LIMIT 20""".stripMargin),
 
-    decl("docs_lang_pivot", (s, d) => Analytics3.langPivot(s, d))(
+    decl("docs_lang_pivot", (s, d) => CorpusStats.langPivot(s, d))(
       s"""SELECT source,
          |  count(*) FILTER (lang = 'de') AS n_de,
          |  count(*) FILTER (lang = 'en') AS n_en,
@@ -3528,7 +3528,7 @@ object SparkEntry {
          |FROM c ORDER BY doc_id""".stripMargin
     },
 
-    decl("text_readability", (s, d) => Analytics5.readability(s, d))(
+    decl("text_readability", (s, d) => TextAnalysis.readability(s, d))(
       s"""WITH c AS (
          |  SELECT doc_id, CAST(len($TOKS) AS BIGINT) AS n_words,
          |    greatest(CAST(length(regexp_replace(text, '[.!?]+', 'x', 'g')) -
@@ -3538,7 +3538,7 @@ object SparkEntry {
          |  ${ratio4Sql("n_words", "n_sentences")} AS words_per_sentence
          |FROM c ORDER BY doc_id""".stripMargin),
 
-    decl("docs_quality_histogram", (s, d) => Analytics5.qualityHistogram(s, d))(
+    decl("docs_quality_histogram", (s, d) => QualitySignals.qualityHistogram(s, d))(
       s"""WITH q AS (SELECT doc_id, $TOKS AS toks,
          |  CAST(length(regexp_replace(text, '$WS', '', 'g')) AS BIGINT) AS len_no_ws
          |  FROM documents),
@@ -3634,9 +3634,9 @@ object SparkEntry {
          |FROM agg ORDER BY source""".stripMargin),
 
     // joint (length decile × quality decile) grid — mirrors
-    // Analytics5.lengthQualityGrid (same exact decile formula as
+    // QualitySignals.lengthQualityGrid (same exact decile formula as
     // events_spend_deciles; same quality key as docs_quality_histogram)
-    decl("docs_length_quality_grid", (s, d) => Analytics5.lengthQualityGrid(s, d))(
+    decl("docs_length_quality_grid", (s, d) => QualitySignals.lengthQualityGrid(s, d))(
       s"""WITH q AS (SELECT doc_id, n_chars, $TOKS AS toks,
          |  CAST(length(regexp_replace(text, '$WS', '', 'g')) AS BIGINT) AS len_no_ws
          |  FROM documents),
@@ -4960,10 +4960,10 @@ object SparkEntry {
     },
 
     // quality-decile drop shares under min-keeper near-dup dedup —
-    // mirrors Analytics5.dedupSurvivorship (shared pair + closure CTEs
+    // mirrors QualitySignals.dedupSurvivorship (shared pair + closure CTEs
     // with dedup_components; same quality-key/decile algebra as the
     // joint grid)
-    decl("dedup_survivorship_quality", (s, d) => Analytics5.dedupSurvivorship(s, d))(
+    decl("dedup_survivorship_quality", (s, d) => QualitySignals.dedupSurvivorship(s, d))(
       s"""WITH $SH_CTE,
          |$MH_CAND_CTE,
          |$MH_PAIRS_CTE,
@@ -5107,7 +5107,7 @@ object SparkEntry {
          |  FROM ($RELEASE_REPORT_SQL) WHERE releasable),
          |ev AS ($EV),
          |cents AS (
-         |  SELECT event_type, ts_us // ${graft.operators.Privacy.UsPerDay} AS day,
+         |  SELECT event_type, ts_us // ${EventSeries.DayUs} AS day,
          |    CAST(sum(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS sum_cents
          |  FROM ev GROUP BY 1, 2)
          |SELECT event_type, day, k, l, sum_cents
@@ -5122,7 +5122,7 @@ object SparkEntry {
       val labelCase = P.KBuckets.map { case (r, l, _) => s"WHEN $r THEN '$l'" }
         .mkString("CASE bucket_rank ", " ", " ELSE 'k>=20' END")
       s"""WITH ev AS ($EV),
-         |q AS (SELECT event_type, ts_us // ${P.UsPerDay} AS day,
+         |q AS (SELECT event_type, ts_us // ${EventSeries.DayUs} AS day,
          |        CAST(ROUND(value*100) AS BIGINT) // ${P.SpendBandCents} AS band
          |      FROM ev),
          |cl AS (SELECT event_type, day, band, CAST(count(*) AS BIGINT) AS k
@@ -5150,7 +5150,7 @@ object SparkEntry {
         .map { case (r, l, _) => s"WHEN $r THEN '${l.replace("k", "l")}'" }
         .mkString("CASE bucket_rank ", " ", " ELSE 'l>=20' END")
       s"""WITH ev AS ($EV),
-         |q AS (SELECT event_type, ts_us // ${P.UsPerDay} AS day,
+         |q AS (SELECT event_type, ts_us // ${EventSeries.DayUs} AS day,
          |        CAST(ROUND(value*100) AS BIGINT) // ${P.SpendBandCents} AS band,
          |        user_id
          |      FROM ev),
@@ -5203,7 +5203,7 @@ object SparkEntry {
       }).mkString("\n|UNION ALL\n|".stripMargin)
       s"""WITH ev AS ($EV),
          |fine AS MATERIALIZED (
-         |  SELECT event_type, ts_us // ${P.UsPerDay} AS day,
+         |  SELECT event_type, ts_us // ${EventSeries.DayUs} AS day,
          |    CAST(ROUND(value*100) AS BIGINT) // ${P.SpendBandCents} AS band,
          |    CAST(count(*) AS BIGINT) AS k
          |  FROM ev GROUP BY 1, 2, 3),
@@ -5529,7 +5529,7 @@ object SparkEntry {
     * q2, q11, q16 and q20 are the partsupp family adapted to lineitem
     * facts: the data contract has no partsupp table. */
   private def tpch: Seq[Decl] = Seq(
-    decl("q1_agg", (s, d) => Analytics.q1(s, d))(
+    decl("q1_agg", (s, d) => Commerce.q1(s, d))(
       s"""SELECT l_returnflag, l_linestatus,
          |  ${moneySum("CAST(l_quantity AS DECIMAL(18,4))")} AS sum_qty,
          |  ${moneySum("CAST(l_extendedprice AS DECIMAL(18,4))")} AS sum_base_price,
@@ -5542,7 +5542,7 @@ object SparkEntry {
          |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
          |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin),
 
-    decl("q3_shipping", (s, d) => Analytics.q3(s, d))(
+    decl("q3_shipping", (s, d) => Commerce.q3(s, d))(
       s"""SELECT l_orderkey, epoch_ms(o_orderdate) AS o_odate_ms,
          |  ${moneySum(DISC_PRICE)} AS revenue
          |FROM lineitem
@@ -5553,7 +5553,7 @@ object SparkEntry {
          |  AND l_shipdate > TIMESTAMP '1997-01-01 00:00:00'
          |GROUP BY 1, 2 ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin),
 
-    decl("q5_local_supplier", (s, d) => Analytics.q5(s, d))(
+    decl("q5_local_supplier", (s, d) => Commerce.q5(s, d))(
       s"""SELECT n_name, ${moneySum(DISC_PRICE)} AS revenue
          |FROM lineitem
          |JOIN orders ON l_orderkey = o_orderkey
@@ -5566,7 +5566,7 @@ object SparkEntry {
          |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
          |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin),
 
-    decl("q4_priority", (s, d) => Analytics.q4(s, d))(
+    decl("q4_priority", (s, d) => Commerce.q4(s, d))(
       s"""SELECT o_orderpriority, COUNT(*) AS order_count
          |FROM orders
          |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -5575,7 +5575,7 @@ object SparkEntry {
          |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
          |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
-    decl("q6_forecast", (s, d) => Analytics.q6(s, d))(
+    decl("q6_forecast", (s, d) => Commerce.q6(s, d))(
       s"""SELECT CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(l_discount AS DECIMAL(18,4))),2) AS DOUBLE) AS revenue
          |FROM lineitem
          |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -5583,7 +5583,7 @@ object SparkEntry {
          |  AND l_discount >= 0.03 AND l_discount <= 0.05
          |  AND l_quantity < 24""".stripMargin),
 
-    decl("q12_priority_class", (s, d) => Analytics.q12(s, d))(
+    decl("q12_priority_class", (s, d) => Commerce.q12(s, d))(
       s"""SELECT l_linestatus,
          |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
          |  CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
@@ -5592,7 +5592,7 @@ object SparkEntry {
          |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
          |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin),
 
-    decl("q14_promo", (s, d) => Analytics.q14(s, d))(
+    decl("q14_promo", (s, d) => Commerce.q14(s, d))(
       s"""SELECT
          |  CAST(ROUND(SUM(CASE WHEN p_type = 'PROMO' THEN $DISC_PRICE ELSE CAST(0.0 AS DECIMAL(18,4)) END),2) AS DOUBLE) AS promo_revenue,
          |  ${moneySum(DISC_PRICE)} AS total_revenue,
@@ -5602,7 +5602,7 @@ object SparkEntry {
          |WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
          |  AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'""".stripMargin),
 
-    decl("q10_returns", (s, d) => Analytics.q10(s, d))(
+    decl("q10_returns", (s, d) => Commerce.q10(s, d))(
       s"""SELECT c_custkey, c_name, n_name, ${moneySum(DISC_PRICE)} AS revenue
          |FROM lineitem
          |JOIN orders ON l_orderkey = o_orderkey
@@ -5613,7 +5613,7 @@ object SparkEntry {
          |  AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
          |GROUP BY 1, 2, 3 ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin),
 
-    decl("q7_volume", (s, d) => Analytics2.q7(s, d))(
+    decl("q7_volume", (s, d) => Commerce.q7(s, d))(
       s"""SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
          |  year(l_shipdate) AS l_year, ${moneySum(DISC_PRICE)} AS revenue
          |FROM lineitem
@@ -5627,7 +5627,7 @@ object SparkEntry {
          |  AND sn.n_name <> cn.n_name
          |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
 
-    decl("q8_market_share", (s, d) => Analytics2.q8(s, d))(
+    decl("q8_market_share", (s, d) => Commerce.q8(s, d))(
       s"""SELECT year(o_orderdate) AS o_year,
          |  CAST(ROUND(SUM(CASE WHEN n_name = 'NATION_1' THEN $DISC_PRICE ELSE CAST(0.0 AS DECIMAL(18,4)) END),2) AS DOUBLE) AS nation_revenue,
          |  ${moneySum(DISC_PRICE)} AS total_revenue,
@@ -5642,7 +5642,7 @@ object SparkEntry {
          |WHERE r_name = 'ASIA' AND p_type = 'ECONOMY'
          |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    decl("q13_order_dist", (s, d) => Analytics2.q13(s, d))(
+    decl("q13_order_dist", (s, d) => Commerce.q13(s, d))(
       s"""SELECT c_count, COUNT(*) AS custdist FROM (
          |  SELECT c_custkey, COUNT(o_orderkey) AS c_count
          |  FROM customer LEFT JOIN orders
@@ -5650,7 +5650,7 @@ object SparkEntry {
          |  GROUP BY c_custkey
          |) GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin),
 
-    decl("q15_top_supplier", (s, d) => Analytics2.q15(s, d))(
+    decl("q15_top_supplier", (s, d) => Commerce.q15(s, d))(
       s"""WITH rev AS (
          |  SELECT l_suppkey AS s_suppkey, ${moneySum(DISC_PRICE)} AS total_revenue
          |  FROM lineitem
@@ -5663,7 +5663,7 @@ object SparkEntry {
          |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
          |ORDER BY s_suppkey""".stripMargin),
 
-    decl("q17_small_quantity", (s, d) => Analytics2.q17(s, d))(
+    decl("q17_small_quantity", (s, d) => Commerce.q17(s, d))(
       s"""WITH a AS (
          |  SELECT l_partkey,
          |    ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)/COUNT(*), 4) AS avg_qty
@@ -5674,7 +5674,7 @@ object SparkEntry {
          |FROM lineitem JOIN a USING (l_partkey)
          |WHERE l_quantity < 0.2 * avg_qty""".stripMargin),
 
-    decl("q18_large_orders", (s, d) => Analytics2.q18(s, d))(
+    decl("q18_large_orders", (s, d) => Commerce.q18(s, d))(
       s"""WITH big AS (
          |  SELECT l_orderkey AS o_orderkey,
          |    CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,4))),2) AS DOUBLE) AS sum_qty
@@ -5687,14 +5687,14 @@ object SparkEntry {
          |WHERE sum_qty > 200.0
          |ORDER BY sum_qty DESC, o_orderkey""".stripMargin),
 
-    decl("q19_disjunctive", (s, d) => Analytics2.q19(s, d))(
+    decl("q19_disjunctive", (s, d) => Commerce.q19(s, d))(
       s"""SELECT ${moneySum(DISC_PRICE)} AS revenue
          |FROM lineitem JOIN part ON l_partkey = p_partkey
          |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 20)
          |   OR (p_brand = 'Brand#13' AND p_size BETWEEN 10 AND 25 AND l_quantity BETWEEN 10 AND 30)
          |   OR (p_brand = 'Brand#19' AND p_size BETWEEN 20 AND 35 AND l_quantity BETWEEN 20 AND 40)""".stripMargin),
 
-    decl("q22_idle_customers", (s, d) => Analytics2.q22(s, d))(
+    decl("q22_idle_customers", (s, d) => Commerce.q22(s, d))(
       s"""WITH a AS (
          |  SELECT ROUND(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE)/COUNT(*), 4) AS a
          |  FROM customer WHERE c_acctbal > 0.0
@@ -5709,9 +5709,9 @@ object SparkEntry {
          |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin),
 
     // repeat-purchase cadence per market segment — mirrors
-    // Analytics3.repeatInterval (customer-keyed lag window; exact
+    // Commerce.repeatInterval (customer-keyed lag window; exact
     // quantile_cont == the groupedQuantiles interpolation)
-    decl("orders_repeat_interval", (s, d) => Analytics3.repeatInterval(s, d))(
+    decl("orders_repeat_interval", (s, d) => Commerce.repeatInterval(s, d))(
       s"""WITH g AS (
          |  SELECT o_custkey, o_orderkey,
          |    datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
@@ -5736,7 +5736,7 @@ object SparkEntry {
 
     // Textbook correlated EXISTS / NOT-EXISTS form — the Spark plan is
     // the aggregate rewrite, so the hash-match proves the rewrite.
-    decl("q21_waiting", (s, d) => Analytics3.q21(s, d))(
+    decl("q21_waiting", (s, d) => Commerce.q21(s, d))(
       s"""WITH f AS (SELECT o_orderkey, o_orderdate FROM orders WHERE o_orderstatus = 'F'),
          |l AS (SELECT l_orderkey, l_suppkey,
          |        l_shipdate > o_orderdate + INTERVAL 365 DAY AS late
@@ -5760,7 +5760,7 @@ object SparkEntry {
          |ORDER BY numwait DESC, s_name
          |LIMIT 10""".stripMargin),
 
-    decl("lineitem_quantiles", (s, d) => Analytics3.quantiles(s, d))(
+    decl("lineitem_quantiles", (s, d) => Commerce.quantiles(s, d))(
       s"""SELECT l_returnflag,
          |  quantile_cont(l_quantity, 0.25) AS p25,
          |  quantile_cont(l_quantity, 0.5) AS p50,
@@ -5768,7 +5768,7 @@ object SparkEntry {
          |FROM lineitem GROUP BY l_returnflag
          |ORDER BY l_returnflag""".stripMargin),
 
-    decl("lineitem_monthly", (s, d) => Analytics5.monthlyRevenue(s, d))(
+    decl("lineitem_monthly", (s, d) => Commerce.monthlyRevenue(s, d))(
       s"""WITH m AS (
          |  SELECT CAST(year(l_shipdate) AS INTEGER) AS year,
          |    CAST(month(l_shipdate) AS INTEGER) AS month,
@@ -5780,17 +5780,17 @@ object SparkEntry {
          |    coalesce(CAST(ROUND(lag(rev_exact) OVER (ORDER BY year, month) * 100, 0) AS BIGINT), 0) AS delta_cents
          |FROM m ORDER BY year, month""".stripMargin),
 
-    // market-basket pair lift — mirrors Analytics6.basketPairs (shared
+    // market-basket pair lift — mirrors Commerce.basketPairs (shared
     // BASKET_CTES: one definition, two consumers — assoc rules reuse it)
-    decl("orders_basket_pairs", (s, d) => Analytics6.basketPairs(s, d))(
+    decl("orders_basket_pairs", (s, d) => Commerce.basketPairs(s, d))(
       s"""WITH $BASKET_CTES
          |SELECT p1, p2, supp, s1, s2, lift4
          |FROM e ORDER BY p1, p2""".stripMargin),
 
-    // per-month ship-lag quantiles — mirrors Analytics3.fulfillmentLag
+    // per-month ship-lag quantiles — mirrors Commerce.fulfillmentLag
     // (integer day lags at binary-fraction positions: quantile_cont
     // reproduces Spark's percentile bit-for-bit)
-    decl("orders_fulfillment_lag", (s, d) => Analytics3.fulfillmentLag(s, d))(
+    decl("orders_fulfillment_lag", (s, d) => Commerce.fulfillmentLag(s, d))(
       s"""WITH lg AS (
          |  SELECT o_orderdate,
          |    CAST(datediff('day', o_orderdate, l_shipdate) AS BIGINT) AS lag_days
@@ -5805,8 +5805,8 @@ object SparkEntry {
          |FROM lg GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     // daily ordered/shipped counts + running backlog — mirrors
-    // Analytics3.backlogCurve (epoch-day integer export)
-    decl("orders_backlog_curve", (s, d) => Analytics3.backlogCurve(s, d))(
+    // Commerce.backlogCurve (epoch-day integer export)
+    decl("orders_backlog_curve", (s, d) => Commerce.backlogCurve(s, d))(
       s"""WITH j AS (
          |  SELECT CAST(datediff('day', DATE '1970-01-01',
          |           CAST(o_orderdate AS DATE)) AS BIGINT) AS od,
@@ -5828,10 +5828,10 @@ object SparkEntry {
          |FROM f ORDER BY day_epoch""".stripMargin),
 
     // q9-style product revenue
-    // directional association rules — mirrors Analytics6.assocRules
+    // directional association rules — mirrors Commerce.assocRules
     // (both directions of every surviving pair; confidence is the
     // exact HALF_UP rational supp(a,b)/supp(a))
-    decl("orders_assoc_rules", (s, d) => Analytics6.assocRules(s, d))(
+    decl("orders_assoc_rules", (s, d) => Commerce.assocRules(s, d))(
       s"""WITH $BASKET_CTES,
          |r AS (
          |  SELECT p1 AS ante, p2 AS cons, supp, s1 AS s_ante, lift4 FROM e
@@ -5843,7 +5843,7 @@ object SparkEntry {
 
     // q9-style product revenue (no partsupp in the corpus, so the
     // supplycost term is out of reach by data contract — revenue half)
-    decl("q9_product_revenue", (s, d) => Analytics2.q9(s, d))(
+    decl("q9_product_revenue", (s, d) => Commerce.q9(s, d))(
       s"""SELECT n_name AS nation, year(o_orderdate) AS o_year,
          |  ${moneySum(DISC_PRICE)} AS revenue
          |FROM lineitem
@@ -5857,8 +5857,8 @@ object SparkEntry {
     // lineitem facts (no partsupp table by data contract)
     // q2-style min-cost supplier over REALIZED unit prices (no
     // partsupp by data contract); integer-exact min selection on the
-    // halfUp rational ×10⁴ — mirrors Analytics7.q2
-    decl("q2_min_cost_supplier", (s, d) => Analytics7.q2(s, d))(
+    // halfUp rational ×10⁴ — mirrors Commerce.q2
+    decl("q2_min_cost_supplier", (s, d) => Commerce.q2(s, d))(
       s"""WITH ps AS (
          |  SELECT p_partkey, p_brand, s_suppkey, s_name, n_name,
          |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)))*10000 AS BIGINT) AS ext_u,
@@ -5879,8 +5879,8 @@ object SparkEntry {
 
     // q11-style important stock from one nation's realized supply
     // value; scale-free mean-relative cut, pure-int64 threshold
-    // (value_u > halfUp(2·total_u/n_parts)) — mirrors Analytics7.q11
-    decl("q11_important_stock", (s, d) => Analytics7.q11(s, d))(
+    // (value_u > halfUp(2·total_u/n_parts)) — mirrors Commerce.q11
+    decl("q11_important_stock", (s, d) => Commerce.q11(s, d))(
       s"""WITH per AS (
          |  SELECT l_partkey AS p_partkey,
          |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)))*10000 AS BIGINT) AS value_u
@@ -5898,8 +5898,8 @@ object SparkEntry {
          |ORDER BY value DESC, p_partkey""".stripMargin),
 
     // q16-style observed part/supplier counts (supplier-of-part from
-    // lineitem facts) — mirrors Analytics7.q16
-    decl("q16_part_supplier", (s, d) => Analytics7.q16(s, d))(
+    // lineitem facts) — mirrors Commerce.q16
+    decl("q16_part_supplier", (s, d) => Commerce.q16(s, d))(
       s"""SELECT p_brand, p_type, p_size,
          |  CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
          |FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -5910,8 +5910,8 @@ object SparkEntry {
 
     // q20-style dominant family suppliers in one region/year; dominance
     // integer-exact (qty_u × 100 > part_total_u × 30) — mirrors
-    // Analytics7.q20
-    decl("q20_dominant_suppliers", (s, d) => Analytics7.q20(s, d))(
+    // Commerce.q20
+    decl("q20_dominant_suppliers", (s, d) => Commerce.q20(s, d))(
       s"""WITH ps AS (
          |  SELECT l_partkey, l_suppkey,
          |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,4)))*10000 AS BIGINT) AS qty_u
@@ -5929,10 +5929,10 @@ object SparkEntry {
          |WHERE r_name = 'EUROPE'
          |GROUP BY 1, 2 ORDER BY s_suppkey""".stripMargin),
 
-    decl("orders_segment_trend", (s, d) => Analytics4.segmentTrend(s, d))(
+    decl("orders_segment_trend", (s, d) => Commerce.segmentTrend(s, d))(
       // the events_trend_ols OLS algebra on monthly discounted revenue per market
       // segment; moments in HUGEINT (cents magnitudes pass int64 here)
-      // — mirrors Analytics4.segmentTrend
+      // — mirrors Commerce.segmentTrend
       s"""WITH monthly AS (
          |  SELECT c_mktsegment AS segment,
          |    CAST(year(o_orderdate)*12 + month(o_orderdate) - 1 AS BIGINT) AS mo,
@@ -5974,8 +5974,8 @@ object SparkEntry {
          |FROM c ORDER BY segment""".stripMargin),
 
     // per-segment customer Gini + top-decile share on the sorted-rank
-    // identity, HUGEINT moments — mirrors Analytics4.revenueGini
-    decl("customer_revenue_gini", (s, d) => Analytics4.revenueGini(s, d))(
+    // identity, HUGEINT moments — mirrors Commerce.revenueGini
+    decl("customer_revenue_gini", (s, d) => Commerce.revenueGini(s, d))(
       s"""WITH rev AS (
          |  SELECT c_mktsegment AS segment, o_custkey AS cust,
          |    CAST(ROUND(SUM($DISC_PRICE) * 100, 0) AS BIGINT) AS cents
@@ -6238,13 +6238,13 @@ object SparkEntry {
                              "greatest(abs(exact_p90), 1)")} AS BIGINT) AS err90_ppm
          |FROM kq JOIN exq USING (event_type) ORDER BY event_type""".stripMargin),
 
-    decl("events_window", (s, d) => Analytics.eventsWindow(s, d))(
+    decl("events_window", (s, d) => EventSeries.eventsWindow(s, d))(
       s"""WITH ev AS ($EV)
          |SELECT ts_us // 3600000000 AS hour_bucket, event_type, COUNT(*) AS n,
          |  CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))),2) AS DOUBLE) AS sum_value
          |FROM ev GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
-    decl("events_sessionize", (s, d) => Analytics.sessionize(s, d))(
+    decl("events_sessionize", (s, d) => EventUsers.sessionize(s, d))(
       s"""WITH ev AS ($EV),
          |$SESS_CTE
          |SELECT user_id, session_idx, COUNT(*) AS n_events,
@@ -6272,7 +6272,7 @@ object SparkEntry {
          |  CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))),2) AS DOUBLE) AS sum_value
          |FROM s2 GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
-    decl("topk_per_group", (s, d) => Analytics.topkPerGroup(s, d))(
+    decl("topk_per_group", (s, d) => EventValues.topkPerGroup(s, d))(
       s"""WITH ev AS ($EV)
          |SELECT event_type, rnk, event_id, value FROM (
          |  SELECT event_type, event_id, value,
@@ -6283,7 +6283,7 @@ object SparkEntry {
     // moving average exported as its exact (sum, count) integer pair —
     // a repeating-decimal double ratio is the one thing two engines
     // will format/round apart.
-    decl("events_running", (s, d) => Analytics.runningUser(s, d))(
+    decl("events_running", (s, d) => EventUsers.runningUser(s, d))(
       s"""WITH ev AS ($EV)
          |SELECT event_id, user_id, ts_us,
          |  CAST(SUM(cents) OVER w_all AS BIGINT) AS running_cents,
@@ -6297,7 +6297,7 @@ object SparkEntry {
          |         ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
          |ORDER BY event_id""".stripMargin),
 
-    decl("events_distinct_hour", (s, d) => Analytics.distinctUsersHour(s, d))(
+    decl("events_distinct_hour", (s, d) => EventSeries.distinctUsersHour(s, d))(
       s"""WITH ev AS ($EV)
          |SELECT ts_us // 3600000000 AS hour_bucket,
          |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
@@ -6306,14 +6306,14 @@ object SparkEntry {
 
     // NULLS FIRST explicitly: Spark defaults nulls-first on ASC,
     // DuckDB defaults nulls-last.
-    decl("events_rollup", (s, d) => Analytics.eventsRollup(s, d))(
+    decl("events_rollup", (s, d) => EventSeries.eventsRollup(s, d))(
       s"""WITH ev AS ($EV)
          |SELECT event_type, ts_us // 3600000000 AS hour_bucket, COUNT(*) AS n,
          |  CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))),2) AS DOUBLE) AS sum_value
          |FROM ev GROUP BY ROLLUP (event_type, ts_us // 3600000000)
          |ORDER BY event_type NULLS FIRST, hour_bucket NULLS FIRST""".stripMargin),
 
-    decl("events_cube", (s, d) => Analytics.eventsCube(s, d))(
+    decl("events_cube", (s, d) => EventSeries.eventsCube(s, d))(
       s"""WITH ev AS ($EV)
          |SELECT event_type, ts_us // 3600000000 AS hour_bucket, COUNT(*) AS n,
          |  CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))),2) AS DOUBLE) AS sum_value
@@ -6381,7 +6381,7 @@ object SparkEntry {
          |  CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))),2) AS DOUBLE) AS sum_value
          |FROM ev GROUP BY event_type ORDER BY event_type""".stripMargin),
 
-    decl("events_gap_stats", (s, d) => Analytics3.gapStats(s, d))(
+    decl("events_gap_stats", (s, d) => EventUsers.gapStats(s, d))(
       s"""WITH ev AS ($EV),
          |g AS (
          |  SELECT user_id,
@@ -6392,7 +6392,7 @@ object SparkEntry {
          |FROM g WHERE gap IS NOT NULL
          |GROUP BY user_id ORDER BY user_id""".stripMargin),
 
-    decl("events_anomalies", (s, d) => Analytics3.valueAnomalies(s, d))(
+    decl("events_anomalies", (s, d) => EventValues.valueAnomalies(s, d))(
       s"""WITH ev AS (
          |  SELECT event_id, event_type,
          |    CAST(ROUND(value*100) AS BIGINT) AS cents
@@ -6408,7 +6408,7 @@ object SparkEntry {
          |WHERE ev.cents > f.fence
          |ORDER BY ev.event_id""".stripMargin),
 
-    decl("events_funnel", (s, d) => Analytics3.funnel(s, d))(
+    decl("events_funnel", (s, d) => EventUsers.funnel(s, d))(
       s"""WITH ev AS ($EV),
          |v AS (SELECT user_id, min(ts_us) AS t_view FROM ev
          |      WHERE event_type = 'view' GROUP BY user_id),
@@ -6424,7 +6424,7 @@ object SparkEntry {
          |       (SELECT count(*) FROM c) AS n_click,
          |       (SELECT count(*) FROM p) AS n_purchase""".stripMargin),
 
-    decl("events_retention", (s, d) => Analytics3.retention(s, d))(
+    decl("events_retention", (s, d) => EventUsers.retention(s, d))(
       s"""WITH ev AS ($EV),
          |activity AS (SELECT DISTINCT user_id, ts_us // 86400000000 AS day FROM ev),
          |cohorts AS (SELECT user_id, min(day) AS cohort_day FROM activity GROUP BY user_id)
@@ -6434,7 +6434,7 @@ object SparkEntry {
          |GROUP BY 1, 2
          |ORDER BY 1, 2""".stripMargin),
 
-    decl("events_cooccurrence", (s, d) => Analytics3.cooccurrence(s, d))(
+    decl("events_cooccurrence", (s, d) => EventUsers.cooccurrence(s, d))(
       s"""WITH ev AS ($EV),
          |$SESS_CTE,
          |d AS (SELECT DISTINCT user_id, session_idx, event_type FROM s2)
@@ -6443,7 +6443,7 @@ object SparkEntry {
          |  AND a.event_type < b.event_type
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
-    decl("events_markov", (s, d) => Analytics3.markovTransitions(s, d))(
+    decl("events_markov", (s, d) => EventUsers.markovTransitions(s, d))(
       s"""WITH ev AS ($EV),
          |t AS (
          |  SELECT event_type AS type_from,
@@ -6455,9 +6455,9 @@ object SparkEntry {
          |  ${ratio4Sql("n", "SUM(n) OVER (PARTITION BY type_from)")} AS p
          |FROM g ORDER BY type_from, type_to""".stripMargin),
 
-    decl("events_pattern_sessions", (s, d) => Analytics3.patternSessions(s, d))(
+    decl("events_pattern_sessions", (s, d) => EventUsers.patternSessions(s, d))(
       s"""WITH ev AS ($EV),
-         |${sessCte(graft.operators.Analytics3.PatternGapUs)},
+         |${sessCte(graft.operators.EventUsers.PatternGapUs)},
          |p1 AS (
          |  SELECT *, coalesce(max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
          |    OVER wp, 0) AS saw_view
@@ -6476,7 +6476,7 @@ object SparkEntry {
          |  THEN 1 ELSE 0 END) = 1
          |ORDER BY user_id, session_idx""".stripMargin),
 
-    decl("events_dau_wau", (s, d) => Analytics3.dauWau(s, d))(
+    decl("events_dau_wau", (s, d) => EventUsers.dauWau(s, d))(
       s"""WITH ev AS ($EV),
          |act AS (SELECT DISTINCT user_id, ts_us // 86400000000 AS day FROM ev),
          |dau AS (SELECT day, count(*) AS dau FROM act GROUP BY 1),
@@ -6486,14 +6486,14 @@ object SparkEntry {
          |SELECT day, dau, wau, ${ratio4Sql("dau", "wau")} AS stickiness
          |FROM dau JOIN wau USING (day) ORDER BY day""".stripMargin),
 
-    decl("events_histogram", (s, d) => Analytics4.valueHistogram(s, d))(
+    decl("events_histogram", (s, d) => EventValues.valueHistogram(s, d))(
       s"""WITH ev AS ($EV),
          |c AS (SELECT event_type, CAST(ROUND(value*100) AS BIGINT) AS cents FROM ev)
-         |SELECT event_type, cents // ${graft.operators.Analytics4.HistBucketCents} AS bucket,
+         |SELECT event_type, cents // ${graft.operators.EventValues.HistBucketCents} AS bucket,
          |  count(*) AS n, min(cents) AS min_cents, max(cents) AS max_cents
          |FROM c GROUP BY 1, 2 ORDER BY event_type, bucket""".stripMargin),
 
-    decl("events_hourly_change", (s, d) => Analytics4.hourlyChange(s, d))(
+    decl("events_hourly_change", (s, d) => EventSeries.hourlyChange(s, d))(
       s"""WITH ev AS ($EV),
          |h AS (
          |  SELECT event_type, ts_us // 3600000000 AS hour, count(*) AS n,
@@ -6505,8 +6505,8 @@ object SparkEntry {
          |FROM h WINDOW w AS (PARTITION BY event_type ORDER BY hour)
          |ORDER BY event_type, hour""".stripMargin),
 
-    decl("events_attribution", (s, d) => Analytics4.attribution(s, d)) {
-      val lookback = graft.operators.Analytics4.AttributionWindowUs
+    decl("events_attribution", (s, d) => EventUsers.attribution(s, d)) {
+      val lookback = graft.operators.EventUsers.AttributionWindowUs
       s"""WITH ev AS ($EV),
          |t AS (
          |  SELECT event_id, ts_us, user_id, event_type,
@@ -6523,7 +6523,7 @@ object SparkEntry {
          |ORDER BY event_id""".stripMargin
     },
 
-    decl("events_top_paths", (s, d) => Analytics4.topPaths(s, d))(
+    decl("events_top_paths", (s, d) => EventUsers.topPaths(s, d))(
       s"""WITH ev AS ($EV),
          |p AS (
          |  SELECT concat_ws('>', event_type,
@@ -6537,7 +6537,7 @@ object SparkEntry {
     // ntile (whose remainder distribution is a second thing to keep in
     // lockstep); rank comes from the scalable global-rank helper on the
     // Spark side and a window here.
-    decl("events_spend_deciles", (s, d) => Analytics4.spendDeciles(s, d))(
+    decl("events_spend_deciles", (s, d) => EventValues.spendDeciles(s, d))(
       s"""WITH ev AS ($EV),
          |sp AS (SELECT user_id,
          |         CAST(sum(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS spend_cents
@@ -6547,7 +6547,7 @@ object SparkEntry {
          |SELECT user_id, spend_cents, rn, (rn-1)*10 // nn + 1 AS decile
          |FROM r ORDER BY user_id""".stripMargin),
 
-    decl("events_session_histogram", (s, d) => Analytics4.sessionHistogram(s, d))(
+    decl("events_session_histogram", (s, d) => EventUsers.sessionHistogram(s, d))(
       s"""WITH ev AS ($EV),
          |$SESS_CTE,
          |per AS (SELECT user_id, session_idx, count(*) AS n_events
@@ -6555,8 +6555,8 @@ object SparkEntry {
          |SELECT n_events, count(*) AS n_sessions FROM per
          |GROUP BY n_events ORDER BY n_events""".stripMargin),
 
-    decl("events_trimmed_mean", (s, d) => Analytics4.trimmedMean(s, d)) {
-      val pct = graft.operators.Analytics4.TrimPct
+    decl("events_trimmed_mean", (s, d) => EventValues.trimmedMean(s, d)) {
+      val pct = graft.operators.EventValues.TrimPct
       s"""WITH ev AS ($EV),
          |c AS (SELECT event_type, CAST(ROUND(value*100) AS BIGINT) AS cents, event_id FROM ev),
          |r AS (
@@ -6569,7 +6569,7 @@ object SparkEntry {
          |FROM kept GROUP BY event_type ORDER BY event_type""".stripMargin
     },
 
-    decl("profile_events", (s, d) => Analytics4.profileEvents(s, d)) {
+    decl("profile_events", (s, d) => EventValues.profileEvents(s, d)) {
       val cols = Seq("event_id", "ts_us", "user_id", "event_type", "value", "props")
       cols.map { c =>
         s"""SELECT '$c' AS column_name, count(*) AS n_rows,
@@ -6579,7 +6579,7 @@ object SparkEntry {
         "\n) ORDER BY column_name")
     },
 
-    decl("events_rolling_week", (s, d) => Analytics4.rollingWeek(s, d))(
+    decl("events_rolling_week", (s, d) => EventSeries.rollingWeek(s, d))(
       s"""WITH ev AS ($EV),
          |d AS (
          |  SELECT event_type, ts_us // 86400000000 AS day, count(*) AS n,
@@ -6594,7 +6594,7 @@ object SparkEntry {
 
     // RFM quintiles: 5 = best, (N − rn)·5 div N + 1 in pure int64 —
     // scalable global ranks on the Spark side, windows here
-    decl("events_rfm", (s, d) => Analytics4.rfm(s, d))(
+    decl("events_rfm", (s, d) => EventUsers.rfm(s, d))(
       s"""WITH ev AS ($EV),
          |b AS (SELECT user_id, max(ts_us) AS last_us, count(*) AS n_events,
          |        CAST(sum(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS spend_cents
@@ -6611,7 +6611,7 @@ object SparkEntry {
          |  (nn - rm)*5 // nn + 1 AS m_score
          |FROM r ORDER BY user_id""".stripMargin),
 
-    decl("events_seasonality", (s, d) => Analytics5.seasonality(s, d))(
+    decl("events_seasonality", (s, d) => EventSeries.seasonality(s, d))(
       s"""WITH ev AS ($EV),
          |c AS (
          |  SELECT (ts_us // 86400000000) % 7 AS dow,
@@ -6621,7 +6621,7 @@ object SparkEntry {
          |  ${ratio4Sql("n", "sum(n) OVER (PARTITION BY dow)")} AS day_share
          |FROM c ORDER BY dow, hod""".stripMargin),
 
-    decl("events_cohort_revenue", (s, d) => Analytics5.cohortRevenue(s, d))(
+    decl("events_cohort_revenue", (s, d) => EventUsers.cohortRevenue(s, d))(
       s"""WITH ev AS ($EV),
          |ud AS (SELECT user_id, ts_us // 86400000000 AS day,
          |         sum(CAST(ROUND(value*100) AS BIGINT)) AS cents
@@ -6634,7 +6634,7 @@ object SparkEntry {
 
     // Lorenz concentration over the spend deciles: cumulative window on
     // the O(10) aggregate; shares via the exact ratio4 spelling
-    decl("events_value_concentration", (s, d) => Analytics4.valueConcentration(s, d))(
+    decl("events_value_concentration", (s, d) => EventValues.valueConcentration(s, d))(
       s"""WITH ev AS ($EV),
          |sp AS (SELECT user_id,
          |         CAST(sum(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS spend_cents
@@ -6657,8 +6657,8 @@ object SparkEntry {
 
     // gap-regularity bot panel: integer mean + exact MAD around it;
     // mean 0 (all-identical timestamps) is the degenerate bot case
-    decl("events_bot_regularity", (s, d) => Analytics3.botRegularity(s, d)) {
-      val A = graft.operators.Analytics3
+    decl("events_bot_regularity", (s, d) => EventUsers.botRegularity(s, d)) {
+      val A = EventUsers
       s"""WITH ev AS ($EV),
          |g AS (SELECT user_id,
          |        ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS gap
@@ -6687,7 +6687,7 @@ object SparkEntry {
 
     // user-lifecycle flux: first/last event days per user over the
     // distinct (user, day) frame, cumulative acquisitions
-    decl("events_user_flux", (s, d) => Analytics3.userFlux(s, d))(
+    decl("events_user_flux", (s, d) => EventUsers.userFlux(s, d))(
       s"""WITH ev AS ($EV),
          |act AS (SELECT DISTINCT user_id, ts_us // 86400000000 AS day FROM ev),
          |a AS (SELECT day, count(*) AS n_active FROM act GROUP BY 1),
@@ -6701,9 +6701,9 @@ object SparkEntry {
          |FROM a LEFT JOIN f ON a.day = f.day LEFT JOIN l ON a.day = l.day
          |ORDER BY a.day""".stripMargin),
 
-    // human-scale gap buckets — mirrors Analytics3.gapHistogram
-    decl("events_gap_histogram", (s, d) => Analytics3.gapHistogram(s, d)) {
-      val bks = graft.operators.Analytics3.GapBuckets
+    // human-scale gap buckets — mirrors EventUsers.gapHistogram
+    decl("events_gap_histogram", (s, d) => EventUsers.gapHistogram(s, d)) {
+      val bks = graft.operators.EventUsers.GapBuckets
       val rankCase = bks.map { case (r, _, ub) => s"WHEN gap < $ub THEN $r" }
         .mkString("CASE ", " ", s" ELSE ${bks.length + 1} END")
       val labelCase = (bks.map { case (r, l, _) => s"WHEN $r THEN '$l'" })
@@ -6726,10 +6726,10 @@ object SparkEntry {
          |FROM cum CROSS JOIN t ORDER BY bucket_rank""".stripMargin
     },
 
-    // seasonal-naive hourly backtest — mirrors Analytics6.forecastError
-    decl("events_forecast_error", (s, d) => Analytics6.forecastError(s, d))(
+    // seasonal-naive hourly backtest — mirrors EventSeries.forecastError
+    decl("events_forecast_error", (s, d) => EventSeries.forecastError(s, d))(
       s"""WITH ev AS ($EV),
-         |h AS (SELECT event_type, ts_us // ${graft.operators.Analytics6.UsPerHour} AS hour FROM ev),
+         |h AS (SELECT event_type, ts_us // ${graft.operators.EventSeries.HourUs} AS hour FROM ev),
          |c AS (SELECT event_type, hour, CAST(count(*) AS BIGINT) AS n
          |      FROM h GROUP BY 1, 2),
          |rng AS (SELECT min(hour) AS h0, max(hour) AS h1 FROM h),
@@ -6752,11 +6752,11 @@ object SparkEntry {
          |  ${ratio4Sql("sae_seasonal", "greatest(sae_naive, 1)")} AS mase4
          |FROM agg ORDER BY event_type""".stripMargin),
 
-    // exact CUSUM drift panel — mirrors Analytics6.cusumDrift
-    decl("events_cusum_drift", (s, d) => Analytics6.cusumDrift(s, d)) {
-      val lam = graft.operators.Analytics6.CusumLambdaMeanHours
+    // exact CUSUM drift panel — mirrors EventSeries.cusumDrift
+    decl("events_cusum_drift", (s, d) => EventSeries.cusumDrift(s, d)) {
+      val lam = graft.operators.EventSeries.CusumLambdaMeanHours
       s"""WITH ev AS ($EV),
-         |h AS (SELECT event_type, ts_us // ${graft.operators.Analytics6.UsPerHour} AS hour FROM ev),
+         |h AS (SELECT event_type, ts_us // ${graft.operators.EventSeries.HourUs} AS hour FROM ev),
          |c AS (SELECT event_type, hour, CAST(count(*) AS BIGINT) AS n
          |      FROM h GROUP BY 1, 2),
          |rng AS (SELECT min(hour) AS h0, max(hour) AS h1 FROM h),
@@ -6798,10 +6798,10 @@ object SparkEntry {
          |FROM a1 JOIN pk USING (event_type) ORDER BY event_type""".stripMargin
     },
 
-    // exact integer ACF — mirrors Analytics6.autocorrelation
-    decl("events_autocorrelation", (s, d) => Analytics6.autocorrelation(s, d))(
+    // exact integer ACF — mirrors EventSeries.autocorrelation
+    decl("events_autocorrelation", (s, d) => EventSeries.autocorrelation(s, d))(
       s"""WITH ev AS ($EV),
-         |h AS (SELECT event_type, ts_us // ${graft.operators.Analytics6.UsPerHour} AS hour FROM ev),
+         |h AS (SELECT event_type, ts_us // ${graft.operators.EventSeries.HourUs} AS hour FROM ev),
          |c AS (SELECT event_type, hour, CAST(count(*) AS BIGINT) AS n
          |      FROM h GROUP BY 1, 2),
          |rng AS (SELECT min(hour) AS h0, max(hour) AS h1 FROM h),
@@ -6818,7 +6818,7 @@ object SparkEntry {
          |den AS (SELECT event_type, CAST(sum(r * r) AS BIGINT) AS den
          |        FROM r GROUP BY 1),
          |l AS (SELECT event_type, hour + g.lag_h AS hour, g.lag_h, r AS r0
-         |      FROM r, generate_series(1, ${graft.operators.Analytics6.MaxAcfLag}) g(lag_h)),
+         |      FROM r, generate_series(1, ${graft.operators.EventSeries.MaxAcfLag}) g(lag_h)),
          |p AS (SELECT l.event_type, l.lag_h, CAST(count(*) AS BIGINT) AS n_pairs,
          |        CAST(sum(l.r0 * r.r) AS BIGINT) AS num
          |      FROM l JOIN r ON r.event_type = l.event_type AND r.hour = l.hour
@@ -6827,10 +6827,10 @@ object SparkEntry {
          |  CAST(num AS DOUBLE) / CAST(greatest(den, 1) AS DOUBLE) AS acf
          |FROM p JOIN den USING (event_type) ORDER BY event_type, lag_h""".stripMargin),
 
-    // Benford first-digit audit — mirrors Analytics4.benford (leading
+    // Benford first-digit audit — mirrors EventValues.benford (leading
     // digit off the cents STRING head, never log10; dense 9-digit grid)
-    decl("events_benford", (s, d) => Analytics4.benford(s, d)) {
-      val ben = graft.operators.Analytics4.BenfordPpm.zipWithIndex
+    decl("events_benford", (s, d) => EventValues.benford(s, d)) {
+      val ben = graft.operators.EventValues.BenfordPpm.zipWithIndex
         .map { case (p, i) => s"(${i + 1}, ${p})" }.mkString(", ")
       s"""WITH ev AS ($EV),
          |c AS (SELECT event_type, CAST(ROUND(value*100) AS BIGINT) AS cents
@@ -6857,12 +6857,12 @@ object SparkEntry {
     },
 
     // per-user Fano factor of hourly counts over the global hour span —
-    // mirrors Analytics4.burstiness (var/mean = (H·Σc² − n²)/(H·n),
+    // mirrors EventSeries.burstiness (var/mean = (H·Σc² − n²)/(H·n),
     // exact int64, Cauchy–Schwarz keeps the numerator non-negative)
-    decl("events_burstiness", (s, d) => Analytics4.burstiness(s, d))(
+    decl("events_burstiness", (s, d) => EventSeries.burstiness(s, d))(
       s"""WITH ev AS ($EV),
          |cells AS (
-         |  SELECT user_id, ts_us // ${graft.operators.Analytics4.HourUs} AS hour,
+         |  SELECT user_id, ts_us // ${graft.operators.EventSeries.HourUs} AS hour,
          |    CAST(count(*) AS BIGINT) AS c
          |  FROM ev GROUP BY 1, 2),
          |span AS (SELECT max(hour) - min(hour) + 1 AS h FROM cells),
@@ -6876,12 +6876,12 @@ object SparkEntry {
          |FROM u CROSS JOIN span ORDER BY user_id""".stripMargin),
 
     // week-over-week type-mix L1 shift in exact ppm with the top mover
-    // — mirrors Analytics4.typeDrift (dense grid built from the
+    // — mirrors EventSeries.typeDrift (dense grid built from the
     // aggregate so absent cells contribute their full ppm)
-    decl("events_type_drift", (s, d) => Analytics4.typeDrift(s, d))(
+    decl("events_type_drift", (s, d) => EventSeries.typeDrift(s, d))(
       s"""WITH ev AS ($EV),
          |wk AS (
-         |  SELECT ts_us // ${graft.operators.Analytics4.WeekUs} AS week, event_type,
+         |  SELECT ts_us // ${graft.operators.EventSeries.WeekUs} AS week, event_type,
          |    CAST(count(*) AS BIGINT) AS c
          |  FROM ev GROUP BY 1, 2),
          |tot AS (SELECT week, CAST(sum(c) AS BIGINT) AS t FROM wk GROUP BY 1),
@@ -6982,8 +6982,8 @@ object SparkEntry {
          |SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
          |FROM ev GROUP BY 1 ORDER BY event_type""".stripMargin),
 
-    // engagement-depth histogram — mirrors Analytics3.activeDaysHistogram
-    decl("events_active_days_histogram", (s, d) => Analytics3.activeDaysHistogram(s, d))(
+    // engagement-depth histogram — mirrors EventUsers.activeDaysHistogram
+    decl("events_active_days_histogram", (s, d) => EventUsers.activeDaysHistogram(s, d))(
       s"""WITH ev AS ($EV),
          |pu AS (SELECT user_id, CAST(count(*) AS BIGINT) AS d
          |       FROM (SELECT DISTINCT user_id, ts_us // 86400000000 AS day
@@ -7006,9 +7006,9 @@ object SparkEntry {
          |FROM h CROSS JOIN t ORDER BY bucket_rank""".stripMargin),
 
     // per-transition gap quantiles — mirrors
-    // Analytics3.transitionQuantiles (groupedQuantiles replicates the
+    // EventUsers.transitionQuantiles (groupedQuantiles replicates the
     // inclusive interpolation, so quantile_cont replays it exactly)
-    decl("events_transition_quantiles", (s, d) => Analytics3.transitionQuantiles(s, d))(
+    decl("events_transition_quantiles", (s, d) => EventUsers.transitionQuantiles(s, d))(
       s"""WITH ev AS ($EV),
          |tr AS (
          |  SELECT event_type AS from_type,
@@ -7024,9 +7024,9 @@ object SparkEntry {
          |GROUP BY 1, 2 ORDER BY from_type, to_type""".stripMargin),
 
     // per-user behavioral Simpson concentration, banded — mirrors
-    // Analytics6.userPredictability (band floors the exact 1e-4
+    // EventUsers.userPredictability (band floors the exact 1e-4
     // integer numerator, never a double quotient)
-    decl("events_user_predictability", (s, d) => Analytics6.userPredictability(s, d))(
+    decl("events_user_predictability", (s, d) => EventUsers.userPredictability(s, d))(
       s"""WITH ev AS ($EV),
          |tf AS (SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS c
          |       FROM ev GROUP BY 1, 2),
@@ -7043,10 +7043,10 @@ object SparkEntry {
          |FROM sp GROUP BY 1 ORDER BY band""".stripMargin),
 
     // interval-sweep peak concurrency over the SAME session CTEs —
-    // mirrors Analytics6.peakConcurrency (starts before ends on ties:
+    // mirrors EventSeries.peakConcurrency (starts before ends on ties:
     // delta DESC, so point sessions register and touching sessions
     // count as overlapping)
-    decl("events_peak_concurrency", (s, d) => Analytics6.peakConcurrency(s, d))(
+    decl("events_peak_concurrency", (s, d) => EventSeries.peakConcurrency(s, d))(
       s"""WITH ev AS ($EV),
          |$SESS_CTE,
          |sess AS (SELECT user_id, session_idx,
@@ -7069,8 +7069,8 @@ object SparkEntry {
 
     // weekly activity grid on pure integer µs arithmetic (dow 0 =
     // Monday: epoch day 0 was a Thursday) — mirrors
-    // Analytics6.dowHourHeatmap
-    decl("events_dow_hour_heatmap", (s, d) => Analytics6.dowHourHeatmap(s, d))(
+    // EventSeries.dowHourHeatmap
+    decl("events_dow_hour_heatmap", (s, d) => EventSeries.dowHourHeatmap(s, d))(
       s"""WITH ev AS ($EV)
          |SELECT ((ts_us // 86400000000) + 3) % 7 AS dow,
          |  (ts_us // 3600000000) % 24 AS hour,
@@ -7080,9 +7080,9 @@ object SparkEntry {
          |FROM ev GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     // period-over-period value-segment migration — mirrors
-    // Analytics4.rfmMigration (midpoint split, exact global M-quintile
+    // EventUsers.rfmMigration (midpoint split, exact global M-quintile
     // per half, 0 = absent)
-    decl("events_rfm_migration", (s, d) => Analytics4.rfmMigration(s, d))(
+    decl("events_rfm_migration", (s, d) => EventUsers.rfmMigration(s, d))(
       s"""WITH ev AS ($EV),
          |m AS (SELECT min(ts_us) AS mn, max(ts_us) AS mx FROM ev),
          |a0 AS (SELECT user_id,
@@ -7105,11 +7105,11 @@ object SparkEntry {
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     // rank-symbolized SAX-style motif trigrams over the dense hourly
-    // grid — mirrors Analytics6.symbolicMotifs (quartile symbol = exact
+    // grid — mirrors EventSeries.symbolicMotifs (quartile symbol = exact
     // rank within the type, integer division; motifs on adjacent hours)
-    decl("events_symbolic_motifs", (s, d) => Analytics6.symbolicMotifs(s, d))(
+    decl("events_symbolic_motifs", (s, d) => EventSeries.symbolicMotifs(s, d))(
       s"""WITH ev AS ($EV),
-         |h AS (SELECT event_type, ts_us // ${graft.operators.Analytics6.UsPerHour} AS hour FROM ev),
+         |h AS (SELECT event_type, ts_us // ${graft.operators.EventSeries.HourUs} AS hour FROM ev),
          |c AS (SELECT event_type, hour, CAST(count(*) AS BIGINT) AS n
          |      FROM h GROUP BY 1, 2),
          |rng AS (SELECT min(hour) AS h0, max(hour) AS h1 FROM h),
@@ -7139,8 +7139,8 @@ object SparkEntry {
 
     // grouped OLS trend of daily spend: exact int64 running sums,
     // signed ratio4 slope/intercept, r² in HUGEINT (the one product
-    // that outgrows int64) — mirrors Analytics6.trendOls
-    decl("events_trend_ols", (s, d) => Analytics6.trendOls(s, d))(
+    // that outgrows int64) — mirrors EventSeries.trendOls
+    decl("events_trend_ols", (s, d) => EventSeries.trendOls(s, d))(
       s"""WITH ev AS ($EV),
          |daily AS (
          |  SELECT event_type, ts_us // 86400000000 AS day,
@@ -7177,8 +7177,8 @@ object SparkEntry {
          |FROM c ORDER BY event_type""".stripMargin),
 
     // multi-scale Fano: dense-grid variance-to-mean per (type, width)
-    // on exact int64 moments — mirrors Analytics6.fanoSpectrum
-    decl("events_fano_spectrum", (s, d) => Analytics6.fanoSpectrum(s, d))(
+    // on exact int64 moments — mirrors EventSeries.fanoSpectrum
+    decl("events_fano_spectrum", (s, d) => EventSeries.fanoSpectrum(s, d))(
       s"""WITH ev AS ($EV),
          |cells AS (
          |  SELECT event_type, ts_us // 3600000000 AS hour,
@@ -7186,7 +7186,7 @@ object SparkEntry {
          |  FROM ev GROUP BY 1, 2),
          |span AS (SELECT min(hour) AS h0, max(hour) AS h1 FROM cells),
          |w(width_h) AS (
-         |  SELECT CAST(unnest([${graft.operators.Analytics6.FanoWidthsH.mkString(", ")}]) AS BIGINT)),
+         |  SELECT CAST(unnest([${graft.operators.EventSeries.FanoWidthsH.mkString(", ")}]) AS BIGINT)),
          |cw AS (
          |  SELECT event_type, width_h, (hour - h0) // width_h AS slot,
          |    (h1 - h0) // width_h + 1 AS nslots, c
@@ -7209,8 +7209,8 @@ object SparkEntry {
     // robust trend
     // offline CUSUM changepoint: dense daily counts, argmax of
     // |n·S₁ − k·S| (ties → earliest day), explained-variance ppm in
-    // HUGEINT — mirrors Analytics8.changepoint
-    decl("events_changepoint", (s, d) => Analytics8.changepoint(s, d))(
+    // HUGEINT — mirrors EventSeries.changepoint
+    decl("events_changepoint", (s, d) => EventSeries.changepoint(s, d))(
       s"""WITH ev AS ($EV),
          |daily AS (
          |  SELECT event_type, ts_us // 86400000000 AS day,
@@ -7259,9 +7259,9 @@ object SparkEntry {
 
     // Theil–Sen robust trend: lower-median pairwise slope selected on
     // the exact fixed-scale integer key, median residual intercept on
-    // the chosen (p, q) — mirrors Analytics8.theilSen
-    decl("events_theil_sen", (s, d) => Analytics8.theilSen(s, d)) {
-      val K = graft.operators.Analytics8.SlopeKeyScale
+    // the chosen (p, q) — mirrors EventSeries.theilSen
+    decl("events_theil_sen", (s, d) => EventSeries.theilSen(s, d)) {
+      val K = graft.operators.EventSeries.SlopeKeyScale
       s"""WITH ev AS ($EV),
          |daily AS (
          |  SELECT event_type, ts_us // 86400000000 AS day,
@@ -7306,8 +7306,8 @@ object SparkEntry {
 
     // Friedman rank statistic over complete Monday-aligned weeks:
     // doubled ranks (ties → average) in pure int64, exact rational Q —
-    // mirrors Analytics8.friedmanDow
-    decl("events_friedman_dow", (s, d) => Analytics8.friedmanDow(s, d))(
+    // mirrors EventSeries.friedmanDow
+    decl("events_friedman_dow", (s, d) => EventSeries.friedmanDow(s, d))(
       s"""WITH ev AS ($EV),
          |daily AS (
          |  SELECT event_type, ts_us // 86400000000 AS day,

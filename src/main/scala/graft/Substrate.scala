@@ -529,7 +529,7 @@ object Substrate {
 
   /** Support-filtered market-basket pairs with lift — a registered
     * query and `orders_assoc_rules`' whole input. */
-  val basket = decl("basket", Lineitem, Analytics6.BasketMinSupport)(
+  val basket = decl("basket", Lineitem, Commerce.BasketMinSupport)(
     (spark, dir, minSupport) => {
       import graft.functions.Hashing.ratio4
       val items = Tables.lineitem(spark, dir)

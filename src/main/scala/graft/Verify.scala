@@ -37,18 +37,9 @@ object Verify {
         scala.concurrent.duration.Duration.Inf)
       pool.shutdown()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // JSON string: a tab or CR left unescaped in an oracle's SQL would
+    // make every JSON reader of oracle_sql.json fail.
+    def q(s: String): String = "\"" + graft.streaming.StructuredLog.jsonEscape(s) + "\""
     // ctx-ful oracle map: the whitened-LSH entries embed (μ, W) doubles
     // computed from THIS sfDir — the same literals the engine plans bake
     val json = SparkEntry.oracleSqlFor(Some((spark, sfDir)))

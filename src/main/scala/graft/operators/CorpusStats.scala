@@ -677,4 +677,18 @@ object CorpusStats {
             col("n_docs") * col("total_toks"))).as("gini4"))
       .orderBy("source")
   }
+
+  /** Corpus composition matrix: documents per source × language as a
+    * PIVOT (fixed language universe → one aggregation, columns fan out
+    * at plan time; absent cells are exact zeros). The per-source row is
+    * what a curation dashboard reads to spot language skew by source. */
+  def langPivot(spark: SparkSession, dir: String,
+                langs: Seq[String] = Seq("de", "en", "es", "fr", "zh")): DataFrame =
+    Tables.documents(spark, dir)
+      .groupBy("source")
+      .pivot("lang", langs)
+      .agg(count(lit(1)))
+      .select(col("source") +:
+        langs.map(l => coalesce(col(l), lit(0L)).as(s"n_$l")): _*)
+      .orderBy("source")
 }

@@ -1,72 +1,81 @@
 package graft.operators
 
 import graft.Partitioning._
-import graft.Tables
+import graft.functions.Hashing.{dec, halfUpDiv, intDiv, money2, ratio4, valueCents}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Third tranche of analytics: the Q21 shape (the hardest TPC-H join
-  * pattern), lag/lead gap analysis, and exact grouped quantiles.
-  *
-  * lineitem has no commit/receipt dates, so Q21's "late" predicate is
-  * adapted to l_shipdate > o_orderdate + `lateDays` — the join/
-  * correlation structure (the part that matters for planning) is
-  * unchanged.
+/** The per-user sequences of the event stream: gap sessions, running
+  * totals, inter-event gaps, funnels and patterns, transitions,
+  * cohorts and activity, paths, RFM segmentation and attribution. Each
+  * panel rides one user_id shuffle where the shape allows; values stay
+  * in exact integer cents and µs.
   */
-object Analytics3 {
+object EventUsers {
 
-  /** Q21-style "suppliers who kept orders waiting": suppliers in one
-    * region whose late line item was the ONLY late one in a
-    * multi-supplier finished order.
-    *
-    * Planned as the aggregate rewrite, not correlated EXISTS/NOT
-    * EXISTS: one pass over (order, supplier, late) computes per-order
-    * supplier/late-supplier counts, and the winners fall out of a
-    * join on the order key — lineitem is scanned once and shuffled
-    * once on l_orderkey, versus the textbook form's two additional
-    * correlated self-joins of the largest table. The DuckDB oracle
-    * runs the textbook EXISTS form, so the hash-match proves the
-    * rewrite. */
-  def q21(spark: SparkSession, dir: String,
-          lateDays: Int = 365, region: String = "ASIA"): DataFrame = {
-    val reg = Tables.region(spark, dir).filter(col("r_name") === region)
-    val nat = Tables.nation(spark, dir)
-      .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
-      .select("n_nationkey")
-    val supp = Tables.supplier(spark, dir).select("s_suppkey", "s_name", "s_nationkey")
-      .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-      .select("s_suppkey", "s_name")
-    val ord = Tables.orders(spark, dir)
-      .filter(col("o_orderstatus") === "F")
-      .select("o_orderkey", "o_orderdate")
-    // (order, supplier) grain with the late flag — duplicates collapsed
-    // here so downstream counts are supplier-level, not lineitem-level
-    val os = Tables.lineitem(spark, dir)
-      .select("l_orderkey", "l_suppkey", "l_shipdate")
-      .join(ord, col("l_orderkey") === col("o_orderkey"))
-      .groupBy("l_orderkey", "l_suppkey")
-      .agg(max(col("l_shipdate") >
-        col("o_orderdate") + expr(s"INTERVAL $lateDays DAYS")).as("late"))
-    // per-order supplier/late counts as a WINDOW over the aggregate, not
-    // a second aggregation subtree — a DataFrame branch would recompute
-    // the whole lineitem scan+join+agg; the window rides the (order,
-    // supplier) rows already in hand with one more orderkey exchange
-    val wOrd = Window.partitionBy("l_orderkey")
-    os.select(col("*"),
-        count(lit(1)).over(wOrd).as("n_supp"),
-        sum(when(col("late"), 1L).otherwise(0L)).over(wOrd).as("n_late"))
-      .filter(col("late") && col("n_supp") >= 2 && col("n_late") === 1)
-      .join(supp, col("l_suppkey") === col("s_suppkey"))
-      .groupBy("s_name")
-      .agg(count(lit(1)).as("numwait"))
-      .orderBy(col("numwait").desc, col("s_name"))
-      .limit(10)
+  import EventSeries.{DayUs, HourUs}
+
+  /** Events with their gap-session index — the shared prefix of
+    * sessionize and the co-occurrence query (one window pipeline, one
+    * user_id shuffle). */
+  def sessionIndexed(spark: SparkSession, dir: String,
+                     gapUs: Long = 1800L * 1000000L): DataFrame =
+    sessionIndexedOf(Dedup.eventsUs(spark, dir), gapUs)
+
+  /** [[sessionIndexed]] over any canonical events frame (user_id,
+    * ts_us, event_id, …): a new session starts at a user's first event
+    * and after every gap > `gapUs`; session_idx is the running count of
+    * starts in (ts_us, event_id) order. */
+  def sessionIndexedOf(ev: DataFrame, gapUs: Long): DataFrame = {
+    val byUser = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
+    val newSess = when(
+      lag("ts_us", 1).over(byUser).isNull ||
+      col("ts_us") - lag("ts_us", 1).over(byUser) > gapUs, 1).otherwise(0)
+    ev.withColumn("new_sess", newSess)
+      .withColumn("session_idx",
+        sum("new_sess").over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
+  }
+
+  /** #24: gap-based sessionization (30 min) per user, pure window
+    * functions — one shuffle on user_id. */
+  def sessionize(spark: SparkSession, dir: String,
+                 gapUs: Long = 1800L * 1000000L): DataFrame =
+    sessionizeOf(Dedup.eventsUs(spark, dir), gapUs)
+
+  /** [[sessionize]] over any canonical events frame — the one-window
+    * plan the skew split ([[Skew.splitSessionizeOf]]) must equal. */
+  def sessionizeOf(ev: DataFrame, gapUs: Long = 1800L * 1000000L): DataFrame =
+    sessionIndexedOf(ev, gapUs)
+      .groupBy("user_id", "session_idx")
+      .agg(count(lit(1)).as("n_events"),
+           min("ts_us").as("start_us"),
+           max("ts_us").as("end_us"),
+           money2(sum(dec(col("value")))).as("sum_value"))
+      .orderBy("user_id", "session_idx")
+
+  /** Running totals + moving window per user — everything is exact
+    * integer cents: the moving average is exported as its (sum, count)
+    * pair so no engine ever materializes a repeating-decimal double
+    * (the one cross-engine hash hazard this suite has hit). */
+  def runningUser(spark: SparkSession, dir: String): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
+    val wAll = w.rowsBetween(Window.unboundedPreceding, 0)
+    val w5 = w.rowsBetween(-4, 0)
+    Dedup.eventsUs(spark, dir)
+      .withColumn("cents", valueCents(col("value")))
+      .select(
+        col("event_id"), col("user_id"), col("ts_us"),
+        sum("cents").over(wAll).as("running_cents"),
+        sum("cents").over(w5).as("mov5_sum_cents"),
+        count(lit(1)).over(w5).as("mov5_n"))
+      .orderBy("event_id")
   }
 
   /** Gate and threshold for [[botRegularity]]: users with fewer gaps
     * aren't assessable; regularity at or below the threshold flags. */
   val MinGaps = 5L
+
   val BotRegularityMax = 0.2
 
   /** #177 `events_bot_regularity`: automated-traffic detection by
@@ -109,7 +118,6 @@ object Analytics3 {
     * (the lag window) and accumulated streaming gaps produce identical
     * output, which is the parity contract StreamRegularitySpec pins. */
   def regularityOfGaps(gaps: DataFrame): DataFrame = {
-    import graft.functions.Hashing.{halfUpDiv, ratio4}
     val m = gaps.groupBy("user_id")
       .agg(count(lit(1)).as("n_gaps"), sum("gap").as("sum_gap"))
       .filter(col("n_gaps") >= MinGaps)
@@ -139,9 +147,9 @@ object Analytics3 {
     (4L, "<=60s", 60000000L),
     (5L, "<=5m",  300000000L),
     (6L, "<=30m", 1800000000L),
-    (7L, "<=1h",  3600000000L),
+    (7L, "<=1h",  HourUs),
     (8L, "<=6h",  21600000000L),
-    (9L, "<=24h", 86400000000L))
+    (9L, "<=24h", DayUs))
 
   /** #196 `events_gap_histogram`: the inter-event gap distribution over
     * human-scale buckets — per bucket: gaps, exact ratio4 share, and
@@ -164,7 +172,6 @@ object Analytics3 {
     * identical panel (the same two-layer parity contract as
     * [[regularityOfGaps]]; StreamRegularitySpec pins it). */
   def gapHistogramOf(gaps: DataFrame): DataFrame = {
-    import graft.functions.Hashing.ratio4
     val bucketRank = GapBuckets.reverse.foldLeft(
       lit(GapBuckets.length + 1L)) { case (acc, (r, _, ub)) =>
         when(col("gap") < ub, lit(r)).otherwise(acc)
@@ -204,50 +211,10 @@ object Analytics3 {
       .agg(count(lit(1)).as("n_gaps"),
            sum("gap").as("sum_gap_us"),
            max("gap").as("max_gap_us"),
-           // exact-rational rounding (graft.functions.Hashing.ratio4):
+           // exact-rational rounding (ratio4):
            // round() over the double quotient diverged between engines
-           graft.functions.Hashing.ratio4(sum("gap"), count(lit(1))).as("avg_gap_us"))
+           ratio4(sum("gap"), count(lit(1))).as("avg_gap_us"))
       .orderBy("user_id")
-  }
-
-  /** Corpus composition matrix: documents per source × language as a
-    * PIVOT (fixed language universe → one aggregation, columns fan out
-    * at plan time; absent cells are exact zeros). The per-source row is
-    * what a curation dashboard reads to spot language skew by source. */
-  def langPivot(spark: SparkSession, dir: String,
-                langs: Seq[String] = Seq("de", "en", "es", "fr", "zh")): DataFrame =
-    Tables.documents(spark, dir)
-      .groupBy("source")
-      .pivot("lang", langs)
-      .agg(count(lit(1)))
-      .select(col("source") +:
-        langs.map(l => coalesce(col(l), lit(0L)).as(s"n_$l")): _*)
-      .orderBy("source")
-
-  /** Tukey-fence value anomalies per event type: rows above
-    * p75 + 3·(p75 − p25) of their type's value (in exact integer
-    * cents). The fences ride [[Ranking.groupedQuantiles]] — binary-exact
-    * positions make the boundary bit-identical across engines (no
-    * mean/stddev floating-point edge) and the native GlobalRank path
-    * never buffers a type's values on one reducer (tiny type
-    * cardinality × huge population is exactly the shape the grouped
-    * `percentile` aggregate OOMs on at 100×). Two passes over events
-    * (fence quantiles ⋈ rows), fence table broadcast. */
-  def valueAnomalies(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Dedup.eventsUs(spark, dir)
-      .select(col("event_id"), col("event_type"),
-        graft.functions.Hashing.valueCents(col("value")).as("cents"))
-    val fences = Ranking.groupedQuantiles(ev, Seq("event_type"), "cents",
-        Seq("event_id"), Seq(0.25, 0.75))
-      .groupBy("event_type")
-      .agg(max(when(col("p") === 0.25, col("q"))).as("p25"),
-        max(when(col("p") === 0.75, col("q"))).as("p75"))
-      .select(col("event_type"),
-        (col("p75") + lit(3.0) * (col("p75") - col("p25"))).as("fence"))
-    ev.join(broadcast(fences), "event_type")
-      .filter(col("cents") > col("fence"))
-      .select("event_id", "event_type", "cents", "fence")
-      .orderBy("event_id")
   }
 
   /** First-order transition counts between consecutive event types per
@@ -264,7 +231,7 @@ object Analytics3 {
       .filter(col("type_to").isNotNull)
       .groupBy("type_from", "type_to")
       .agg(count(lit(1)).as("n"))
-      .withColumn("p", graft.functions.Hashing.ratio4(col("n"), sum("n").over(wFrom)))
+      .withColumn("p", ratio4(col("n"), sum("n").over(wFrom)))
       .orderBy("type_from", "type_to")
   }
 
@@ -272,11 +239,11 @@ object Analytics3 {
     * shape: for every UNORDERED pair of event types (emitted once,
     * lexicographically ordered), in how many user-sessions both occur. Distinct (session, type) rows self-join
     * on the session key (groups are session-sized, never corpus-sized)
-    * and aggregate; the session index rides Analytics.sessionIndexed's
+    * and aggregate; the session index rides [[sessionIndexed]]'s
     * single user_id window pipeline. */
   def cooccurrence(spark: SparkSession, dir: String,
                    gapUs: Long = 1800L * 1000000L): DataFrame = {
-    val d = Analytics.sessionIndexed(spark, dir, gapUs)
+    val d = sessionIndexed(spark, dir, gapUs)
       .select("user_id", "session_idx", "event_type")
       .distinct()
     d.as("a").join(d.as("b"),
@@ -310,14 +277,6 @@ object Analytics3 {
       .crossJoin(purchased.agg(count(lit(1)).as("n_purchase")))
   }
 
-  /** Cohort retention matrix: users grouped by first-active day, and
-    * for each day offset 0..`maxOffset`, how many of that cohort were
-    * active again. Two aggregations (first day per user, distinct
-    * activity days) sharing the user_id shuffle, then one count per
-    * (cohort, offset) cell. */
-  /** One day in µs — the day grain every cohort/DAU panel shares. */
-  val DayUs = 86400000000L
-
   /** Shared cohort scaffold over any per-(user_id, day) frame: cohort
     * day as a WINDOW over the frame (a cohort-aggregate branch joined
     * back would recompute the frame's whole upstream; the window costs
@@ -331,6 +290,11 @@ object Analytics3 {
       .withColumn("offset", col("day") - col("cohort_day"))
       .filter(col("offset") <= maxOffset)
 
+  /** Cohort retention matrix: users grouped by first-active day, and
+    * for each day offset 0..`maxOffset`, how many of that cohort were
+    * active again. Two aggregations (first day per user, distinct
+    * activity days) sharing the user_id shuffle, then one count per
+    * (cohort, offset) cell. */
   def retention(spark: SparkSession, dir: String, maxOffset: Int = 7): DataFrame = {
     val activity = Dedup.eventsUs(spark, dir)
       .select(col("user_id"), expr(s"ts_us div ${DayUs}L").as("day"))
@@ -360,7 +324,7 @@ object Analytics3 {
     val w = Window.partitionBy("user_id", "session_idx")
       .orderBy("ts_us", "event_id")
       .rowsBetween(Window.unboundedPreceding, -1)
-    Analytics.sessionIndexed(spark, dir, gapUs)
+    sessionIndexed(spark, dir, gapUs)
       .select("user_id", "session_idx", "event_type", "ts_us", "event_id")
       .withColumn("saw_view",
         coalesce(max(when(col("event_type") === "view", 1).otherwise(0)).over(w), lit(0)))
@@ -384,9 +348,8 @@ object Analytics3 {
     * and both counts are exact — no sliding distinct-over-window
     * state. Stickiness is the exact-rational ratio4. */
   def dauWau(spark: SparkSession, dir: String): DataFrame = {
-    val dayUs = 86400000000L
     val act = Dedup.eventsUs(spark, dir)
-      .select(col("user_id"), expr(s"ts_us div ${dayUs}L").as("day"))
+      .select(col("user_id"), expr(s"ts_us div ${DayUs}L").as("day"))
       .distinct()
     val dau = act.groupBy("day").agg(count(lit(1)).as("dau"))
     val wau = act
@@ -395,7 +358,7 @@ object Analytics3 {
       .groupBy("day").agg(count(lit(1)).as("wau"))
     dau.join(wau, "day")
       .select(col("day"), col("dau"), col("wau"),
-        graft.functions.Hashing.ratio4(col("dau"), col("wau")).as("stickiness"))
+        ratio4(col("dau"), col("wau")).as("stickiness"))
       .orderBy("day")
   }
 
@@ -415,7 +378,7 @@ object Analytics3 {
     * sparse-window discipline. */
   def userFlux(spark: SparkSession, dir: String): DataFrame = {
     val act = Dedup.eventsUs(spark, dir)
-      .select(col("user_id"), expr("ts_us div 86400000000L").as("day"))
+      .select(col("user_id"), expr(s"ts_us div ${DayUs}L").as("day"))
       .distinct()
       .checkpointSer // feeds the active count AND the span aggregate
     val active = act.groupBy("day").agg(count(lit(1)).as("n_active"))
@@ -434,26 +397,6 @@ object Analytics3 {
       .select("day", "n_active", "n_new", "n_last", "cum_users")
       .orderBy("day")
   }
-
-  /** Exact grouped quantiles (p25/p50/p75 of l_quantity per return
-    * flag) via [[Ranking.groupedQuantiles]] — linear-interpolation
-    * positions 0.25/0.5/0.75 are exact binary fractions over
-    * integer-valued quantities, so the interpolated doubles reproduce
-    * bit-for-bit in DuckDB's quantile_cont. The native GlobalRank path
-    * range-partitions each flag's rows instead of buffering them on
-    * one reducer: with 3 flags over the whole fact table, a grouped
-    * `percentile` puts ~a third of the corpus in one ArrayBuffer. */
-  def quantiles(spark: SparkSession, dir: String): DataFrame =
-    Ranking.groupedQuantiles(
-        Tables.lineitem(spark, dir)
-          .select("l_returnflag", "l_quantity", "l_orderkey", "l_linenumber"),
-        Seq("l_returnflag"), "l_quantity",
-        Seq("l_orderkey", "l_linenumber"), Seq(0.25, 0.5, 0.75))
-      .groupBy("l_returnflag")
-      .agg(max(when(col("p") === 0.25, col("q"))).as("p25"),
-        max(when(col("p") === 0.5, col("q"))).as("p50"),
-        max(when(col("p") === 0.75, col("q"))).as("p75"))
-      .orderBy("l_returnflag")
 
   /** `events_transition_quantiles`: the TIMING companion to
     * `events_markov` (#98 says where users go next; THIS says how
@@ -501,9 +444,8 @@ object Analytics3 {
     * summarizes into one number. One distinct (user, day) frame, a
     * user-keyed count (both partial-aggregable), O(5) rollup. */
   def activeDaysHistogram(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Hashing.ratio4
     val perUser = Dedup.eventsUs(spark, dir)
-      .select(col("user_id"), expr("ts_us div 86400000000L").as("day"))
+      .select(col("user_id"), expr(s"ts_us div ${DayUs}L").as("day"))
       .distinct()
       .groupBy("user_id").agg(count(lit(1)).as("d"))
     val hist = perUser.select(
@@ -523,125 +465,183 @@ object Analytics3 {
       .orderBy("bucket_rank")
   }
 
-  /** `orders_backlog_curve`: the open-work inventory over time — per
-    * calendar day (exported as epoch days, the integer-export
-    * discipline): line items entering the backlog (their order's
-    * date), items leaving it (ship date), and the running backlog =
-    * cum(ordered) − cum(shipped). The complement of
-    * [[fulfillmentLag]]'s per-item latency: lag says how long ONE item
-    * waits, THIS says how much work is in flight — the curve capacity
-    * planning reads (a rising backlog with flat lag quantiles means
-    * arrival outruns throughput before latency shows it).
-    *
-    * Shape: the order-key fact join once, then two O(days) daily
-    * aggregates full-outer-joined on day and ONE cumulative window
-    * over the O(days) frame (the sparse-window-over-aggregate
-    * discipline — never raw lineitem through a single partition). */
-  def backlogCurve(spark: SparkSession, dir: String): DataFrame = {
-    def epochDay(c: Column) = datediff(c.cast("date"), lit("1970-01-01")).cast("long")
-    val li = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_shipdate"))
-    val withOrder = li.join(Tables.orders(spark, dir)
-      .select(col("o_orderkey").as("l_orderkey"), col("o_orderdate")), "l_orderkey")
-    val ordered = withOrder
-      .groupBy(epochDay(col("o_orderdate")).as("day_epoch"))
-      .agg(count(lit(1)).as("n_ordered"))
-    // shipped from the SAME joined frame: an orphaned line item (no
-    // order row) must not leave a backlog it never entered
-    val shipped = withOrder
-      .groupBy(epochDay(col("l_shipdate")).as("day_epoch"))
-      .agg(count(lit(1)).as("n_shipped"))
-    val w = Window.orderBy("day_epoch")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ordered.join(shipped, Seq("day_epoch"), "full_outer")
-      .withColumn("n_ordered", coalesce(col("n_ordered"), lit(0L)))
-      .withColumn("n_shipped", coalesce(col("n_shipped"), lit(0L)))
-      .withColumn("backlog",
-        sum(col("n_ordered") - col("n_shipped")).over(w))
-      .select("day_epoch", "n_ordered", "n_shipped", "backlog")
-      .orderBy("day_epoch")
+  /** Top event-type trigram paths: the `topN` most frequent 3-step
+    * event-type sequences across user timelines (the path-mining
+    * summary behind funnel design). Two lead windows ride ONE user_id
+    * shuffle; the path space is tiny (|types|³), so the count
+    * aggregation is map-side-combinable and the head is a TakeOrdered.
+    * Ties at the boundary break by path string — total order. */
+  def topPaths(spark: SparkSession, dir: String, topN: Int = 10): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
+    Dedup.eventsUs(spark, dir)
+      .select("user_id", "ts_us", "event_id", "event_type")
+      .withColumn("t2", lead("event_type", 1).over(w))
+      .withColumn("t3", lead("event_type", 2).over(w))
+      .filter(col("t3").isNotNull)
+      .select(concat_ws(">", col("event_type"), col("t2"), col("t3")).as("path"))
+      .groupBy("path").agg(count(lit(1)).as("n"))
+      .orderBy(col("n").desc, col("path")).limit(topN)
   }
 
-  /** `orders_repeat_interval`: repeat-purchase cadence per market
-    * segment — for every customer's consecutive order pair, the gap in
-    * whole days; per segment: repeat customers, gap count, exact
-    * ratio4 mean gap and the exact p25/p50/p75 via
-    * [[Ranking.groupedQuantiles]] (5 segments over the whole order
-    * stream is exactly the tiny-groups × huge-population shape the
-    * buffering percentile dies on at scale). The commerce-retention
-    * read: a stretching p75 with a flat p50 means the casual half of a
-    * segment is lapsing before the loyal half shows it.
-    *
-    * Shape: one customer-keyed lag window builds the gap frame (orders
-    * shuffles on o_custkey once), the segment joins in on the same key,
-    * then one GlobalRank pass + O(segments) rollups. */
-  def repeatInterval(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Hashing.ratio4
-    val w = Window.partitionBy("o_custkey").orderBy("day", "o_orderkey")
-    val gaps = Tables.orders(spark, dir)
-      .select(col("o_custkey"), col("o_orderkey"),
-        datediff(col("o_orderdate").cast("date"), lit("1970-01-01"))
-          .cast("long").as("day"))
-      .withColumn("prev", lag("day", 1).over(w))
-      .filter(col("prev").isNotNull)
-      .select(col("o_custkey"), col("o_orderkey"),
-        (col("day") - col("prev")).as("gap_days"))
-      .join(Tables.customer(spark, dir)
-        .select(col("c_custkey").as("o_custkey"), col("c_mktsegment")),
-        "o_custkey")
-      .checkpointSer
-    val stats = gaps.groupBy("c_mktsegment")
-      .agg(countDistinct("o_custkey").as("n_repeat_customers"),
-        count(lit(1)).as("n_gaps"),
-        ratio4(sum("gap_days"), count(lit(1))).as("mean_gap4"))
-    Ranking.groupedQuantiles(gaps, Seq("c_mktsegment"), "gap_days",
-        Seq("o_custkey", "o_orderkey"), Seq(0.25, 0.5, 0.75))
-      .groupBy("c_mktsegment")
-      .agg(max(when(col("p") === 0.25, col("q"))).as("p25"),
-        max(when(col("p") === 0.5, col("q"))).as("p50"),
-        max(when(col("p") === 0.75, col("q"))).as("p75"))
-      .join(stats, "c_mktsegment")
-      .select("c_mktsegment", "n_repeat_customers", "n_gaps", "mean_gap4",
-        "p25", "p50", "p75")
-      .orderBy("c_mktsegment")
+  /** Session-size histogram: how many sessions have exactly n events —
+    * the engagement-depth panel next to DAU/WAU. Rides sessionIndexed's
+    * single user_id window pipeline; both aggregations partial-combine. */
+  def sessionHistogram(spark: SparkSession, dir: String,
+                       gapUs: Long = 1800L * 1000000L): DataFrame =
+    // rides the CANONICAL per-session frame (one "session size"
+    // definition in the library); the unused money/bounds aggregates
+    // and the inner sort are pruned by Catalyst
+    sessionize(spark, dir, gapUs)
+      .groupBy("n_events").agg(count(lit(1)).as("n_sessions"))
+      .orderBy("n_events")
+
+  /** RFM quintile segmentation: per user, recency (last activity),
+    * frequency (event count) and monetary (exact cents spend), each
+    * scored 1–5 by EXACT global rank — three [[Ranking.globalRowNumber]]
+    * passes over the per-user aggregate, never a single-partition
+    * window. Quintile = (N−rn)·5 div N + 1 in pure int64 (the decile
+    * discipline); higher score = better (more recent / more frequent /
+    * higher spend), ties broken by user_id — total order, so the
+    * segmentation reproduces bit-for-bit anywhere. */
+  def rfm(spark: SparkSession, dir: String): DataFrame = {
+    val base = Dedup.eventsUs(spark, dir)
+      .groupBy("user_id")
+      .agg(max("ts_us").as("last_us"), count(lit(1)).as("n_events"),
+        sum(valueCents(col("value"))).as("spend_cents"))
+      .checkpointSer // three rank passes + count read it
+    val n = base.count()
+    // each dimension ranks the CHECKPOINTED base independently (a chain
+    // of rank passes would re-execute the prior pass's sort + row
+    // re-encode inside every zipWithIndex count job), then the three
+    // score frames join back on user_id
+    def score(sortCol: Column, out: String) =
+      Ranking.globalRowNumber(base, Seq(sortCol.desc, col("user_id")), "rn")
+        .select(col("user_id"),
+          (intDiv((lit(n) - col("rn")) * 5L, lit(n)) + 1L).as(out))
+    base
+      .join(score(col("last_us"), "r_score"), "user_id")
+      .join(score(col("n_events"), "f_score"), "user_id")
+      .join(score(col("spend_cents"), "m_score"), "user_id")
+      .select("user_id", "last_us", "n_events", "spend_cents",
+        "r_score", "f_score", "m_score")
+      .orderBy("user_id")
   }
 
-  /** `orders_fulfillment_lag`: the operational latency panel — per
-    * order month, item count, exact p25/p50/p75 of the ship lag in
-    * whole days (l_shipdate − o_orderdate) and the worst straggler.
-    * A drifting p75 with a flat p50 is the classic tail-degradation
-    * signature; max_lag names the month to audit.
+  /** `events_rfm_migration`: period-over-period value-segment
+    * migration — the longitudinal companion of [[rfm]]. The corpus
+    * splits at its temporal midpoint (pure int64: mn + (mx−mn) div 2,
+    * an O(1) driver aggregate like the Lloyd/whitening model-state
+    * collects); each half M-quintile-scores its users independently
+    * (exact global rank on cents spend — the same
+    * [[Ranking.globalRowNumber]] discipline as rfm, never a
+    * single-partition window), and the output is the 6×6 transition
+    * matrix with segment 0 = absent from that half (new users enter
+    * via row 0, churned users exit via column 0). The "did our
+    * high-value users stay high-value" panel a retention review reads.
     *
-    * Shape: ONE shuffle join on the uniform order key (THE fact-join
-    * this schema is bucketed for — see Bucketing for the co-located
-    * form), localCheckpointed once, then [[Ranking.groupedQuantiles]]
-    * at binary-fraction positions over integer day lags (interpolated
-    * doubles reproduce bit-for-bit in DuckDB quantile_cont — the
-    * lineitem_quantiles discipline). The native GlobalRank path
-    * range-partitions each month's lags across the cluster — a
-    * O(10⁹)-row month never lands in one reducer buffer, closing the
-    * trade the grouped `percentile` form documented. */
-  def fulfillmentLag(spark: SparkSession, dir: String): DataFrame = {
-    val lags = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_shipdate"))
-      .join(Tables.orders(spark, dir)
-        .select(col("o_orderkey").as("l_orderkey"), col("o_orderdate")),
-        "l_orderkey")
-      .select(year(col("o_orderdate")).as("year"),
-        month(col("o_orderdate")).as("month"),
-        datediff(col("l_shipdate"), col("o_orderdate")).cast("long")
-          .as("lag_days"),
-        col("l_orderkey"), col("l_linenumber"))
-      .checkpointSer
-    val stats = lags.groupBy("year", "month")
-      .agg(count(lit(1)).as("n_items"), max("lag_days").as("max_lag"))
-    Ranking.groupedQuantiles(lags, Seq("year", "month"), "lag_days",
-        Seq("l_orderkey", "l_linenumber"), Seq(0.25, 0.5, 0.75))
-      .groupBy("year", "month")
-      .agg(max(when(col("p") === 0.25, col("q"))).as("p25"),
-        max(when(col("p") === 0.5, col("q"))).as("p50"),
-        max(when(col("p") === 0.75, col("q"))).as("p75"))
-      .join(stats, Seq("year", "month"))
-      .select("year", "month", "n_items", "p25", "p50", "p75", "max_lag")
-      .orderBy("year", "month")
+    * Shape: two per-user aggregates + two O(users) rank passes; the
+    * full-outer join is user-keyed; output ≤ 36 rows. */
+  def rfmMigration(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Dedup.eventsUs(spark, dir).select("user_id", "ts_us", "value")
+    val b = ev.agg(min("ts_us").as("mn"), max("ts_us").as("mx")).head()
+    val mid = b.getLong(0) + (b.getLong(1) - b.getLong(0)) / 2
+    def seg(period: DataFrame, out: String) = {
+      val base = period.groupBy("user_id")
+        .agg(sum(valueCents(col("value"))).as("cents"))
+        .checkpointSer // the rank pass and the count both read it
+      val n = base.count()
+      Ranking.globalRowNumber(base, Seq(col("cents").desc, col("user_id")), "rn")
+        .select(col("user_id"),
+          (intDiv((lit(n) - col("rn")) * 5L, lit(n)) + 1L).as(out))
+    }
+    val a = seg(ev.filter(col("ts_us") < mid), "seg_a")
+    val bb = seg(ev.filter(col("ts_us") >= mid), "seg_b")
+    a.join(bb, Seq("user_id"), "full_outer")
+      .select(coalesce(col("seg_a"), lit(0L)).as("seg_a"),
+        coalesce(col("seg_b"), lit(0L)).as("seg_b"))
+      .groupBy("seg_a", "seg_b").agg(count(lit(1)).as("n_users"))
+      .orderBy("seg_a", "seg_b")
+  }
+
+  /** Attribution lookback: one hour in µs. */
+  val AttributionWindowUs = 3600L * 1000000L
+
+  /** Last-touch attribution: each purchase is attributed to the same
+    * user's most recent click at or before it, if within the lookback
+    * window. One user-partitioned window pass carries the latest click
+    * (id, ts) forward — the as-of union-scan shape: no range join, no
+    * per-user nested loop, one shuffle on user_id. Ordering is the
+    * total (ts_us, event_id) order, so ties are deterministic on any
+    * engine. Purchases with no qualifying click are omitted (they'd be
+    * the "organic" bucket). */
+  def attribution(spark: SparkSession, dir: String): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
+    val click = (c: String) =>
+      last(when(col("event_type") === "click", col(c)), ignoreNulls = true).over(w)
+    Dedup.eventsUs(spark, dir)
+      .select("event_id", "ts_us", "user_id", "event_type")
+      .withColumn("click_id", click("event_id"))
+      .withColumn("click_ts", click("ts_us"))
+      .filter(col("event_type") === "purchase" && col("click_ts").isNotNull &&
+        col("ts_us") - col("click_ts") <= AttributionWindowUs)
+      .select(col("event_id"), col("user_id"), col("click_id"),
+        (col("ts_us") - col("click_ts")).as("gap_us"))
+      .orderBy("event_id")
+  }
+
+  /** Cohort revenue matrix: users grouped by first-active day; for
+    * each day offset, that cohort's exact cents revenue and spender
+    * count — the monetary twin of the retention matrix, sharing its
+    * shape: the cohort day is a WINDOW over the per-(user, day)
+    * aggregate (no joined-back cohort branch re-scanning events), so
+    * the pipeline is one events scan + one user_id exchange + the
+    * (cohort, offset) rollup. */
+  def cohortRevenue(spark: SparkSession, dir: String, maxOffset: Int = 7): DataFrame = {
+    val perUserDay = Dedup.eventsUs(spark, dir)
+      .select(col("user_id"), expr(s"ts_us div ${DayUs}L").as("day"),
+        valueCents(col("value")).as("cents"))
+      .groupBy("user_id", "day")
+      .agg(sum("cents").as("cents"))
+    cohortOffsets(perUserDay, maxOffset)
+      .groupBy("cohort_day", "offset")
+      // n_active = active (user, day) cells — includes zero-cent days;
+      // "spenders" would need a cents > 0 gate
+      .agg(count(lit(1)).as("n_active"), sum("cents").as("sum_cents"))
+      .orderBy("cohort_day", "offset")
+  }
+
+  /** `events_user_predictability`: the per-user behavioral
+    * concentration histogram — per user, the Simpson concentration of
+    * their event-type distribution (Σ c_t·(c_t−1) / n·(n−1), the
+    * unbiased repeat-probability: "draw two of this user's events —
+    * how likely the same type?"), banded into exact 0.05 steps
+    * (band = simpson4 div 500) and rolled up to users/events per
+    * band. The panel separates single-behavior accounts (band 20 —
+    * scripted pollers, one event type forever) from diverse organic
+    * users (low bands); the bot-regularity panel (#177) reads TIMING,
+    * this reads the type MIX — log-free (the [[CorpusStats
+    * .sourceSimpson]] discipline: entropy needs libm logs two engines
+    * won't agree on; Simpson is exact integer algebra).
+    *
+    * Shape: one (user, type) count groupBy (partial-aggregable), one
+    * O(users) rollup, one ≤21-row band rollup. Users with one event
+    * land in band 0 by the n·(n−1)=0 → 0/1 guard — documented, not
+    * special-cased. */
+  def userPredictability(spark: SparkSession, dir: String): DataFrame = {
+    val tf = Dedup.eventsUs(spark, dir)
+      .select("user_id", "event_type")
+      .groupBy("user_id", "event_type").agg(count(lit(1)).as("c"))
+    val per = tf.groupBy("user_id")
+      .agg(sum("c").as("n"), count(lit(1)).as("k"),
+        sum(col("c") * (col("c") - 1L)).as("s2"))
+      .select(col("user_id"), col("n"), col("k"),
+        // the exact 1e-4 fixed-point numerator (banding must floor the
+        // INTEGER, never a double quotient — the ratio4 discipline)
+        halfUpDiv(col("s2") * 10000L,
+          greatest(col("n") * (col("n") - 1L), lit(1L))).as("r4"))
+    per.groupBy(intDiv(col("r4"), lit(500L)).as("band"))
+      .agg(count(lit(1)).as("n_users"), sum("n").as("n_events"),
+        sum("k").as("sum_types"))
+      .orderBy("band")
   }
 }

@@ -19,7 +19,6 @@ object Privacy {
     * Day and band are exact integer arithmetic on the canonical µs
     * timestamp / cent value, so the class key is engine-independent. */
   val SpendBandCents = 1000L
-  val UsPerDay = 86400000000L
 
   /** k-histogram buckets: (rank, label, exclusive upper bound on k). */
   val KBuckets: Seq[(Long, String, Long)] = Seq(
@@ -188,7 +187,7 @@ object Privacy {
   def tClosenessOf(ev: DataFrame): DataFrame = {
     import graft.functions.Hashing.{halfUpDiv, intDiv}
     val cells = ev.select(col("event_type"),
-        intDiv(col("ts_us"), lit(UsPerDay)).as("day"),
+        intDiv(col("ts_us"), lit(EventSeries.DayUs)).as("day"),
         intDiv(round(col("value") * 100).cast("long"), lit(SpendBandCents))
           .as("band"))
       .groupBy("event_type", "day", "band")
@@ -247,7 +246,7 @@ object Privacy {
   def releaseReportOf(ev: DataFrame): DataFrame = {
     import graft.functions.Hashing.intDiv
     val l = ev.select(col("event_type"),
-        intDiv(col("ts_us"), lit(UsPerDay)).as("day"), col("user_id"))
+        intDiv(col("ts_us"), lit(EventSeries.DayUs)).as("day"), col("user_id"))
       .groupBy("event_type", "day").agg(countDistinct("user_id").as("l"))
     tClosenessOf(ev)
       .join(l, Seq("event_type", "day"))
@@ -281,7 +280,7 @@ object Privacy {
   def applyReleaseOf(ev: DataFrame): DataFrame = {
     import graft.functions.Hashing.{intDiv, valueCents}
     val cents = ev.select(col("event_type"),
-        intDiv(col("ts_us"), lit(UsPerDay)).as("day"),
+        intDiv(col("ts_us"), lit(EventSeries.DayUs)).as("day"),
         valueCents(col("value")).as("cents"))
       .groupBy("event_type", "day").agg(sum("cents").as("sum_cents"))
     releaseReportOf(ev)
@@ -329,7 +328,7 @@ object Privacy {
   def fineClasses(ev: DataFrame): DataFrame = {
     import graft.functions.Hashing.intDiv
     ev.select(col("event_type"),
-        intDiv(col("ts_us"), lit(UsPerDay)).as("day"),
+        intDiv(col("ts_us"), lit(EventSeries.DayUs)).as("day"),
         intDiv(round(col("value") * 100).cast("long"), lit(SpendBandCents))
           .as("band"))
       .groupBy("event_type", "day", "band").agg(count(lit(1)).as("k"))
@@ -367,7 +366,7 @@ object Privacy {
   private def qiClasses(ev: DataFrame) = {
     import graft.functions.Hashing.intDiv
     ev.select(col("event_type"),
-        intDiv(col("ts_us"), lit(UsPerDay)).as("day"),
+        intDiv(col("ts_us"), lit(EventSeries.DayUs)).as("day"),
         intDiv(round(col("value") * 100).cast("long"), lit(SpendBandCents))
           .as("band"),
         col("user_id"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Partitioning._
 import graft.Tables
-import graft.functions.Hashing.ratio4
+import graft.functions.Hashing.{intDiv, ratio4}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -169,4 +169,90 @@ object QualitySignals {
         ratio4(col("n_types"), col("n_toks")).as("ttr"),
         ratio4(col("n_hapax"), col("n_types")).as("hapax_share"))
       .orderBy("doc_id")
+
+  /** Quality-score histogram: documents per exact-integer quality-key
+    * bucket (the key is TextAnalysis.qualityKeyCol's 1e-4-unit int64;
+    * bucket width 500 = 0.05 score units). THE panel for choosing a
+    * gate threshold: integer bucketing over the exact key means the
+    * histogram — and any threshold read off it — reproduces anywhere.
+    * One narrow scan + one 21-key shuffle. */
+  def qualityHistogram(spark: SparkSession, dir: String): DataFrame = {
+    Tables.documents(spark, dir)
+      .select(intDiv(TextAnalysis.qualityKeyFromText(col("text")), lit(500L)).as("bucket"))
+      .groupBy("bucket").agg(count(lit(1)).as("n_docs"))
+      .orderBy("bucket")
+  }
+
+  /** `docs_length_quality_grid`: the JOINT (length decile × quality
+    * decile) distribution — the bias audit for any length-based gate:
+    * #169 (length survival) and #143 (quality histogram) each see one
+    * marginal, but whether "drop short docs" ALSO drops the quality
+    * tail only shows in the joint grid (mass on the diagonal = the
+    * two signals are near-redundant; a flat grid = length carries no
+    * quality information and a length gate is quality-neutral). Per
+    * occupied (ldec, qdec) cell: doc count and the exact ratio4 share
+    * within the length decile (rows of the grid each sum to 1).
+    *
+    * Deciles are the exact int64 rank formula ((rn−1)·10 div N + 1,
+    * ties broken by doc_id) over TWO native GlobalRank passes — each
+    * one range exchange, never a single-partition window — joined on
+    * the uniform int doc key; the grid rollup is O(100) rows. */
+  def lengthQualityGrid(spark: SparkSession, dir: String): DataFrame = {
+    val base = Tables.documents(spark, dir)
+      .select(col("doc_id"), col("n_chars"),
+        TextAnalysis.qualityKeyFromText(col("text")).as("qkey"))
+      .checkpointSer
+    val n = base.count()
+    def decile(rn: org.apache.spark.sql.Column) =
+      intDiv((rn - 1L) * 10L, lit(n)) + 1L
+    val ld = Ranking.globalRowNumber(base.select("doc_id", "n_chars"),
+        Seq(col("n_chars"), col("doc_id")), "lrn")
+      .select(col("doc_id"), decile(col("lrn")).as("ldec"))
+    val qd = Ranking.globalRowNumber(base.select("doc_id", "qkey"),
+        Seq(col("qkey"), col("doc_id")), "qrn")
+      .select(col("doc_id"), decile(col("qrn")).as("qdec"))
+    val grid = ld.join(qd, "doc_id")
+      .groupBy("ldec", "qdec").agg(count(lit(1)).as("n_docs"))
+    val rowTot = grid.groupBy("ldec").agg(sum("n_docs").as("row_total"))
+    grid.join(rowTot, "ldec")
+      .select(col("ldec"), col("qdec"), col("n_docs"),
+        ratio4(col("n_docs"), col("row_total")).as("row_share4"))
+      .orderBy("ldec", "qdec")
+  }
+
+  /** `dedup_survivorship_quality`: does near-dup dedup BIAS the
+    * corpus? Per exact quality decile: doc count, docs a
+    * min-keeper near-dup dedup would drop (non-keeper members of the
+    * LSH components — the #42 grain, dropped = doc_id ≠ component_id
+    * since min-label components label by the min doc), and the ratio4
+    * drop share. A flat drop_share4 row means dedup is
+    * quality-neutral; drops concentrated in the top deciles mean the
+    * near-dup gate is silently eating the best documents (templated
+    * high-quality families) and the keeper rule should switch to
+    * best-quality (#104).
+    *
+    * Shape: ONE GlobalRank pass for the deciles + the memoized
+    * verified-pair components (shared with the ~10 other consumers —
+    * no new corpus pass in a warm session); the join is uniform
+    * int doc keys, the rollup O(10) rows. */
+  def dedupSurvivorship(spark: SparkSession, dir: String): DataFrame = {
+    val base = Tables.documents(spark, dir)
+      .select(col("doc_id"),
+        TextAnalysis.qualityKeyFromText(col("text")).as("qkey"))
+      .checkpointSer
+    val n = base.count()
+    val qd = Ranking.globalRowNumber(base, Seq(col("qkey"), col("doc_id")), "qrn")
+      .select(col("doc_id"),
+        (intDiv((col("qrn") - 1L) * 10L, lit(n)) + 1L).as("qdec"))
+    val dropped = MinHashLSH.nearDupComponents(spark, dir)
+      .filter(col("doc_id") =!= col("component_id"))
+      .select(col("doc_id"), lit(true).as("is_dropped"))
+    qd.join(dropped, Seq("doc_id"), "left")
+      .groupBy("qdec")
+      .agg(count(lit(1)).as("n_docs"),
+        sum(when(col("is_dropped"), 1L).otherwise(0L)).as("n_dropped"))
+      .select(col("qdec"), col("n_docs"), col("n_dropped"),
+        ratio4(col("n_dropped"), col("n_docs")).as("drop_share4"))
+      .orderBy("qdec")
+  }
 }

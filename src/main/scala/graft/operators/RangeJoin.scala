@@ -40,12 +40,12 @@ object RangeJoin {
   }
 
   /** events_session_lookup: assign every event to its session interval
-    * (from Analytics.sessionize) via the bucketized range join — the
+    * (from EventUsers.sessionize) via the bucketized range join — the
     * round-trip proves containment semantics against the gap-based
     * construction (each event lands in exactly one session). */
   def eventsSessionLookup(spark: org.apache.spark.sql.SparkSession,
                           dir: String): DataFrame = {
-    val sess = Analytics.sessionize(spark, dir)
+    val sess = EventUsers.sessionize(spark, dir)
       .select("user_id", "session_idx", "start_us", "end_us")
     val ev = Dedup.eventsUs(spark, dir).select("event_id", "user_id", "ts_us")
     pointInInterval(ev, sess, key = "user_id", t = "ts_us",

@@ -260,7 +260,7 @@ object Skew {
   def sessionizeAutoOf(ev: DataFrame, skewX4: Double,
                        gapUs: Long = 1800L * 1000000L): DataFrame =
     if (shouldSplitWindow(skewX4)) splitSessionizeOf(ev, gapUs)
-    else Analytics.sessionizeOf(ev, gapUs)
+    else EventUsers.sessionizeOf(ev, gapUs)
 
   /** `events_sessionize_auto`: the window decision wired END TO END —
     * reads its own per-user hotness panel (a 1-row frame, collected

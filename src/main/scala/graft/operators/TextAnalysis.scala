@@ -418,4 +418,29 @@ object TextAnalysis {
       col("doc_id"),
       fingerprintCol(col("text")).as("fingerprint")
     ).orderBy("doc_id")
+
+  /** Sentence-level readability profile per document: sentence count
+    * (terminator runs — consecutive [.!?] collapse to one boundary),
+    * word count, and ratio4 words-per-sentence — the cheap C4-style
+    * "is this prose?" signal. Pure per-row regex counting, no
+    * shuffle; documents with no terminator count as one sentence.
+    *
+    * Terminator-RUN count below: (length with each [.!?]+ run as one
+    * char) minus (length with runs removed) = number of runs.
+    * Column-level so the spec can probe it on a controlled fixture. */
+  def sentenceRuns(text: Column): Column =
+    (length(regexp_replace(text, "[.!?]+", "x")) -
+      length(regexp_replace(text, "[.!?]+", ""))).cast("long")
+
+  def readability(spark: SparkSession, dir: String): DataFrame = {
+    import graft.functions.Hashing.ratio4
+    val runs = sentenceRuns(col("text"))
+    val words = size(tokens(col("text"))).cast("long")
+    Tables.documents(spark, dir).select(
+      col("doc_id"),
+      words.as("n_words"),
+      greatest(runs, lit(1L)).as("n_sentences"),
+      ratio4(words, greatest(runs, lit(1L))).as("words_per_sentence")
+    ).orderBy("doc_id")
+  }
 }

@@ -22,12 +22,12 @@ import org.apache.spark.sql.SparkSessionExtensions
   * first row is kept only at or after floor + window; a null floor
   * keeps the run's first row as without one.
   *
-  * This file is graft's one home of the keep rule: [[KeepRun]] for
-  * interpreted passes (this batch operator's `doExecute` and the
+  * This file is graft's one home of the keep rule: [[KeepRun]], called
+  * by this batch operator's `doExecute` and generated code and by the
   * streaming [[StreamChainDedupExec]], whose floor is the state store's
-  * last kept time) and, spelled out in Java, this operator's generated
-  * code. The exec node filters raw `InternalRow`s in a streaming pass
-  * with O(1) state, with no object ser/de boundary. Catalyst inserts the required hash exchange +
+  * last kept time. The exec node filters raw `InternalRow`s in a
+  * streaming pass with O(1) state, with no object ser/de boundary.
+  * Catalyst inserts the required hash exchange +
   * in-partition sort via requiredChildDistribution/Ordering — at
   * cluster scale that is one shuffle on the uniform digest key,
   * identical to any groupBy.
@@ -58,8 +58,9 @@ case class ChainDedupExec(digest: Attribute, ts: Attribute,
   private def index(a: Attribute): Int = child.output.indexWhere(_.exprId == a.exprId)
 
   // ---- whole-stage codegen: the greedy-chain filter fuses into the
-  // ---- sorted child's consume loop; state is three generated-class
-  // ---- fields (per-partition instance), exactly the interpreted pass.
+  // ---- sorted child's consume loop; state is the current digest and a
+  // ---- KeepRun held as generated-class fields (per-partition
+  // ---- instance), exactly the interpreted pass.
 
   override def inputRDDs(): Seq[RDD[InternalRow]] =
     child.asInstanceOf[CodegenSupport].inputRDDs()
@@ -69,29 +70,25 @@ case class ChainDedupExec(digest: Attribute, ts: Attribute,
 
   override def doConsume(ctx: CodegenContext, input: Seq[ExprCode], row: ExprCode): String = {
     val cur = ctx.addMutableState(CodeGenerator.JAVA_LONG, "chainCur")
-    val last = ctx.addMutableState(CodeGenerator.JAVA_LONG, "chainLast")
     val init = ctx.addMutableState(CodeGenerator.JAVA_BOOLEAN, "chainInit")
+    val runClass = classOf[KeepRun].getName
+    val run = ctx.addMutableState(runClass, "chainRun",
+      v => s"$v = new $runClass(${windowUs}L);")
     val keep = ctx.freshName("chainKeep")
     val evalAll = evaluateVariables(input)
     val d = input(index(digest)).value
     val t = input(index(ts)).value
-    // a run's first row: kept, unless a non-null floor says otherwise
     val first = floor.map(a => input(index(a))) match {
-      case None => s"$last = $t; $keep = true;"
-      case Some(f) =>
-        s"""if (${f.isNull} || $t >= ${f.value} + ${windowUs}L) {
-           |    $last = $t; $keep = true;
-           |  } else {
-           |    $last = ${f.value};
-           |  }""".stripMargin
+      case None => s"$run.start($t)"
+      case Some(f) => s"${f.isNull} ? $run.start($t) : $run.start($t, ${f.value})"
     }
     s"""
        |$evalAll
-       |boolean $keep = false;
+       |boolean $keep;
        |if (!$init || $d != $cur) {
-       |  $init = true; $cur = $d; $first
-       |} else if ($t >= $last + ${windowUs}L) {
-       |  $last = $t; $keep = true;
+       |  $init = true; $cur = $d; $keep = $first;
+       |} else {
+       |  $keep = $run.next($t);
        |}
        |if ($keep) {
        |  ${consume(ctx, input)}

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Streaming last-touch attribution: the online form of the batch
-  * Analytics4.attribution. State per user is the latest click's
+  * EventUsers.attribution. State per user is the latest click's
   * (event_id, ts_us) — one tuple, so the state store is O(users) —
   * and each arriving purchase is attributed against it immediately
   * (append output; an attribution never needs retraction because the
@@ -22,9 +22,9 @@ object StreamAttribution {
   case class Attribution(event_id: Long, user_id: Long, click_id: Long, gap_us: Long)
 
   /** Attributed purchases via flatMapGroupsWithState. `lookbackUs`
-    * mirrors Analytics4.AttributionWindowUs. */
+    * mirrors EventUsers.AttributionWindowUs. */
   def attributions(ev: Dataset[Ev],
-                   lookbackUs: Long = graft.operators.Analytics4.AttributionWindowUs)
+                   lookbackUs: Long = graft.operators.EventUsers.AttributionWindowUs)
       : Dataset[Attribution] = {
     implicit val stEnc = Encoders.product[LastClick]
     implicit val outEnc = Encoders.product[Attribution]

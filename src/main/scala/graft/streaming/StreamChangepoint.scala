@@ -1,9 +1,8 @@
 package graft.streaming
 
-import graft.operators.Analytics8
+import graft.operators.EventSeries
 import graft.sinks.TxnParquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Online changepoint location — the streaming twin of
@@ -14,7 +13,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * — and appends them to a [[TxnParquet]] state directory keyed by
   * batch id (idempotent replays). The locator panel then evaluates ON
   * THE SAME CODE PATH as the batch query
-  * ([[Analytics8.changepointOfDaily]]) over the folded state: split
+  * ([[EventSeries.changepointOfDaily]]) over the folded state: split
   * day, segment means, CUSUM peak and explained-variance share are
   * row-identical to the batch answer over the same events, at whatever
   * cadence the monitor reads them — the apply-side closure of the
@@ -27,35 +26,27 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamChangepoint {
 
-  /** Daily (event_type, day, c) count deltas of one event micro-batch. */
-  def dailyDeltas(batch: DataFrame): DataFrame = {
-    import graft.functions.Hashing.intDiv
-    batch.select(col("event_type"),
-        intDiv(col("ts_us"), lit(86400000000L)).as("day"))
-      .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-  }
-
   /** Attach the monitor to a streaming (event_type, ts_us, …) frame:
-    * idempotent per-batch delta appends under `stateDir`. */
+    * idempotent per-batch appends of its [[EventSeries.dailyCounts]]
+    * deltas under `stateDir`. */
   def monitor(ev: DataFrame, stateDir: String,
               checkpointDir: Option[String] = None): StreamingQuery =
-    TxnParquet.appendStream(ev, stateDir, checkpointDir)(dailyDeltas)
+    TxnParquet.appendStream(ev, stateDir, checkpointDir)(EventSeries.dailyCounts)
 
   /** The ℤ-group fold of every committed delta batch. */
-  def foldedDaily(spark: SparkSession, stateDir: String): DataFrame =
-    TxnParquet.read(spark, stateDir)
-      .groupBy("event_type", "day").agg(sum("c").as("c"))
+  private def foldedDaily(spark: SparkSession, stateDir: String): DataFrame =
+    EventSeries.dailyCounts.fold(TxnParquet.read(spark, stateDir))
 
   /** The changepoint panel over everything ingested so far —
     * row-identical to the batch `events_changepoint` over the same
     * events. */
   def panel(spark: SparkSession, stateDir: String): DataFrame =
-    Analytics8.changepointOfDaily(foldedDaily(spark, stateDir))
+    EventSeries.changepointOfDaily(foldedDaily(spark, stateDir))
 
   /** The weekly-rhythm panel over the SAME delta log — one maintained
     * state, two readings (where the level moved / whether the weekly
     * rhythm holds); row-identical to the batch `events_friedman_dow`
     * over the same events. */
   def friedmanPanel(spark: SparkSession, stateDir: String): DataFrame =
-    Analytics8.friedmanDowOfDaily(foldedDaily(spark, stateDir))
+    EventSeries.friedmanDowOfDaily(foldedDaily(spark, stateDir))
 }

@@ -167,7 +167,7 @@ object StreamDedup {
 
   /** #29: watermarked tumbling-window counters — the streaming form of
     * the reference's per-minute forwarded/dropped log line and of
-    * Analytics.eventsWindow. */
+    * EventSeries.eventsWindow. */
   def windowCounts(df: DataFrame, window: String = "1 hour"): DataFrame =
     withEventTime(df)
       .withWatermark("ts", "30 minutes")

@@ -33,7 +33,7 @@ object StreamPrivacy {
   def withQi(ev: DataFrame): DataFrame = {
     import graft.functions.Hashing.intDiv
     ev.select(col("event_id"), col("event_type"),
-      intDiv(col("ts_us"), lit(Privacy.UsPerDay)).as("day"),
+      intDiv(col("ts_us"), lit(graft.operators.EventSeries.DayUs)).as("day"),
       intDiv(round(col("value") * 100).cast("long"),
         lit(Privacy.SpendBandCents)).as("band"))
   }

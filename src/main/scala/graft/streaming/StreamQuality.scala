@@ -26,16 +26,16 @@ object StreamQuality {
 
   /** Streaming first-digit counts — the Benford audit
     * (`events_benford`) as a stream monitor: the SAME
-    * [[graft.operators.Analytics4.firstDigitCounts]] kernel running as
+    * [[graft.operators.EventValues.firstDigitCounts]] kernel running as
     * a streaming grouped aggregation (state is O(types·9) longs no
     * matter the volume; complete/update output). A monitor derives
     * share_ppm / dev_ppm per trigger from the emitted counts against
-    * [[graft.operators.Analytics4.BenfordPpm]] — O(types·9) driver
+    * [[graft.operators.EventValues.BenfordPpm]] — O(types·9) driver
     * math — and alarms when a feed's digit profile drifts from
     * organic, catching fabricated or fixed-price-point injection as
     * it streams in rather than at the next batch audit. Counts are
     * pure functions of the input set, so streaming-after-any-prefix
     * equals the batch aggregate (exact parity oracle). */
   def benfordCounts(ev: DataFrame): DataFrame =
-    graft.operators.Analytics4.firstDigitCounts(ev)
+    graft.operators.EventValues.firstDigitCounts(ev)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Streaming inter-event gap extraction — the online form of the batch
-  * bot-regularity gate (events_bot_regularity, Analytics3): each arriving
+  * bot-regularity gate (events_bot_regularity, EventUsers): each arriving
   * event emits its gap to the PREVIOUS event of the same user. State per
   * user is ONE (ts, id) tuple, so the state store stays O(users)
   * regardless of stream length — the StreamMarkov discipline.
@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   * The regularity panel itself (exact integer mean + MAD + flag) is
   * inherently two-pass — deviations need the final mean — so the online
   * part is exactly the stateful stage (the lag), and the panel runs as
-  * `Analytics3.regularityOfGaps` over the accumulated gap stream: a
+  * `EventUsers.regularityOfGaps` over the accumulated gap stream: a
   * production ingest appends gaps to storage continuously and evaluates
   * the gate on whatever horizon it audits. StreamRegularitySpec pins
   * both layers: streamed gaps == batch lag-window gaps, and the panel

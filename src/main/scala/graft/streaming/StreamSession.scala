@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming gap-sessionization on Spark's native session_window —
-  * the streaming analog of the batch Analytics.sessionize window
+  * the streaming analog of the batch EventUsers.sessionize window
   * pipeline. State per open session is one (start, end, count, sum)
   * tuple; the engine merges windows as late events arrive.
   *

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import graft.operators.Analytics6
+import graft.operators.EventSeries
 import graft.sinks.TxnParquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Online grouped-OLS trend — the streaming twin of `events_trend_ols`
@@ -15,7 +14,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * [[TxnParquet]] state directory keyed by batch id (idempotent
   * replays, torn writes invisible). The trend panel then evaluates ON
   * THE SAME CODE PATH as the batch query
-  * ([[Analytics6.trendOlsOfDaily]]) over the folded state: slope,
+  * ([[EventSeries.trendOlsOfDaily]]) over the folded state: slope,
   * intercept and r² are row-identical to the batch answer over the
   * same events, at whatever cadence the operator reads them.
   *
@@ -25,28 +24,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamTrend {
 
-  /** Daily (event_type, day, y) cents deltas of one event micro-batch. */
-  def dailyDeltas(batch: DataFrame): DataFrame = {
-    import graft.functions.Hashing.{intDiv, valueCents}
-    batch.select(col("event_type"),
-        intDiv(col("ts_us"), lit(86400000000L)).as("day"),
-        valueCents(col("value")).as("cents"))
-      .groupBy("event_type", "day").agg(sum("cents").as("y"))
-  }
-
   /** Attach the monitor to a streaming (event_type, ts_us, value)
-    * frame: idempotent per-batch delta appends under `stateDir`. */
+    * frame: idempotent per-batch appends of its
+    * [[EventSeries.dailyCents]] deltas under `stateDir`. */
   def monitor(ev: DataFrame, stateDir: String,
               checkpointDir: Option[String] = None): StreamingQuery =
-    TxnParquet.appendStream(ev, stateDir, checkpointDir)(dailyDeltas)
-
-  /** The ℤ-group fold of every committed delta batch. */
-  def foldedDaily(spark: SparkSession, stateDir: String): DataFrame =
-    TxnParquet.read(spark, stateDir)
-      .groupBy("event_type", "day").agg(sum("y").as("y"))
+    TxnParquet.appendStream(ev, stateDir, checkpointDir)(EventSeries.dailyCents)
 
   /** The trend panel over everything ingested so far — row-identical
     * to the batch `events_trend_ols` over the same events. */
   def panel(spark: SparkSession, stateDir: String): DataFrame =
-    Analytics6.trendOlsOfDaily(foldedDaily(spark, stateDir))
+    EventSeries.trendOlsOfDaily(
+      EventSeries.dailyCents.fold(TxnParquet.read(spark, stateDir)))
 }

@@ -43,7 +43,9 @@ object StructuredLog {
   val ErrorEventType =
     "type.googleapis.com/google.devtools.clouderrorreporting.v1beta1.ReportedErrorEvent"
 
-  private def jsonEscape(s: String): String = s.flatMap {
+  /** The body of a JSON string literal: backslash, quote and ALL
+    * control characters (< 0x20) escaped. */
+  private[graft] def jsonEscape(s: String): String = s.flatMap {
     case '"'          => "\\\""
     case '\\'         => "\\\\"
     case '\n'         => "\\n"

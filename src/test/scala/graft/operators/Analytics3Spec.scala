@@ -47,7 +47,7 @@ class Analytics3Spec extends SparkSpec {
       .flatMap { case (_, sk) => suppName.get(sk) }
       .groupBy(identity).view.mapValues(_.size.toLong).toSeq
       .sortBy { case (n, w) => (-w, n) }.take(10)
-    val got = Analytics3.q21(spark, sf).collect().toSeq
+    val got = Commerce.q21(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1)))
     assert(got == expected)
   }
@@ -67,7 +67,7 @@ class Analytics3Spec extends SparkSpec {
         val avg = ((gaps.sum * 10000L + n / 2) / n) / 10000.0
         (u, (n, gaps.sum, gaps.max, avg)) }
       .sortBy(_._1)
-    val got = Analytics3.gapStats(spark, sf).collect().toSeq
+    val got = EventUsers.gapStats(spark, sf).collect().toSeq
       .map(r => (r.getLong(0),
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))))
     assert(got == expected)
@@ -82,8 +82,8 @@ class Analytics3Spec extends SparkSpec {
       ts.zip(ts.tail).map { case (a, b) => b - a }
     }.toSeq
     def rank(g: Long): Long =
-      Analytics3.GapBuckets.find(g < _._3).map(_._1)
-        .getOrElse(Analytics3.GapBuckets.length + 1L)
+      EventUsers.GapBuckets.find(g < _._3).map(_._1)
+        .getOrElse(EventUsers.GapBuckets.length + 1L)
     val byRank = gaps.groupBy(rank).view.mapValues(_.length.toLong).toMap
     val t = gaps.length.toLong
     def r4(n: Long) = ((n * 10000L + t / 2) / t) / 10000.0
@@ -92,7 +92,7 @@ class Analytics3Spec extends SparkSpec {
     val expected = ranksSorted.zip(cum).map { case (r, c) =>
       (r, byRank(r), r4(byRank(r)), r4(c))
     }
-    val got = Analytics3.gapHistogram(spark, sf).collect().toSeq
+    val got = EventUsers.gapHistogram(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(2), r.getDouble(3), r.getDouble(4)))
     assert(got == expected)
     assert(got.last._4 == 1.0, "cumulative share must close to 1.0")
@@ -109,15 +109,15 @@ class Analytics3Spec extends SparkSpec {
       val ts = rows.sortBy(r => (r._2, r._3)).map(_._2)
       ts.zip(ts.tail).map { case (a, b) => b - a }
     }.toSeq
-      .collect { case (u, gaps) if gaps.length >= Analytics3.MinGaps =>
+      .collect { case (u, gaps) if gaps.length >= EventUsers.MinGaps =>
         val n = gaps.length.toLong
         val mean = hu(gaps.sum, n)
         val mad = hu(gaps.map(g => math.abs(g - mean)).sum, n)
         val reg = if (mean > 0) Some(hu(mad * 10000L, mean) / 10000.0) else None
         (u, n, mean, mad, reg,
-          if (mean == 0) true else reg.get <= Analytics3.BotRegularityMax)
+          if (mean == 0) true else reg.get <= EventUsers.BotRegularityMax)
       }.sortBy(_._1)
-    val got = Analytics3.botRegularity(spark, sf).collect().toSeq
+    val got = EventUsers.botRegularity(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         if (r.isNullAt(4)) None else Some(r.getDouble(4)), r.getBoolean(5)))
     assert(got == model)
@@ -127,7 +127,7 @@ class Analytics3Spec extends SparkSpec {
     // planted metronome (exact 60 s gaps) and zero-gap replayer both flag
     val planted = (1L to 10L).map(i => (901L, i * 60000000L, i)) ++
       (1L to 10L).map(i => (902L, 42L, 100L + i))
-    val flags = Analytics3
+    val flags = EventUsers
       .botRegularityOf(planted.toDF("user_id", "ts_us", "event_id"))
       .collect().map(r => r.getLong(0) -> r.getBoolean(5)).toMap
     assert(flags == Map(901L -> true, 902L -> true))
@@ -147,7 +147,7 @@ class Analytics3Spec extends SparkSpec {
       cum += firsts.getOrElse(d, 0L)
       (d, byDay(d), firsts.getOrElse(d, 0L), lasts.getOrElse(d, 0L), cum)
     }
-    val got = Analytics3.userFlux(spark, sf).collect().toSeq
+    val got = EventUsers.userFlux(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))
     assert(got == model)
@@ -174,7 +174,7 @@ class Analytics3Spec extends SparkSpec {
         java.time.temporal.ChronoUnit.DAYS.between(epoch, ld(r.get(1)))))
     val byOrd = li.groupBy(_._1).view.mapValues(_.length.toLong).toMap
     val byShip = li.groupBy(_._2).view.mapValues(_.length.toLong).toMap
-    val got = Analytics3.backlogCurve(spark, sf).collect()
+    val got = Commerce.backlogCurve(spark, sf).collect()
     assert(got.map(_.getLong(0)).toSet === (byOrd.keySet ++ byShip.keySet))
     var run = 0L
     got.sortBy(_.getLong(0)).foreach { r =>
@@ -200,7 +200,7 @@ class Analytics3Spec extends SparkSpec {
       (ds.size.toLong, ds.sum)
     }.toMap
     val total = perUser.size.toLong
-    val got = Analytics3.activeDaysHistogram(spark, sf).collect()
+    val got = EventUsers.activeDaysHistogram(spark, sf).collect()
     assert(got.length === want.size)
     assert(got.map(_.getLong(2)).sum === total)
     got.foreach { r =>
@@ -225,7 +225,7 @@ class Analytics3Spec extends SparkSpec {
       val hi = math.ceil(pos).toInt
       if (lo == hi) v(lo) else v(lo) * (hi - pos) + v(hi) * (pos - lo)
     }
-    val got = Analytics3.transitionQuantiles(spark, sf).collect()
+    val got = EventUsers.transitionQuantiles(spark, sf).collect()
     assert(got.length === trans.size)
     got.foreach { r =>
       val v = trans((r.getString(0), r.getString(1)))
@@ -247,7 +247,7 @@ class Analytics3Spec extends SparkSpec {
       val frac = pos - lo
       if (lo + 1 < v.length) v(lo) + frac * (v(lo + 1) - v(lo)) else v(lo)
     }
-    val got = Analytics3.quantiles(spark, sf).collect()
+    val got = Commerce.quantiles(spark, sf).collect()
     assert(got.map(_.getString(0)).toSeq == byFlag.keys.toSeq.sorted)
     got.foreach { r =>
       val v = byFlag(r.getString(0)).toIndexedSeq
@@ -282,7 +282,7 @@ class Analytics3Spec extends SparkSpec {
       val frac = pos - lo
       if (lo + 1 < v.length) v(lo) + frac * (v(lo + 1) - v(lo)) else v(lo)
     }
-    val got = Analytics3.fulfillmentLag(spark, sf).collect()
+    val got = Commerce.fulfillmentLag(spark, sf).collect()
     assert(got.length === lags.size)
     got.foreach { r =>
       val v = lags((r.getInt(0), r.getInt(1)))
@@ -326,7 +326,7 @@ class Analytics3Spec extends SparkSpec {
         ratio4Model(g.map(_._3).sum, g.size.toLong),
         interp(v, 0.25), interp(v, 0.5), interp(v, 0.75))
     }.toSeq.sortBy(_._1)
-    val got = Analytics3.repeatInterval(spark, sf).collect().toSeq
+    val got = Commerce.repeatInterval(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getDouble(4), r.getDouble(5), r.getDouble(6)))
     assert(got == expected)

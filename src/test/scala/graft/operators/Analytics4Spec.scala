@@ -18,7 +18,7 @@ class Analytics4Spec extends SparkSpec {
     import spark.implicits._
     val got = Seq(-4100L, -2000L, -1L, 0L, 1999L, 2000L).toDF("cents")
       .select(graft.functions.Hashing.intDiv(col("cents"),
-        lit(Analytics4.HistBucketCents)).as("b"))
+        lit(EventValues.HistBucketCents)).as("b"))
       .collect().map(_.getLong(0)).toSeq
     // pinned against DuckDB: SELECT c // 2000 over the same fixtures
     // returns (-2, -1, 0, 0, 0, 1) — truncation toward zero, NOT floor
@@ -29,11 +29,11 @@ class Analytics4Spec extends SparkSpec {
   test("valueHistogram matches an exact-cents bucketing model") {
     val expected = events
       .map { case (_, _, _, t, v) => (t, cents(v)) }
-      .groupBy { case (t, c) => (t, c / Analytics4.HistBucketCents) }
+      .groupBy { case (t, c) => (t, c / EventValues.HistBucketCents) }
       .map { case ((t, b), g) =>
         (t, b, g.size.toLong, g.map(_._2).min, g.map(_._2).max) }
       .toSeq.sortBy(r => (r._1, r._2))
-    val got = Analytics4.valueHistogram(spark, sf).collect().toSeq
+    val got = EventValues.valueHistogram(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(got == expected)
   }
@@ -49,7 +49,7 @@ class Analytics4Spec extends SparkSpec {
       sorted.zip(0L +: sorted.map(_._3)).map { case ((t, h, n, s), prev) =>
         (t, h, n, s, prev, n - prev) }
     }.toSeq.sortBy(r => (r._1, r._2))
-    val got = Analytics4.hourlyChange(spark, sf).collect().toSeq
+    val got = EventSeries.hourlyChange(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))
     assert(got == expected)
@@ -61,7 +61,7 @@ class Analytics4Spec extends SparkSpec {
         .map(_.mkString(">"))
     }.toSeq.groupBy(identity).view.mapValues(_.size.toLong).toSeq
       .sortBy { case (p, n) => (-n, p) }.take(10)
-    val got = Analytics4.topPaths(spark, sf).collect().toSeq
+    val got = EventUsers.topPaths(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1)))
     assert(got == expected)
   }
@@ -75,7 +75,7 @@ class Analytics4Spec extends SparkSpec {
         val rn = i + 1L
         (u, s, rn, (rn - 1) * 10 / n + 1)
       }.sortBy(_._1)
-    val got = Analytics4.spendDeciles(spark, sf).collect().toSeq
+    val got = EventValues.spendDeciles(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(got == expected)
     // every decile is populated on this corpus
@@ -83,7 +83,7 @@ class Analytics4Spec extends SparkSpec {
   }
 
   test("valueConcentration is the Lorenz rollup of the decile frame") {
-    val deciles = Analytics4.spendDeciles(spark, sf).collect().toSeq
+    val deciles = EventValues.spendDeciles(spark, sf).collect().toSeq
       .map(r => (r.getLong(1), r.getLong(3))) // (spend_cents, decile)
     val byDec = deciles.groupBy(_._2).toSeq.sortBy(_._1)
       .map { case (d, g) => (d, g.size.toLong, g.map(_._1).sum) }
@@ -93,7 +93,7 @@ class Analytics4Spec extends SparkSpec {
       cu += nu; cc += sc
       (d, nu, sc, cc, ratio4Model(cu, tu), ratio4Model(cc, tc))
     }
-    val got = Analytics4.valueConcentration(spark, sf).collect().toSeq
+    val got = EventValues.valueConcentration(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getDouble(5)))
     assert(got == model)
@@ -118,7 +118,7 @@ class Analytics4Spec extends SparkSpec {
     }
     val expected = sizes.toSeq.groupBy(identity).view
       .mapValues(_.size.toLong).toSeq.sorted
-    val got = Analytics4.sessionHistogram(spark, sf).collect().toSeq
+    val got = EventUsers.sessionHistogram(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(got == expected)
   }
@@ -133,7 +133,7 @@ class Analytics4Spec extends SparkSpec {
       val win = daily.filter(x => x._1 == t && x._2 >= d - 6 && x._2 <= d)
       (t, d, n, s, win.map(_._3).sum, win.map(_._4).sum)
     }.sortBy(r => (r._1, r._2))
-    val got = Analytics4.rollingWeek(spark, sf).collect().toSeq
+    val got = EventSeries.rollingWeek(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))
     assert(got == expected)
@@ -142,17 +142,17 @@ class Analytics4Spec extends SparkSpec {
   test("trimmedMean matches a rank-trim model in exact cents") {
     val expected = events.groupBy(_._4).toSeq.map { case (t, rows) =>
       val sorted = rows.map(e => (cents(e._5), e._1)).toSeq.sorted
-      val k = (sorted.size * Analytics4.TrimPct / 100).toInt
+      val k = (sorted.size * EventValues.TrimPct / 100).toInt
       val kept = sorted.slice(k, sorted.size - k).map(_._1)
       (t, kept.size.toLong, kept.min, kept.max, ratio4Model(kept.sum, kept.size.toLong))
     }.sortBy(_._1)
-    val got = Analytics4.trimmedMean(spark, sf).collect().toSeq
+    val got = EventValues.trimmedMean(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
     assert(got == expected)
   }
 
   test("profileEvents reports exact per-column null and distinct counts") {
-    val got = Analytics4.profileEvents(spark, sf).collect()
+    val got = EventValues.profileEvents(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     val n = events.size.toLong
     assert(got.keySet == Set("event_id", "ts_us", "user_id", "event_type", "value", "props"))
@@ -173,7 +173,7 @@ class Analytics4Spec extends SparkSpec {
     val (rs, fs, ms) = (scores(_._2), scores(_._3), scores(_._4))
     val expected = base.map(r => (r._1, r._2, r._3, r._4, rs(r._1), fs(r._1), ms(r._1)))
       .sortBy(_._1)
-    val got = Analytics4.rfm(spark, sf).collect().toSeq
+    val got = EventUsers.rfm(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6)))
     assert(got == expected)
@@ -182,8 +182,8 @@ class Analytics4Spec extends SparkSpec {
 
   test("benford: ppm table is exact, panel matches a first-digit model") {
     // the nine published constants partition 1e6 exactly
-    assert(Analytics4.BenfordPpm.sum === 1000000L)
-    assert(Analytics4.BenfordPpm.length === 9)
+    assert(EventValues.BenfordPpm.sum === 1000000L)
+    assert(EventValues.BenfordPpm.length === 9)
     val pos = events.map(e => (e._4, cents(e._5))).filter(_._2 > 0)
     val byType = pos.groupBy(_._1)
     val want = byType.flatMap { case (t, rows) =>
@@ -193,11 +193,11 @@ class Analytics4Spec extends SparkSpec {
       (1L to 9L).map { d =>
         val n = digitCounts.getOrElse(d, 0L)
         val share = (n * 1000000L + total / 2) / total
-        val ben = Analytics4.BenfordPpm(d.toInt - 1)
+        val ben = EventValues.BenfordPpm(d.toInt - 1)
         (t, d) -> (n, share, ben, math.abs(share - ben))
       }
     }
-    val got = Analytics4.benford(spark, sf).collect()
+    val got = EventValues.benford(spark, sf).collect()
     assert(got.length === byType.size * 9)
     got.foreach { r =>
       val key = (r.getString(0), r.getLong(1))
@@ -217,21 +217,21 @@ class Analytics4Spec extends SparkSpec {
       rows.toSeq.sortBy(r => (r._2, r._1)).flatMap { case (id, ts, uid, t, _) =>
         val out =
           if (t == "purchase")
-            lastClick.collect { case (cid, cts) if ts - cts <= Analytics4.AttributionWindowUs =>
+            lastClick.collect { case (cid, cts) if ts - cts <= EventUsers.AttributionWindowUs =>
               (id, uid, cid, ts - cts) }
           else None
         if (t == "click") lastClick = Some((id, ts))
         out
       }
     }.toSeq.sortBy(_._1)
-    val got = Analytics4.attribution(spark, sf).collect().toSeq
+    val got = EventUsers.attribution(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(got == expected)
     assert(got.nonEmpty)
   }
 
   test("burstiness matches the exact Fano model over the global hour span") {
-    val hours = events.map { case (_, ts, u, _, _) => (u, ts / Analytics4.HourUs) }
+    val hours = events.map { case (_, ts, u, _, _) => (u, ts / EventSeries.HourUs) }
     val h = hours.map(_._2).max - hours.map(_._2).min + 1
     val expected = hours.groupBy(_._1).map { case (u, g) =>
       val cells = g.groupBy(_._2).map(_._2.size.toLong)
@@ -239,7 +239,7 @@ class Analytics4Spec extends SparkSpec {
       val s2 = cells.map(c => c * c).sum
       (u, n, cells.size.toLong, ratio4Model(h * s2 - n * n, h * n))
     }.toSeq.sortBy(_._1)
-    val got = Analytics4.burstiness(spark, sf).collect().toSeq
+    val got = EventSeries.burstiness(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(got == expected)
     // the statistic discriminates: not every user at the same value
@@ -248,7 +248,7 @@ class Analytics4Spec extends SparkSpec {
 
   test("typeDrift matches the dense-grid ppm L1 model") {
     def halfUp(n: Long, d: Long) = (n + d / 2) / d
-    val wk = events.map { case (_, ts, _, t, _) => (ts / Analytics4.WeekUs, t) }
+    val wk = events.map { case (_, ts, _, t, _) => (ts / EventSeries.WeekUs, t) }
       .groupBy(identity).map { case ((w, t), g) => ((w, t), g.size.toLong) }
     val weeks = wk.keys.map(_._1).toSeq.distinct.sorted
     val types = wk.keys.map(_._2).toSeq.distinct
@@ -260,7 +260,7 @@ class Analytics4Spec extends SparkSpec {
       val top = ds.maxBy { case (t, d) => (d, t) }
       (w, ds.map(_._2).sum, top._1, top._2)
     }.toSeq
-    val got = Analytics4.typeDrift(spark, sf).collect().toSeq
+    val got = EventSeries.typeDrift(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
     assert(got == expected)
     assert(got.nonEmpty)

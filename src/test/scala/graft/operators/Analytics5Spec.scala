@@ -18,7 +18,7 @@ class Analytics5Spec extends SparkSpec {
     val expected = cells.toSeq.map { case ((dow, hod), n) =>
       (dow, hod, n, ratio4Model(n, dayTotals(dow)))
     }.sortBy(r => (r._1, r._2))
-    val got = Analytics5.seasonality(spark, sf).collect().toSeq
+    val got = EventSeries.seasonality(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(got == expected)
     // sparse grain: only populated cells appear (the sf0.001 corpus
@@ -36,7 +36,7 @@ class Analytics5Spec extends SparkSpec {
       .groupBy { case (cd, off, _) => (cd, off) }
       .map { case ((cd, off), g) => (cd, off, g.size.toLong, g.map(_._3).sum) }
       .toSeq.sortBy(r => (r._1, r._2))
-    val got = Analytics5.cohortRevenue(spark, sf).collect().toSeq
+    val got = EventUsers.cohortRevenue(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(got == expected)
   }
@@ -46,7 +46,7 @@ class Analytics5Spec extends SparkSpec {
       .map(r => math.round(r.getDouble(5) * 10000.0)) // exact int key back
     val expected = scores.groupBy(_ / 500).view.mapValues(_.length.toLong)
       .toSeq.sorted
-    val got = Analytics5.qualityHistogram(spark, sf).collect().toSeq
+    val got = QualitySignals.qualityHistogram(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(got == expected)
     assert(got.map(_._2).sum == scores.length)
@@ -66,7 +66,7 @@ class Analytics5Spec extends SparkSpec {
     val cells = docs.groupBy(d => (ldec(d._1), qdec(d._1)))
       .view.mapValues(_.length.toLong).toMap
     val rowTot = cells.groupBy(_._1._1).view.mapValues(_.values.sum).toMap
-    val got = Analytics5.lengthQualityGrid(spark, sf).collect()
+    val got = QualitySignals.lengthQualityGrid(spark, sf).collect()
     assert(got.length === cells.size)
     got.foreach { r =>
       val key = (r.getLong(0), r.getLong(1))
@@ -82,7 +82,7 @@ class Analytics5Spec extends SparkSpec {
   }
 
   test("dedupSurvivorship conserves docs and matches the components drop set") {
-    val got = Analytics5.dedupSurvivorship(spark, sf).collect()
+    val got = QualitySignals.dedupSurvivorship(spark, sf).collect()
     val total = graft.Tables.documents(spark, sf).count()
     assert(got.map(_.getLong(1)).sum === total)
     // dropped total equals the non-keeper count of the #42 grain
@@ -117,7 +117,7 @@ class Analytics5Spec extends SparkSpec {
           rev.multiply(new JBD(100)).setScale(0, RoundingMode.HALF_UP).longValueExact -
             prev.multiply(new JBD(100)).setScale(0, RoundingMode.HALF_UP).longValueExact)
     }
-    val got = Analytics5.monthlyRevenue(spark, sf).collect().toSeq
+    val got = Commerce.monthlyRevenue(spark, sf).collect().toSeq
       .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3), r.getLong(4)))
     assert(got == expected)
   }
@@ -132,14 +132,14 @@ class Analytics5Spec extends SparkSpec {
       val sents = math.max(runs, 1L)
       (id, words, sents, ratio4Model(words, sents))
     }.toSeq.sortBy(_._1)
-    val got = Analytics5.readability(spark, sf).collect().toSeq
+    val got = TextAnalysis.readability(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(got == expected)
     // the OPERATOR's run-collapse expression on a controlled fixture
     val probe = Seq((1L, "Hi there!! Done. Or not..."), (2L, "no terminator here"))
       .toDF("doc_id", "text")
       .select(org.apache.spark.sql.functions.col("doc_id"),
-        Analytics5.sentenceRuns(org.apache.spark.sql.functions.col("text")).as("runs"))
+        TextAnalysis.sentenceRuns(org.apache.spark.sql.functions.col("text")).as("runs"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(probe == Map(1L -> 3L, 2L -> 0L))
   }

@@ -70,7 +70,7 @@ class Analytics7Spec extends SparkSpec {
         (pk, parts(pk), r._2, suppName(r._2),
           nationRegion(suppNation(r._2))._1, r._3 / 1e4))
     }.sortBy(r => (r._1, r._3))
-    val got = Analytics7.q2(spark, sf).collect().toSeq
+    val got = Commerce.q2(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3),
         r.getString(4), r.getDouble(5)))
     assert(got == expected)
@@ -85,7 +85,7 @@ class Analytics7Spec extends SparkSpec {
     val expected = perPart.filter(p => p._2 > thrU)
       .map(p => (p._1, p._2 / 1e4))
       .sortBy(p => (-p._2, p._1))
-    val got = Analytics7.q11(spark, sf).collect().toSeq
+    val got = Commerce.q11(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getDouble(1)))
     assert(got == expected)
     assert(got.nonEmpty)
@@ -103,7 +103,7 @@ class Analytics7Spec extends SparkSpec {
       .groupBy(_._1).map { case ((b, t, sz), rows) =>
         (b, t, sz, rows.size.toLong)
       }.toSeq.sortBy(r => (-r._4, r._1, r._2, r._3))
-    val got = Analytics7.q16(spark, sf).collect().toSeq
+    val got = Commerce.q16(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3)))
     assert(got == expected)
     assert(got.nonEmpty)
@@ -123,7 +123,7 @@ class Analytics7Spec extends SparkSpec {
       .groupBy(_._2).map { case (sk, rows) =>
         (sk, suppName(sk), rows.size.toLong)
       }.toSeq.sortBy(_._1)
-    val got = Analytics7.q20(spark, sf).collect().toSeq
+    val got = Commerce.q20(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     assert(got == expected)
     assert(got.nonEmpty)

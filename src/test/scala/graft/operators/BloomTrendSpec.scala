@@ -79,7 +79,7 @@ class BloomTrendSpec extends SparkSpec {
         else Some(((2 * sn * sn * 1000000 + sd * syyN) / (2 * sd * syyN)).toLong)
       (t, n.toLong, sy.toLong, signed4(sn), signed4(iin), r2)
     }.sortBy(_._1)
-    val got = Analytics6.trendOls(spark, sf).collect().toSeq
+    val got = EventSeries.trendOls(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) None else Some(r.getDouble(3)),
         if (r.isNullAt(4)) None else Some(r.getDouble(4)),
@@ -138,7 +138,7 @@ class BloomTrendSpec extends SparkSpec {
         (s, mo, cents)
       }
     val expected = olsModel(daily)
-    val got = Analytics4.segmentTrend(spark, sf).collect().toSeq
+    val got = Commerce.segmentTrend(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) None else Some(r.getDouble(3)),
         if (r.isNullAt(4)) None else Some(r.getDouble(4)),
@@ -153,7 +153,7 @@ class BloomTrendSpec extends SparkSpec {
     val h0 = ev.map(_._2).min
     val h1 = ev.map(_._2).max
     val expected = (for {
-      w <- Analytics6.FanoWidthsH
+      w <- EventSeries.FanoWidthsH
       (t, rows) <- ev.groupBy(_._1)
     } yield {
       val slots = rows.groupBy(r => (r._2 - h0) / w).values.map(_.size.toLong)
@@ -163,7 +163,7 @@ class BloomTrendSpec extends SparkSpec {
       (t, w, nSlots, n, slots.size.toLong,
         ratio4Model(nSlots * s2 - n * n, nSlots * n))
     }).toSeq.sortBy(r => (r._1, r._2))
-    val got = Analytics6.fanoSpectrum(spark, sf).collect().toSeq
+    val got = EventSeries.fanoSpectrum(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getDouble(5)))
     assert(got == expected)

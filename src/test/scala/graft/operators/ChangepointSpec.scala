@@ -54,7 +54,7 @@ class ChangepointSpec extends SparkSpec {
           halfUp(BigInt(g) * g * 1000000, bt).toLong)
       (t, n, s, d0 + k, k, n - k, ratio4(s1, k), ratio4(s - s1, n - k), g, gain)
     }
-    val got = Analytics8.changepoint(spark, sf).collect().toSeq
+    val got = EventSeries.changepoint(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getDouble(6), r.getDouble(7),
         r.getLong(8), if (r.isNullAt(9)) null
@@ -89,7 +89,7 @@ class ChangepointSpec extends SparkSpec {
       (t, pts.size.toLong, pairs.size.toLong,
         signed4(BigInt(p), BigInt(q)), signed4(BigInt(rnum), BigInt(q)))
     }
-    val got = Analytics8.theilSen(spark, sf).collect().toSeq
+    val got = EventSeries.theilSen(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4)))
     assert(got == expected)
@@ -125,7 +125,7 @@ class ChangepointSpec extends SparkSpec {
           topDow, halfUp(topR2 * 10000L, 2 * n) / 1e4))
       }
     }
-    val got = Analytics8.friedmanDow(spark, sf).collect().toSeq
+    val got = EventSeries.friedmanDow(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3),
         r.getDouble(4)))
     assert(got == expected)

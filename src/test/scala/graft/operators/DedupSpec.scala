@@ -125,7 +125,7 @@ class DedupSpec extends SparkSpec {
       .withColumn("hour_bucket", expr("ts_us div 3600000000L"))
       .groupBy("hour_bucket")
       .agg(approx_count_distinct("user_id").as("approx_users"))
-    val exact = graft.operators.Analytics.distinctUsersHour(spark, dir)
+    val exact = graft.operators.EventSeries.distinctUsersHour(spark, dir)
       .select("hour_bucket", "n_users")
     val j = approx.join(exact, "hour_bucket")
       .select(col("approx_users").cast("double").as("a"),

@@ -9,7 +9,7 @@ class PrivacyLinkageSpec extends SparkSpec {
 
   test("tClosenessOf reproduces the hand-computed EMD fixture") {
     import spark.implicits._
-    val day = Privacy.UsPerDay
+    val day = EventSeries.DayUs
     // bands via value: 5.0 → band 0, 15.0 → band 1, 25.0 → band 2
     def rows(tpe: String, vs: Double*) = vs.map(v => (tpe, day + 1L, v))
     val ev = (rows("a", 5.0, 5.0, 15.0, 15.0) ++
@@ -37,7 +37,7 @@ class PrivacyLinkageSpec extends SparkSpec {
 
   test("generalizationLadder: hand fixture + monotone coarsening invariants") {
     import spark.implicits._
-    val day = Privacy.UsPerDay
+    val day = EventSeries.DayUs
     // type "a", day 0: 6 rows in band 0 (k=6 survives everywhere);
     // type "b": 2 rows band 0 day 0, 2 rows band 4 day 1, 1 row band 10
     // day 8 — at (day, $10) all three b-classes are k<5; at (week, $50)
@@ -74,7 +74,7 @@ class PrivacyLinkageSpec extends SparkSpec {
       .toMap
     val l = Dedup.eventsUs(spark, sf)
       .select("event_type", "ts_us", "user_id").collect()
-      .map(r => ((r.getString(0), r.getLong(1) / Privacy.UsPerDay), r.getLong(2)))
+      .map(r => ((r.getString(0), r.getLong(1) / EventSeries.DayUs), r.getLong(2)))
       .groupBy(_._1).view.mapValues(_.map(_._2).distinct.size.toLong).toMap
     val got = Privacy.releaseReport(spark, sf).collect()
     assert(got.length === t.size)
@@ -94,7 +94,7 @@ class PrivacyLinkageSpec extends SparkSpec {
   test("applyRelease: suppression bites and the released sums are exact") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val day = Privacy.UsPerDay
+    val day = EventSeries.DayUs
     // class "big": k=6 distinct users, uniform band mix (t=0) → releasable
     // class "small": k=2 (fails k AND l) → suppressed
     val ev = ((1 to 6).map(u => ("big", day + u, u.toLong, 5.0 + (u % 3) * 10)) ++

@@ -133,7 +133,7 @@ class QualitySignalsSpec extends SparkSpec {
       // gap sessionization, then ordered view<click<purchase subsequence
       var idx = 0L; var last = Long.MinValue
       val sessions = sorted.map { r =>
-        if (last == Long.MinValue || r._2 - last > Analytics3.PatternGapUs) idx += 1
+        if (last == Long.MinValue || r._2 - last > EventUsers.PatternGapUs) idx += 1
         last = r._2
         (idx, r._4)
       }
@@ -148,7 +148,7 @@ class QualitySignalsSpec extends SparkSpec {
         if (hit) Some((u, si, types.length.toLong)) else None
       }
     }.sortBy(t => (t._1, t._2))
-    val got = Analytics3.patternSessions(spark, sf).collect().toSeq
+    val got = EventUsers.patternSessions(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got == expected)
   }

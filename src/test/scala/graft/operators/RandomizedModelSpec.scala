@@ -218,7 +218,7 @@ class RandomizedModelSpec extends SparkSpec {
         (s"t$trial", i.toLong + 100L,
           if (rnd.nextInt(4) == 0) rnd.nextInt(50).toLong else rnd.nextInt(3).toLong)
       }
-      val got = Analytics6.cusumOfCounts(
+      val got = EventSeries.cusumOfCounts(
         counts.toDF("event_type", "hour", "n")).collect().head
       val series = counts.map(_._3)
       val nH = h.toLong; val tot = series.sum

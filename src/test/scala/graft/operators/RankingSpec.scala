@@ -87,7 +87,7 @@ class RankingSpec extends SparkSpec {
     val got = Ranking.groupedQuantiles(li, Seq("l_returnflag"), "l_quantity",
         Seq("l_orderkey", "l_linenumber"), ps).collect()
       .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
-    val want = Analytics3.quantiles(spark, sf).collect()
+    val want = Commerce.quantiles(spark, sf).collect()
       .flatMap(r => Seq((r.getString(0), 0.25) -> r.getDouble(1),
         (r.getString(0), 0.5) -> r.getDouble(2),
         (r.getString(0), 0.75) -> r.getDouble(3))).toMap

@@ -12,14 +12,14 @@ class Round13PanelsSpec extends SparkSpec {
   private def halfUp(num: Long, den: Long): Long = (num + den / 2) / den
 
   test("assocRules: both directions of every basket pair, exact confidence") {
-    val pairs = Analytics6.basketPairs(spark, sf).collect().toSeq
+    val pairs = Commerce.basketPairs(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getDouble(5)))
     val expected = pairs.flatMap { case (p1, p2, s12, s1, s2, lift) =>
       Seq((p1, p2, s12, s1, halfUp(s12 * 10000L, math.max(s1, 1L)) / 1e4, lift),
         (p2, p1, s12, s2, halfUp(s12 * 10000L, math.max(s2, 1L)) / 1e4, lift))
     }.sortBy(r => (r._1, r._2))
-    val got = Analytics6.assocRules(spark, sf).collect().toSeq
+    val got = Commerce.assocRules(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getDouble(5)))
     assert(got == expected)
@@ -42,7 +42,7 @@ class Round13PanelsSpec extends SparkSpec {
     }.groupBy(_._1).toSeq.map { case (band, us) =>
       (band, us.size.toLong, us.map(_._2).sum, us.map(_._3).sum)
     }.sortBy(_._1)
-    val got = Analytics6.userPredictability(spark, sf).collect().toSeq
+    val got = EventUsers.userPredictability(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(got == expected)
     // bands live on the exact 0..20 grid
@@ -76,7 +76,7 @@ class Round13PanelsSpec extends SparkSpec {
   }
 
   test("peakConcurrency: matches the driver sweep over the sessionize output") {
-    val sess = Analytics.sessionize(spark, sf)
+    val sess = EventUsers.sessionize(spark, sf)
       .select("user_id", "session_idx", "start_us", "end_us")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val pts = sess.flatMap { case (u, si, s, e) =>
@@ -89,7 +89,7 @@ class Round13PanelsSpec extends SparkSpec {
     }.groupBy(_._1).toSeq.map { case (day, rows) =>
       (day, rows.map(_._2).max, rows.count(_._3 == 1L).toLong)
     }.sortBy(_._1)
-    val got = Analytics6.peakConcurrency(spark, sf).collect().toSeq
+    val got = EventSeries.peakConcurrency(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got == expected)
     // the sweep must end balanced: every start has an end
@@ -191,7 +191,7 @@ class Round13PanelsSpec extends SparkSpec {
     val expected = acc.toSeq.map { case ((nation, y), v) =>
       (nation, y, v.setScale(2, RoundingMode.HALF_UP).doubleValue)
     }.sortBy(r => (r._1, r._2))
-    val got = Analytics2.q9(spark, sf).collect().toSeq
+    val got = Commerce.q9(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(got == expected)
   }
@@ -239,7 +239,7 @@ class Round13PanelsSpec extends SparkSpec {
         (dow, hour, rs.size.toLong, rs.map(_._2).distinct.size.toLong,
           rs.map(r => math.round(r._3 * 100)).sum)
       }.sortBy(r => (r._1, r._2))
-    val got = Analytics6.dowHourHeatmap(spark, sf).collect().toSeq
+    val got = EventSeries.dowHourHeatmap(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))
     assert(got == expected)
@@ -267,7 +267,7 @@ class Round13PanelsSpec extends SparkSpec {
       .map(u => (a.getOrElse(u, 0L), b.getOrElse(u, 0L)))
       .groupBy(identity).map { case (k, us) => (k._1, k._2, us.size.toLong) }
       .toSeq.sortBy(r => (r._1, r._2))
-    val got = Analytics4.rfmMigration(spark, sf).collect().toSeq
+    val got = EventUsers.rfmMigration(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got == expected)
     // both churn and arrival flows exist on this corpus, and the matrix
@@ -410,7 +410,7 @@ class Round13PanelsSpec extends SparkSpec {
 
   test("symbolicMotifs: top-3 trigram shapes match a rank-symbolized driver model") {
     val ev = Dedup.eventsUs(spark, sf).select("event_type", "ts_us")
-      .collect().map(r => (r.getString(0), r.getLong(1) / Analytics6.UsPerHour))
+      .collect().map(r => (r.getString(0), r.getLong(1) / EventSeries.HourUs))
       .toSeq
     val counts = ev.groupBy(identity).view.mapValues(_.size.toLong).toMap
     val h0 = ev.map(_._2).min
@@ -426,7 +426,7 @@ class Round13PanelsSpec extends SparkSpec {
         .sortBy { case (m, n) => (-n, m) }.take(3).zipWithIndex
         .map { case ((m, n), i) => (t, (i + 1).toLong, m, n) }
     }
-    val got = Analytics6.symbolicMotifs(spark, sf).collect().toSeq
+    val got = EventSeries.symbolicMotifs(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3)))
     assert(got == expected)
     // the alphabet is the exact rank-quartile set
@@ -544,7 +544,7 @@ class Round13PanelsSpec extends SparkSpec {
           halfUp((2 * siv - BigInt(n + 1) * sv) * 10000, BigInt(n) * sv) / 1e4,
           halfUp(BigInt(topv) * 10000, BigInt(sv)) / 1e4)
     }
-    val got = Analytics4.revenueGini(spark, sf).collect().toSeq
+    val got = Commerce.revenueGini(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getDouble(4)))
     assert(got == expected)

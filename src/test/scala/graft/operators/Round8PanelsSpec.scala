@@ -27,7 +27,7 @@ class Round8PanelsSpec extends SparkSpec {
 
   test("kAnonymity matches the QI class-size model") {
     val classes = events.groupBy { case (ts, et, v) =>
-      (et, ts / Privacy.UsPerDay, math.round(v * 100) / Privacy.SpendBandCents)
+      (et, ts / EventSeries.DayUs, math.round(v * 100) / Privacy.SpendBandCents)
     }.values.map(_.size.toLong).toSeq
     def rank(k: Long): Long =
       Privacy.KBuckets.find(k < _._3).map(_._1).getOrElse(Privacy.KBuckets.length + 1L)
@@ -47,10 +47,10 @@ class Round8PanelsSpec extends SparkSpec {
   }
 
   test("forecastError matches a dense seasonal-naive backtest model") {
-    val byTh = events.groupBy { case (ts, et, _) => (et, ts / Analytics6.UsPerHour) }
+    val byTh = events.groupBy { case (ts, et, _) => (et, ts / EventSeries.HourUs) }
       .view.mapValues(_.size.toLong).toMap
-    val h0 = events.map(_._1 / Analytics6.UsPerHour).min
-    val h1 = events.map(_._1 / Analytics6.UsPerHour).max
+    val h0 = events.map(_._1 / EventSeries.HourUs).min
+    val h1 = events.map(_._1 / EventSeries.HourUs).max
     val expected = events.map(_._2).distinct.sorted.map { et =>
       val series = (h0 to h1).map(h => byTh.getOrElse((et, h), 0L))
       val eval = (24 until series.size).map(i =>
@@ -59,7 +59,7 @@ class Round8PanelsSpec extends SparkSpec {
       (et, eval.size.toLong, tot, saeS, saeN,
         ratio4Model(saeS, eval.size.toLong), ratio4Model(saeS, math.max(saeN, 1L)))
     }
-    val got = Analytics6.forecastError(spark, sf).collect().toSeq
+    val got = EventSeries.forecastError(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getDouble(5), r.getDouble(6)))
     assert(got == expected)

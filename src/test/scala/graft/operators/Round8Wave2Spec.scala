@@ -77,11 +77,11 @@ class Round8Wave2Spec extends SparkSpec {
   }
 
   test("cusumDrift matches the recursive max(0, S+r) definition") {
-    val byTh = events.groupBy { case (ts, et) => (et, ts / Analytics6.UsPerHour) }
+    val byTh = events.groupBy { case (ts, et) => (et, ts / EventSeries.HourUs) }
       .view.mapValues(_.size.toLong).toMap
-    val h0 = events.map(_._1 / Analytics6.UsPerHour).min
-    val h1 = events.map(_._1 / Analytics6.UsPerHour).max
-    val lam = Analytics6.CusumLambdaMeanHours
+    val h0 = events.map(_._1 / EventSeries.HourUs).min
+    val h1 = events.map(_._1 / EventSeries.HourUs).max
+    val lam = EventSeries.CusumLambdaMeanHours
     val expected = events.map(_._2).distinct.sorted.map { et =>
       val hours = (h0 to h1).toSeq
       val series = hours.map(h => byTh.getOrElse((et, h), 0L))
@@ -102,7 +102,7 @@ class Round8Wave2Spec extends SparkSpec {
       (et, nH, tot, sMax, peak, flagged.size.toLong,
         flagged.headOption.map(_._1), states.map(_._2).max)
     }
-    val got = Analytics6.cusumDrift(spark, sf).collect().toSeq
+    val got = EventSeries.cusumDrift(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5),
         if (r.isNullAt(6)) None else Some(r.getLong(6)), r.getLong(7)))
@@ -155,24 +155,24 @@ class Round8Wave2Spec extends SparkSpec {
   }
 
   test("autocorrelation matches the integer-residual ACF model") {
-    val byTh = events.groupBy { case (ts, et) => (et, ts / Analytics6.UsPerHour) }
+    val byTh = events.groupBy { case (ts, et) => (et, ts / EventSeries.HourUs) }
       .view.mapValues(_.size.toLong).toMap
-    val h0 = events.map(_._1 / Analytics6.UsPerHour).min
-    val h1 = events.map(_._1 / Analytics6.UsPerHour).max
+    val h0 = events.map(_._1 / EventSeries.HourUs).min
+    val h1 = events.map(_._1 / EventSeries.HourUs).max
     val expected = events.map(_._2).distinct.sorted.flatMap { et =>
       val series = (h0 to h1).map(h => byTh.getOrElse((et, h), 0L))
       val nH = series.size.toLong
       val m = (series.sum + nH / 2) / nH
       val r = series.map(_ - m)
       val den = r.map(x => x * x).sum
-      (1 to Analytics6.MaxAcfLag).map { lag =>
+      (1 to EventSeries.MaxAcfLag).map { lag =>
         val pairs = r.dropRight(lag).zip(r.drop(lag))
         val num = pairs.map { case (a, b) => a * b }.sum
         (et, lag.toLong, pairs.size.toLong, num, den,
           num.toDouble / math.max(den, 1L).toDouble)
       }
     }
-    val got = Analytics6.autocorrelation(spark, sf).collect().toSeq
+    val got = EventSeries.autocorrelation(spark, sf).collect().toSeq
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getDouble(5)))
     assert(got == expected)
@@ -216,12 +216,12 @@ class Round8Wave2Spec extends SparkSpec {
       .flatMap(ps => for (i <- ps.indices; j <- i + 1 until ps.size) yield (ps(i), ps(j)))
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
     val expected = pairSupp.toSeq
-      .filter(_._2 >= Analytics6.BasketMinSupport)
+      .filter(_._2 >= Commerce.BasketMinSupport)
       .map { case ((p1, p2), s12) =>
         (p1, p2, s12, supp(p1), supp(p2),
           ratio4Model(s12 * nOrders, supp(p1) * supp(p2)))
       }.sortBy(p => (p._1, p._2))
-    val got = Analytics6.basketPairs(spark, sf).collect().toSeq
+    val got = Commerce.basketPairs(spark, sf).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getDouble(5)))
     assert(got == expected)
@@ -348,7 +348,7 @@ class Round8Wave2Spec extends SparkSpec {
       cov2.head.getDouble(5) == 1.0)
     // a one-hour series: residual exactly 0, no excursion, no flags
     val oneHour = Seq(("t", 5L, 7L)).toDF("event_type", "hour", "n")
-    val row = Analytics6.cusumOfCounts(oneHour).collect().head
+    val row = EventSeries.cusumOfCounts(oneHour).collect().head
     assert(row.getLong(3) == 0L && row.getLong(5) == 0L && row.isNullAt(6))
   }
 

@@ -101,7 +101,7 @@ class SkewStressSpec extends SparkSpec {
   }
 
   test("splitSessionizeOf == one-window sessionize on the test corpus, any segment size") {
-    val direct = Analytics.sessionize(spark, sf).collect().toSeq
+    val direct = EventUsers.sessionize(spark, sf).collect().toSeq
     // default segUs (= gap) and a deliberately tiny segment — the
     // bit-identity argument holds for ANY segUs > 0
     for (segUs <- Seq(0L, 120L * 1000000L)) {
@@ -130,7 +130,7 @@ class SkewStressSpec extends SparkSpec {
       .toDF("event_id", "ts_us", "user_id", "event_type", "value")
       .repartition(7) // scatter input so window ordering does the work
     val direct = {
-      // the one-window reference shape (Analytics.sessionIndexedOf's chain)
+      // the one-window reference shape (EventUsers.sessionIndexedOf's chain)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy("ts_us", "event_id")
       ev.withColumn("new_sess",
@@ -192,7 +192,7 @@ class SkewStressSpec extends SparkSpec {
         .otherwise(pmod(col("id") * 31L, lit(5000L)) + 100L).as("user_id"),
       lit("e").as("event_type"),
       (col("id") % 97L / lit(10.0)).as("value"))
-    val direct = Analytics.sessionizeOf(ev).collect().toSeq
+    val direct = EventUsers.sessionizeOf(ev).collect().toSeq
     assert(Skew.sessionizeAutoOf(ev, skewX4 = 50.0).collect().toSeq == direct)
     assert(Skew.sessionizeAutoOf(ev, skewX4 = 1.0).collect().toSeq == direct)
   }

@@ -15,12 +15,15 @@ class ChainDedupNativeSpec extends SparkSpec {
 
   test("native chain operator equals the ObliviousSet model") {
     val hashed = Dedup.hashedStream(spark, sf)
-    val native = Dedup.chainNative(hashed).collect().map(_.getAs[Long]("event_id")).toSet
+    def native = Dedup.chainNative(hashed).collect().map(_.getAs[Long]("event_id")).toSet
     val want = hashed.collect().groupBy(_.getAs[Long]("digest")).values.flatMap { rs =>
       obliviousModel(rs.map(r => (r.getAs[Long]("event_id"), r.getAs[Long]("ts_us")))
         .sortBy { case (id, ts) => (ts, id) }.toSeq, Dedup.WindowUs)
     }.toSet
     assert(native === want)
+    // generated code only: a compile failure of the fused operator
+    // cannot hide behind the interpreted fallback
+    assert(withConf("spark.sql.codegen.fallback" -> "false")(native) === want)
   }
 
   test("native chain plan contains ChainDedupExec and no object ser/de") {

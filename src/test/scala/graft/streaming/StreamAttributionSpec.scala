@@ -1,12 +1,12 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.{Analytics4, Dedup}
+import graft.operators.{Dedup, EventUsers}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
 /** The streaming last-touch attributor emits exactly the batch
-  * Analytics4.attribution rows when events arrive in event-time order
+  * EventUsers.attribution rows when events arrive in event-time order
   * across micro-batches, with one click tuple of state per user. */
 class StreamAttributionSpec extends SparkSpec {
 
@@ -29,7 +29,7 @@ class StreamAttributionSpec extends SparkSpec {
     } finally q.stop()
     val got = spark.table(name).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val want = Analytics4.attribution(spark, sf).collect()
+    val want = EventUsers.attribution(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(got == want, "streaming attribution set must equal the batch carry-forward window")
     assert(want.nonEmpty)

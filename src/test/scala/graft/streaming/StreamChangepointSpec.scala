@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.{Analytics8, Dedup}
+import graft.operators.{Dedup, EventSeries}
 import graft.sinks.TxnParquet
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.nio.file.Files
@@ -27,8 +27,8 @@ class StreamChangepointSpec extends SparkSpec {
   test("streamed daily count deltas fold to the exact batch changepoint panel, in any batching") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val want = rows(Analytics8.changepoint(spark, sf))
-    val wantFriedman = rows(Analytics8.friedmanDow(spark, sf))
+    val want = rows(EventSeries.changepoint(spark, sf))
+    val wantFriedman = rows(EventSeries.friedmanDow(spark, sf))
     assert(want.nonEmpty)
     for (nBatches <- Seq(1, 4)) {
       val stateDir = Files.createTempDirectory("cp").toString

@@ -155,7 +155,7 @@ class StreamDedupSpec extends SparkSpec {
     val got = spark.table(name)
       .select(unix_micros(col("window.start")).as("win_us"), col("event_type"), col("n"))
       .collect().map(r => (r.getLong(0) / 3600000000L, r.getString(1)) -> r.getLong(2)).toMap
-    val want = graft.operators.Analytics.eventsWindow(spark, sf)
+    val want = graft.operators.EventSeries.eventsWindow(spark, sf)
       .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(got === want)
   }

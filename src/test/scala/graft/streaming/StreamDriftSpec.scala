@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.{Analytics6, Dedup}
+import graft.operators.{Dedup, EventSeries}
 import graft.sinks.TxnParquet
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.nio.file.Files
@@ -29,7 +29,7 @@ class StreamDriftSpec extends SparkSpec {
   test("streamed deltas fold to the exact batch panel, in any batching") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val want = panelRows(Analytics6.cusumDrift(spark, sf))
+    val want = panelRows(EventSeries.cusumDrift(spark, sf))
     for (nBatches <- Seq(1, 3)) {
       val stateDir = Files.createTempDirectory("drift").toString
       val mem = MemoryStream[Ev]
@@ -62,13 +62,13 @@ class StreamDriftSpec extends SparkSpec {
     // TxnParquet batch-id idempotence backstops any replayed batch —
     // the folded panel is exactly the batch panel, no double counting
     assert(panelRows(StreamDrift.panel(spark, stateDir)) ==
-      panelRows(Analytics6.cusumDrift(spark, sf)))
+      panelRows(EventSeries.cusumDrift(spark, sf)))
   }
 
   test("streamed weekly composition deltas fold to the exact batch type-drift panel") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val want = panelRows(graft.operators.Analytics4.typeDrift(spark, sf))
+    val want = panelRows(graft.operators.EventSeries.typeDrift(spark, sf))
     for (nBatches <- Seq(1, 4)) {
       val stateDir = Files.createTempDirectory("typedrift").toString
       val mem = MemoryStream[Ev]
@@ -105,6 +105,6 @@ class StreamDriftSpec extends SparkSpec {
     TxnParquet.compact(spark, stateDir)
     TxnParquet.vacuum(spark, stateDir)
     assert(panelRows(StreamDrift.panel(spark, stateDir)) == before)
-    assert(before == panelRows(Analytics6.cusumDrift(spark, sf)))
+    assert(before == panelRows(EventSeries.cusumDrift(spark, sf)))
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.{Analytics3, Dedup}
+import graft.operators.{Dedup, EventUsers}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -34,7 +34,7 @@ class StreamFunnelSpec extends SparkSpec {
       .agg(max("stage").as("stage")).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     val got = (1 to 3).map(k => stages.values.count(_ >= k).toLong)
-    val want = Analytics3.funnel(spark, sf).collect().head
+    val want = EventUsers.funnel(spark, sf).collect().head
     assert(got == Seq(want.getLong(0), want.getLong(1), want.getLong(2)),
       s"streaming stage counts $got must equal batch funnel $want")
   }

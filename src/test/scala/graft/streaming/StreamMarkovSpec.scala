@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.{Analytics3, Dedup}
+import graft.operators.{Dedup, EventUsers}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -29,7 +29,7 @@ class StreamMarkovSpec extends SparkSpec {
     } finally q.stop()
     val got = spark.table(name).groupBy("type_from", "type_to").count()
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val want = Analytics3.markovTransitions(spark, sf).collect()
+    val want = EventUsers.markovTransitions(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(got == want, "streaming transition multiset must equal the batch lead window")
   }

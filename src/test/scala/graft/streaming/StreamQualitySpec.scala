@@ -30,7 +30,7 @@ class StreamQualitySpec extends SparkSpec {
     } finally q.stop()
     val got = spark.table(name).collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val want = graft.operators.Analytics4
+    val want = graft.operators.EventValues
       .firstDigitCounts(rows.toDF("event_type", "value")).collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got === want)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.{Analytics3, Dedup}
+import graft.operators.{Dedup, EventUsers}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -34,7 +34,7 @@ class StreamRegularitySpec extends SparkSpec {
   test("streamed gap multiset equals the batch lag window's") {
     val got = streamedGaps().groupBy("user_id", "gap").count()
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val want = Analytics3.gapsOf(
+    val want = EventUsers.gapsOf(
         Dedup.eventsUs(spark, sf).select("user_id", "ts_us", "event_id"))
       .groupBy("user_id", "gap").count()
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -47,8 +47,8 @@ class StreamRegularitySpec extends SparkSpec {
     val gaps = streamedGaps().select("user_id", "gap")
       .as[(Long, Long)].collect().toIndexedSeq
       .toDF("user_id", "gap")
-    val got = Analytics3.gapHistogramOf(gaps).collect().map(_.toSeq).toSeq
-    val want = Analytics3.gapHistogram(spark, sf).collect().map(_.toSeq).toSeq
+    val got = EventUsers.gapHistogramOf(gaps).collect().map(_.toSeq).toSeq
+    val want = EventUsers.gapHistogram(spark, sf).collect().map(_.toSeq).toSeq
     assert(want.nonEmpty)
     assert(got == want)
   }
@@ -61,9 +61,9 @@ class StreamRegularitySpec extends SparkSpec {
     val gaps = streamedGaps().select("user_id", "gap")
       .as[(Long, Long)].collect().toIndexedSeq
       .toDF("user_id", "gap")
-    val got = Analytics3.regularityOfGaps(gaps)
+    val got = EventUsers.regularityOfGaps(gaps)
       .collect().map(_.toSeq).toSeq
-    val want = Analytics3.botRegularity(spark, sf)
+    val want = EventUsers.botRegularity(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(want.nonEmpty)
     assert(got == want, "panel over streamed gaps must equal the batch panel")

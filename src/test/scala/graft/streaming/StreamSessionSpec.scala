@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.{Analytics, Dedup}
+import graft.operators.{Dedup, EventUsers}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -33,7 +33,7 @@ class StreamSessionSpec extends SparkSpec {
     val got = spark.table(name).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
       .sortBy(t => (t._1, t._3)).toSeq
-    val want = Analytics.sessionize(spark, sf).collect()
+    val want = EventUsers.sessionize(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5)))
       .sortBy(t => (t._1, t._3)).toSeq
     assert(got == want)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.{Analytics6, Dedup}
+import graft.operators.{Dedup, EventSeries}
 import graft.sinks.TxnParquet
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.nio.file.Files
@@ -26,7 +26,7 @@ class StreamTrendSpec extends SparkSpec {
   test("streamed daily deltas fold to the exact batch OLS panel, in any batching") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val want = rows(Analytics6.trendOls(spark, sf))
+    val want = rows(EventSeries.trendOls(spark, sf))
     assert(want.nonEmpty)
     for (nBatches <- Seq(1, 4)) {
       val stateDir = Files.createTempDirectory("trend").toString
