@@ -6331,7 +6331,7 @@ object SparkEntry {
     decl("events_approx_users", (s, d) => {
       import org.apache.spark.sql.functions._
       Dedup.eventsUs(s, d)
-        .withColumn("hour_bucket", expr("ts_us div 3600000000L"))
+        .withColumn("hour_bucket", expr(s"ts_us div ${EventSeries.HourUs}L"))
         .groupBy("hour_bucket")
         .agg(approx_count_distinct("user_id").as("approx_users"),
           countDistinct("user_id").as("exact_users"))

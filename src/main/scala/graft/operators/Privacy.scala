@@ -72,7 +72,7 @@ object Privacy {
   def dpCountsOf(ev: DataFrame): DataFrame = {
     import graft.functions.Hashing.h64
     val cells = ev
-      .select(col("event_type"), expr("ts_us div 86400000000L").as("day_bucket"))
+      .select(col("event_type"), expr(s"ts_us div ${EventSeries.DayUs}L").as("day_bucket"))
       .groupBy("event_type", "day_bucket")
       .agg(count(lit(1)).as("true_n"))
       .withColumn("h1", h64(concat_ws("|", lit("dp1"), col("event_type"),
@@ -117,7 +117,7 @@ object Privacy {
   def dpSumsOf(ev: DataFrame): DataFrame = {
     import graft.functions.Hashing.{h64, valueCents}
     val cells = ev
-      .select(col("event_type"), expr("ts_us div 86400000000L").as("day_bucket"),
+      .select(col("event_type"), expr(s"ts_us div ${EventSeries.DayUs}L").as("day_bucket"),
         greatest(least(valueCents(col("value")), lit(ClampCents)), lit(0L))
           .as("v_clamped"))
       .groupBy("event_type", "day_bucket")

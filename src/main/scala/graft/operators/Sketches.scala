@@ -36,7 +36,7 @@ object Sketches {
     * petabyte groups compose from partial sketches. */
   def thetaUsersDaily(spark: SparkSession, dir: String, k: Int = ThetaK): DataFrame = {
     val hourly = Dedup.eventsUs(spark, dir)
-      .select(expr("ts_us div 3600000000L").as("hour_bucket"),
+      .select(expr(s"ts_us div ${EventSeries.HourUs}L").as("hour_bucket"),
         h64(concat(lit("u:"), col("user_id").cast("string"))).as("h"))
       .groupBy("hour_bucket")
       .agg(ThetaSketchFunctions.thetaSketch(col("h"), k).as("mk"))
@@ -66,7 +66,7 @@ object Sketches {
     val est = thetaUsersDaily(spark, dir, k)
       .select("day_bucket", "n_sketch", "est_users")
     val exact = Dedup.eventsUs(spark, dir)
-      .select(expr("ts_us div 86400000000L").as("day_bucket"), col("user_id"))
+      .select(expr(s"ts_us div ${EventSeries.DayUs}L").as("day_bucket"), col("user_id"))
       .groupBy("day_bucket")
       .agg(countDistinct("user_id").as("exact_users"))
     est.join(exact, "day_bucket")
@@ -99,7 +99,7 @@ object Sketches {
   def thetaOverlapDaily(spark: SparkSession, dir: String,
                         k: Int = ThetaK): DataFrame = {
     val base = Dedup.eventsUs(spark, dir)
-      .select(expr("ts_us div 86400000000L").as("day_bucket"),
+      .select(expr(s"ts_us div ${EventSeries.DayUs}L").as("day_bucket"),
         col("user_id"),
         h64(concat(lit("u:"), col("user_id").cast("string"))).as("h"))
     val sk = base.groupBy("day_bucket")
@@ -132,7 +132,7 @@ object Sketches {
   def slidingUniques(spark: SparkSession, dir: String,
                      k: Int = ThetaK, win: Int = SlideDays): DataFrame = {
     val base = Dedup.eventsUs(spark, dir)
-      .select(expr("ts_us div 86400000000L").as("day"),
+      .select(expr(s"ts_us div ${EventSeries.DayUs}L").as("day"),
         col("user_id"),
         h64(concat(lit("u:"), col("user_id").cast("string"))).as("h"))
     val daily = base.groupBy("day")
@@ -205,7 +205,7 @@ object Sketches {
   def thetaNewUsersDaily(spark: SparkSession, dir: String,
                          k: Int = ThetaK): DataFrame = {
     val base = Dedup.eventsUs(spark, dir)
-      .select(expr("ts_us div 86400000000L").as("day_bucket"),
+      .select(expr(s"ts_us div ${EventSeries.DayUs}L").as("day_bucket"),
         col("user_id"),
         h64(concat(lit("u:"), col("user_id").cast("string"))).as("h"))
     val sk = base.groupBy("day_bucket")

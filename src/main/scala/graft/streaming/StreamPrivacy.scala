@@ -102,7 +102,7 @@ object StreamPrivacy {
         // session tz is pinned UTC (GraftSession), so 1-day windows are
         // epoch-aligned and win.start div day == the batch day_bucket
         graft.functions.Hashing.intDiv(unix_micros(col("win.start")),
-          lit(86400000000L)).as("day_bucket"),
+          lit(graft.operators.EventSeries.DayUs)).as("day_bucket"),
         col("true_n"))
       .withColumn("h1", h64(concat_ws("|", lit("dp1"), col("event_type"),
         col("day_bucket"))))

@@ -32,7 +32,7 @@ object StreamSketch {
     * estimate. */
   def thetaUsersPerHour(ev: DataFrame,
                         k: Int = graft.operators.Sketches.ThetaK): DataFrame =
-    ev.select(expr("ts_us div 3600000000L").as("hour_bucket"),
+    ev.select(expr(s"ts_us div ${graft.operators.EventSeries.HourUs}L").as("hour_bucket"),
         h64(concat(lit("u:"), col("user_id").cast("string"))).as("h"))
       .groupBy("hour_bucket")
       .agg(ThetaSketchFunctions.thetaSketch(col("h"), k).as("mk"))

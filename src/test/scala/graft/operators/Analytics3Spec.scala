@@ -3,10 +3,11 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Analytics3 vs independent in-memory models at sf0.001. The DuckDB
-  * oracle already proves q21's aggregate rewrite against the textbook
-  * EXISTS form cross-engine; these models pin the semantics inside the
-  * JVM too (and at a second data scale, via the driver's sf0.01 run). */
+/** Commerce and EventUsers panels vs independent in-memory models at
+  * sf0.001. The DuckDB oracle already proves q21's aggregate rewrite
+  * against the textbook EXISTS form cross-engine; these models pin the
+  * semantics inside the JVM too (and at a second data scale, via the
+  * sf0.01 Verify run). */
 class Analytics3Spec extends SparkSpec {
 
   // the TPC-H tables carry TIMESTAMP_NTZ → collect() yields LocalDateTime

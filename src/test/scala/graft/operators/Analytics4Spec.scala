@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.SparkSpec
 
-/** Analytics4 vs independent in-memory models at sf0.001. */
+/** EventValues, EventSeries and EventUsers panels vs independent
+  * in-memory models at sf0.001. */
 class Analytics4Spec extends SparkSpec {
 
   private lazy val events: Seq[(Long, Long, Long, String, Double)] =

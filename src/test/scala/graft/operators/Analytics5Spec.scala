@@ -2,7 +2,9 @@ package graft.operators
 
 import graft.SparkSpec
 
-/** Analytics5 vs independent in-memory models at sf0.001. */
+/** Text, quality and event panels (TextAnalysis, QualitySignals,
+  * Commerce, EventSeries, EventUsers) vs independent in-memory models
+  * at sf0.001. */
 class Analytics5Spec extends SparkSpec {
 
   private lazy val events: Seq[(Long, Long, Double)] =

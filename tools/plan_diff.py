@@ -2,31 +2,31 @@
 """Registry plan-identity gate: compare two `graft.Explain` dumps.
 
 Usage:
-    python3 tools/plan_diff.py A.explain B.explain [--ops-only q1,q2,...] [--show N]
+    python3 tools/plan_diff.py A.explain B.explain
 
 Each dump is the stdout of `graft.Explain <sf dir>` (one
 `========== <name> ==========` section per registered query). Both
 dumps are split per query and normalised, then every query whose plan
-differs (or that only one dump has) is printed, followed by the first
-differing lines of its plan; the exit status is 1 when any query
-differs.
+differs (or that only one dump has) is printed, followed by its first
+differing lines; the exit status is 1 when any query differs.
 
 Normalisation:
   - expression ids `#<n>` -> `#N`, exchange ids `plan_id=<n>` -> `plan_id=N`;
   - `<X>RDD[<n>] at <op> at <File>.scala:<line>` -> `RDD` (the RDD ids
     and call sites of checkpointed inputs, which move with the code).
 
-The queries in --ops-only (by default the three whose multi-distinct
-`Expand` orders its columns differently from run to run) are compared
-on their operator lines only: the plan tree and the `(n) <Operator>`
-headers, without the Arguments/Input/Keys/Results/... detail lines.
+The RUN_DEPENDENT queries plan an `Expand` for several distinct
+aggregates whose column order differs from run to run of one build, so
+they are compared on their operator lines only: the plan tree and the
+`(n) <Operator>` headers, without the Arguments/Input/Keys/Results/...
+detail lines.
 """
-import argparse
 import difflib
 import re
 import sys
 
-RUN_DEPENDENT = "corpus_dataset_card,dedup_normalization_curve,profile_events"
+RUN_DEPENDENT = {"corpus_dataset_card", "dedup_normalization_curve", "profile_events"}
+SHOW = 6  # differing lines printed per query
 
 SECTION = re.compile(r"^========== (\S+) ==========$", re.M)
 EXPR_ID = re.compile(r"#\d+")
@@ -42,45 +42,37 @@ def sections(path):
     return {parts[i]: parts[i + 1] for i in range(1, len(parts), 2)}
 
 
-def normalise(body, ops_only):
+def normalise(name, body):
     body = RDD.sub("RDD", PLAN_ID.sub("plan_id=N", EXPR_ID.sub("#N", body)))
     lines = [l.rstrip() for l in body.strip("\n").split("\n")]
-    if ops_only:
+    if name in RUN_DEPENDENT:
         lines = [l for l in lines if not DETAIL.match(l)]
     return lines
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("a")
-    ap.add_argument("b")
-    ap.add_argument("--ops-only", default=RUN_DEPENDENT,
-                    help="comma-separated queries compared on operator lines only")
-    ap.add_argument("--show", type=int, default=6,
-                    help="differing lines printed per query (0: names only)")
-    args = ap.parse_args()
-    ops = set(filter(None, args.ops_only.split(",")))
-    a, b = sections(args.a), sections(args.b)
+def main(argv):
+    if len(argv) != 2:
+        sys.exit(__doc__.split("\n\n")[1])
+    a, b = sections(argv[0]), sections(argv[1])
+    names = set(a) | set(b)
     differ = []
-    for name in sorted(set(a) | set(b)):
+    for name in sorted(names):
         if name not in a or name not in b:
             differ.append(name)
-            print(f"DIFF {name}: only in {args.a if name in a else args.b}")
+            print(f"DIFF {name}: only in {argv[0] if name in a else argv[1]}")
             continue
-        la, lb = normalise(a[name], name in ops), normalise(b[name], name in ops)
+        la, lb = normalise(name, a[name]), normalise(name, b[name])
         if la != lb:
             differ.append(name)
             print(f"DIFF {name}")
-            if args.show:
-                d = [l for l in difflib.unified_diff(la, lb, lineterm="", n=0)
-                     if l[:1] in "+-" and l[:3] not in ("---", "+++")]
-                for l in d[:args.show]:
-                    print("    " + l[:200])
-    n = len(set(a) | set(b))
-    print(f"== {n - len(differ)} identical, {len(differ)} differ "
-          f"({len(ops & (set(a) | set(b)))} compared on operator lines) ==")
+            d = [l for l in difflib.unified_diff(la, lb, lineterm="", n=0)
+                 if l[:1] in "+-" and l[:3] not in ("---", "+++")]
+            for l in d[:SHOW]:
+                print("    " + l[:200])
+    print(f"== {len(names) - len(differ)} identical, {len(differ)} differ "
+          f"({len(RUN_DEPENDENT & names)} compared on operator lines) ==")
     return 1 if differ else 0
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))
